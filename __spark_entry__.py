@@ -1502,12 +1502,6 @@ def q_ivfpq_topk(spark, sf):
 # ---------------------------------------------------------------------------
 
 _PQ_INDEX: dict = {}
-_PQ_PARAMS = {
-    "n_codes": PQ_CODES,
-    "m": PQ_M,
-    "n_centroids": IVF_N_CENTROIDS,
-    "metric": "cosine",
-}
 
 
 def _pq_index_root(sf: str, prefix: str) -> str:
@@ -1533,17 +1527,12 @@ def _pq_index_root(sf: str, prefix: str) -> str:
 
 
 def _pq_index_fp(sf: str, applied: list, payload: tuple = ()) -> str:
-    # params must mirror build_pq_index's recorded params exactly or
-    # the build-else-reuse check never reuses (payload_cols joined the
-    # fingerprint in r14 with the filtered-ANN payload columns)
-    from external_benchmarks_spark.pipeline.layout import source_fingerprint
+    from external_benchmarks_spark.pipeline.pqindex import pq_index_fingerprint
 
-    return source_fingerprint(
+    return pq_index_fingerprint(
         [os.path.join(sf, "embeddings.parquet")],
-        extra={
-            "pq": {**_PQ_PARAMS, "payload_cols": sorted(payload)},
-            "applied": applied,
-        },
+        PQ_CODES, PQ_M, IVF_N_CENTROIDS,
+        payload_cols=payload, applied=applied,
     )
 
 

@@ -142,9 +142,19 @@ def pq_encode(
     import numpy as np
     import pandas as pd
 
+    from pyspark.sql.types import IntegralType
+
     cb = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, dsub = cb.shape
     extras = list(extra_cols)
+    # Integer extras (centroid_id, integer payload codes) land as
+    # bigint; any other extra passes through with its own Spark type.
+    extra_types = {
+        c: "bigint"
+        if isinstance(df.schema[c].dataType, IntegralType)
+        else df.schema[c].dataType.simpleString()
+        for c in extras
+    }
 
     def encode(batches):
         for pdf in batches:
@@ -163,10 +173,12 @@ def pq_encode(
                 codes[:, j] = d.argmin(axis=1)
             out = {key_col: pdf[key_col].to_numpy(), "pq_codes": list(codes)}
             for c in extras:  # e.g. centroid_id for the IVF-PQ compose
-                out[c] = pdf[c].to_numpy().astype("int64", copy=False)
+                out[c] = pdf[c].to_numpy()
+                if extra_types[c] == "bigint":
+                    out[c] = out[c].astype("int64", copy=False)
             yield pd.DataFrame(out)
 
-    extra_schema = "".join(f", {c} bigint" for c in extras)
+    extra_schema = "".join(f", {c} {t}" for c, t in extra_types.items())
     return df.select(key_col, emb_col, *extras).mapInPandas(
         encode, f"{key_col} bigint, pq_codes array<int>{extra_schema}"
     )

@@ -27,6 +27,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _key_list(partition_col: str | Sequence[str] | None) -> list[str]:
+    return [partition_col] if isinstance(partition_col, str) else list(partition_col or [])
+
+
+def _write_layout(
+    out: DataFrame,
+    out_path: str,
+    partition_keys: Sequence[str],
+    sort_cols: Sequence[str],
+    emb_col: str | None,
+    mode: str,
+) -> None:
+    """The one layout write: float32 embeddings, one shuffle by the
+    partition keys, sorted within partitions, ``partitionBy`` write."""
+    if emb_col and emb_col in out.columns:
+        out = out.withColumn(emb_col, F.col(emb_col).cast("array<float>"))
+    if partition_keys:
+        out = out.repartition(*[F.col(c) for c in partition_keys])
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    writer = out.write.mode(mode)
+    if partition_keys:
+        writer = writer.partitionBy(*partition_keys)
+    writer.parquet(out_path)
+
+
 def build_index_layout(
     df: DataFrame,
     out_path: str,
@@ -34,7 +60,6 @@ def build_index_layout(
     sort_cols: Sequence[str] = (),
     emb_col: str | None = "embedding",
     lsh_planes=None,
-    target_file_rows: int | None = None,
     fingerprint: str | None = None,
 ) -> None:
     """Write the query-optimized layout. Pass ``fingerprint`` (a
@@ -44,23 +69,17 @@ def build_index_layout(
     rebuilds; append_to_index_layout drops the marker up front, making a
     layout that has diverged from its recorded source unreadable-as-
     current rather than silently stale."""
-    out = df
-    if emb_col and emb_col in df.columns:
-        out = out.withColumn(emb_col, F.col(emb_col).cast("array<float>"))
-    if lsh_planes is not None and emb_col:
+    partition_keys = _key_list(partition_col)
+    if lsh_planes is not None:
         from external_benchmarks_spark.operators.similarity import lsh_bucket_udf
 
-        out = out.withColumn("lsh_bucket", lsh_bucket_udf(lsh_planes)(F.col(emb_col)))
-    cols = [partition_col] if isinstance(partition_col, str) else list(partition_col or [])
-    partition_keys = [c for c in (*cols, "lsh_bucket" if lsh_planes is not None else None) if c]
-    if partition_keys:
-        out = out.repartition(*[F.col(c) for c in partition_keys])
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("overwrite")
-    if partition_keys:
-        writer = writer.partitionBy(*partition_keys)
-    writer.parquet(out_path)
+        # buckets hash the float32 vectors the layout stores
+        df = df.withColumn(
+            "lsh_bucket",
+            lsh_bucket_udf(lsh_planes)(F.col(emb_col).cast("array<float>")),
+        )
+        partition_keys.append("lsh_bucket")
+    _write_layout(df, out_path, partition_keys, sort_cols, emb_col, "overwrite")
     if fingerprint is not None:
         from external_benchmarks_spark.pipeline.layout import record_layout
 
@@ -105,25 +124,14 @@ def append_to_index_layout(
     from external_benchmarks_spark.pipeline.layout import invalidate_layout
 
     invalidate_layout(out_path)
-    out = new_df
     if centroids is not None and emb_col:
         from external_benchmarks_spark.operators.similarity import ivf_assign
 
-        out = ivf_assign(out, centroids, emb_col, metric)
-    if emb_col and emb_col in out.columns:
-        out = out.withColumn(emb_col, F.col(emb_col).cast("array<float>"))
-    cols = [partition_col] if isinstance(partition_col, str) else list(partition_col or [])
-    partition_keys = list(cols) or (
+        new_df = ivf_assign(new_df, centroids, emb_col, metric)
+    partition_keys = _key_list(partition_col) or (
         ["centroid_id"] if centroids is not None else []
     )
-    if partition_keys:
-        out = out.repartition(*[F.col(c) for c in partition_keys])
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    writer = out.write.mode("append")
-    if partition_keys:
-        writer = writer.partitionBy(*partition_keys)
-    writer.parquet(out_path)
+    _write_layout(new_df, out_path, partition_keys, sort_cols, emb_col, "append")
 
 
 def compact_layout_partitions(
@@ -252,12 +260,6 @@ def zorder_key(col_a, col_b, bits: int = 16):
             + (F.shiftright(b, i) % 2) * F.lit(1 << (2 * i + 1)).cast("bigint")
         )
     return z
-
-
-def read_index(spark, path: str) -> DataFrame:
-    """Read back the layout; partition columns come in as directory keys,
-    so equality predicates on them prune at planning time."""
-    return spark.read.parquet(path)
 
 
 def layout_pruning_report(

@@ -117,14 +117,50 @@ def load_pq_index(root: str) -> PQIndex:
     )
 
 
-def _index_fingerprint(
-    source_paths: Sequence[str] | None, params: dict, applied: list[str]
+def pq_index_fingerprint(
+    source_paths: Sequence[str] | None,
+    n_codes: int,
+    m_subspaces: int,
+    n_centroids: int,
+    metric: str = "cosine",
+    payload_cols: Sequence[str] = (),
+    applied: Sequence[str] = (),
 ) -> str:
+    """The codes layout's recorded fingerprint: the source files plus
+    the quantizer parameters, the payload columns and the applied
+    append batches. Build, append and every build-else-reuse check
+    (``layout_is_current(index.codes_path, ...)``) share this one
+    recipe, so an index already on disk is reused exactly when all of
+    them agree."""
     from external_benchmarks_spark.pipeline.layout import source_fingerprint
 
+    params = {
+        "n_codes": n_codes, "m": m_subspaces,
+        "n_centroids": n_centroids, "metric": metric,
+        "payload_cols": sorted(payload_cols),
+    }
     return source_fingerprint(
-        list(source_paths or []), extra={"pq": params, "applied": applied}
+        list(source_paths or []), extra={"pq": params, "applied": list(applied)}
     )
+
+
+def _probe_cells(index: PQIndex, query: Sequence[float], nprobe: int) -> list[int]:
+    """The nprobe nearest cells, resolved driver-side from the sidecar
+    centroids (no Spark job)."""
+    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
+
+    return [
+        int(c)
+        for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
+    ]
+
+
+def _require_vectors(index: PQIndex) -> None:
+    if not index.has_vectors:
+        raise ValueError(
+            f"no raw-vector sidecar at {index.vectors_path}; "
+            "build_pq_index(..., store_vectors=True) to enable rerank"
+        )
 
 
 def build_pq_index(
@@ -191,18 +227,16 @@ def build_pq_index(
         root=root, centroids=centroids, codebooks=cb,
         metric=metric, key_col=key_col, payload_cols=tuple(payload_cols),
     )
-    params = {
-        "n_codes": n_codes, "m": m_subspaces,
-        "n_centroids": n_centroids, "metric": metric,
-        "payload_cols": sorted(payload_cols),
-    }
     build_index_layout(
         codes,
         index.codes_path,
         partition_col="centroid_id",
         sort_cols=[key_col],
         emb_col=None,
-        fingerprint=_index_fingerprint(source_paths, params, []),
+        fingerprint=pq_index_fingerprint(
+            source_paths, n_codes, m_subspaces, n_centroids, metric,
+            payload_cols,
+        ),
     )
     if store_vectors:
         build_index_layout(
@@ -295,14 +329,12 @@ def append_pq_index(
         emb_col=None,
     )
     _record_applied(index.root, batch_id)
-    params = {
-        "n_codes": n_codes, "m": m,
-        "n_centroids": len(index.centroids), "metric": index.metric,
-        "payload_cols": sorted(index.payload_cols),
-    }
     record_layout(
         index.codes_path,
-        _index_fingerprint(source_paths, params, _read_applied(index.root)),
+        pq_index_fingerprint(
+            source_paths, n_codes, m, len(index.centroids), index.metric,
+            index.payload_cols, _read_applied(index.root),
+        ),
     )
     return True
 
@@ -317,23 +349,25 @@ def pq_index_topk(
     query: Sequence[float],
     k: int = 20,
     nprobe: int | None = None,
+    predicate=None,
 ) -> DataFrame:
     """ADC top-k against the persisted codes. With ``nprobe`` the probe
     cells resolve driver-side from the sidecar centroids (no Spark job)
     and the ``centroid_id`` filter prunes cell DIRECTORIES at planning
     time — the scan reads nprobe/n_centroids of an already-1300×-
     compressed corpus. ``nprobe=None`` scans every cell (exact ADC over
-    the full code table)."""
+    the full code table). ``predicate`` (a Column over the index's
+    payload_cols) filters the codes scan before candidate selection —
+    the pre-filter form of :func:`pq_index_filtered_rerank`."""
     from external_benchmarks_spark.operators.quantize import pq_adc_topk
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
 
     codes = pq_index_codes(spark, index)
+    if predicate is not None:
+        codes = codes.filter(predicate)
     if nprobe is not None:
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        codes = codes.filter(F.col("centroid_id").isin(cells))
+        codes = codes.filter(
+            F.col("centroid_id").isin(_probe_cells(index, query, nprobe))
+        )
     return pq_adc_topk(codes, index.codebooks, query, k=k, key_col=index.key_col)
 
 
@@ -345,13 +379,15 @@ def pq_index_rerank_topk(
     rerank: int = 250,
     nprobe: int | None = None,
     emb_col: str = "embedding",
+    predicate=None,
 ) -> DataFrame:
     """ADC candidates + exact rerank against the PERSISTED index — the
     amortized twin of operators/quantize.pq_rerank_topk (FAISS
     IndexRefine): the probed ADC scan ranks the compressed corpus, the
     top ``rerank`` keys broadcast-join against the raw-vector sidecar
     (``store_vectors=True`` at build), and the final top-k comes from
-    EXACT float64 dot products over those R rows only.
+    EXACT float64 dot products over those R rows only. ``predicate``
+    pre-filters the codes scan (see :func:`pq_index_filtered_rerank`).
 
     Scale shape: the corpus pass reads m bytes/vector of nprobe cells;
     the exact stage touches R rows via a broadcast of the R-row
@@ -362,16 +398,11 @@ def pq_index_rerank_topk(
     data (measured: ADC-only 0.18-0.42 recall@50; candidate recall at
     R=5k 1.0 — see pq_recall)."""
     from external_benchmarks_spark.functions.vector import dot_product_literal
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
 
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
-    cand = pq_index_topk(spark, index, query, k=rerank, nprobe=nprobe).select(
-        index.key_col
-    )
+    _require_vectors(index)
+    cand = pq_index_topk(
+        spark, index, query, k=rerank, nprobe=nprobe, predicate=predicate
+    ).select(index.key_col)
     vecs = spark.read.parquet(index.vectors_path)
     if nprobe is not None:
         # Every ADC candidate's cell is in the probed set by
@@ -382,11 +413,9 @@ def pq_index_rerank_topk(
         # pruning and every rerank query scans the full O(corpus)
         # float32 sidecar — invisible at sf0.1, the dominant IO at
         # 100x (r13 verdict finding #4).
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        vecs = vecs.filter(F.col("centroid_id").isin(cells))
+        vecs = vecs.filter(
+            F.col("centroid_id").isin(_probe_cells(index, query, nprobe))
+        )
     return (
         vecs.join(F.broadcast(cand), index.key_col)
         .select(
@@ -430,14 +459,9 @@ def pq_index_rerank_batch(
     single-query literal plan)."""
     from external_benchmarks_spark.functions.vector import dot_product
     from external_benchmarks_spark.operators.quantize import pq_adc_topk_batch
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
     from pyspark.sql.window import Window
 
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
+    _require_vectors(index)
     codes = pq_index_codes(spark, index)
     vecs = spark.read.parquet(index.vectors_path)
     # ONE driver collect of the bounded request batch, shared with the
@@ -446,12 +470,7 @@ def pq_index_rerank_batch(
     allowed = None
     if nprobe is not None:
         allowed = {
-            int(r[query_key]): [
-                int(c)
-                for c in ivf_probe_cells(
-                    index.centroids, r[query_emb], nprobe, index.metric
-                )
-            ]
+            int(r[query_key]): _probe_cells(index, r[query_emb], nprobe)
             for r in qrows
         }
         union_cells = sorted({c for cs in allowed.values() for c in cs})
@@ -522,40 +541,12 @@ def pq_index_filtered_rerank(
     filter on the already-cell-pruned compressed scan — the source
     table is never touched at query time. Returns (key, score) ordered
     by (-score, key), k rows or as many as satisfy the filter."""
-    from external_benchmarks_spark.functions.vector import dot_product_literal
-    from external_benchmarks_spark.operators.quantize import pq_adc_topk
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
-
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
     if not index.payload_cols:
         raise ValueError(
             "index carries no payload columns; "
             "build_pq_index(..., payload_cols=[...]) to enable filtered reads"
         )
-    codes = pq_index_codes(spark, index).filter(predicate)
-    vecs = spark.read.parquet(index.vectors_path)
-    if nprobe is not None:
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        codes = codes.filter(F.col("centroid_id").isin(cells))
-        vecs = vecs.filter(F.col("centroid_id").isin(cells))
-    cand = pq_adc_topk(
-        codes, index.codebooks, query, k=rerank, key_col=index.key_col
-    ).select(index.key_col)
-    return (
-        vecs.join(F.broadcast(cand), index.key_col)
-        .select(
-            index.key_col,
-            dot_product_literal(
-                F.col(emb_col).cast("array<double>"), query
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(index.key_col))
-        .limit(k)
+    return pq_index_rerank_topk(
+        spark, index, query, k=k, rerank=rerank, nprobe=nprobe,
+        emb_col=emb_col, predicate=predicate,
     )

@@ -29,7 +29,104 @@ import os
 import numpy as np
 
 
-class VectorServingIndex:
+def _dir_signature(d: str) -> tuple:
+    """Sorted (name, size) of a partition directory's data files: it
+    changes whenever a delta append or a compaction rewrites the
+    directory, so refresh() reloads only the directories it touched."""
+    return tuple(
+        sorted(
+            (f, os.path.getsize(os.path.join(d, f)))
+            for f in os.listdir(d)
+            if not f.startswith(("_", "."))
+        )
+    )
+
+
+def _matrix(tbl, col: str) -> np.ndarray:
+    """A fixed-length list column as a (rows x dim) array of its own
+    element dtype."""
+    values = tbl.column(col).combine_chunks().values.to_numpy(
+        zero_copy_only=False
+    )
+    n = len(tbl)
+    return values.reshape(n, len(values) // max(n, 1))
+
+
+def _merge_topk(ids_parts: list, score_parts: list, k: int):
+    """Concatenate per-cell candidates; returns (ids, scores, order)
+    where ``order`` indexes the best k rows by (-score, key), the Spark
+    plans' exact output order."""
+    if not ids_parts:
+        return np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+    ids = np.concatenate(ids_parts)
+    scores = np.concatenate(score_parts)
+    return ids, scores, np.lexsort((ids, -scores))[:k]
+
+
+class _CellStore:
+    """Arrays per ``<col>=<v>`` directory of a partitioned parquet
+    layout, held in ``cells`` and reloaded only when a directory's file
+    signature changes. Subclasses name the columns to read and decode
+    the table into the cell's arrays."""
+
+    def __init__(self, root: str, col: str):
+        self._root = root
+        self._col = col
+        self.cells: dict[int, tuple] = {}
+        self._sigs: dict[int, tuple] = {}
+        for v in sorted(self._on_disk()):
+            self._load(v)
+        if not self.cells:
+            raise ValueError(f"no {col}=* directories under {root}")
+
+    def _dir(self, v: int) -> str:
+        return os.path.join(self._root, f"{self._col}={v}")
+
+    def _on_disk(self) -> set[int]:
+        prefix = f"{self._col}="
+        return {
+            int(e.split("=", 1)[1])
+            for e in os.listdir(self._root)
+            if e.startswith(prefix)
+        }
+
+    def _load(self, v: int) -> None:
+        import pyarrow.parquet as pq
+
+        # Signature BEFORE the read: if a writer appends between the
+        # snapshot and the read, the stored signature is stale and the
+        # next refresh() reloads — at worst one redundant reload, never
+        # a permanently missed update (the TOCTOU otherwise possible
+        # under a concurrent appender).
+        sig = _dir_signature(self._dir(v))
+        tbl = pq.read_table(self._dir(v), columns=self._columns())
+        self.cells[v] = self._decode(v, tbl)
+        self._sigs[v] = sig
+
+    def _drop(self, v: int) -> None:
+        del self.cells[v]
+        del self._sigs[v]
+
+    def _refresh(self, only) -> list[int]:
+        """Incremental layout refresh: reload ONLY directories whose
+        on-disk file set changed (delta append, compaction), plus any
+        new ones; drop removed ones. O(dirty cells), never O(layout).
+        ``only`` forces a reload of those directories. Returns the
+        reloaded values."""
+        on_disk = self._on_disk()
+        for gone in set(self.cells) - on_disk:
+            self._drop(gone)
+        todo = set(only) if only is not None else on_disk
+        refreshed = []
+        for v in sorted(todo & on_disk):
+            if only is None and self._sigs.get(v) == _dir_signature(self._dir(v)):
+                continue
+            self._load(v)
+            refreshed.append(v)
+        return refreshed
+
+
+class VectorServingIndex(_CellStore):
     """In-memory filtered top-k over a ``partitionBy(label)`` parquet
     layout (the output of ``pipeline/index.build_index_layout`` or the
     bench's vtopk layout)."""
@@ -45,84 +142,27 @@ class VectorServingIndex:
         self.key_col = key_col
         self.emb_col = emb_col
         self.partition_col = partition_col
-        self.partitions: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        # per-partition file signature (name, size) — lets refresh()
-        # reload only the partitions a delta append / compaction touched
-        self._sigs: dict[int, tuple] = {}
-        prefix = f"{partition_col}="
-        for entry in sorted(os.listdir(layout_dir)):
-            if not entry.startswith(prefix):
-                continue
-            label = int(entry.split("=", 1)[1])
-            self._load_partition(label)
-        if not self.partitions:
-            raise ValueError(f"no {prefix}* directories under {layout_dir}")
+        super().__init__(layout_dir, partition_col)
 
-    def _part_dir(self, label: int) -> str:
-        return os.path.join(
-            self.layout_dir, f"{self.partition_col}={label}"
-        )
+    @property
+    def partitions(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        return self.cells
 
-    def _signature(self, label: int) -> tuple:
-        d = self._part_dir(label)
-        return tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
+    def _columns(self) -> list[str]:
+        return [self.key_col, self.emb_col]
 
-    def _load_partition(self, label: int) -> None:
-        import pyarrow.parquet as pq
-
-        # Signature BEFORE the read: if a writer appends between the
-        # snapshot and the read, the stored signature is stale and the
-        # next refresh() reloads — at worst one redundant reload, never
-        # a permanently missed update (the TOCTOU otherwise possible
-        # under a concurrent appender).
-        sig = self._signature(label)
-        tbl = pq.read_table(
-            self._part_dir(label), columns=[self.key_col, self.emb_col]
-        )
+    def _decode(self, label: int, tbl) -> tuple[np.ndarray, np.ndarray]:
         ids = tbl.column(self.key_col).to_numpy()
-        emb = tbl.column(self.emb_col).combine_chunks()
-        values = emb.values.to_numpy(zero_copy_only=False)
-        n = len(tbl)
-        dim = len(values) // max(n, 1)
         # float64 scoring matrix — same dtype promotion as the Spark
         # fast path (score_batch_udf does astype(float64) per batch)
-        mat = values.reshape(n, dim).astype(np.float64)
-        self.partitions[label] = (np.asarray(ids), mat)
-        self._sigs[label] = sig
+        return np.asarray(ids), _matrix(tbl, self.emb_col).astype(np.float64)
 
     def refresh(self, labels=None) -> list[int]:
-        """Incremental layout refresh: reload ONLY partitions whose
-        on-disk file set changed (delta append, compaction), plus any
-        new partitions; drop removed ones. O(dirty cells), never
-        O(layout) — the serving-side completion of
-        pipeline/index.append_to_index_layout. Pass ``labels`` to force
-        specific partitions. Returns the reloaded labels."""
-        prefix = f"{self.partition_col}="
-        on_disk = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.layout_dir)
-            if e.startswith(prefix)
-        }
-        for gone in set(self.partitions) - on_disk:
-            del self.partitions[gone]
-            del self._sigs[gone]
-        todo = set(labels) if labels is not None else on_disk
-        refreshed = []
-        for label in sorted(todo & on_disk):
-            if (
-                labels is None
-                and self._sigs.get(label) == self._signature(label)
-            ):
-                continue
-            self._load_partition(label)
-            refreshed.append(label)
-        return refreshed
+        """Reload only the partitions a delta append / compaction
+        touched (see ``_CellStore._refresh``) — the serving-side
+        completion of pipeline/index.append_to_index_layout. Pass
+        ``labels`` to force specific partitions."""
+        return self._refresh(labels)
 
     def topk(
         self,
@@ -165,15 +205,11 @@ class VectorServingIndex:
                 ids, scores = ids[sel], scores[sel]
             best_ids.append(ids)
             best_scores.append(scores)
-        if not best_ids:
-            return []
-        ids = np.concatenate(best_ids)
-        scores = np.concatenate(best_scores)
-        order = np.lexsort((ids, -scores))[:k]
+        ids, scores, order = _merge_topk(best_ids, best_scores, k)
         return [(int(ids[i]), float(scores[i])) for i in order]
 
 
-class PQServingIndex:
+class PQServingIndex(_CellStore):
     """ADC serving over a persisted PQ index (`pipeline/pqindex.py`):
     the compressed twin of :class:`VectorServingIndex`. Loads the
     cell-partitioned codes (``centroid_id=N`` directories) plus the
@@ -204,79 +240,36 @@ class PQServingIndex:
 
         self.index = load_pq_index(root)
         self.codes_dir = self.index.codes_path
-        self.cells: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         # payload columns (filtered-ANN metadata riding inside the
         # codes layout): cell -> {col: np.ndarray}, loaded with the
         # cell iff the index declares payload_cols
         self._payload: dict[int, dict] = {}
-        self._sigs: dict[int, tuple] = {}
         # rerank-path mmap cache: cell -> (sidecar signature, ids mmap,
         # float32 matrix mmap); signature-checked per touch, so sidecar
         # appends/compactions invalidate lazily without an explicit call
         self._vec_mm: dict[int, tuple] = {}
-        for entry in sorted(os.listdir(self.codes_dir)):
-            if entry.startswith("centroid_id="):
-                self._load_cell(int(entry.split("=", 1)[1]))
-        if not self.cells:
-            raise ValueError(f"no centroid_id=* directories under {self.codes_dir}")
+        super().__init__(self.codes_dir, "centroid_id")
 
-    def _cell_dir(self, cell: int) -> str:
-        return os.path.join(self.codes_dir, f"centroid_id={cell}")
+    def _columns(self) -> list[str]:
+        return [self.index.key_col, "pq_codes", *self.index.payload_cols]
 
-    def _signature(self, cell: int) -> tuple:
-        d = self._cell_dir(cell)
-        return tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
-
-    def _load_cell(self, cell: int) -> None:
-        import pyarrow.parquet as pq
-
-        sig = self._signature(cell)  # before the read — see exact tier
-        pcols = list(self.index.payload_cols)
-        tbl = pq.read_table(
-            self._cell_dir(cell),
-            columns=[self.index.key_col, "pq_codes", *pcols],
-        )
-        ids = tbl.column(self.index.key_col).to_numpy()
-        codes = tbl.column("pq_codes").combine_chunks()
-        m = self.index.codebooks.shape[0]
-        flat = codes.values.to_numpy(zero_copy_only=False)
-        self.cells[cell] = (
-            np.asarray(ids),
-            flat.reshape(len(tbl), m).astype(np.int64),
-        )
-        if pcols:
+    def _decode(self, cell: int, tbl) -> tuple[np.ndarray, np.ndarray]:
+        if self.index.payload_cols:
             self._payload[cell] = {
                 c: np.asarray(tbl.column(c).to_numpy(zero_copy_only=False))
-                for c in pcols
+                for c in self.index.payload_cols
             }
-        self._sigs[cell] = sig
+        ids = tbl.column(self.index.key_col).to_numpy()
+        return np.asarray(ids), _matrix(tbl, "pq_codes").astype(np.int64)
+
+    def _drop(self, cell: int) -> None:
+        super()._drop(cell)
+        self._payload.pop(cell, None)
 
     def refresh(self, cells=None) -> list[int]:
         """Reload ONLY cells whose on-disk file set changed (ledgered
         append, compaction); drop removed, pick up new. O(dirty cells)."""
-        on_disk = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.codes_dir)
-            if e.startswith("centroid_id=")
-        }
-        for gone in set(self.cells) - on_disk:
-            del self.cells[gone]
-            del self._sigs[gone]
-            self._payload.pop(gone, None)
-        todo = set(cells) if cells is not None else on_disk
-        refreshed = []
-        for cell in sorted(todo & on_disk):
-            if cells is None and self._sigs.get(cell) == self._signature(cell):
-                continue
-            self._load_cell(cell)
-            refreshed.append(cell)
-        return refreshed
+        return self._refresh(cells)
 
     def _filter_mask(self, cell: int, where: dict, n: int):
         """Conjunctive IN-list mask over the cell's payload columns —
@@ -366,9 +359,7 @@ class PQServingIndex:
             best_cells.append(np.full(len(ids), cell, dtype=np.int64))
         if not best_ids:
             return [] if not _with_cells else ([], {})
-        ids = np.concatenate(best_ids)
-        scores = np.concatenate(best_scores)
-        order = np.lexsort((ids, -scores))[:k]
+        ids, scores, order = _merge_topk(best_ids, best_scores, k)
         if _with_cells:
             cells_flat = np.concatenate(best_cells)
             by_cell: dict[int, list[int]] = {}
@@ -408,13 +399,7 @@ class PQServingIndex:
                 np.empty(0, dtype=np.int64),
                 np.empty((0, 0), dtype=np.float32),
             )
-        sig = tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
+        sig = _dir_signature(d)
         cached = self._vec_mm.get(cell)
         if cached is not None and cached[0] == sig:
             return cached[1], cached[2]
@@ -435,10 +420,7 @@ class PQServingIndex:
 
             tbl = pq.read_table(d, columns=[self.index.key_col, "embedding"])
             ids = tbl.column(self.index.key_col).to_numpy()
-            emb = tbl.column("embedding").combine_chunks()
-            vals = emb.values.to_numpy(zero_copy_only=False)
-            n = len(tbl)
-            mat = vals.reshape(n, len(vals) // max(n, 1))
+            mat = _matrix(tbl, "embedding")
             order = np.argsort(ids, kind="stable")
             for path, arr in ((ids_p, ids[order]), (mat_p, mat[order])):
                 tmp = path + ".tmp.npy"
@@ -493,8 +475,6 @@ class PQServingIndex:
         _cand, by_cell = self.topk(
             qvec, k=rerank, nprobe=nprobe, where=where, _with_cells=True
         )
-        if not by_cell:
-            return []
         q = np.asarray([float(v) for v in qvec], dtype=np.float64)
         all_ids: list[np.ndarray] = []
         all_scores: list[np.ndarray] = []
@@ -515,9 +495,5 @@ class PQServingIndex:
             scores = np.cumsum(rows * q[None, :], axis=1)[:, -1]
             all_ids.append(cand)
             all_scores.append(scores)
-        if not all_ids:
-            return []
-        ids = np.concatenate(all_ids)
-        scores = np.concatenate(all_scores)
-        order = np.lexsort((ids, -scores))[:k]
+        ids, scores, order = _merge_topk(all_ids, all_scores, k)
         return [(int(ids[i]), float(scores[i])) for i in order]

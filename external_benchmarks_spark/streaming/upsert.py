@@ -50,6 +50,11 @@ def _bucket(col, n: int):
     return F.pmod(F.hash(col), F.lit(n))
 
 
+def _load_manifest(path: str) -> dict[str, int]:
+    with open(path) as f:
+        return {k: int(v) for k, v in json.load(f).items()}
+
+
 class UpsertTable:
     """Hash-bucketed, bucket-versioned parquet table with keyed MERGE.
 
@@ -142,8 +147,7 @@ class UpsertTable:
         return os.path.join(self.root, MANIFEST)
 
     def _read_manifest(self) -> dict[str, int]:
-        with open(self._manifest_path()) as f:
-            return {k: int(v) for k, v in json.load(f).items()}
+        return _load_manifest(self._manifest_path())
 
     def _write_manifest(self, m: dict[str, int]) -> None:
         tmp = self._manifest_path() + ".tmp"
@@ -166,8 +170,7 @@ class UpsertTable:
             raise ValueError(
                 f"commit {commit} not found (vacuumed or never written)"
             )
-        with open(path) as f:
-            return {k: int(v) for k, v in json.load(f).items()}
+        return _load_manifest(path)
 
     def history(self) -> list[int]:
         """Commit ids still readable (ascending)."""
@@ -184,18 +187,46 @@ class UpsertTable:
             os.path.join(self.root, f"v={v}", f"bucket={b}") for b, v in items
         ]
 
+    def _read_buckets(self, paths: list[str], cached_schema: bool) -> DataFrame:
+        """Bucket directories as one frame (with their ``bucket`` and
+        ``v`` directory columns). ``cached_schema`` uses the schema this
+        instance recorded at its last write, which skips the footer-
+        inference job; files missing evolved columns read as null under
+        it. Otherwise mergeSchema: buckets written before a schema
+        evolution lack the new columns and merging footers fills them
+        with nulls (footer-only cost, bounded by bucket count)."""
+        if cached_schema and self._base_schema is not None:
+            reader = self.spark.read.schema(self._base_schema)
+        else:
+            reader = self.spark.read.option("mergeSchema", "true")
+        return reader.option("basePath", self.root).parquet(*paths)
+
+    def _write_version(self, df: DataFrame, version: int) -> None:
+        """Write ``df`` (carrying its ``bucket`` column) as version
+        directory ``v=<version>``. The pre-write repartition keeps every
+        version at ONE file per bucket. Skipping it looks cheaper per
+        MERGE but compounds: the batch partition writes a file into
+        EVERY touched bucket, base files map 1:1 into output files, so
+        file count grows by n_buckets per MERGE until scans fragment
+        across 32 partitions (measured: 95-file versions and 2x slower
+        MERGEs). Against a compacted base the shuffle is one tiny
+        AQE-coalesced stage."""
+        (
+            df.repartition(F.col("bucket"))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(self.root, f"v={version}"))
+        )
+
     # -- table API ---------------------------------------------------------
     def init(self, df: DataFrame) -> None:
         with self._writer_lease("init"):
             self._init_impl(df)
 
     def _init_impl(self, df: DataFrame) -> None:
-        (
-            df.withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets))
-            .repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, "v=0"))
+        self._write_version(
+            df.withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets)),
+            0,
         )
         present = [
             e.split("=", 1)[1]
@@ -216,21 +247,7 @@ class UpsertTable:
         paths = self._bucket_paths(manifest)
         if not paths:
             raise ValueError(f"empty table at {self.root}")
-        # Schema resolution: the cached post-MERGE schema (when this
-        # instance has written) skips footer inference entirely — files
-        # missing evolved columns read as null under an explicit schema.
-        # Otherwise mergeSchema: buckets written before a schema evolution
-        # lack the new columns; merging footers fills them with nulls.
-        # Footer-only cost, bounded by bucket count (not data size).
-        if self._base_schema is not None and at_commit is None:
-            reader = self.spark.read.schema(self._base_schema)
-        else:
-            reader = self.spark.read.option("mergeSchema", "true")
-        return (
-            reader.option("basePath", self.root)
-            .parquet(*paths)
-            .drop("v", "bucket")
-        )
+        return self._read_buckets(paths, at_commit is None).drop("v", "bucket")
 
     @staticmethod
     def _with_v(schema):
@@ -334,18 +351,11 @@ class UpsertTable:
         """Commit a :meth:`prepare`d batch under the writer lease."""
         with self._writer_lease("upsert"):
             self._upsert_impl(
-                prepared["updates"],
-                prepared["evolve"],
-                _pre=prepared["small"],
+                prepared["updates"], prepared["evolve"], prepared["small"]
             )
 
-    _UNPREPARED = object()
-
     def _upsert_impl(
-        self,
-        updates: DataFrame,
-        evolve_schema: bool = False,
-        _pre=_UNPREPARED,
+        self, updates: DataFrame, evolve_schema: bool, small
     ) -> None:
         """MERGE semantics: delete matching keys, insert all update rows.
         Last-writer-wins within a batch by highest ``op_ts`` if present.
@@ -362,12 +372,9 @@ class UpsertTable:
         delete-key set all come out of the single collect; the base-bucket
         schema is cached on the instance after the first MERGE so later
         MERGEs skip parquet footer inference (a per-job driver cost that
-        dominated the 100-row-batch latency)."""
-        small = (
-            self._small_batch(updates)
-            if _pre is UpsertTable._UNPREPARED
-            else _pre
-        )
+        dominated the 100-row-batch latency). ``small`` is
+        :meth:`_small_batch`'s result for ``updates`` (None: too large
+        for the driver-side path)."""
         if small is not None:
             upd, touched, key_vals = small
             inline_keys = True
@@ -405,15 +412,7 @@ class UpsertTable:
         base_paths = self._bucket_paths(manifest, touched)
         merged = upd
         if base_paths:
-            if self._base_schema is not None and not evolve_schema:
-                # Explicit schema: no footer-inference job. Discovered
-                # partition values (bucket, v) still come from the dirs.
-                reader = self.spark.read.schema(self._base_schema)
-            else:
-                reader = self.spark.read.option("mergeSchema", "true")
-            base = (
-                reader.option("basePath", self.root).parquet(*base_paths).drop("v")
-            )
+            base = self._read_buckets(base_paths, not evolve_schema).drop("v")
             if inline_keys:
                 # NULL-keyed base rows survive (an anti-join would never
                 # match them); NULL update keys delete nothing.
@@ -433,19 +432,7 @@ class UpsertTable:
                 merged = survivors.unionByName(upd.select(*survivors.columns))
         # Old versions are read, the NEW version directory is written: no
         # in-place overwrite, no memory barrier, readers keep their snapshot.
-        # The pre-write repartition keeps every version at ONE file per
-        # bucket. Skipping it looks cheaper per-MERGE but compounds: the
-        # batch partition writes a file into EVERY touched bucket, base
-        # files map 1:1 into output files, so file count grows by
-        # n_buckets per MERGE until scans fragment across 32 partitions
-        # (measured: 95-file versions and 2x slower MERGEs). Against a
-        # compacted base the shuffle is one tiny AQE-coalesced stage.
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, f"v={new_version}"))
-        )
+        self._write_version(merged, new_version)
         for b in touched:
             manifest[str(b)] = new_version
         self._write_manifest(manifest)
@@ -466,36 +453,25 @@ class UpsertTable:
     def _compact_impl(self) -> None:
         manifest = self._read_manifest()
         new_version = max(manifest.values(), default=-1) + 1
-        current = (
-            self.spark.read.option("basePath", self.root)
-            .option("mergeSchema", "true")
-            .parquet(*self._bucket_paths(manifest))
-            .drop("v")
-        )
-        (
-            current.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, f"v={new_version}"))
-        )
+        current = self._read_buckets(
+            self._bucket_paths(manifest), cached_schema=False
+        ).drop("v")
+        self._write_version(current, new_version)
         self._write_manifest({b: new_version for b in manifest})
         self._base_schema = self._with_v(current.schema)
         self.vacuum()
 
-    def vacuum(self, keep_latest: bool = True) -> None:
+    def vacuum(self) -> None:
         """Drop version directories no longer referenced by the manifest
         (lease-guarded; call when no readers hold older snapshots).
         Commits whose versions are dropped become unreadable — their log
         entries are removed too (Delta VACUUM retention analog)."""
         with self._writer_lease("vacuum"):
-            self._vacuum_impl(keep_latest)
+            self._vacuum_impl()
 
-    def _vacuum_impl(self, keep_latest: bool = True) -> None:
+    def _vacuum_impl(self) -> None:
         current = self._read_manifest()
-        live = {
-            os.path.join(self.root, f"v={v}", f"bucket={b}")
-            for b, v in current.items()
-        }
+        live = set(self._bucket_paths(current))
         for entry in os.listdir(self.root):
             if not entry.startswith("v="):
                 continue
@@ -511,13 +487,8 @@ class UpsertTable:
         if os.path.isdir(cdir):
             for entry in os.listdir(cdir):
                 path = os.path.join(cdir, entry)
-                with open(path) as f:
-                    m = {k: int(v) for k, v in json.load(f).items()}
-                refs = {
-                    os.path.join(self.root, f"v={v}", f"bucket={b}")
-                    for b, v in m.items()
-                }
-                if not refs <= live and m != current:
+                m = _load_manifest(path)
+                if not set(self._bucket_paths(m)) <= live and m != current:
                     os.remove(path)
 
 

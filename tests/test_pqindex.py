@@ -688,3 +688,87 @@ def test_serving_where_validates(spark, filtered_index, rerank_index):
     bare = PQServingIndex(rerank_index.root)
     with pytest.raises(ValueError, match="payload"):
         bare.topk(QVEC, k=5, where={"label": [1]})
+
+
+def test_string_payload_filtered_rerank_parity(spark):
+    """A string payload column keeps its own type through pq_encode, and
+    the serving where= filter over it answers bit-identically to the
+    Spark predicate on the codes scan."""
+    from external_benchmarks_spark.pipeline.pqindex import (
+        pq_index_filtered_rerank,
+    )
+    from external_benchmarks_spark.serving import PQServingIndex
+
+    emb = _emb(spark).withColumn(
+        "main_category", F.concat(F.lit("cat"), F.col("label").cast("string"))
+    )
+    cats = {"cat1", "cat3"}
+    with tempfile.TemporaryDirectory() as d:
+        idx = build_pq_index(
+            spark, emb, os.path.join(d, "pqs"),
+            n_codes=N_CODES, m_subspaces=M, n_centroids=N_CENT,
+            store_vectors=True, payload_cols=("main_category",),
+        )
+        assert dict(pq_index_codes(spark, idx).dtypes)["main_category"] == "string"
+        srv = PQServingIndex(idx.root)
+        for nprobe in (3, None):
+            want = [
+                (r.vec_id, r.score)
+                for r in pq_index_filtered_rerank(
+                    spark, idx, QVEC,
+                    predicate=F.col("main_category").isin(*sorted(cats)),
+                    k=10, rerank=60, nprobe=nprobe,
+                ).collect()
+            ]
+            got = srv.topk_rerank(
+                QVEC, k=10, rerank=60, nprobe=nprobe,
+                where={"main_category": cats},
+            )
+            assert want and got == want, (nprobe, got[:3], want[:3])
+
+
+def test_fingerprint_recipe_is_current_after_build_and_append(spark):
+    """pq_index_fingerprint is the recipe build and append record and the
+    registry's reuse check computes; its digest stays the one indexes
+    already on disk carry."""
+    import __spark_entry__ as entry_mod
+    from external_benchmarks_spark.pipeline.layout import (
+        layout_is_current,
+        source_fingerprint,
+    )
+    from external_benchmarks_spark.pipeline.pqindex import pq_index_fingerprint
+
+    emb = _emb(spark)
+    src = [os.path.join(SF_DIR, "embeddings.parquet")]
+
+    def fp(applied):
+        return pq_index_fingerprint(
+            src, N_CODES, M, N_CENT, payload_cols=("label",), applied=applied
+        )
+
+    with tempfile.TemporaryDirectory() as d:
+        idx = build_pq_index(
+            spark, emb.filter(F.col("vec_id") % 10 != 0), os.path.join(d, "pq"),
+            n_codes=N_CODES, m_subspaces=M, n_centroids=N_CENT,
+            source_paths=src, payload_cols=("label",),
+        )
+        assert layout_is_current(idx.codes_path, fp([]))
+        assert append_pq_index(
+            spark, idx, emb.filter(F.col("vec_id") % 10 == 0),
+            batch_id="b1", source_paths=src,
+        )
+        assert layout_is_current(idx.codes_path, fp(["b1"]))
+        assert not layout_is_current(idx.codes_path, fp([]))
+    legacy = source_fingerprint(src, extra={
+        "pq": {"n_codes": N_CODES, "m": M, "n_centroids": N_CENT,
+               "metric": "cosine", "payload_cols": ["label"]},
+        "applied": ["b1"],
+    })
+    assert fp(["b1"]) == legacy
+    assert entry_mod._pq_index_fp(SF_DIR, ["b1"], ("label",)) == (
+        pq_index_fingerprint(
+            src, entry_mod.PQ_CODES, entry_mod.PQ_M,
+            entry_mod.IVF_N_CENTROIDS, payload_cols=("label",),
+            applied=["b1"],
+        )
+    )

@@ -149,6 +149,53 @@ def test_serving_incremental_refresh_only_dirty_cells(spark, sf_dir, tmp_path):
     assert idx.topk(q, k=20, label=0) == fresh.topk(q, k=20, label=0)
 
 
+@pytest.mark.parametrize("tier", ["exact", "pq"])
+def test_refresh_drops_removed_cell(spark, sf_dir, tmp_path, tier):
+    """Deleting one partition/cell directory: refresh() drops it (for PQ
+    its payload arrays too) and answers equal a freshly constructed
+    index over the same files."""
+    import shutil
+
+    from external_benchmarks_spark.pipeline.index import build_index_layout
+    from external_benchmarks_spark.pipeline.pqindex import build_pq_index
+    from external_benchmarks_spark.serving import PQServingIndex
+
+    emb = Catalog(spark, sf_dir).embeddings
+    q = entry_mod.QVEC
+    if tier == "exact":
+        root = str(tmp_path / "layout")
+        build_index_layout(emb, root, partition_col="label")
+        cls, cell_root, col = VectorServingIndex, root, "label"
+
+        def answer(s):
+            return s.topk(q, k=50)
+    else:
+        root = str(tmp_path / "pq")
+        build_pq_index(
+            spark, emb, root, n_codes=16, m_subspaces=8, n_centroids=8,
+            store_vectors=True, payload_cols=("label",),
+        )
+        cls, cell_root, col = PQServingIndex, os.path.join(root, "codes"), "centroid_id"
+
+        def answer(s):
+            return (
+                s.topk(q, k=20),
+                s.topk_rerank(q, k=10, rerank=40, where={"label": [1, 3]}),
+            )
+
+    idx = cls(root)
+    before = answer(idx)
+    gone = sorted(idx.cells)[0]
+    shutil.rmtree(os.path.join(cell_root, f"{col}={gone}"))
+    assert idx.refresh() == []  # nothing reloaded, one cell dropped
+    assert gone not in idx.cells and gone not in idx._sigs
+    if tier == "pq":
+        assert gone not in idx._payload
+    after = answer(idx)
+    assert after == answer(cls(root))
+    assert after != before  # the dropped cell held answers
+
+
 def test_file_stream_query_server_bit_parity(spark, layout, tmp_path):
     """The streaming query server (rate/file readStream -> foreachBatch
     -> serving index) must answer every request bit-identically to a

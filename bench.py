@@ -34,6 +34,40 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 QVEC = entry_mod.QVEC
 
 
+# The one timing loop: every timed region in this file and in tools/
+# goes through these three helpers, so how a leg is clocked is decided
+# here and nowhere else (tests/test_bench_timing.py enforces it).
+
+
+def timed(fn):
+    """Call ``fn()`` once; return ``(result, wall seconds)``."""
+    t0 = time.perf_counter()
+    out = fn()
+    return out, time.perf_counter() - t0
+
+
+def rep_times(fn, n: int) -> list[float]:
+    """Wall seconds of ``n`` back-to-back ``fn()`` calls, in call order:
+    index 0 is the cold rep."""
+    return [timed(fn)[1] for _ in range(n)]
+
+
+def paced(fn, interval_s: float, n: int) -> list[tuple[float, float]]:
+    """Open-loop schedule: call ``fn(i)`` at ``start + i * interval_s``
+    for i in range(n), sleeping until each call is due. Returns one
+    ``(late_s, seconds)`` per call: ``late_s`` is how far past its due
+    time the call found the clock (negative: it waited ``-late_s``
+    first), ``seconds`` its own wall time."""
+    start = time.perf_counter()
+    out = []
+    for i in range(n):
+        late = time.perf_counter() - (start + i * interval_s)
+        if late < 0:
+            time.sleep(-late)
+        out.append((late, timed(lambda: fn(i))[1]))
+    return out
+
+
 _VT_LAYOUT: dict[str, str] = {}
 
 
@@ -491,19 +525,16 @@ def store_compaction_leg(spark, sf) -> dict:
     delta = d.filter(F.col("doc_id") % 100 == 0)
 
     def _join_median():
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            delta_dedup(spark, delta, store).count()
-            reps.append(time.perf_counter() - t0)
-        return statistics.median(reps)
+        return statistics.median(
+            rep_times(lambda: delta_dedup(spark, delta, store).count(), 3)
+        )
 
     for b in range(1, 9):
         absorb_delta(spark, d.filter(F.col("doc_id") % 100 == b), store)
     frag_s = _join_median()
-    t0 = time.perf_counter()
-    res = compact_signature_store(spark, store, max_files_per_bucket=2)
-    compact_s = time.perf_counter() - t0
+    res, compact_s = timed(
+        lambda: compact_signature_store(spark, store, max_files_per_bucket=2)
+    )
     comp_s = _join_median()
     shutil.rmtree(store.root, ignore_errors=True)
     for t in (store.bands_table, store.shingles_table):
@@ -536,9 +567,7 @@ def vector_refresh_leg(spark, sf) -> dict:
         tag=f"bench_cr_{uuid.uuid4().hex[:8]}",
     )
     absorb_delta_vectors(spark, e.filter(F.col("vec_id") % 10 == 0), store)
-    t0 = time.perf_counter()
-    stats = refresh_centroids(spark, store)
-    refresh_s = time.perf_counter() - t0
+    stats, refresh_s = timed(lambda: refresh_centroids(spark, store))
     shutil.rmtree(os.path.dirname(store.vectors_path), ignore_errors=True)
     return {
         "refresh_s": round(refresh_s, 3),
@@ -571,21 +600,20 @@ def maintenance_soak_leg(spark, sf, n_cycles: int = 6) -> dict:
 def ingest_stage_timings(spark, sf) -> dict:
     """One instrumented replay of the ingest_report arc — the per-stage
     cost table the round-8 verdict asked for (finding #2). Reuses the
-    same fixture/stage dirs as the leg, so the numbers describe exactly
-    what the leg pays: stage (wget-analog, no-op on signature match),
-    permissive parse + corrupt/price counts, the normalize->derive->
-    embed materialization (the dominant term — now batch-vectorized in
+    leg's fixture/stage dirs and calls the same ingest functions as
+    pipeline/ingest.ingest_products, so the numbers describe what the
+    leg pays: stage (wget-analog, no-op on signature match), permissive
+    parse + the one fused quarantine-count aggregate, the normalize->
+    derive->embed materialization into the persisted product table (the
+    dominant term — batch-vectorized in
     pipeline/embedding.hashed_ngram_encode), the fused 2-job stats
-    report, and the price-cents aggregate."""
-    from external_benchmarks_spark.pipeline.dataset import add_derived_columns
-    from external_benchmarks_spark.pipeline.embedding import embed_fields
+    report, and the price-cents aggregate, both over that table."""
     from external_benchmarks_spark.pipeline.ingest import (
         RAW_META_SCHEMA,
-        normalize_raw_products,
-        parse_price,
+        product_table,
+        quarantine_counts,
     )
     from external_benchmarks_spark.pipeline.report import dataset_report
-    from external_benchmarks_spark.schemas import PRODUCT_SCHEMA, validate_schema
     from external_benchmarks_spark.sources.registry import (
         read_jsonl_permissive,
         stage_dataset,
@@ -595,41 +623,38 @@ def ingest_stage_timings(spark, sf) -> dict:
     work = os.path.join(tempfile.gettempdir(), f"ebs_ingest_report_{tag}")
     raw_file = entry_mod._ingest_report_fixture(spark, sf)
     t: dict[str, float] = {}
-    t0 = time.perf_counter()
-    staged = stage_dataset("file://" + raw_file, os.path.join(work, "stage"))
-    t["stage"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA).cache()
-    raw.filter(F.col("_corrupt").isNotNull()).count()
-    good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-    good.filter(
-        F.col("price").isNotNull()
-        & (F.trim(F.col("price")) != "")
-        & parse_price(F.col("price")).isNull()
-    ).count()
-    t["parse_counts"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    products = embed_fields(
-        add_derived_columns(normalize_raw_products(good, "tpch_part")),
-        fields=("title", "description", "features", "combined_text",
-                "main_category", "categories", "store"),
-        dim=8,
-    ).select([f.name for f in PRODUCT_SCHEMA.fields])
-    validate_schema(products)
-    products.count()
-    t["normalize_embed_count"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    dataset_report(
-        products,
-        numeric_cols=["rating_number"],
-        cat_cols=["rating_tier", "review_volume", "main_category"],
-        text_cols=["title"],
+    staged, t["stage"] = timed(
+        lambda: stage_dataset("file://" + raw_file, os.path.join(work, "stage"))
     )
-    t["report"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    cents = F.expr("CAST(ROUND(price * 100) AS BIGINT)")
-    products.agg(F.sum(cents), F.min(cents), F.max(cents)).collect()
-    t["price_agg"] = time.perf_counter() - t0
+
+    def parse():
+        raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA).cache()
+        quarantine_counts(raw)
+        return raw
+
+    def materialize():
+        good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
+        products = product_table(good, "tpch_part", dim=8).persist()
+        products.count()
+        return products
+
+    raw, t["parse_counts"] = timed(parse)
+    products, t["normalize_embed_count"] = timed(materialize)
+    _, t["report"] = timed(
+        lambda: dataset_report(
+            products,
+            numeric_cols=["rating_number"],
+            cat_cols=["rating_tier", "review_volume", "main_category"],
+            text_cols=["title"],
+        )
+    )
+
+    def price_agg():
+        cents = F.expr("CAST(ROUND(price * 100) AS BIGINT)")
+        products.agg(F.sum(cents), F.min(cents), F.max(cents)).collect()
+
+    _, t["price_agg"] = timed(price_agg)
+    products.unpersist()
     raw.unpersist()
     return {k: round(v, 3) for k, v in t.items()}
 
@@ -756,17 +781,13 @@ def mixed_rw(spark, sf, n_reads: int = 20, n_writes: int = 20):
                 .withColumn("label", F.lit(90 + i))
                 .withColumn("op_ts", F.lit(i))
             )
-            t0 = time.perf_counter()
-            t.upsert(updates)
-            write_times.append(time.perf_counter() - t0)
+            write_times.append(timed(lambda: t.upsert(updates))[1])
 
     th = threading.Thread(target=writer)
     th.start()
-    read_times: list[float] = []
-    for _ in range(n_reads):
-        t0 = time.perf_counter()
-        _vector_template("1pct")(spark, sf).count()
-        read_times.append(time.perf_counter() - t0)
+    read_times = rep_times(
+        lambda: _vector_template("1pct")(spark, sf).count(), n_reads
+    )
     th.join()
     return {
         "read_p95": round(_p95(read_times), 3),
@@ -788,9 +809,7 @@ def serving_under_load(spark, sf, qps: int = 20, duration_s: int = 30):
     from external_benchmarks_spark.serving import VectorServingIndex
 
     layout = _vt_layout(spark, sf)
-    t0 = time.perf_counter()
-    sidx = VectorServingIndex(layout)
-    refresh_s = time.perf_counter() - t0
+    sidx, refresh_s = timed(lambda: VectorServingIndex(layout))
 
     t = _upsert_table(spark, sf)
     stop = threading.Event()
@@ -804,25 +823,17 @@ def serving_under_load(spark, sf, qps: int = 20, duration_s: int = 30):
                 .withColumn("label", F.lit(80 + i % 8))
                 .withColumn("op_ts", F.lit(1000 + i))
             )
-            w0 = time.perf_counter()
-            t.upsert(updates)
-            write_times.append(time.perf_counter() - w0)
+            write_times.append(timed(lambda: t.upsert(updates))[1])
             i += 1
 
     th = threading.Thread(target=writer)
     th.start()
-    lat: list[float] = []
-    interval = 1.0 / qps
-    n = duration_s * qps
-    start = time.perf_counter()
-    for i in range(n):
-        target = start + i * interval
-        now = time.perf_counter()
-        if target > now:
-            time.sleep(target - now)
-        q0 = time.perf_counter()
-        sidx.topk(QVEC, k=100, label=i % 4, key_mod=10)
-        lat.append(time.perf_counter() - q0)
+    lat = [
+        s for _, s in paced(
+            lambda i: sidx.topk(QVEC, k=100, label=i % 4, key_mod=10),
+            1.0 / qps, duration_s * qps,
+        )
+    ]
     stop.set()
     th.join()
     lat.sort()
@@ -850,9 +861,7 @@ def serving_under_load(spark, sf, qps: int = 20, duration_s: int = 30):
             )
         )
         append_to_index_layout(delta, copy_dir, partition_col="label")
-        r0 = time.perf_counter()
-        dirty = sidx2.refresh()
-        incr_refresh_s = time.perf_counter() - r0
+        dirty, incr_refresh_s = timed(sidx2.refresh)
     finally:
         shutil.rmtree(copy_dir, ignore_errors=True)
     return {
@@ -936,9 +945,8 @@ def serving_write_tier(
         # interval the pipeline is saturated even when commit-only batch
         # p95 looks fine — it must be measured, not hidden by the
         # double-buffering (r12 advice).
-        p0 = time.perf_counter()
-        out = t.prepare(df)
-        prep_times.append(time.perf_counter() - p0)
+        out, dt = timed(lambda: t.prepare(df))
+        prep_times.append(dt)
         return out
 
     def make_upd(j):
@@ -953,49 +961,40 @@ def serving_write_tier(
             .select("vec_id", "embedding", "label", "op_ts")
         )
 
-    def writer():
+    def write_batches():
         from concurrent.futures import ThreadPoolExecutor
 
-        start = time.perf_counter()
-        try:
-            with ThreadPoolExecutor(max_workers=1) as pool:
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            nxt = []
+
+            def commit(j):
                 # batch 0's updates arrived during the warmup interval
-                nxt = pool.submit(timed_prepare, make_upd(0))
-                for j in range(n_batches):
-                    target = start + j * interval_s
-                    now = time.perf_counter()
-                    if target > now:
-                        time.sleep(target - now)
-                    else:
-                        late.append(now - target)
-                    prep = nxt.result()
-                    if j + 1 < n_batches:
-                        nxt = pool.submit(timed_prepare, make_upd(j + 1))
-                    w0 = time.perf_counter()
-                    t.upsert_prepared(prep)
-                    batch_times.append(time.perf_counter() - w0)
-        except Exception as exc:  # surfaced after join, not swallowed
-            writer_state["error"] = exc
-        finally:
+                prep = nxt.pop().result() if j else timed_prepare(make_upd(0))
+                if j + 1 < n_batches:
+                    nxt.append(pool.submit(timed_prepare, make_upd(j + 1)))
+                batch_times.append(timed(lambda: t.upsert_prepared(prep))[1])
+
+            late.extend(
+                ls for ls, _ in paced(commit, interval_s, n_batches) if ls >= 0
+            )
+
+    def writer():
+        try:
             # throughput is measured on the WRITER's own clock — the
             # read loop can overrun duration_s independently and must
             # not deflate the write-rate headline
-            writer_state["elapsed"] = time.perf_counter() - start
+            _, writer_state["elapsed"] = timed(write_batches)
+        except Exception as exc:  # surfaced after join, not swallowed
+            writer_state["error"] = exc
 
     th = threading.Thread(target=writer)
     th.start()
-    lat: list[float] = []
-    r_interval = 1.0 / read_qps
-    n_reads = duration_s * read_qps
-    r_start = time.perf_counter()
-    for i in range(n_reads):
-        target = r_start + i * r_interval
-        now = time.perf_counter()
-        if target > now:
-            time.sleep(target - now)
-        q0 = time.perf_counter()
-        sidx.topk(QVEC, k=100, label=i % 4, key_mod=10)
-        lat.append(time.perf_counter() - q0)
+    lat = [
+        s for _, s in paced(
+            lambda i: sidx.topk(QVEC, k=100, label=i % 4, key_mod=10),
+            1.0 / read_qps, duration_s * read_qps,
+        )
+    ]
     th.join()
     if writer_state["error"] is not None:
         raise writer_state["error"]
@@ -1092,13 +1091,12 @@ def embed_core_scaling(spark, sf, dim: int = 2688):
                 sub = sub.localCheckpoint(eager=True)
         n = sub.count()
         part = sub.repartition(cores)
-        dts = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            part.select(
+        dts = rep_times(
+            lambda: part.select(
                 embed(F.coalesce(F.col("text"), F.lit(""))).alias("e")
-            ).agg(F.sum(F.size("e"))).collect()
-            dts.append(time.perf_counter() - t0)
+            ).agg(F.sum(F.size("e"))).collect(),
+            3,
+        )
         out[f"docs_per_s_{cores}c"] = round(n / min(dts), 1)
     out["scaling_8c_over_1c"] = round(
         out["docs_per_s_8c"] / out["docs_per_s_1c"], 2
@@ -1116,8 +1114,6 @@ def dim2688_leg(spark, sf, dim: int = 2688):
     read at that width, proving the Arrow batch sizing (10k-row batches
     x 2688 dims ~ 100 MB float32) and the serving memory math at the
     real dimensionality rather than the testdata's 64."""
-    import numpy as np
-
     from external_benchmarks_spark.operators.topk import filtered_vector_topk
     from external_benchmarks_spark.pipeline.embedding import (
         embed_text_udf,
@@ -1134,38 +1130,38 @@ def dim2688_leg(spark, sf, dim: int = 2688):
     )
     out: dict[str, float] = {"dim": dim}
     # 1) inference throughput at full width (one pass, vectors forced)
-    t0 = time.perf_counter()
-    n_docs = emb.agg(F.sum(F.size("embedding"))).collect()[0][0] // dim
-    out["embed_s"] = round(time.perf_counter() - t0, 3)
+    dims, embed_s = timed(
+        lambda: emb.agg(F.sum(F.size("embedding"))).collect()
+    )
+    n_docs = dims[0][0] // dim
+    out["embed_s"] = round(embed_s, 3)
     out["embed_docs_per_sec"] = round(n_docs / out["embed_s"], 1)
     # 2) index build: the partitioned+sorted serving layout (re-embeds —
     #    that recompute IS the real build cost)
     layout = os.path.join(tempfile.gettempdir(), "ebs_dim2688_layout")
     shutil.rmtree(layout, ignore_errors=True)
-    t0 = time.perf_counter()
-    (
-        emb.repartition("label")
+    _, build_s = timed(
+        lambda: emb.repartition("label")
         .sortWithinPartitions("vec_id")
         .write.mode("overwrite")
         .partitionBy("label")
         .parquet(layout)
     )
-    out["index_build_s"] = round(time.perf_counter() - t0, 3)
+    out["index_build_s"] = round(build_s, 3)
     # 3) Spark filtered top-k at full width (Arrow/BLAS scoring)
     qvec = [float(x) for x in hashed_ngram_encode(["filtered vector query"], dim)[0]]
     base = spark.read.parquet(layout)
     pred = (F.col("label") == 0) & (F.col("vec_id") % 10 == 0)
-    filtered_vector_topk(base, qvec, pred, k=100, use_arrow_fast_path=True).count()
-    t0 = time.perf_counter()
-    filtered_vector_topk(base, qvec, pred, k=100, use_arrow_fast_path=True).count()
-    out["vtopk_s"] = round(time.perf_counter() - t0, 3)
+    _, vtopk_s = rep_times(
+        lambda: filtered_vector_topk(
+            base, qvec, pred, k=100, use_arrow_fast_path=True
+        ).count(),
+        2,
+    )
+    out["vtopk_s"] = round(vtopk_s, 3)
     # 4) serving reads at full width
     sidx = VectorServingIndex(layout)
-    reps = []
-    for _ in range(50):
-        t0 = time.perf_counter()
-        sidx.topk(qvec, k=100, label=0, key_mod=10)
-        reps.append(time.perf_counter() - t0)
+    reps = rep_times(lambda: sidx.topk(qvec, k=100, label=0, key_mod=10), 50)
     out["serving_p95_ms"] = round(_p95(reps) * 1000, 3)
     out["serving_rows"] = int(sum(len(ids) for ids, _ in sidx.partitions.values()))
     # 5) ANN recall at the reference's real width (README.md:76 demands
@@ -1189,9 +1185,10 @@ def dim2688_leg(spark, sf, dim: int = 2688):
                 emb_c, qvec, k=100, use_arrow_fast_path=True
             ).collect()
         }
-        t0 = time.perf_counter()
-        centroids = ivf_fit(emb_c, n_centroids=16, seed=42)
-        out["ivf_fit_s"] = round(time.perf_counter() - t0, 3)
+        centroids, fit_s = timed(
+            lambda: ivf_fit(emb_c, n_centroids=16, seed=42)
+        )
+        out["ivf_fit_s"] = round(fit_s, 3)
         assigned = ivf_assign(emb_c, centroids)
         ivf = {
             r.vec_id
@@ -1215,23 +1212,23 @@ def dim2688_leg(spark, sf, dim: int = 2688):
         from external_benchmarks_spark.operators.similarity import maxsim_topk
 
         qtoks = [qvec[i * 336 : (i + 1) * 336] for i in range(4)]
-        maxsim_topk(
-            emb_c, qtoks, k=100, n_chunks=8, use_arrow_fast_path=True
-        ).count()
-        t0 = time.perf_counter()
-        maxsim_topk(
-            emb_c, qtoks, k=100, n_chunks=8, use_arrow_fast_path=True
-        ).count()
-        out["maxsim_s"] = round(time.perf_counter() - t0, 3)
+        _, maxsim_s = rep_times(
+            lambda: maxsim_topk(
+                emb_c, qtoks, k=100, n_chunks=8, use_arrow_fast_path=True
+            ).count(),
+            2,
+        )
+        out["maxsim_s"] = round(maxsim_s, 3)
         # 7) MMR diversified re-rank at full width (numpy fast path for
         #    the m x m pair-sim matrix; the distributed top-m feeds it)
         from external_benchmarks_spark.operators.similarity import mmr_topk
 
-        t0 = time.perf_counter()
-        mmr_topk(
-            emb_c, qvec, k=10, m=50, use_arrow_fast_path=True
-        ).count()
-        out["mmr_s"] = round(time.perf_counter() - t0, 3)
+        _, mmr_s = timed(
+            lambda: mmr_topk(
+                emb_c, qvec, k=10, m=50, use_arrow_fast_path=True
+            ).count()
+        )
+        out["mmr_s"] = round(mmr_s, 3)
     finally:
         emb_c.unpersist()
     return out
@@ -1254,9 +1251,7 @@ def index_refresh_leg(spark, sf):
     idx = os.path.join(
         tempfile.gettempdir(), f"ebs_refresh_idx_{uuid.uuid4().hex[:8]}"
     )
-    t0 = time.perf_counter()
-    build_inverted_index(docs, idx, n_term_buckets=64)
-    full_s = time.perf_counter() - t0
+    _, full_s = timed(lambda: build_inverted_index(docs, idx, n_term_buckets=64))
     max_id = int(docs.agg(F.max("doc_id")).collect()[0][0])
     new = spark.createDataFrame(
         [
@@ -1265,15 +1260,15 @@ def index_refresh_leg(spark, sf):
         ],
         "doc_id bigint, text string",
     )
-    t0 = time.perf_counter()
-    append_to_inverted_index(spark, idx, new, n_term_buckets=64)
-    append_s = time.perf_counter() - t0
+    _, append_s = timed(
+        lambda: append_to_inverted_index(spark, idx, new, n_term_buckets=64)
+    )
     # the amortized maintenance half: fold the append segments back
     # into the bucketed base (this 100-doc delta touches most of the
     # 64 buckets, so this prices the worst-case dir rewrite)
-    t0 = time.perf_counter()
-    compact_inverted_index(spark, idx, n_term_buckets=64)
-    compact_s = time.perf_counter() - t0
+    _, compact_s = timed(
+        lambda: compact_inverted_index(spark, idx, n_term_buckets=64)
+    )
     shutil.rmtree(idx, ignore_errors=True)
 
     # Same contract for the vector index: cell-routed append with frozen
@@ -1294,22 +1289,23 @@ def index_refresh_leg(spark, sf):
     ivf_dir = os.path.join(
         tempfile.gettempdir(), f"ebs_refresh_ivf_{uuid.uuid4().hex[:8]}"
     )
-    t0 = time.perf_counter()
-    build_index_layout(
-        ivf_assign(emb, centroids), ivf_dir, partition_col="centroid_id"
+    _, ivf_full_s = timed(
+        lambda: build_index_layout(
+            ivf_assign(emb, centroids), ivf_dir, partition_col="centroid_id"
+        )
     )
-    ivf_full_s = time.perf_counter() - t0
     delta = emb.filter(F.col("vec_id") % 997 == 0).withColumn(
         "vec_id", F.col("vec_id") + 10_000_000
     )
-    t0 = time.perf_counter()
-    append_to_index_layout(delta, ivf_dir, centroids=centroids)
-    ivf_append_s = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    compact_layout_partitions(
-        spark, ivf_dir, partition_col="centroid_id", max_files_per_partition=1
+    _, ivf_append_s = timed(
+        lambda: append_to_index_layout(delta, ivf_dir, centroids=centroids)
     )
-    ivf_compact_s = time.perf_counter() - t0
+    _, ivf_compact_s = timed(
+        lambda: compact_layout_partitions(
+            spark, ivf_dir, partition_col="centroid_id",
+            max_files_per_partition=1,
+        )
+    )
     shutil.rmtree(ivf_dir, ignore_errors=True)
     return {
         "full_rebuild_s": round(full_s, 3),
@@ -1529,11 +1525,9 @@ def host_control_probe(spark, n_reps: int = 8) -> dict:
     refuse to promote a record taken in a dirty window, and lets every
     cross-round comparison normalize by a number that CANNOT reflect a
     plan change."""
-    reps = []
-    for _ in range(n_reps):
-        t0 = time.perf_counter()
-        spark.range(500_000_000).selectExpr("sum(id)").collect()
-        reps.append(time.perf_counter() - t0)
+    reps = rep_times(
+        lambda: spark.range(500_000_000).selectExpr("sum(id)").collect(), n_reps
+    )
     warm = sorted(reps[1:])
     return {
         "work": "range(500M).sum()",
@@ -1571,9 +1565,8 @@ def main() -> None:
     # the skew tables — built here once, so the ingest_report leg times
     # stage -> parse -> embed -> report, not fixture production. The
     # one-time build cost is reported separately below.
-    t0 = time.perf_counter()
-    entry_mod._ingest_report_fixture(spark, SF_DIR)
-    ingest_fixture_s = round(time.perf_counter() - t0, 3)
+    _, fixture_s = timed(lambda: entry_mod._ingest_report_fixture(spark, SF_DIR))
+    ingest_fixture_s = round(fixture_s, 3)
     print(f"# ingest_fixture_build: {ingest_fixture_s}s", file=sys.stderr)
     # Hot-key detection for the adaptive skew leg happens here too: the
     # hot set is a per-table-version artifact (like the layouts above),
@@ -1592,13 +1585,8 @@ def main() -> None:
     # 2M-row skew-join benchmark finished trashing the session".
     read_p95: dict[str, float] = {}
     for sel in ("10pct", "1pct", "0.1pct", "0.01pct"):
-        reps = []
-        for _ in range(20):
-            t0 = time.perf_counter()
-            _vector_template(sel)(spark, SF_DIR).count()
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        read_p95[f"vtopk_{sel}"] = round(reps[-1] if len(reps) < 20 else reps[18], 3)
+        reps = rep_times(lambda: _vector_template(sel)(spark, SF_DIR).count(), 20)
+        read_p95[f"vtopk_{sel}"] = round(_p95(reps), 3)
     print(f"# read_p95: {read_p95}", file=sys.stderr)
 
     # The SERVING read path (external_benchmarks_spark/serving.py): the
@@ -1607,6 +1595,12 @@ def main() -> None:
     # Results are bit-identical to the Spark query (tests/test_serving.py);
     # reported in milliseconds, separately from the Spark-job p95s above.
     from external_benchmarks_spark.serving import VectorServingIndex
+
+    def serving_loops(query, n_loops):
+        """Per-loop (p95 ms, p50 ms) lists, each loop 100 calls of query:
+        the p95 is _p95's reps[94], the p50 reps[49]."""
+        loops = [sorted(rep_times(query, 100)) for _ in range(n_loops)]
+        return [_p95(r) * 1000 for r in loops], [r[49] * 1000 for r in loops]
 
     sidx = VectorServingIndex(_vt_layout(spark, SF_DIR))
     serving_p95: dict[str, float] = {}
@@ -1627,46 +1621,34 @@ def main() -> None:
     # a committed reading can be audited for bimodality — a genuine
     # workload tail shows up in EVERY loop, a steal phase in a few —
     # without a re-run.
-    serving_loops: dict[str, list[float]] = {}
+    serving_loops_ms: dict[str, list[float]] = {}
     for sel, mod in mods.items():
-        p95s, p50s = [], []
-        for _ in range(10):
-            reps = []
-            for _ in range(100):
-                t0 = time.perf_counter()
-                sidx.topk(QVEC, k=100, label=0, key_mod=mod)
-                reps.append(time.perf_counter() - t0)
-            reps.sort()
-            p95s.append(reps[94] * 1000)
-            p50s.append(reps[49] * 1000)
+        p95s, p50s = serving_loops(
+            lambda: sidx.topk(QVEC, k=100, label=0, key_mod=mod), 10
+        )
         serving_p95[f"vtopk_{sel}_ms"] = round(min(p95s), 3)
         serving_p50[f"vtopk_{sel}_ms"] = round(min(p50s), 3)
-        serving_loops[f"vtopk_{sel}_ms"] = [round(v, 3) for v in p95s]
+        serving_loops_ms[f"vtopk_{sel}_ms"] = [round(v, 3) for v in p95s]
     print(f"# serving_read_p95_ms: {serving_p95}", file=sys.stderr)
     print(f"# serving_read_p50_ms: {serving_p50}", file=sys.stderr)
+
+    def median_of_3(query):
+        p95s, p50s = serving_loops(query, 3)
+        return {
+            "p95_ms": round(sorted(p95s)[1], 3),
+            "p50_ms": round(sorted(p50s)[1], 3),
+        }
 
     # The COMPRESSED serving tier (r12, serving.PQServingIndex): probed
     # ADC over the persisted PQ index's m-byte codes, bit-identical to
     # pq_index_topk's Spark plan, ~1300x less resident memory per
-    # vector than the exact tier at dim 2688. Same median-of-3 p95
-    # protocol as the exact tier above.
+    # vector than the exact tier at dim 2688. Median-of-3 loops.
     from external_benchmarks_spark.serving import PQServingIndex
 
     pq_srv = PQServingIndex(entry_mod._pq_index(spark, SF_DIR).root)
-    pq_p95s, pq_p50s = [], []
-    for _ in range(3):
-        reps = []
-        for _ in range(100):
-            t0 = time.perf_counter()
-            pq_srv.topk(QVEC, k=20, nprobe=entry_mod.IVF_NPROBE)
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        pq_p95s.append(reps[94] * 1000)
-        pq_p50s.append(reps[49] * 1000)
-    pq_serving = {
-        "p95_ms": round(sorted(pq_p95s)[1], 3),
-        "p50_ms": round(sorted(pq_p50s)[1], 3),
-    }
+    pq_serving = median_of_3(
+        lambda: pq_srv.topk(QVEC, k=20, nprobe=entry_mod.IVF_NPROBE)
+    )
     print(f"# pq_serving_ms: {pq_serving}", file=sys.stderr)
 
     # The RECALL-PASSING serving tier (r13, topk_rerank): ADC top-250 +
@@ -1675,20 +1657,9 @@ def main() -> None:
     # >=0.9 recall vs exact top-k (both test-gated). Prices the
     # reference's >90%-recall ANN read (README.md:76) at serving
     # latency: R=250 sidecar-row reads + exact float64 dots per query.
-    pqr_p95s, pqr_p50s = [], []
-    for _ in range(3):
-        reps = []
-        for _ in range(100):
-            t0 = time.perf_counter()
-            pq_srv.topk_rerank(QVEC, k=50, rerank=250, nprobe=None)
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        pqr_p95s.append(reps[94] * 1000)
-        pqr_p50s.append(reps[49] * 1000)
-    pq_serving_rerank = {
-        "p95_ms": round(sorted(pqr_p95s)[1], 3),
-        "p50_ms": round(sorted(pqr_p50s)[1], 3),
-    }
+    pq_serving_rerank = median_of_3(
+        lambda: pq_srv.topk_rerank(QVEC, k=50, rerank=250, nprobe=None)
+    )
     print(f"# pq_serving_rerank_ms: {pq_serving_rerank}", file=sys.stderr)
 
     # The FILTERED serving tier (r15, topk_rerank(where=...)): the
@@ -1696,22 +1667,11 @@ def main() -> None:
     # (README.md:78-83) — served in-process as the pre-filter form,
     # bit-identical to pq_index_filtered_rerank's Spark plan
     # (parity-tested). Same median-of-3 protocol as its two siblings.
-    pqf_p95s, pqf_p50s = [], []
-    for _ in range(3):
-        reps = []
-        for _ in range(100):
-            t0 = time.perf_counter()
-            pq_srv.topk_rerank(
-                QVEC, k=50, rerank=250, nprobe=None, where={"label": [1, 3]}
-            )
-            reps.append(time.perf_counter() - t0)
-        reps.sort()
-        pqf_p95s.append(reps[94] * 1000)
-        pqf_p50s.append(reps[49] * 1000)
-    pq_serving_filtered = {
-        "p95_ms": round(sorted(pqf_p95s)[1], 3),
-        "p50_ms": round(sorted(pqf_p50s)[1], 3),
-    }
+    pq_serving_filtered = median_of_3(
+        lambda: pq_srv.topk_rerank(
+            QVEC, k=50, rerank=250, nprobe=None, where={"label": [1, 3]}
+        )
+    )
     print(f"# pq_serving_filtered_ms: {pq_serving_filtered}", file=sys.stderr)
 
     # Noise-resistant protocol (round-8): each leg runs 1 cold + 3 warm;
@@ -1733,12 +1693,11 @@ def main() -> None:
     times_cold: dict[str, float] = {}
     times_spread: dict[str, dict[str, float]] = {}
     for name, fn in headline_queries().items():
-        reps = []
-        for _ in range(4):
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            n = df.count()  # force full execution
-            reps.append(time.perf_counter() - t0)
+        rows: list[int] = []
+        reps = rep_times(  # count() forces full execution
+            lambda: rows.append(fn(spark, SF_DIR).count()), 4
+        )
+        n = rows[-1]
         warm = reps[1:] or reps
         med = sorted(warm)[len(warm) // 2]
         times_cold[name] = round(reps[0], 3)
@@ -1835,11 +1794,11 @@ def main() -> None:
         ann_reqs, "req_id bigint, k int, rerank int"
     ).coalesce(4).write.parquet(ann_req_dir)
     try:
-        t0 = time.perf_counter()
-        ann_got = run_ann_file_server(
-            spark, pqidx.root, ann_req_dir, QVEC, nprobe=entry_mod.IVF_NPROBE
+        ann_got, ann_wall = timed(
+            lambda: run_ann_file_server(
+                spark, pqidx.root, ann_req_dir, QVEC, nprobe=entry_mod.IVF_NPROBE
+            )
         )
-        ann_wall = time.perf_counter() - t0
     finally:
         # match _drain's checkpoint-cleanup discipline: a streaming
         # exception re-raised by the server must not leak the request
@@ -1934,7 +1893,7 @@ def main() -> None:
         "host_control": host_ctrl,
         "serving_read_p95_ms": serving_p95,
         "serving_read_p50_ms": serving_p50,
-        "serving_read_p95_loops_ms": serving_loops,
+        "serving_read_p95_loops_ms": serving_loops_ms,
         "pq_serving_ms": pq_serving,
         "pq_serving_rerank_ms": pq_serving_rerank,
         "pq_serving_filtered_ms": pq_serving_filtered,

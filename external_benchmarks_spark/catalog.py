@@ -205,7 +205,3 @@ class Catalog:
                 self.partsupp_table().createOrReplaceTempView(name)
             elif os.path.exists(self.path(name)):
                 self.table(name).createOrReplaceTempView(name)
-
-
-def load_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
-    return Catalog(spark, sf_dir)

@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from external_benchmarks_spark.functions.hashing import md5_hash32
-
 # Marker-word lists for the n-gram/stopword language-ID heuristic. Fixed
 # enumerated lists (FIXTURES.md determinism rules) shared verbatim with the
 # DuckDB oracle.
@@ -126,9 +124,3 @@ def fingerprint(text: Column | str) -> Column:
     """
     canon = F.array_join(F.array_sort(F.array_distinct(tokens(text))), " ")
     return F.md5(canon)
-
-
-def fingerprint_hash64(text: Column | str) -> Column:
-    """Integer form of ``fingerprint`` for compact storage/joins at scale."""
-    canon = F.array_join(F.array_sort(F.array_distinct(tokens(text))), " ")
-    return md5_hash32(canon)

@@ -42,6 +42,10 @@ the space delimiter or SQL quoting.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -169,6 +173,26 @@ def _train_local(
     return merges
 
 
+@contextmanager
+def _cached_word_table(
+    docs: DataFrame, text_col: str, word_freqs: DataFrame | None
+) -> Iterator[DataFrame]:
+    """The (word, cnt) table a trainer reads, cached for the trainer's
+    lifetime: ``word_freqs`` when the caller supplies it, else
+    :func:`word_frequencies` of ``docs``. A frame that is already
+    cached belongs to whoever cached it and is left exactly as it was;
+    only a frame cached here is unpersisted here."""
+    wf = word_freqs if word_freqs is not None else word_frequencies(docs, text_col)
+    owned = wf.storageLevel == StorageLevel.NONE
+    if owned:
+        wf.cache()
+    try:
+        yield wf
+    finally:
+        if owned:
+            wf.unpersist()
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
@@ -201,14 +225,10 @@ def bpe_train(
     # case) the distributed loop below must reuse that aggregation —
     # without the cache the corpus would be scanned twice, violating
     # the "corpus is touched exactly once" contract where it matters.
-    wf = (
-        word_freqs if word_freqs is not None
-        else word_frequencies(docs, text_col)
-    ).cache()
     schema = "step bigint, lhs string, rhs string, merged string, pair_count bigint"
 
     merges: list[tuple[int, str, str, str, int]] = []
-    try:
+    with _cached_word_table(docs, text_col, word_freqs) as wf:
         if local_word_limit > 0:
             probe = wf.limit(local_word_limit + 1).collect()
             if len(probe) <= local_word_limit:
@@ -242,8 +262,6 @@ def bpe_train(
             words = words.select(
                 _apply_merge(F.col("s"), a, b).alias("s"), "cnt"
             )
-    finally:
-        wf.unpersist()
     return spark.createDataFrame(merges, schema).orderBy("step")
 
 

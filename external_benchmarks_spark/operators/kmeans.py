@@ -88,10 +88,14 @@ def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, vi, cid, dist): exact-integer argmin assignment, ties
     to the lowest centroid id. DataFrame-centroids wrapper around
     :func:`_assign_rows` (the refine loop holds centroids driver-side
-    and calls `_assign_rows` directly; this form collects first)."""
-    return _assign_rows(
-        vectors, [list(r["ci"]) for r in sorted(centroids.collect(), key=lambda r: r["cid"])]
-    )
+    and calls `_assign_rows` directly; this form collects first).
+    `_assign_rows` keys centroids by list position, so the table's cids
+    must be exactly 0..k-1; anything else raises rather than re-keying."""
+    rows = sorted(centroids.collect(), key=lambda r: r["cid"])
+    cids = [r["cid"] for r in rows]
+    if cids != list(range(len(rows))):
+        raise ValueError(f"centroid cids must be exactly 0..k-1, got {cids}")
+    return _assign_rows(vectors, [list(r["ci"]) for r in rows])
 
 
 def _assign_rows(vectors: DataFrame, cents: list) -> DataFrame:

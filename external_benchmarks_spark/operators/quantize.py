@@ -19,12 +19,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _to_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
+from external_benchmarks_spark.functions.vector import _to_double
 
 
 def quantize_vector(vals: Sequence[float]) -> tuple[list[int], float]:
@@ -184,6 +182,21 @@ def pq_encode(
     )
 
 
+def pq_lut(codebooks, q: Sequence[float]):
+    """The ADC lookup table of query ``q`` against PQ ``codebooks``
+    [m, n_codes, dsub]: int64 [m, n_codes] with lut[j, c] =
+    sum_i FLOOR((q[j*dsub + i] * codebooks[j, c, i]) * 1e6). The floor
+    is per TERM, so the integer sum is order-independent and any engine
+    (the Spark plans' literal arrays, the serving tier, the DuckDB
+    oracle) replays it exactly."""
+    import numpy as np
+
+    cb = np.asarray(codebooks, dtype=np.float64)
+    m, _, dsub = cb.shape
+    qsub = np.asarray(q, dtype=np.float64).reshape(m, 1, dsub)
+    return np.floor((qsub * cb) * 1e6).astype(np.int64).sum(axis=2)
+
+
 def pq_adc_topk(
     codes_df: DataFrame,
     codebooks,
@@ -203,27 +216,9 @@ def pq_adc_topk(
     (8 B/vector here vs 512 B raw), and the LUT is O(m * n_codes)
     regardless of corpus size.
     """
-    import math
-
-    import numpy as np
-
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = cb.shape
-    q = [float(v) for v in query]
-    luts: list[list[int]] = []
-    for j in range(m):
-        qj = q[j * dsub : (j + 1) * dsub]
-        luts.append(
-            [
-                sum(
-                    int(math.floor(qj[i] * float(cb[j][c][i]) * 1e6))
-                    for i in range(dsub)
-                )
-                for c in range(n_codes)
-            ]
-        )
+    luts = pq_lut(codebooks, query)
     score = None
-    for j in range(m):
+    for j in range(len(luts)):
         # ONE py4j call per subspace: F.lit(list) builds the LUT array
         # literal JVM-side. Per-element F.lit cost m*n_codes driver
         # round-trips (1024 at the 64x16 tier — measured seconds of
@@ -276,8 +271,6 @@ def pq_adc_topk_batch(
     a caller that already collected the bounded request batch (e.g. to
     resolve probes) doesn't pay a second driver job.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
@@ -289,22 +282,16 @@ def pq_adc_topk_batch(
             "without it the per-query mask has nothing to mask on"
         )
     cb = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = cb.shape
+    m, n_codes, _ = cb.shape
     qrows = (
         query_rows
         if query_rows is not None
         else queries_df.select(query_key, query_emb).collect()
     )
     qids = np.asarray([r[query_key] for r in qrows], dtype=np.int64)
-    lut = np.empty((len(qrows), m, n_codes), dtype=np.int64)
-    for qi, r in enumerate(qrows):
-        qv = [float(x) for x in r[query_emb]]
-        for j in range(m):
-            for c in range(n_codes):
-                lut[qi, j, c] = sum(
-                    int(math.floor(qv[j * dsub + i] * float(cb[j][c][i]) * 1e6))
-                    for i in range(dsub)
-                )
+    lut = np.asarray(
+        [pq_lut(cb, r[query_emb]) for r in qrows], dtype=np.int64
+    ).reshape(len(qrows), m, n_codes)
 
     allowed = None
     if allowed_cells is not None:

@@ -113,27 +113,3 @@ def distinct_count(df: DataFrame, col: str, approx: bool = False) -> DataFrame:
         F.approx_count_distinct(col) if approx else F.countDistinct(col)
     ).alias("distinct_cnt")
     return df.agg(agg)
-
-
-def dataset_profile(df: DataFrame, numeric_cols: list[str], cat_cols: list[str]) -> dict:
-    """Driver-side stats dict mirroring reports/sampling_analysis.json:2-62.
-
-    Everything aggregates in Spark; only tiny results are collected.
-    """
-    out: dict = {"total_records": df.count()}
-    for c in numeric_cols:
-        row = numeric_summary(df, c).collect()[0]
-        out[c] = {
-            "mean": row["avg_val"],
-            "std": row["stddev_val"],
-            "min": row["min_val"],
-            "max": row["max_val"],
-            "nulls": row["null_cnt"],
-        }
-    for c in cat_cols:
-        top = group_share_topn(df, c, 5).collect()
-        out[c] = {
-            "unique": distinct_count(df, c).collect()[0]["distinct_cnt"],
-            "top5": {r[c]: r["cnt"] for r in top},
-        }
-    return out

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from external_benchmarks_spark.operators.bpe import (
-    word_frequencies,
+    _cached_word_table,
     word_positions,
 )
 
@@ -244,11 +244,7 @@ def unigram_train(
     ``word_positions`` tokenize — replaces the trainer's own corpus
     pass; training is a pure function of that multiset."""
     spark: SparkSession = docs.sparkSession
-    wf = (
-        word_freqs if word_freqs is not None
-        else word_frequencies(docs, text_col)
-    ).cache()
-    try:
+    with _cached_word_table(docs, text_col, word_freqs) as wf:
         if local_word_limit > 0:
             probe = wf.limit(local_word_limit + 1).collect()
             if len(probe) <= local_word_limit:
@@ -295,8 +291,6 @@ def unigram_train(
         return spark.createDataFrame(
             [(p, vocab[p], cm[p]) for p in sorted(vocab)], _VOCAB_SCHEMA
         )
-    finally:
-        wf.unpersist()
 
 
 def unigram_segment(

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from external_benchmarks_spark.operators.bpe import (
     _apply_merge,
+    _cached_word_table,
     _merge_word,
     word_frequencies,
     word_positions,
@@ -142,12 +143,8 @@ def wordpiece_train(
     replaces the trainer's own corpus pass; training is a pure
     function of that multiset."""
     spark: SparkSession = docs.sparkSession
-    wf = (
-        word_freqs if word_freqs is not None
-        else word_frequencies(docs, text_col)
-    ).cache()
     merges: list[tuple[int, str, str, str, int, int]] = []
-    try:
+    with _cached_word_table(docs, text_col, word_freqs) as wf:
         if local_word_limit > 0:
             probe = wf.limit(local_word_limit + 1).collect()
             if len(probe) <= local_word_limit:
@@ -200,8 +197,6 @@ def wordpiece_train(
             words = words.select(
                 _apply_merge(F.col("s"), a, b, merged).alias("s"), "cnt"
             )
-    finally:
-        wf.unpersist()
     return spark.createDataFrame(merges, _MERGES_SCHEMA).orderBy("step")
 
 

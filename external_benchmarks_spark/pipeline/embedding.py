@@ -30,7 +30,6 @@ Encoder tiers (selected at runtime):
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -161,20 +160,17 @@ def hashed_ngram_encode(
         out[np.asarray(fast_idx)] = acc.astype(np.float32)
     for i in slow_idx:
         s = lowered[i]
-        if n == 3 and len(s) >= n and s.isascii():  # n != 3 batch bypass
-            hs = _crc32_trigram_windows(s.encode("utf-8")).astype(np.int64)
+        if len(s) < n:
+            grams = [s]
         else:
-            if len(s) < n:
-                grams = [s]
-            else:
-                grams = [s[j : j + n] for j in range(len(s) - n + 1)]
-            hs = np.frombuffer(
-                b"".join(
-                    zlib.crc32(g.encode("utf-8")).to_bytes(4, "little")
-                    for g in grams
-                ),
-                dtype=np.uint32,
-            ).astype(np.int64)
+            grams = [s[j : j + n] for j in range(len(s) - n + 1)]
+        hs = np.frombuffer(
+            b"".join(
+                zlib.crc32(g.encode("utf-8")).to_bytes(4, "little")
+                for g in grams
+            ),
+            dtype=np.uint32,
+        ).astype(np.int64)
         signs = np.where((hs >> 16) & 1, 1.0, -1.0)
         # weighted bincount = the signed accumulation, one C call (the
         # ±1 weights sum to exact small integers in any order)
@@ -266,13 +262,3 @@ def embed_fields(
         embed(F.coalesce(F.col(f), F.lit(""))) for f in fields if f in df.columns
     ]
     return df.select("*", F.concat(*vec_cols).alias("embedding"))
-
-
-def reembed_batch(pdf_iter: Iterator[pd.DataFrame], text_col: str, dim: int) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for the upsert path: re-embed changed rows with the
-    encoder held once per task (streaming/upsert.py)."""
-    for pdf in pdf_iter:
-        mat = encode_batch(pdf[text_col], dim)
-        pdf = pdf.copy()
-        pdf["embedding"] = list(mat)
-        yield pdf

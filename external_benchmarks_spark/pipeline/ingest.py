@@ -58,21 +58,13 @@ RAW_META_SCHEMA = StructType(
 )
 
 
-# SQL twin of parse_price, kept textually adjacent so the two stay in
-# lockstep. nullif(x, '') == when(x == '', NULL).otherwise(x) for every
-# input (NULL included), so the two forms are value-identical.
+# '12.99' / '$12.99' / '1,299.00' -> DOUBLE; empty or unparseable ->
+# NULL. try_cast keeps bad values as NULL instead of failing the job
+# under ANSI mode.
 PRICE_SQL = (
     "try_cast(nullif(regexp_replace(trim(`price`), '[$,]', ''), '')"
     " AS DOUBLE)"
 )
-
-
-def parse_price(col) -> "F.Column":
-    """'12.99' / '$12.99' / '1,299.00' -> DOUBLE; empty or unparseable
-    -> NULL. try_cast keeps bad values as NULL instead of failing the
-    job under ANSI mode."""
-    cleaned = F.regexp_replace(F.trim(col), r"[$,]", "")
-    return F.when(cleaned == "", None).otherwise(cleaned).try_cast("double")
 
 
 def normalize_raw_products(raw: DataFrame, source_dataset: str) -> DataFrame:
@@ -104,6 +96,42 @@ def normalize_raw_products(raw: DataFrame, source_dataset: str) -> DataFrame:
     )
 
 
+def quarantine_counts(raw: DataFrame) -> tuple[int, int]:
+    """(n_corrupt, n_unparsed_price) of a permissive-parsed raw frame.
+
+    Both counters come from ONE aggregate (the predicates are disjoint
+    by construction: unparsed prices are only counted among non-corrupt
+    lines), not two separate count() jobs (r15; guide §1.2)."""
+    row = raw.selectExpr(
+        "sum(CAST(`_corrupt` IS NOT NULL AS BIGINT)) AS c",
+        "sum(CAST((`_corrupt` IS NULL AND `price` IS NOT NULL"
+        f" AND trim(`price`) != '' AND {PRICE_SQL} IS NULL) AS BIGINT))"
+        " AS u",
+    ).collect()[0]
+    return int(row["c"] or 0), int(row["u"] or 0)
+
+
+def product_table(
+    good: DataFrame, source_dataset: str, dim: int, ckpt_dir: str | None = None
+) -> DataFrame:
+    """Non-corrupt raw records -> the validated product table: normalize,
+    derive columns, embed the seven text fields, select the pinned
+    PRODUCT_SCHEMA columns and validate them. Lazy: no Spark job."""
+    from external_benchmarks_spark.pipeline.dataset import add_derived_columns
+    from external_benchmarks_spark.pipeline.embedding import embed_fields
+    from external_benchmarks_spark.schemas import PRODUCT_SCHEMA, validate_schema
+
+    products = embed_fields(
+        add_derived_columns(normalize_raw_products(good, source_dataset)),
+        fields=("title", "description", "features", "combined_text",
+                "main_category", "categories", "store"),
+        dim=dim,
+        ckpt_dir=ckpt_dir,
+    ).select([f.name for f in PRODUCT_SCHEMA.fields])
+    validate_schema(products)
+    return products
+
+
 def ingest_products(
     spark: SparkSession,
     url: str,
@@ -115,8 +143,8 @@ def ingest_products(
     count_records: bool = True,
 ) -> tuple[DataFrame, dict]:
     """The full arc. Returns (products_df, report) where report carries
-    ``staged_path``, ``n_records``, ``n_corrupt`` (quarantined raw
-    lines), and ``n_unparsed_price``. When ``out_path`` is given the
+    ``staged_path``, ``n_records`` (only when ``count_records``),
+    ``n_corrupt`` (quarantined raw lines), and ``n_unparsed_price``. When ``out_path`` is given the
     validated table also writes as parquet partitioned by
     ``main_category`` (the query-optimized layout of SURVEY.md §7.5).
 
@@ -128,9 +156,7 @@ def ingest_products(
     lives for the session. With ``out_path`` the parquet table is the
     materialization and nothing is cached.
     """
-    from external_benchmarks_spark.pipeline.dataset import add_derived_columns
-    from external_benchmarks_spark.pipeline.embedding import embed_fields
-    from external_benchmarks_spark.schemas import PRODUCT_SCHEMA, validate_schema
+    from external_benchmarks_spark.schemas import PRODUCT_SCHEMA
     from external_benchmarks_spark.sources.registry import (
         read_jsonl_permissive,
         stage_dataset,
@@ -138,31 +164,9 @@ def ingest_products(
 
     staged = stage_dataset(url, stage_dir)
     raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA).cache()
-    # Both quarantine counters in ONE aggregate over the cached raw
-    # frame (the predicates are disjoint by construction — unparsed
-    # prices are only counted among non-corrupt lines), instead of two
-    # separate count() jobs (r15; guide §1.2).
-    _cnt = raw.selectExpr(
-        "sum(CAST(`_corrupt` IS NOT NULL AS BIGINT)) AS c",
-        "sum(CAST((`_corrupt` IS NULL AND `price` IS NOT NULL"
-        f" AND trim(`price`) != '' AND {PRICE_SQL} IS NULL) AS BIGINT))"
-        " AS u",
-    ).collect()[0]
-    n_corrupt = int(_cnt["c"] or 0)
-    n_unparsed_price = int(_cnt["u"] or 0)
+    n_corrupt, n_unparsed_price = quarantine_counts(raw)
     good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-
-    products = normalize_raw_products(good, source_dataset)
-    products = add_derived_columns(products)
-    products = embed_fields(
-        products,
-        fields=("title", "description", "features", "combined_text",
-                "main_category", "categories", "store"),
-        dim=dim,
-        ckpt_dir=ckpt_dir,
-    )
-    products = products.select([f.name for f in PRODUCT_SCHEMA.fields])
-    validate_schema(products)
+    products = product_table(good, source_dataset, dim, ckpt_dir)
     if out_path is not None:
         (
             products.repartition("main_category")
@@ -187,12 +191,12 @@ def ingest_products(
     # action already counts every row (q_ingest_report's stats pass 1
     # returns the identical count(1) as `total_records`): the persist
     # then materializes under THAT action instead — one scheduler job
-    # fewer, same cache, same numbers (guide §1.2).
-    report = {
-        "staged_path": staged,
-        "n_records": products.count() if count_records else None,
-        "n_corrupt": n_corrupt,
-        "n_unparsed_price": n_unparsed_price,
-    }
+    # fewer, same cache, same numbers (guide §1.2). The report then has
+    # no ``n_records`` key, so a reader that expects it fails loudly.
+    report = {"staged_path": staged}
+    if count_records:
+        report["n_records"] = products.count()
+    report["n_corrupt"] = n_corrupt
+    report["n_unparsed_price"] = n_unparsed_price
     raw.unpersist()
     return products, report

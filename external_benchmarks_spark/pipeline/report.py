@@ -131,19 +131,19 @@ def dataset_report(
     # Caller-supplied single-row aggregates ride the SAME pass-1 scan
     # (guide §1.2: a caller that needs one more aggregate over this
     # frame should not pay a separate job for it). Values come back
-    # raw under report["extra"].
-    extra_aggs = dict(extra_aggs or {})
-    for i, (_name, expr) in enumerate(extra_aggs.items()):
-        aggs.append(f"{expr} AS `__extra__{i}`")
+    # raw under report["extra"]. Each alias is derived ONCE, here, and
+    # both the write below and the read after the collect use it.
+    extra = {
+        name: (f"__extra__{i}", expr)
+        for i, (name, expr) in enumerate((extra_aggs or {}).items())
+    }
+    aggs += [f"{expr} AS `{alias}`" for alias, expr in extra.values()]
     one = df.selectExpr(*aggs).collect()[0]
 
     total = one["__total"]
     report = {"total_records": total, **report}
-    if extra_aggs:
-        report["extra"] = {
-            name: one[f"__extra__{i}"]
-            for i, name in enumerate(extra_aggs)
-        }
+    if extra:
+        report["extra"] = {name: one[alias] for name, (alias, _) in extra.items()}
     report["null_counts"] = {
         c: one[f"__null__{i}"] for i, c in enumerate(df.columns)
     }

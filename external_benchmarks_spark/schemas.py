@@ -74,20 +74,3 @@ def validate_schema(df: DataFrame, expected: StructType = PRODUCT_SCHEMA) -> Non
         problems.append(f"unexpected columns: {extra}")
     if problems:
         raise SchemaMismatch("; ".join(problems))
-
-
-def schemas_consistent(dfs: dict[str, DataFrame]) -> dict:
-    """Cross-variant consistency report (the reference's invariant)."""
-    out: dict = {"consistent": True, "diffs": {}}
-    names = sorted(dfs)
-    if not names:
-        return out
-    base = dfs[names[0]].schema
-    for name in names[1:]:
-        if dfs[name].schema != base:
-            out["consistent"] = False
-            out["diffs"][name] = {
-                "expected": base.simpleString(),
-                "actual": dfs[name].schema.simpleString(),
-            }
-    return out

@@ -317,28 +317,15 @@ class PQServingIndex(_CellStore):
         applies (README.md:76); this form is the compressed-ranking /
         candidate-generation tier. ``_with_cells`` additionally
         returns {cell: [candidate ids]} for the rerank sidecar reads."""
-        from external_benchmarks_spark.operators.similarity import (
-            ivf_probe_cells,
-        )
+        from external_benchmarks_spark.operators.quantize import pq_lut
+        from external_benchmarks_spark.pipeline.pqindex import _probe_cells
 
-        cb = self.index.codebooks
-        m, n_codes, dsub = cb.shape
-        # Vectorized per-term floor — the same float64 op ORDER as
-        # quantize.pq_adc_topk's python-loop LUT ((q_i * c_i) * 1e6,
-        # then floor, then exact int64 sum), so every entry is
-        # bit-identical to the Spark plan's literal LUT (parity test
-        # covers it). ~1 ms/query of math.floor calls drops to ~us.
-        q = np.asarray([float(v) for v in qvec], dtype=np.float64)
-        qsub = q.reshape(m, 1, dsub)  # [m, 1, dsub] vs cb [m, n_codes, dsub]
-        lut = (
-            np.floor((qsub * cb) * 1e6).astype(np.int64).sum(axis=2)
-        )  # [m, n_codes]
+        # the Spark plan's literal LUT, entry for entry
+        lut = pq_lut(self.index.codebooks, qvec)
+        m = len(lut)
         if nprobe is not None:
             probe = [
-                c
-                for c in ivf_probe_cells(
-                    self.index.centroids, qvec, nprobe, self.index.metric
-                )
+                c for c in _probe_cells(self.index, qvec, nprobe)
                 if c in self.cells
             ]
         else:

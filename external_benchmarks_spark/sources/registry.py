@@ -94,11 +94,6 @@ def read_dataset(spark: SparkSession, spec: DatasetSpec) -> DataFrame:
     return reader.load(spec.path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """The reference's raw-ingest format (one JSON object per line)."""
-    return read_dataset(spark, DatasetSpec("jsonl", path, "json", schema))
-
-
 def read_jsonl_permissive(
     spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:

@@ -251,3 +251,29 @@ def test_shared_tokenize_arc_matches_default_paths(spark):
         for r in unigram_segment(docs, c_b, wpos=wpos).collect()
     )
     assert us_a == us_b
+
+
+def test_trainers_leave_caller_cache_state_alone(spark):
+    """A trainer caches and unpersists only a word table it cached
+    itself: a caller-cached word_freqs stays cached after training, and
+    an uncached one is left uncached."""
+    from pyspark import StorageLevel
+
+    from external_benchmarks_spark.operators.bpe import bpe_train, word_frequencies
+    from external_benchmarks_spark.operators.unigram import unigram_train
+    from external_benchmarks_spark.operators.wordpiece import wordpiece_train
+
+    docs = spark.createDataFrame(
+        [("low lower newest newest widest",)], "text string"
+    )
+    for train in (bpe_train, unigram_train, wordpiece_train):
+        wf = word_frequencies(docs).cache()
+        try:
+            wf.count()
+            train(docs, word_freqs=wf).collect()
+            assert wf.storageLevel != StorageLevel.NONE, train.__name__
+        finally:
+            wf.unpersist()
+        fresh = word_frequencies(docs)
+        train(docs, word_freqs=fresh).collect()
+        assert fresh.storageLevel == StorageLevel.NONE, train.__name__

@@ -97,3 +97,22 @@ def test_ingest_restage_is_noop(spark, tmp_path):
     m1 = os.path.getmtime(p1)
     p2 = stage_dataset(url, d)
     assert p1 == p2 and os.path.getmtime(p2) == m1
+
+
+def test_ingest_without_count_omits_n_records(spark, tmp_path):
+    """count_records=False leaves n_records out of the report, so a
+    reader that expects it fails with KeyError instead of reading None."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = str(tmp_path / "raw.jsonl.gz")
+    _write_fixture_gz(src, n=6)
+    products, report = ingest_products(
+        spark, "file://" + src, str(tmp_path / "stage"), "Books", dim=8,
+        count_records=False,
+    )
+    try:
+        assert "n_records" not in report
+        assert report["n_corrupt"] == 1
+        assert report["n_unparsed_price"] == 1  # i=1 -> "N/A"
+    finally:
+        products.unpersist()

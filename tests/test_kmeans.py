@@ -149,3 +149,22 @@ def test_kmeans_empty_input(spark):
     df = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
     cents, prof = kmeans_refine(df, k=4, n_iter=2)
     assert cents.count() == 0 and prof.count() == 0
+
+
+def test_assign_rejects_non_contiguous_cids(spark):
+    """_assign keys centroids by sorted position, so a centroid table
+    whose cids are not exactly 0..k-1 must raise, not be re-keyed."""
+    import pytest
+
+    from external_benchmarks_spark.operators.kmeans import (
+        _assign,
+        kmeans_init,
+        quantize_vectors,
+    )
+
+    v = quantize_vectors(_planted(spark))
+    c = kmeans_init(v, 3)
+    assert _assign(v, c).select("cid").distinct().count() <= 3
+    gapped = c.filter(F.col("cid") != 1)  # cids 0, 2
+    with pytest.raises(ValueError, match="0..k-1"):
+        _assign(v, gapped)

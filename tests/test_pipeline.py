@@ -98,8 +98,12 @@ def test_index_layout_prunes(spark, sf_dir):
 def test_dataset_report_and_consistency(spark, sf_dir):
     emb = Catalog(spark, sf_dir).embeddings
     rep = dataset_report(
-        emb, numeric_cols=["vec_id"], cat_cols=["label"], emb_col="embedding"
+        emb, numeric_cols=["vec_id"], cat_cols=["label"], emb_col="embedding",
+        # caller aggregates ride pass 1 and come back under their own names
+        extra_aggs={"z max id": "max(vec_id)", "a_min_id": "min(vec_id)"},
     )
+    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).collect()[0]
+    assert rep["extra"] == {"z max id": hi, "a_min_id": lo}
     assert rep["total_records"] == emb.count()
     assert rep["embedding"]["avg_dim"] == 64.0
     assert rep["categorical"]["label"]["unique"] == 10

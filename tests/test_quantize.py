@@ -285,3 +285,34 @@ def test_pq_rerank_meets_recall_target(spark, sf_dir):
     got = [r.vec_id for r in pq_rerank_topk(e, cb, em.QVEC, k=k, rerank=250).collect()]
     recall = len(set(exact) & set(got)) / k
     assert recall >= 0.9, recall
+
+
+def _lut_loop_recipe(codebooks, q):
+    """The per-term-floor LUT recipe written as plain Python loops."""
+    import math
+
+    m, n_codes, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
+    return [
+        [
+            sum(
+                int(math.floor(q[j * dsub + i] * float(codebooks[j][c][i]) * 1e6))
+                for i in range(dsub)
+            )
+            for c in range(n_codes)
+        ]
+        for j in range(m)
+    ]
+
+
+def test_pq_lut_matches_loop_recipe_at_64_and_2688_dims():
+    import numpy as np
+
+    from external_benchmarks_spark.operators.quantize import pq_lut
+
+    rng = np.random.default_rng(7)
+    for dim in (64, 2688):
+        cb = rng.standard_normal((8, 16, dim // 8))
+        q = [float(v) for v in rng.standard_normal(dim) / np.sqrt(dim)]
+        lut = pq_lut(cb, q)
+        assert lut.dtype == np.int64 and lut.shape == (8, 16)
+        assert lut.tolist() == _lut_loop_recipe(cb.tolist(), q)

@@ -22,22 +22,19 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from external_benchmarks_spark.session import get_spark
 
 import __spark_entry__ as entry_mod
+import bench as bench_mod
 
 
 def jvm_probe(spark, n: int = 5) -> dict:
-    reps = []
-    for _ in range(n):
-        t0 = time.perf_counter()
-        spark.range(500_000_000).selectExpr("sum(id)").collect()
-        reps.append(time.perf_counter() - t0)
-    reps.sort()
+    reps = sorted(bench_mod.rep_times(
+        lambda: spark.range(500_000_000).selectExpr("sum(id)").collect(), n
+    ))
     return {
         "min": round(reps[0], 3),
         "median": round(reps[len(reps) // 2], 3),
@@ -61,8 +58,6 @@ def main() -> None:
     # bench-only legs (e.g. sorted_export, cms_heavy_hitters_mg) resolve
     # through the bench's own map so they can be forensic'd too (r16)
     if any(name not in q for name in args.legs):
-        import bench as bench_mod
-
         q.update(bench_mod.headline_queries())
     q["l2_norm"](spark, args.sf).count()  # Arrow worker warmup
 
@@ -70,11 +65,9 @@ def main() -> None:
     print(f"# host_control_before: {out['host_control_before']}", file=sys.stderr)
     legs: dict[str, dict] = {}
     for name in args.legs:
-        reps = []
-        for _ in range(args.reps + 1):
-            t0 = time.perf_counter()
-            q[name](spark, args.sf).count()
-            reps.append(time.perf_counter() - t0)
+        reps = bench_mod.rep_times(
+            lambda: q[name](spark, args.sf).count(), args.reps + 1
+        )
         warm = sorted(reps[1:])
         legs[name] = {
             "cold": round(reps[0], 3),

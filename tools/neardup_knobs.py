@@ -20,11 +20,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scale_ladder import SRC, build_replica  # noqa: E402
+
+from bench import timed  # noqa: E402
 
 from external_benchmarks_spark.catalog import Catalog  # noqa: E402
 from external_benchmarks_spark.operators.dedup import (  # noqa: E402
@@ -50,13 +51,11 @@ def _pairs(spark, sf_dir, cap=None, bits=2):
 
 
 def _time_count(spark, sf_dir, cap=None, bits=2):
-    best, n = None, None
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        n = _pairs(spark, sf_dir, cap, bits).count()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return n, round(best, 3)
+    runs = [
+        timed(lambda: _pairs(spark, sf_dir, cap, bits).count())
+        for _ in range(REPS)
+    ]
+    return runs[-1][0], round(min(dt for _, dt in runs), 3)
 
 
 def main() -> None:

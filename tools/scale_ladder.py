@@ -35,11 +35,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from bench import rep_times, timed
 
 SRC = "/root/testdata/sf0.1"
 FACTOR = 10
@@ -315,11 +316,7 @@ def main() -> None:
             leg_dir = sf_dir
             if name in VARIANT_LEGS and sf_label == "1.0r":
                 leg_dir = os.path.join(rep, "variant")
-            reps = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                q[name](spark, leg_dir).count()
-                reps.append(time.perf_counter() - t0)
+            reps = rep_times(lambda: q[name](spark, leg_dir).count(), 2)
             legs[name][sf_label] = {
                 "cold": round(reps[0], 3),
                 "steady": round(min(reps), 3),
@@ -380,18 +377,14 @@ def main() -> None:
         # number below is pure delta-path; store_build_s is the index
         # work (~0 when the fingerprint marker says the layout is
         # current from a previous ladder run in this tempdir).
-        t0 = time.perf_counter()
-        store = build_signature_store(
-            spark, corpus, tag=tag,
-            source_paths=[os.path.join(sf_dir, "documents.parquet")],
+        store, build_s = timed(
+            lambda: build_signature_store(
+                spark, corpus, tag=tag,
+                source_paths=[os.path.join(sf_dir, "documents.parquet")],
+            )
         )
-        build_s = time.perf_counter() - t0
         stores[sf_label] = store
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            delta_dedup(spark, fixed_delta, store).count()
-            reps.append(time.perf_counter() - t0)
+        reps = rep_times(lambda: delta_dedup(spark, fixed_delta, store).count(), 3)
         dd_fixed[sf_label] = {
             "corpus_docs": corpus.count(),
             "store_build_s": round(build_s, 3),
@@ -417,17 +410,15 @@ def main() -> None:
         corpus = Catalog(spark, sf_dir).documents.filter(
             F.col("doc_id") % 10 != 0
         )
-        t0 = time.perf_counter()
-        sstore = build_span_store(
-            spark, corpus, tag="ladder_span_" + sf_label.replace(".", "_"),
-            source_paths=[os.path.join(sf_dir, "documents.parquet")],
+        sstore, sbuild_s = timed(
+            lambda: build_span_store(
+                spark, corpus, tag="ladder_span_" + sf_label.replace(".", "_"),
+                source_paths=[os.path.join(sf_dir, "documents.parquet")],
+            )
         )
-        sbuild_s = time.perf_counter() - t0
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            delta_span_dedup(spark, fixed_delta, sstore).count()
-            reps.append(time.perf_counter() - t0)
+        reps = rep_times(
+            lambda: delta_span_dedup(spark, fixed_delta, sstore).count(), 3
+        )
         span_fixed[sf_label] = {
             "corpus_docs": corpus.count(),
             "store_build_s": round(sbuild_s, 3),
@@ -462,18 +453,17 @@ def main() -> None:
         vcorpus = Catalog(spark, sf_dir).embeddings.filter(
             F.col("vec_id") % 10 != 0
         )
-        t0 = time.perf_counter()
-        vs = build_vector_store(
-            spark, vcorpus, tag="ladder_semf_" + sf_label.replace(".", "_"),
-            source_paths=[os.path.join(sf_dir, "embeddings.parquet")],
+        vs, vbuild_s = timed(
+            lambda: build_vector_store(
+                spark, vcorpus, tag="ladder_semf_" + sf_label.replace(".", "_"),
+                source_paths=[os.path.join(sf_dir, "embeddings.parquet")],
+            )
         )
-        vbuild_s = time.perf_counter() - t0
-        reps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            delta_semdedup(spark, fixed_vdelta, vs,
-                           threshold_fp=200_000).count()
-            reps.append(time.perf_counter() - t0)
+        reps = rep_times(
+            lambda: delta_semdedup(spark, fixed_vdelta, vs,
+                                   threshold_fp=200_000).count(),
+            3,
+        )
         # r15 (r14 ADVICE): validate the vectorized-matmul assignment's
         # no-near-ties bet ON THE CORPUS THIS RUNG SERVES, not just the
         # small fixture — a ~1% sample through BOTH forms (the Catalyst
@@ -540,24 +530,23 @@ def main() -> None:
         )
         n = vcorpus.count()
         n_cent = max(16, int(_math.ceil(n / 1024)))
-        t0 = time.perf_counter()
-        idx = build_pq_index(
-            spark, vcorpus,
-            bucket_root("ladder_pqi_" + sf_label.replace(".", "_")),
-            n_centroids=n_cent,
-            store_vectors=True, payload_cols=("label",),
+        idx, ibuild_s = timed(
+            lambda: build_pq_index(
+                spark, vcorpus,
+                bucket_root("ladder_pqi_" + sf_label.replace(".", "_")),
+                n_centroids=n_cent,
+                store_vectors=True, payload_cols=("label",),
+            )
         )
-        ibuild_s = time.perf_counter() - t0
-        areps, qreps = [], []
-        for i in range(3):
-            t0 = time.perf_counter()
-            append_pq_index(spark, idx, fixed_vdelta,
-                            batch_id=f"ladder_b{i}")
-            areps.append(time.perf_counter() - t0)
-        for _ in range(3):
-            t0 = time.perf_counter()
-            pq_index_topk(spark, idx, em.QVEC, k=20, nprobe=4).count()
-            qreps.append(time.perf_counter() - t0)
+        batch_ids = iter(range(3))
+        areps = rep_times(
+            lambda: append_pq_index(spark, idx, fixed_vdelta,
+                                    batch_id=f"ladder_b{next(batch_ids)}"),
+            3,
+        )
+        qreps = rep_times(
+            lambda: pq_index_topk(spark, idx, em.QVEC, k=20, nprobe=4).count(), 3
+        )
         # r15: the FILTERED read at every rung — Spark form (per-job
         # floor class) and the serving twin (the deployment shape):
         # filter cost is a vectorized isin over the probed cells'
@@ -568,21 +557,19 @@ def main() -> None:
         )
         from external_benchmarks_spark.serving import PQServingIndex
 
-        freps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            pq_index_filtered_rerank(
+        freps = rep_times(
+            lambda: pq_index_filtered_rerank(
                 spark, idx, em.QVEC, predicate=F.col("label").isin(1, 3),
                 k=20, rerank=100, nprobe=4,
-            ).count()
-            freps.append(time.perf_counter() - t0)
+            ).count(),
+            3,
+        )
         srv = PQServingIndex(idx.root)
-        sreps = []
-        for _ in range(20):
-            t0 = time.perf_counter()
-            srv.topk_rerank(em.QVEC, k=20, rerank=100, nprobe=4,
-                            where={"label": [1, 3]})
-            sreps.append(time.perf_counter() - t0)
+        sreps = rep_times(
+            lambda: srv.topk_rerank(em.QVEC, k=20, rerank=100, nprobe=4,
+                                    where={"label": [1, 3]}),
+            20,
+        )
         pqi_fixed[sf_label] = {
             "corpus_vecs": n,
             "n_centroids": n_cent,
@@ -629,11 +616,7 @@ def main() -> None:
                 vdelta,
             ),
         ):
-            reps = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn(delta).count()
-                reps.append(time.perf_counter() - t0)
+            reps = rep_times(lambda: fn(delta).count(), 3)
             dd_growth[name][label] = {
                 "delta_rows": delta.count(),
                 "cold": round(reps[0], 3),
@@ -662,22 +645,16 @@ def main() -> None:
         seed = spark.range(n).select(
             (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
         )
-        t0 = time.perf_counter()
-        fold_pairs(spark, cmap, seed)
-        seed_s = time.perf_counter() - t0
+        _, seed_s = timed(lambda: fold_pairs(spark, cmap, seed))
         new_batch = spark.range(1_000).select(
             (F.lit(10**12) + F.col("id") * 2).alias("id_a"),
             (F.lit(10**12) + F.col("id") * 2 + 1).alias("id_b"),
         )
-        t0 = time.perf_counter()
-        fold_pairs(spark, cmap, new_batch)
-        insert_s = time.perf_counter() - t0
+        _, insert_s = timed(lambda: fold_pairs(spark, cmap, new_batch))
         merge_batch = spark.range(500).select(
             (F.col("id") * 4).alias("id_a"), (F.col("id") * 4 + 2).alias("id_b")
         )
-        t0 = time.perf_counter()
-        fold_pairs(spark, cmap, merge_batch)
-        merge_s = time.perf_counter() - t0
+        _, merge_s = timed(lambda: fold_pairs(spark, cmap, merge_batch))
         cm_rung[str(n)] = {
             "seed_fold_s": round(seed_s, 3),
             "insert_batch_s": round(insert_s, 3),
@@ -725,15 +702,15 @@ def main() -> None:
                 ),
             }
             for name, build in builders.items():
-                reps = []
-                for _ in range(3):
-                    agg = build().groupBy().agg(
+                # plans are built outside the timed region: only the
+                # collect is clocked
+                aggs = [
+                    build().groupBy().agg(
                         F.count(F.lit(1)).alias("c"), F.sum("val").alias("s")
                     )
-                    t0 = time.perf_counter()
-                    agg.collect()
-                    reps.append(time.perf_counter() - t0)
-                reps.sort()
+                    for _ in range(3)
+                ]
+                reps = sorted(rep_times(lambda: aggs.pop(0).collect(), 3))
                 res[name] = round(reps[1], 3)
                 res[f"{name}_spread"] = [round(x, 3) for x in reps]
         finally:
@@ -757,9 +734,10 @@ def main() -> None:
         from external_benchmarks_spark.pipeline.soak import MaintenanceSoak
 
         n_soak = 20
-        t0 = time.perf_counter()
-        twin = MaintenanceSoak(spark, rep, "ladder_twin", n_batches=n_soak)
-        twin_build_s = round(time.perf_counter() - t0, 3)
+        twin, twin_build_s = timed(
+            lambda: MaintenanceSoak(spark, rep, "ladder_twin", n_batches=n_soak)
+        )
+        twin_build_s = round(twin_build_s, 3)
         try:
             for i in range(n_soak):
                 twin.cycle(i)
@@ -767,9 +745,10 @@ def main() -> None:
         finally:
             twin.cleanup()
 
-        t0 = time.perf_counter()
-        soak = MaintenanceSoak(spark, rep, "ladder_soak", n_batches=n_soak)
-        build_s = round(time.perf_counter() - t0, 3)
+        soak, build_s = timed(
+            lambda: MaintenanceSoak(spark, rep, "ladder_soak", n_batches=n_soak)
+        )
+        build_s = round(build_s, 3)
         try:
             cycles = []
             for i in range(n_soak):

@@ -19,10 +19,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed  # noqa: E402
 from external_benchmarks_spark.operators.setjoin import (  # noqa: E402
     allpairs_jaccard_join,
     prefix_candidates,
@@ -51,17 +51,13 @@ def main() -> None:
         for t in thresholds:
             spark.catalog.clearCache()  # comparable runs across loops
             docs = shingle_docs(df)
-            t0 = time.perf_counter()
-            docs.count()  # materialize the persisted shingles
-            t_sh = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            n_cand = prefix_candidates(docs, t).count()
-            t_cand = time.perf_counter() - t0
+            _, t_sh = timed(docs.count)  # materialize the persisted shingles
+            n_cand, t_cand = timed(lambda: prefix_candidates(docs, t).count())
             # same cached shingles (identical logical plan -> cache hit),
             # so this prices candidates + verify, not the corpus scan
-            t0 = time.perf_counter()
-            n_pairs = allpairs_jaccard_join(df, threshold_ppm=t).count()
-            t_join = time.perf_counter() - t0
+            n_pairs, t_join = timed(
+                lambda: allpairs_jaccard_join(df, threshold_ppm=t).count()
+            )
             docs.unpersist()
             out[label][f"t{t // 10000}"] = {
                 "candidates": n_cand,

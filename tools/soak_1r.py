@@ -13,10 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed  # noqa: E402
 from external_benchmarks_spark.session import get_spark  # noqa: E402
 from external_benchmarks_spark.pipeline.soak import run_soak  # noqa: E402
 from tools.scale_ladder import build_replica  # noqa: E402
@@ -38,9 +38,10 @@ def main() -> None:
     n_cycles = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     spark = get_spark("soak-1r")
     rep = build_replica(spark)
-    t0 = time.perf_counter()
-    out = run_soak(spark, rep, tag="r15_soak1r", n_cycles=n_cycles)
-    wall = round(time.perf_counter() - t0, 1)
+    out, wall = timed(
+        lambda: run_soak(spark, rep, tag="r15_soak1r", n_cycles=n_cycles)
+    )
+    wall = round(wall, 1)
 
     cycles = out["cycles"]
     stage_names = sorted(

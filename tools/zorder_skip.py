@@ -18,13 +18,13 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import timed  # noqa: E402
 from external_benchmarks_spark.catalog import Catalog  # noqa: E402
 from external_benchmarks_spark.operators.zorder import (  # noqa: E402
     DEFAULT_RECTS,
@@ -104,9 +104,8 @@ def rect_bounds(spark):
 
 def main():
     spark = get_spark("zorder-skip")
-    t0 = time.time()
-    write_layouts(spark)
-    build_s = round(time.time() - t0, 2)
+    _, build_s = timed(lambda: write_layouts(spark))
+    build_s = round(build_s, 2)
     rects = rect_bounds(spark)
     res = {"sf_dir": SF_DIR, "bits": BITS, "n_files": N_FILES,
            "layout_build_s": build_s, "rects": {}}
@@ -123,17 +122,17 @@ def main():
                 (F.col("o_custkey").between(xlo, xhi))
                 & (F.col("_ydays").between(ylo, yhi))
             )
-            reps = []
-            for _ in range(3):
-                t0 = time.time()
-                n = (
-                    spark.read.parquet(f"{OUT}/{layout}")
+            runs = [
+                timed(
+                    lambda: spark.read.parquet(f"{OUT}/{layout}")
                     .filter(pred)
                     .agg(F.count(F.lit(1)))
                     .collect()[0][0]
                 )
-                reps.append(time.time() - t0)
-            reps.sort()
+                for _ in range(3)
+            ]
+            n = runs[-1][0]
+            reps = sorted(dt for _, dt in runs)
             entry[layout] = {
                 "files_touched": touched,
                 "files_total": len(stats),

@@ -216,7 +216,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the reference's benchmark query (README.md:72-83) —
     metadata filter -> dot-product score -> top-100 -> key.
 
-    Uses the Arrow/numpy fast path for scoring (the 100 TB hot loop).
+    Scored by the exact top-k kernel (the 100 TB hot loop): BLAS ranks
+    each Arrow batch, the left-to-right fold scores the survivors.
     """
     cat = Catalog(spark, "/root/testdata/sf0.001")
     return filtered_vector_topk(
@@ -226,7 +227,6 @@ def entry(spark: SparkSession) -> DataFrame:
         k=100,
         key_col="vec_id",
         emb_col="embedding",
-        use_arrow_fast_path=True,
         extra_cols=("label",),
     )
 
@@ -698,13 +698,12 @@ def q_json_extract(spark, sf):
 # ---------------------------------------------------------------------------
 
 def q_dot_topk(spark, sf):
-    # Oracle-parity form (exact Catalyst HOFs); entry() uses the Arrow path.
+    # entry()'s kernel without the filter; scores hash-match the oracle.
     return filtered_vector_topk(
         Catalog(spark, sf).embeddings,
         qvec=QVEC,
         predicate=None,
         k=100,
-        use_arrow_fast_path=False,
     )
 
 
@@ -1342,14 +1341,12 @@ def q_quantize_embeddings(spark, sf):
 
 
 def q_quant_dot_topk(spark, sf):
-    # Arrow fast path: integer matmul per batch is exact in any order,
-    # and quantization boundary values re-derive Spark's HALF_UP exactly
-    # — bit-identical to the HOF form, same oracle hash.
+    # Integer matmul per Arrow batch is exact in any order, and
+    # quantization boundary values re-derive Spark's HALF_UP exactly —
+    # bit-identical to the SQL replay.
     from external_benchmarks_spark.operators.quantize import quantized_dot_topk
 
-    return quantized_dot_topk(
-        Catalog(spark, sf).embeddings, QVEC, k=100, use_arrow_fast_path=True
-    )
+    return quantized_dot_topk(Catalog(spark, sf).embeddings, QVEC, k=100)
 
 
 # Product quantization (operators/quantize.pq_*): deterministic
@@ -2360,7 +2357,6 @@ def q_pq_recall(spark, sf):
         qvec=QVEC,
         predicate=None,
         k=k,
-        use_arrow_fast_path=False,
     ).select("vec_id")
     return (
         pq_ids.join(exact_ids, "vec_id")
@@ -3689,17 +3685,11 @@ def q_hybrid_rrf(spark, sf):
         .over(W.orderBy(F.desc("bm25"), F.asc("doc_id")))
         .alias("rank_lex"),
     )
-    # r16: the fusion consumes RANKS only, and the arrow scorer's BLAS
-    # dots order-match the HOF fold's here (ties broken by vec_id; rank
-    # parity is oracle-gated at all three SFs like the other fast
-    # paths), so the dense leg takes the batch-matmul path — the HOF
-    # form's 64-term unrolled expression cost ~0.5 s/call of codegen +
-    # row-at-a-time evaluation (measured 0.89 -> 0.35 s). Score-fused
-    # consumers (hybrid_score_fuse) keep the HOF form: they hash the
-    # score bits.
-    vec = filtered_vector_topk(
-        c.embeddings, QVEC, None, k=50, use_arrow_fast_path=True
-    )
+    # The dense leg is the exact top-k kernel: BLAS per Arrow batch, the
+    # fold on the survivors, ties by vec_id — the same ranks and score
+    # bits hybrid_score_fuse hashes, without the 64-term unrolled
+    # expression's ~0.5 s/call of codegen (r16: 0.89 -> 0.35 s).
+    vec = filtered_vector_topk(c.embeddings, QVEC, None, k=50)
     dense = vec.select(
         F.col("vec_id").alias("id"),
         F.row_number()
@@ -3782,9 +3772,7 @@ def q_hybrid_score_fuse(spark, sf):
         spark, _ensured_bm25_index(spark, sf), BM25_TERMS, k=50,
         n_term_buckets=64,
     ).select(F.col("doc_id").alias("id"), F.col("bm25").alias("score_lex"))
-    dense = filtered_vector_topk(
-        c.embeddings, QVEC, None, k=50, use_arrow_fast_path=False
-    ).select(F.col("vec_id").alias("id"), F.col("score").alias("score_vec"))
+    dense = filtered_vector_topk(c.embeddings, QVEC, None, k=50).select(F.col("vec_id").alias("id"), F.col("score").alias("score_vec"))
     return score_fuse(
         lex, dense, key_col="id", score_a_col="score_lex",
         score_b_col="score_vec", alpha=0.6, k=20,

@@ -141,7 +141,7 @@ def _batch_queries_topk(spark, sf):
     queries = e.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    return per_query_topk(e, queries, k=100, item_key="vec_id", use_arrow_fast_path=True)
+    return per_query_topk(e, queries, k=100, item_key="vec_id")
 
 
 def _index_build(spark, sf):
@@ -240,7 +240,7 @@ def _ivf_probe(spark, sf):
 
     out, centroids = _ivf_layout(spark, sf)
     back = spark.read.parquet(out)
-    return ivf_topk(back, centroids, QVEC, k=100, nprobe=12, use_arrow_fast_path=True)
+    return ivf_topk(back, centroids, QVEC, k=100, nprobe=12)
 
 
 def _batch_queries_ivf(spark, sf):
@@ -255,8 +255,7 @@ def _batch_queries_ivf(spark, sf):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     return per_query_ivf_topk(
-        back, centroids, queries, k=100, nprobe=12, metric="dot",
-        use_arrow_fast_path=True,
+        back, centroids, queries, k=100, nprobe=12, metric="dot"
     )
 
 
@@ -1148,14 +1147,12 @@ def dim2688_leg(spark, sf, dim: int = 2688):
         .parquet(layout)
     )
     out["index_build_s"] = round(build_s, 3)
-    # 3) Spark filtered top-k at full width (Arrow/BLAS scoring)
+    # 3) Spark filtered top-k at full width (the exact top-k kernel)
     qvec = [float(x) for x in hashed_ngram_encode(["filtered vector query"], dim)[0]]
     base = spark.read.parquet(layout)
     pred = (F.col("label") == 0) & (F.col("vec_id") % 10 == 0)
     _, vtopk_s = rep_times(
-        lambda: filtered_vector_topk(
-            base, qvec, pred, k=100, use_arrow_fast_path=True
-        ).count(),
+        lambda: filtered_vector_topk(base, qvec, pred, k=100).count(),
         2,
     )
     out["vtopk_s"] = round(vtopk_s, 3)
@@ -1167,8 +1164,7 @@ def dim2688_leg(spark, sf, dim: int = 2688):
     # 5) ANN recall at the reference's real width (README.md:76 demands
     #    >=0.9 average recall over the 2,688-dim embeddings): IVF
     #    (spherical-KMeans cells, nprobe=12/16) and multi-probe sign-LSH
-    #    vs the exact brute-force top-100. Arrow scoring is mandatory at
-    #    this width (the unrolled scorer overflows the JVM analyzer).
+    #    vs the exact brute-force top-100.
     from external_benchmarks_spark.operators.similarity import (
         bruteforce_topk,
         ivf_assign,
@@ -1181,9 +1177,7 @@ def dim2688_leg(spark, sf, dim: int = 2688):
     try:
         exact = {
             r.vec_id
-            for r in bruteforce_topk(
-                emb_c, qvec, k=100, use_arrow_fast_path=True
-            ).collect()
+            for r in bruteforce_topk(emb_c, qvec, k=100).collect()
         }
         centroids, fit_s = timed(
             lambda: ivf_fit(emb_c, n_centroids=16, seed=42)
@@ -1193,16 +1187,14 @@ def dim2688_leg(spark, sf, dim: int = 2688):
         ivf = {
             r.vec_id
             for r in ivf_topk(
-                assigned, centroids, qvec, k=100, nprobe=12,
-                use_arrow_fast_path=True,
+                assigned, centroids, qvec, k=100, nprobe=12
             ).collect()
         }
         out["recall"] = round(len(exact & ivf) / len(exact), 3)
         lsh = {
             r.vec_id
             for r in lsh_bucketed_topk(
-                emb_c, qvec, k=100, n_planes=8, min_matching_bits=2,
-                use_arrow_fast_path=True,
+                emb_c, qvec, k=100, n_planes=8, min_matching_bits=2
             ).collect()
         }
         out["lsh_recall"] = round(len(exact & lsh) / len(exact), 3)
@@ -1219,14 +1211,12 @@ def dim2688_leg(spark, sf, dim: int = 2688):
             2,
         )
         out["maxsim_s"] = round(maxsim_s, 3)
-        # 7) MMR diversified re-rank at full width (numpy fast path for
-        #    the m x m pair-sim matrix; the distributed top-m feeds it)
+        # 7) MMR diversified re-rank at full width (the exact top-k
+        #    kernel feeds the top-m; the driver greedy folds pair sims)
         from external_benchmarks_spark.operators.similarity import mmr_topk
 
         _, mmr_s = timed(
-            lambda: mmr_topk(
-                emb_c, qvec, k=10, m=50, use_arrow_fast_path=True
-            ).count()
+            lambda: mmr_topk(emb_c, qvec, k=10, m=50).count()
         )
         out["mmr_s"] = round(mmr_s, 3)
     finally:

@@ -1,15 +1,18 @@
 """Vector scalar functions: dot product, L2 norm, cosine similarity.
 
-Two tiers, per SURVEY.md §7.4:
+Two forms of one arithmetic, per SURVEY.md §7.4:
 
-1. **Catalyst higher-order-function forms** (this module's Column builders):
-   exact, oracle-parity-friendly (left-to-right summation matches DuckDB's
-   ``list_dot_product``), zero Python in the loop. Fine up to ~100-dim.
-2. **Arrow-batched numpy fast path** (``score_batch_udf``): collects the
-   embedding column of each Arrow batch into one (batch x dim) float
-   matrix and does a single matmul against the query vector. This is the
-   hot path for the reference's 2,688-dim workload
-   (reference README.md:52-55,73) — 10-100x over per-row HOFs.
+1. **Catalyst column functions** (``dot_product``, ``dot_product_literal``,
+   ``l2_norm``, ``cosine_similarity[_literal]``): exact, zero Python in
+   the loop, and bit-identical to DuckDB's ``list_dot_product`` because
+   they sum left to right. ``dot_product_literal`` unrolls one term per
+   dimension, so it only suits narrow vectors (~1k dims at most).
+2. **The exact top-k kernel over Arrow batches** (``exact_topk``, wrapped
+   for Spark by ``batch_topk``): BLAS ranks each batch, and only the rows
+   that can still reach the top k are rescored with the same
+   left-to-right fold (``fold_dot``). It runs at the reference's 2,688
+   dims (reference README.md:52-55,73), returns their score bits
+   and breaks ties by key. The serving tier calls the same kernel.
 
 All element arithmetic is done in DOUBLE regardless of storage type
 (embeddings are stored float32 for size, SURVEY.md §7.4).
@@ -20,10 +23,11 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def _col(c: Column | str) -> Column:
@@ -75,36 +79,224 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def literal_qnorm(q: Sequence[float]) -> float:
+    """The query norm ``cosine_similarity_literal`` divides by (a BLAS
+    dot, not the fold: the oracles replay this recipe)."""
+    return float(np.sqrt(np.dot(q, q)))
+
+
 def cosine_similarity_literal(a: Column | str, q: Sequence[float]) -> Column:
-    qnorm = float(np.sqrt(np.dot(q, q)))
-    return dot_product_literal(a, q) / (l2_norm(a) * F.lit(qnorm))
+    return dot_product_literal(a, q) / (l2_norm(a) * F.lit(literal_qnorm(q)))
+
+
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched fast path (the 100 TB hot loop)
+# Exact top-k over Arrow batches: BLAS ranks, the fold decides
 # ---------------------------------------------------------------------------
 
-def score_batch_udf(qvec: Sequence[float], normalize: bool = False):
-    """pandas_udf scoring an embedding column against a fixed query vector.
+_U = 2.0**-53  # unit roundoff of float64
 
-    One numpy matmul per Arrow batch; with
-    spark.sql.execution.arrow.maxRecordsPerBatch=10000 and dim=2688 the
-    batch matrix is ~100 MB float64 — within executor memory, and the
-    matmul is BLAS-backed.
-    """
-    q = np.asarray(qvec, dtype=np.float64)
-    if normalize:
-        q = q / np.linalg.norm(q)
 
-    @F.pandas_udf(DoubleType())
-    def score(emb: pd.Series) -> pd.Series:
-        mat = np.vstack(emb.to_numpy())  # (batch, dim)
-        mat = mat.astype(np.float64, copy=False)
-        s = mat @ q
-        if normalize:
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0.0] = 1.0
-            s = s / norms
-        return pd.Series(s)
+def fold_dot(mat: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Each row of ``mat`` times ``q`` (a vector, or a matrix of rows),
+    summed left to right in float64: the order of ``dot_product_literal``,
+    ``l2_norm`` and DuckDB's ``list_dot_product``, so the bits match
+    theirs. ``cumsum`` is a sequential scan; ``sum`` and BLAS are not."""
+    if mat.shape[1] == 0:
+        return np.zeros(len(mat))
+    return np.cumsum(mat * q, axis=1)[:, -1]
 
-    return score
+
+def spark_order(scores: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Indices in the order of Spark's ``ORDER BY score DESC, key ASC``,
+    where NaN ranks above every number."""
+    nan = np.isnan(scores)
+    return np.lexsort((keys, -np.where(nan, 0, scores), ~nan))
+
+
+def exact_topk(
+    mat: np.ndarray,
+    keys: np.ndarray,
+    queries: np.ndarray,
+    k: int,
+    qnorms: np.ndarray | None = None,
+    norms: np.ndarray | None = None,
+    mask: np.ndarray | None = None,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """The best ``k`` rows of ``mat`` (n x D, float64) for each row of
+    ``queries`` (Q x D), ordered by (-score, key), with exact scores.
+
+    The score is ``fold_dot(row, q)``; with ``qnorms`` (one per query,
+    each computed by the caller's own recipe) it is the cosine
+    ``fold_dot(row, q) / (sqrt(fold_dot(row, row)) * qnorm)``, the op
+    order of ``cosine_similarity[_literal]``. ``norms`` are the rows'
+    L2 norms when the caller keeps them; ``mask`` (n x Q, bool) leaves a
+    row out of a query's candidates where it is False.
+
+    Four steps: one BLAS product ranks every row; every row whose BLAS
+    score lies within the error bound of the k-th best lower bound
+    survives; only the survivors are rescored with the fold; the top k
+    of those by (-score, key) are returned. Any two summation orders of
+    a D-term float64 dot differ by at most 2*gamma_D*|a|*|q|, with
+    gamma_D = D*u/(1-D*u) (Higham, *Accuracy and Stability of Numerical
+    Algorithms*, §3.1). The bound used here takes gamma_{D+8} and
+    doubles the result, which also covers the roundings of the norms,
+    the cosine division and the bound's own arithmetic. A row outside
+    the survivors is strictly below k rows in exact arithmetic, so the
+    result equals a fold over every row sorted by (-score, key).
+    Returns one (row indices, scores) pair per query."""
+    n, d = mat.shape
+    if k <= 0:
+        return [(np.empty(0, np.int64), np.empty(0))] * len(queries)
+    if norms is None:
+        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    approx = mat @ queries.T
+    g = (d + 8) * _U / (1 - (d + 8) * _U)
+    err = 2 * g * np.outer(norms, np.sqrt(np.einsum("ij,ij->i", queries, queries)))
+    if qnorms is not None:
+        den = np.outer(norms, qnorms)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            err = (err + 2 * g * np.abs(approx)) / den
+            approx = approx / den
+    err = 2 * err
+    out = []
+    for j, q in enumerate(queries):
+        rows = np.arange(n) if mask is None else np.flatnonzero(mask[:, j])
+        if len(rows) > k:
+            a, e = approx[rows, j], err[rows, j]
+            sure = np.isfinite(a) & np.isfinite(e)
+            lo = (a - e)[sure]
+            if len(lo) >= k:
+                kth = np.partition(lo, len(lo) - k)[len(lo) - k]
+                rows = rows[~sure | (a + e >= kth)]
+        sub = mat[rows]
+        scores = fold_dot(sub, q)
+        if qnorms is not None:
+            scores = scores / (np.sqrt(fold_dot(sub, sub)) * qnorms[j])
+        best = spark_order(scores, keys[rows])[:k]
+        out.append((rows[best], scores[best]))
+    return out
+
+
+def arrow_rows(col: pa.Array, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """A list column of an Arrow batch as an (n x d) float64 matrix, and
+    which rows it holds. A null list, a null element or a length other
+    than ``d`` leaves the row out: the Catalyst fold scores it null."""
+    ok = pc.fill_null(pc.list_value_length(col), -1).to_numpy() == d
+    if ok.all():
+        flat = col.flatten()
+    else:
+        flat = col.filter(pa.array(ok)).flatten()
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, d)
+    rows = np.flatnonzero(ok)
+    if flat.null_count:
+        bad = pc.is_null(flat).to_numpy(zero_copy_only=False).reshape(-1, d).any(1)
+        ok[rows[bad]] = False
+        rows, vals = rows[~bad], vals[~bad]
+    if len(rows) == len(col):
+        return vals, ok
+    mat = np.zeros((len(col), d))
+    mat[rows] = vals
+    return mat, ok
+
+
+def _sort_keys(col: pa.Array) -> np.ndarray:
+    """Tie-break keys as numbers ordered like Spark orders the column."""
+    keys = col.to_numpy(zero_copy_only=False)
+    return np.unique(keys, return_inverse=True)[1] if keys.dtype == object else keys
+
+
+def collect_queries(
+    queries: DataFrame, query_key: str, query_emb: str
+) -> tuple[StructField, pa.Array, np.ndarray]:
+    """A query table, bounded by contract, on the driver: its key field,
+    its keys and its (Q x D) float64 vectors."""
+    tbl = queries.select(query_key, query_emb).toArrow()
+    emb = tbl.column(1).combine_chunks()
+    d = pc.list_value_length(emb)[0].as_py() if len(emb) else 0
+    mat, ok = arrow_rows(emb, d) if len(emb) else (np.empty((0, 0)), [])
+    if not all(ok):
+        raise ValueError(f"every {query_emb} must be a non-null vector of {d} numbers")
+    return queries.schema[query_key], tbl.column(0).combine_chunks(), mat
+
+
+def batch_topk(
+    df: DataFrame,
+    queries: np.ndarray,
+    k: int,
+    key_col: str,
+    emb_col: str,
+    qnorms: np.ndarray | None = None,
+    keep: Sequence[str] = (),
+    qids: tuple[StructField, pa.Array] | None = None,
+    cells: tuple[str, np.ndarray] | None = None,
+) -> DataFrame:
+    """Each Arrow batch's own top ``k`` rows per query, exact scores in
+    ``score``: ``exact_topk`` run inside one ``mapInArrow``. Any global
+    top k of ``df`` is the top k of these survivors, so callers finish
+    with TakeOrderedAndProject (one query) or a window (many).
+
+    ``queries`` is (Q x D). With ``qids = (field, keys)`` (from
+    ``collect_queries``) output rows carry the query's key in that
+    field; without it Q is 1. ``cells = (cell_col, valid)`` keeps a row
+    for query j only where ``valid[cell, j]``. Output columns:
+    [query key,] key_col, *keep, score.
+
+    Rows the Catalyst fold would score null (null or wrong-length
+    vectors, null elements) score null and rank last. Under cosine a
+    zero-norm row divides by zero: it scores null, or raises
+    DIVIDE_BY_ZERO when ``spark.sql.ansi.enabled`` is on, as the
+    Catalyst column functions do."""
+    queries = np.asarray(queries, dtype=np.float64)
+    d = queries.shape[1]
+    ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    out_cols = [*dict.fromkeys([key_col, *keep])]
+    in_cols = [*dict.fromkeys([*out_cols, emb_col, *(cells[:1] if cells else [])])]
+    fields = [df.schema[c] for c in out_cols] + [StructField("score", DoubleType())]
+    if qids is not None:
+        fields.insert(0, qids[0])
+    names = [f.name for f in fields]
+    if len(queries) == 0:
+        return df.sparkSession.createDataFrame([], StructType(fields))
+
+    def run(batches):
+        for b in batches:
+            mat, ok = arrow_rows(b.column(emb_col), d)
+            keys = _sort_keys(b.column(key_col))
+            mask = None
+            if cells is not None:
+                cid = b.column(cells[0]).to_numpy(zero_copy_only=False)
+                mask = cells[1][cid.astype(np.int64)]
+            norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+            if qnorms is not None:
+                zero = ok & (norms == 0.0)
+                if mask is not None:
+                    zero &= mask.any(axis=1)
+                if ansi and zero.any():
+                    raise ArithmeticError(
+                        "[DIVIDE_BY_ZERO] Division by zero: a zero-norm "
+                        f"{emb_col} row has no cosine"
+                    )
+                ok &= norms != 0.0
+            rows, nulls = np.flatnonzero(ok), np.flatnonzero(~ok)
+            res = exact_topk(
+                mat if len(rows) == len(mat) else mat[rows], keys[rows],
+                queries, k, qnorms, norms[rows],
+                None if mask is None else mask[rows],
+            )
+            idx, scores, nulled, qpos = [], [], [], []
+            for j, (r, s) in enumerate(res):
+                extra = nulls if mask is None else nulls[mask[nulls, j]]
+                extra = extra[np.argsort(keys[extra], kind="stable")][: max(k - len(r), 0)]
+                idx += [rows[r], extra]
+                scores += [s, np.zeros(len(extra))]
+                nulled += [np.zeros(len(r), bool), np.ones(len(extra), bool)]
+                qpos.append(np.full(len(r) + len(extra), j))
+            arrays = [b.column(c).take(pa.array(np.concatenate(idx))) for c in out_cols]
+            arrays.append(pa.array(np.concatenate(scores), mask=np.concatenate(nulled)))
+            if qids is not None:
+                arrays.insert(0, qids[1].take(pa.array(np.concatenate(qpos))))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return df.select(*in_cols).mapInArrow(run, StructType(fields))

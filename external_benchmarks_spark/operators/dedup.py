@@ -469,8 +469,8 @@ def embedding_neardup_pairs(
       element_at dot was measured SLOWER than the HOF fold at dim=64.)
     - ``use_arrow_fast_path``: one BLAS Gram matmul per block via
       applyInPandas, with an exact-fold re-check for threshold-boundary
-      pairs — the 100 TB scoring shape (pattern:
-      similarity._per_query_ivf_arrow). Use for consumers that drop the
+      pairs — the 100 TB scoring shape (the same BLAS-then-fold idea
+      as functions/vector.exact_topk). Use for consumers that drop the
       cosine column (components, pagerank, triangles, semdedup).
 
     ``max_block_rows`` caps pair fan-out for degenerate giant blocks by

@@ -42,12 +42,14 @@ def hierarchy_closure(
     """All (node, anc) pairs where anc is a PROPER ancestor of node.
 
     Two modes: with ``rounds`` (= ceil(log2(max depth)), when the
-    caller can bound the depth) the chain builds LAZILY — each level is
-    persisted but nothing executes until the consumer's single action,
-    and Spark's cached-relation dedup computes every level exactly once.
-    Without it, fixpoint mode runs one bounded count per round and
-    stops when the pair set stabilizes (the safe default for unknown
-    depth; ~2 extra Spark jobs per round of driver-action latency)."""
+    caller can bound the depth) the chain is planned in one go — each
+    level is persisted so the self-join reads it once — and one eager
+    checkpoint materializes it. Without it, fixpoint mode runs one
+    bounded count per round and stops when the pair set stabilizes (the
+    safe default for unknown depth; ~2 extra Spark jobs per round of
+    driver-action latency). Either way the result is a checkpoint and
+    every level persist is released before returning, so no
+    CacheManager entry outlives the call."""
     p = (
         edges.select(
             F.col(node_col).alias("node"), F.col(parent_col).alias("anc")
@@ -57,18 +59,14 @@ def hierarchy_closure(
         .persist()
     )
     if rounds is not None:
+        levels = [p]
         for r in range(rounds):
             a, b = p.alias("a"), p.alias("b")
             jumped = a.join(
                 b, F.col("a.anc") == F.col("b.node")
             ).select(F.col("a.node").alias("node"), F.col("b.anc").alias("anc"))
-            # EVERY level persists, including the last: repeat calls
-            # (bench reps, a session's second rollup) dedup to the same
-            # cache entries, so their eager checkpoint re-materializes
-            # from the warm final level instead of replaying the chain
-            # (measured: warm 2.9 s without the final persist, 1.6-2.4 s
-            # with it).
             p = p.unionByName(jumped).distinct().persist()
+            levels.append(p)
         # Materialize ONCE and cut lineage: relying on the persist chain
         # alone left downstream consumers (the rollup's union/join/agg)
         # to a CacheManager lookup that misses the FINAL level inside
@@ -76,12 +74,11 @@ def hierarchy_closure(
         # distinct's exchange (~2 s of the hierarchy_rollup leg,
         # stage-split evidence in SCALE.md r11). The eager checkpoint
         # pays the closure materialization once; every later action
-        # scans the materialized blocks. The level persists STAY
-        # registered: identical level plans dedup to the same cache
-        # entries across calls (CacheManager skips already-cached
-        # plans), so repeat calls re-checkpoint from warm levels instead
-        # of replaying the whole chain.
-        return p.localCheckpoint(eager=True)
+        # scans the materialized blocks, so the levels can go.
+        out = p.localCheckpoint(eager=True)
+        for lvl in levels:
+            lvl.unpersist()
+        return out
     n = p.count()
     for _ in range(max_rounds):
         a, b = p.alias("a"), p.alias("b")
@@ -95,7 +92,9 @@ def hierarchy_closure(
             break
         p.unpersist()
         p, n = nxt, n2
-    return p
+    out = p.localCheckpoint(eager=True)
+    p.unpersist()
+    return out
 
 
 def hierarchy_rollup(

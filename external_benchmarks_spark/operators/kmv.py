@@ -118,13 +118,15 @@ def kmv_pair_overlap(
     hash, the shared-member count, and integer estimates
     (est_union, est_inter, jaccard_ppm). Output: one row per pair.
 
-    The sketch frame (<= G*k rows by contract) is persisted so its
-    lineage — which includes the corpus-sized distinct upstream —
-    computes ONCE: both the group-list derivation and the pair
-    expansion read the cached rows, and the expansion is a single
-    broadcast hash join against the unpivoted pair list (each sketch
-    row matches the G-1 pairs its group participates in)."""
-    sketch = sketch.persist()
+    The sketch frame (<= G*k rows by contract) is a lazy local
+    checkpoint so its lineage — which includes the corpus-sized distinct
+    upstream — computes ONCE per call: both the group-list derivation
+    and the pair expansion read the checkpointed rows, and the expansion
+    is a single broadcast hash join against the unpivoted pair list
+    (each sketch row matches the G-1 pairs its group participates in).
+    The checkpoint belongs to this call's frame, so no CacheManager entry
+    outlives it."""
+    sketch = sketch.localCheckpoint(eager=False)
     groups = sketch.select(F.col(group_col).alias("_g")).distinct()
     pairs = (
         groups.select(F.col("_g").alias("_ga"))

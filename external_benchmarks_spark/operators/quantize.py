@@ -408,10 +408,10 @@ def pq_rerank_topk(
     BROADCAST of the R-row candidate set against the (pruned) raw
     vectors. R scales with k and quantizer distortion — NOT with
     corpus size (PQ error is per-vector), so R/n shrinks as the corpus
-    grows; 4-10x k is the production norm."""
-    from external_benchmarks_spark.functions.vector import (
-        dot_product_literal,
-    )
+    grows; 4-10x k is the production norm. The exact scores come from
+    the exact top-k kernel (operators/topk.filtered_vector_topk), so
+    they equal ``dot_product_literal``'s bits at any width."""
+    from external_benchmarks_spark.operators.topk import filtered_vector_topk
 
     cand = pq_adc_topk(
         pq_encode(df, codebooks, key_col=key_col, emb_col=emb_col),
@@ -420,16 +420,8 @@ def pq_rerank_topk(
         k=rerank,
         key_col=key_col,
     ).select(key_col)
-    return (
-        df.join(F.broadcast(cand), key_col)
-        .select(
-            key_col,
-            dot_product_literal(
-                F.col(emb_col).cast("array<double>"), query
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(key_col))
-        .limit(k)
+    return filtered_vector_topk(
+        df.join(F.broadcast(cand), key_col), query, None, k, key_col, emb_col
     )
 
 
@@ -439,72 +431,56 @@ def quantized_dot_topk(
     k: int = 100,
     emb_col: str = "embedding",
     key_col: str = "vec_id",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """Top-k by int8-quantized dot product against a quantized query.
 
     score_q = sum(q_i * qq_i) in BIGINT (exact); approx_score rescales it
-    back to the float domain. Plans as scan -> codegen projection ->
+    back to the float domain. Plans as scan -> mapInPandas ->
     TakeOrderedAndProject: per-partition top-k heaps, one driver merge —
     no global sort, no shuffle of the table.
 
-    ``use_arrow_fast_path`` quantizes and scores each Arrow batch with
-    one int64 matmul — BIT-IDENTICAL to the HOF form by construction:
-    integer products/sums are exact in any order, the scale chain uses
-    the same IEEE ops, and quantization values within 1e-9 of a .5
-    rounding boundary are re-derived with Spark's exact
+    Each Arrow batch is quantized and scored with one int64 matmul —
+    bit-identical to ``quantize_embeddings`` followed by a BIGINT fold,
+    by construction: integer products/sums are exact in any order, the
+    scale chain uses the same IEEE ops, and quantization values within
+    1e-9 of a .5 rounding boundary are re-derived with Spark's exact
     BigDecimal-HALF_UP semantics (the only place float order could leak).
     """
+    from decimal import ROUND_HALF_UP, Decimal
+
     import numpy as np
     import pandas as pd
 
     qq, qscale = quantize_vector(query)
-    if use_arrow_fast_path:
-        from decimal import ROUND_HALF_UP, Decimal
+    qarr = np.asarray(qq, dtype=np.int64)
 
-        qarr = np.asarray(qq, dtype=np.int64)
-
-        def score_batches(batches):
-            for pdf in batches:
-                m = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-                amax = np.abs(m).max(axis=1)
-                scale = np.where(amax > 0.0, amax / 127.0, 1.0)
-                v = m / scale[:, None]
-                q = np.where(v >= 0.0, np.floor(v + 0.5), np.ceil(v - 0.5))
-                near = np.abs(np.abs(v) % 1.0 - 0.5) <= 1e-9
-                for i, j in zip(*np.nonzero(near)):
-                    q[i, j] = float(
-                        Decimal(repr(float(v[i, j]))).quantize(
-                            Decimal(1), rounding=ROUND_HALF_UP
-                        )
+    def score_batches(batches):
+        for pdf in batches:
+            m = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
+            amax = np.abs(m).max(axis=1)
+            scale = np.where(amax > 0.0, amax / 127.0, 1.0)
+            v = m / scale[:, None]
+            q = np.where(v >= 0.0, np.floor(v + 0.5), np.ceil(v - 0.5))
+            near = np.abs(np.abs(v) % 1.0 - 0.5) <= 1e-9
+            for i, j in zip(*np.nonzero(near)):
+                q[i, j] = float(
+                    Decimal(repr(float(v[i, j]))).quantize(
+                        Decimal(1), rounding=ROUND_HALF_UP
                     )
-                sq = q.astype(np.int64) @ qarr
-                ap = (sq.astype(np.float64) * scale) * qscale
-                yield pd.DataFrame(
-                    {
-                        key_col: pdf[key_col].to_numpy(),
-                        "score_q": sq,
-                        "approx_score": ap,
-                    }
                 )
+            sq = q.astype(np.int64) @ qarr
+            ap = (sq.astype(np.float64) * scale) * qscale
+            yield pd.DataFrame(
+                {
+                    key_col: pdf[key_col].to_numpy(),
+                    "score_q": sq,
+                    "approx_score": ap,
+                }
+            )
 
-        scored = df.select(key_col, emb_col).mapInPandas(
-            score_batches,
-            f"{key_col} bigint, score_q bigint, approx_score double",
-        )
-        return scored.orderBy(F.desc("score_q"), F.asc(key_col)).limit(k)
-    quant = quantize_embeddings(df, emb_col, key_col)
-    qq_lit = F.lit([int(v) for v in qq])  # one py4j call, not dim
-    score_q = F.aggregate(
-        F.zip_with("qvec", qq_lit, lambda a, b: (a.cast("bigint") * b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    scored = quant.select(
-        key_col,
-        score_q.alias("score_q"),
-        (score_q.cast("double") * F.col("scale") * F.lit(qscale)).alias(
-            "approx_score"
-        ),
+    key_type = df.schema[key_col].dataType.simpleString()
+    scored = df.select(key_col, emb_col).mapInPandas(
+        score_batches,
+        f"{key_col} {key_type}, score_q bigint, approx_score double",
     )
     return scored.orderBy(F.desc("score_q"), F.asc(key_col)).limit(k)

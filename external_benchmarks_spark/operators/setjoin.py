@@ -61,14 +61,11 @@ def shingle_docs(
     content_col: str = "text",
     n: int = 3,
 ) -> DataFrame:
-    """(_id, _sh): distinct shingle arrays, empty docs dropped. Persisted
-    — one corpus scan feeds the frequency count, the prefix build, and
-    both verify joins."""
+    """(_id, _sh): distinct shingle arrays, empty docs dropped."""
     sh = F.array_distinct(word_shingles(content_col, n))
     return (
         df.select(F.col(key_col).alias("_id"), sh.alias("_sh"))
         .filter(F.size("_sh") > 0)
-        .persist()
     )
 
 
@@ -126,7 +123,9 @@ def allpairs_jaccard_join(
 ) -> DataFrame:
     """All pairs (id_a < id_b) with shingle-set Jaccard >= threshold —
     exact and complete. Output: (id_a, id_b, inter, un, jaccard)."""
-    docs = shingle_docs(df, key_col, content_col, n)
+    # one corpus scan feeds the frequency count, the prefix build and
+    # both verify joins: a lazy local checkpoint, owned by this call
+    docs = shingle_docs(df, key_col, content_col, n).localCheckpoint(eager=False)
     cand = prefix_candidates(docs, threshold_ppm)
     va = docs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
     vb = docs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))

@@ -33,10 +33,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from external_benchmarks_spark.functions.vector import (
-    cosine_similarity_literal,
+    batch_topk,
+    collect_queries,
     dot_product,
-    dot_product_literal,
+    fold_dot,
     l2_norm,
+    literal_qnorm,
 )
 
 
@@ -47,24 +49,16 @@ def bruteforce_topk(
     key_col: str = "vec_id",
     emb_col: str = "embedding",
     metric: str = "cosine",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """Exact top-k by cosine (or dot) against a fixed query vector.
 
-    Default is the Catalyst HOF form (oracle-parity bit-exactness); the
-    Arrow fast path scores each batch with one BLAS matmul — same
-    ranking, last-ulp score differences possible (functions/vector.py).
+    Each Arrow batch keeps its exact top k (functions/vector.batch_topk),
+    so the scores are ``cosine_similarity_literal``'s (or
+    ``dot_product_literal``'s) bits at any width.
     """
-    if use_arrow_fast_path:
-        from external_benchmarks_spark.functions.vector import score_batch_udf
-
-        score = score_batch_udf(qvec, normalize=(metric == "cosine"))(F.col(emb_col))
-    elif metric == "cosine":
-        score = cosine_similarity_literal(emb_col, qvec)
-    else:
-        score = dot_product_literal(emb_col, qvec)
+    qnorms = [literal_qnorm(qvec)] if metric == "cosine" else None
     return (
-        df.select(F.col(key_col), score.alias("score"))
+        batch_topk(df, [qvec], k, key_col, emb_col, qnorms=qnorms)
         .orderBy(F.desc("score"), F.asc(key_col))
         .limit(k)
     )
@@ -105,7 +99,6 @@ def lsh_bucketed_topk(
     n_planes: int = 8,
     min_matching_bits: int = 3,
     seed: int = 42,
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """ANN: score only rows whose LSH bucket is Hamming-close to the query's.
 
@@ -117,11 +110,8 @@ def lsh_bucketed_topk(
     recall/speed trade-off is asserted in tests/test_similarity.py per the
     reference's >90% recall requirement (README.md:76), at BOTH the
     testdata's 64 dims and the reference's production 2,688.
-
-    ``use_arrow_fast_path`` is REQUIRED beyond ~1k dims: the
-    oracle-parity scorer unrolls one expression term per dimension and
-    a 2,688-term tree overflows the JVM analyzer stack; the Arrow
-    scorer is one BLAS matvec per batch at any width.
+    The candidates are scored by bruteforce_topk's exact kernel, which
+    runs at any width.
     """
     planes = hyperplanes(len(qvec), n_planes, seed)
     qbucket = sum(
@@ -133,10 +123,7 @@ def lsh_bucketed_topk(
     x = bucket.bitwiseXOR(F.lit(qbucket).cast("bigint"))
     pop = sum((F.shiftright(x, i) % 2).cast("int") for i in range(n_planes))
     cand = df.filter(pop <= (n_planes - min_matching_bits))
-    return bruteforce_topk(
-        cand, qvec, k, key_col, emb_col, metric="cosine",
-        use_arrow_fast_path=use_arrow_fast_path,
-    )
+    return bruteforce_topk(cand, qvec, k, key_col, emb_col, metric="cosine")
 
 
 def ivf_fit(
@@ -279,7 +266,6 @@ def ivf_topk(
     key_col: str = "vec_id",
     emb_col: str = "embedding",
     metric: str = "cosine",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """ANN top-k probing only the ``nprobe`` nearest IVF cells.
 
@@ -295,10 +281,7 @@ def ivf_topk(
     """
     cells = ivf_probe_cells(centroids, qvec, nprobe, metric)
     cand = assigned.filter(F.col("centroid_id").isin(cells))
-    return bruteforce_topk(
-        cand, qvec, k, key_col, emb_col, metric=metric,
-        use_arrow_fast_path=use_arrow_fast_path,
-    )
+    return bruteforce_topk(cand, qvec, k, key_col, emb_col, metric=metric)
 
 
 def per_query_ivf_topk(
@@ -312,7 +295,6 @@ def per_query_ivf_topk(
     query_key: str = "query_id",
     query_emb: str = "qvec",
     metric: str = "cosine",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """Batch-of-queries ANN through the IVF index.
 
@@ -322,108 +304,25 @@ def per_query_ivf_topk(
     operators/topk.per_query_topk (query_id, item, score, rank) — recall
     vs that exact oracle is asserted in tests/test_similarity.py.
 
-    Exact path: broadcast (query, cell) pairs join the items, per-pair
-    Catalyst dot — bit-exact scores.
-    Arrow path (the 100 TB shape): scan is PRUNED to the union of probed
-    cells (a partition filter on the IVF layout), each Arrow batch scores
-    with ONE BLAS matmul against all queries, and a (cell x query)
-    boolean mask invalidates pairs outside a query's probe set before the
-    batch-local top-k — BLAS throughput AND per-query cell semantics.
+    The scan is PRUNED to the union of probed cells (a partition filter
+    on the IVF layout); each Arrow batch runs the exact top-k kernel
+    against all queries with a (cell x query) mask that drops the pairs
+    outside a query's probe set (functions/vector.batch_topk). Scores
+    are ``dot_product``'s / ``cosine_similarity``'s bits (the cosine
+    divides by the query's own fold norm).
     """
     from pyspark.sql.window import Window
 
-    from external_benchmarks_spark.functions.vector import (
-        cosine_similarity,
-        dot_product,
-    )
-
-    spark = assigned.sparkSession
-    qrows = queries.select(query_key, query_emb).collect()  # small by contract
-    probes = {
-        int(r[0]): ivf_probe_cells(centroids, r[1], nprobe, "cosine") for r in qrows
-    }
-    cells_union = sorted({c for cells in probes.values() for c in cells})
-
-    if use_arrow_fast_path:
-        return _per_query_ivf_arrow(
-            assigned.filter(F.col("centroid_id").isin(cells_union)),
-            qrows, probes, centroids.shape[0], k,
-            item_key, emb_col, query_key, metric,
-        )
-
-    probe_pairs = [(q, c) for q, cells in probes.items() for c in cells]
-    probe_df = spark.createDataFrame(probe_pairs, [query_key, "centroid_id"])
-    cand = assigned.join(F.broadcast(probe_df), "centroid_id").join(
-        F.broadcast(queries), query_key
-    )
-    score = (
-        cosine_similarity(emb_col, query_emb)
-        if metric == "cosine"
-        else dot_product(emb_col, query_emb)
-    )
-    w = Window.partitionBy(query_key).orderBy(F.desc("score"), F.asc(item_key))
-    return (
-        cand.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_key, item_key, "score", "rank")
-    )
-
-
-def _per_query_ivf_arrow(
-    cand: DataFrame,
-    qrows,
-    probes: dict[int, list[int]],
-    n_cells: int,
-    k: int,
-    item_key: str,
-    emb_col: str,
-    query_key: str,
-    metric: str,
-) -> DataFrame:
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-    from pyspark.sql.window import Window
-
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    qmat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in qrows]).T  # (dim, Q)
-    if metric == "cosine":
-        qmat = qmat / np.linalg.norm(qmat, axis=0, keepdims=True)
-    valid = np.zeros((n_cells, len(qids)), dtype=bool)  # (cell, query)
-    for j, qid in enumerate(qids):
-        valid[probes[int(qid)], j] = True
-
-    out_schema = StructType(
-        [
-            StructField(query_key, LongType()),
-            StructField(item_key, LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def local_topk(batches):
-        for pdf in batches:
-            keys = pdf[item_key].to_numpy()
-            cells = pdf["centroid_id"].to_numpy().astype(np.int64)
-            m = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64, copy=False)
-            scores = m @ qmat  # (B, Q) — one BLAS call
-            if metric == "cosine":
-                norms = np.linalg.norm(m, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                scores = scores / norms
-            scores = np.where(valid[cells], scores, -np.inf)  # cell mask
-            kk = min(k, len(keys))
-            idx = np.argpartition(-scores, kk - 1, axis=0)[:kk]  # (kk, Q)
-            top = np.take_along_axis(scores, idx, axis=0)  # (kk, Q)
-            keep = np.isfinite(top.T.ravel())
-            recs = {
-                query_key: np.repeat(qids, kk)[keep],
-                item_key: keys[idx].T.ravel()[keep],
-                "score": top.T.ravel()[keep],
-            }
-            yield pd.DataFrame(recs)
-
-    survivors = cand.select(item_key, "centroid_id", emb_col).mapInPandas(
-        local_topk, out_schema
+    qfield, qids, qmat = collect_queries(queries, query_key, query_emb)
+    valid = np.zeros((centroids.shape[0], len(qmat)), dtype=bool)  # (cell, query)
+    for j, q in enumerate(qmat):
+        valid[ivf_probe_cells(centroids, q, nprobe, "cosine"), j] = True
+    cells_union = np.flatnonzero(valid.any(axis=1)).tolist()
+    qnorms = np.sqrt(fold_dot(qmat, qmat)) if metric == "cosine" else None
+    survivors = batch_topk(
+        assigned.filter(F.col("centroid_id").isin(cells_union)),
+        qmat, k, item_key, emb_col, qnorms=qnorms, qids=(qfield, qids),
+        cells=("centroid_id", valid),
     )
     w = Window.partitionBy(query_key).orderBy(F.desc("score"), F.asc(item_key))
     return (
@@ -859,7 +758,6 @@ def mmr_topk(
     lam: float = 0.7,
     key_col: str = "vec_id",
     emb_col: str = "embedding",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k (Carbonell &
     Goldstein, SIGIR 1998): greedily pick argmax of
@@ -868,58 +766,32 @@ def mmr_topk(
     diversity-aware training-data selection.
 
     Two stages. Stage 1 is the corpus-sized, distributed part: top-m
-    candidates by cosine relevance (TakeOrderedAndProject — per-partition
+    candidates by cosine relevance through the exact top-k kernel
+    (bruteforce_topk's, then TakeOrderedAndProject — per-partition
     heaps, no global sort). Stage 2 is the inherently sequential greedy
     over m rows, run driver-side — m is small BY CONTRACT (the re-rank
     window, like the pairwise-cosine <= 200 pattern), so this collect is
-    O(m * dim) bytes regardless of corpus size; the greedy is O(k * m)
-    fold dot products.
+    O(m * dim) bytes regardless of corpus size; each step folds the
+    newly chosen row against the m candidates once.
 
-    Oracle parity: relevance comes from the Catalyst HOF cosine
-    (left-to-right fold = DuckDB list_dot_product); driver arithmetic
-    uses the same sequential folds, and every greedy comparison happens
-    on half-away-from-zero 1e-6 fixed-point integers, so the selection
-    replays DuckDB's recursive-CTE greedy bit-for-bit.
-
-    ``use_arrow_fast_path`` switches the driver greedy's pair dots to
-    one numpy gemv per step (and the normalization to BLAS) — the
-    production form at high dims, where a Python fold over 2,688
-    elements x m candidates per step is the bottleneck. Same selection
-    in practice (differences live below the 1e-6 rounding); the fold
-    form remains the oracle-parity tier.
+    Oracle parity: relevance is ``cosine_similarity_literal``'s bits
+    (left-to-right fold = DuckDB list_dot_product); the pair
+    similarities use the same numpy fold (functions/vector.fold_dot)
+    over fold-normalized rows, and every greedy comparison happens on
+    half-away-from-zero 1e-6 fixed-point integers, so the selection
+    replays DuckDB's recursive-CTE greedy bit-for-bit at any width.
     """
     import math
 
-    from external_benchmarks_spark.functions.vector import (
-        cosine_similarity_literal,
-    )
-
-    if use_arrow_fast_path:
-        # HOF cosine unrolls one expression term per dimension and
-        # overflows the JVM analyzer beyond ~1k dims (the
-        # lsh_bucketed_topk caveat); the Arrow scorer is one BLAS
-        # matvec per batch at any width.
-        from external_benchmarks_spark.functions.vector import score_batch_udf
-
-        rel_col = score_batch_udf(qvec, normalize=True)(F.col(emb_col))
-    else:
-        rel_col = cosine_similarity_literal(emb_col, qvec)
-    cand = (
-        df.select(
-            F.col(key_col),
-            F.col(emb_col).cast("array<double>").alias("e"),
-            rel_col.alias("rel"),
+    rows = (
+        batch_topk(
+            df, [qvec], m, key_col, emb_col, qnorms=[literal_qnorm(qvec)],
+            keep=[emb_col],
         )
-        .orderBy(F.desc("rel"), F.asc(key_col))
+        .orderBy(F.desc("score"), F.asc(key_col))
         .limit(m)
-    )
-    rows = cand.collect()  # m rows by contract
-
-    def fold_dot(u, v):
-        acc = 0.0
-        for x, y in zip(u, v):
-            acc += x * y
-        return acc
+        .collect()
+    )  # m rows by contract
 
     def fp(x: float) -> int:
         # half away from zero on the exact double, no +0.5 drift
@@ -929,38 +801,24 @@ def mmr_topk(
         return int(math.copysign(r, y)) if y != 0.0 else 0
 
     ids = [r[0] for r in rows]
-    rels = [float(r["rel"]) for r in rows]
-    if use_arrow_fast_path and rows:
-        mat = np.asarray([[float(x) for x in r["e"]] for r in rows])
-        norms = np.linalg.norm(mat, axis=1)
-        mat = mat / np.where(norms == 0.0, 1.0, norms)[:, None]
-        sim = mat @ mat.T  # (m, m) once; each step reads a row slice
-
-        def pair_sim(i: int, j: int) -> float:
-            return float(sim[i, j])
-    else:
-        ens = []
-        for r in rows:
-            e = [float(x) for x in r["e"]]
-            n = math.sqrt(fold_dot(e, e))
-            ens.append([x / n for x in e] if n else e)
-
-        def pair_sim(i: int, j: int) -> float:
-            return fold_dot(ens[i], ens[j])
-
+    rels = [float(r["score"]) for r in rows]
     if not rows or k <= 0:
         out_rows = []
     else:
+        mat = np.asarray([r[emb_col] for r in rows], dtype=np.float64)
+        # fold-normalized rows; a zero row stays as it is (x / 1.0 == x)
+        norms = np.sqrt(fold_dot(mat, mat))
+        ens = mat / np.where(norms == 0.0, 1.0, norms)[:, None]
         # step 1: rows arrive sorted by (rel desc, id) — first wins
         out_rows = [(1, ids[0], fp(rels[0]))]
-        chosen = [0]
+        # msim[i]: max fold similarity of candidate i to the chosen rows
+        msim = fold_dot(ens, ens[0])
         remaining = set(range(1, len(rows)))
         one_minus = 1.0 - lam
         while len(out_rows) < k and remaining:
             best_i, best_fp = None, None
             for i in remaining:
-                msim = max(pair_sim(i, j) for j in chosen)
-                s = fp(lam * rels[i] - one_minus * msim)
+                s = fp(lam * rels[i] - one_minus * float(msim[i]))
                 if (
                     best_fp is None
                     or s > best_fp
@@ -968,7 +826,7 @@ def mmr_topk(
                 ):
                     best_i, best_fp = i, s
             out_rows.append((len(out_rows) + 1, ids[best_i], best_fp))
-            chosen.append(best_i)
+            msim = np.maximum(msim, fold_dot(ens, ens[best_i]))
             remaining.discard(best_i)
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType

@@ -37,16 +37,18 @@ def hourly_acf(
 ) -> DataFrame:
     """(lag, n_pairs, acf_ppm) for lag 1..max_lag over the gap-filled
     hourly event-count series."""
-    # persisted at the FIRST calendar-bounded frame: bounds, the grid
+    # checkpointed at the FIRST calendar-bounded frame: bounds, the grid
     # join, and the stats aggregation all reference the hourly counts —
-    # without the cache each reference replays the corpus scan
+    # without it each reference replays the corpus scan. Both
+    # checkpoints are lazy and belong to this call's frame, so no
+    # CacheManager entry outlives the call.
     hours = (
         events.select(
             F.expr(f"{ts_us_col} div {US_PER_HOUR}").alias("_h")
         )
         .groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # dense calendar grid: missing hours are real zeros
     bounds = hours.agg(
@@ -59,17 +61,17 @@ def hourly_acf(
         grid.join(hours, "_h", "left")
         .select("_h", F.coalesce("_c", F.lit(0)).alias("_c"))
     )
-    # persisted: the centered series is referenced three times (the
+    # checkpointed: the centered series is referenced three times (the
     # denominator, both sides of the lag join) and each reference would
     # otherwise replay the corpus-sized hourly aggregation — the same
     # double-lineage trap the retention plan test caught; the frame is
-    # calendar-bounded, so the cache is tiny by contract
+    # calendar-bounded, so the checkpoint is tiny by contract
     stats = series.agg(
         F.sum("_c").alias("_t"), F.count(F.lit(1)).alias("_n")
     )
     u = series.crossJoin(F.broadcast(stats)).select(
         "_h", F.expr("_c - (_t div _n)").alias("_u")
-    ).persist()
+    ).localCheckpoint(eager=False)
     den = u.agg(F.sum(F.col("_u") * F.col("_u")).alias("_den"))
     lagged = u.select(
         "_h", F.col("_u").alias("_ub")

@@ -26,11 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from external_benchmarks_spark.functions.vector import (
-    dot_product,
-    dot_product_literal,
-    score_batch_udf,
-)
+from external_benchmarks_spark.functions.vector import batch_topk, collect_queries
 
 
 def filtered_vector_topk(
@@ -40,28 +36,20 @@ def filtered_vector_topk(
     k: int = 100,
     key_col: str = "vec_id",
     emb_col: str = "embedding",
-    use_arrow_fast_path: bool = True,
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Reference README.md:73-75: predicate -> dot score -> top-k -> key.
 
-    ``use_arrow_fast_path`` switches between the numpy-matmul pandas_udf
-    (production, high-dim) and the exact Catalyst HOF form (oracle parity).
-    Ties broken by key for deterministic output (SURVEY.md §5.3).
+    Each Arrow batch keeps its own exact top k (functions/vector.
+    batch_topk: BLAS ranks, the left-to-right fold scores, so the score
+    bits equal ``dot_product_literal``'s at any width). Ties broken by
+    key for deterministic output (SURVEY.md §5.3).
     """
-    out = df
-    if predicate is not None:
-        out = out.filter(predicate)
-    scorer = (
-        score_batch_udf(qvec)(F.col(emb_col))
-        if use_arrow_fast_path
-        else dot_product_literal(emb_col, qvec)
-    )
-    out = out.withColumn("score", scorer)
-    cols = [key_col, *extra_cols, "score"]
+    out = df if predicate is None else df.filter(predicate)
+    out = batch_topk(out, [qvec], k, key_col, emb_col, keep=extra_cols)
     # orderBy+limit plans as TakeOrderedAndProject: per-partition heap top-k
     # then one merge — no global sort, no shuffle of the full table.
-    return out.select(*cols).orderBy(F.desc("score"), F.asc(key_col)).limit(k)
+    return out.orderBy(F.desc("score"), F.asc(key_col)).limit(k)
 
 
 def per_query_topk(
@@ -72,81 +60,18 @@ def per_query_topk(
     item_emb: str = "embedding",
     query_key: str = "query_id",
     query_emb: str = "qvec",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """Batch-of-queries top-k (reference README.md:73 'rotate query vectors').
 
-    Exact path (default): broadcast the (small) query set against the
-    (huge) item table, score each pair with the Catalyst HOF dot product
-    (bit-exact for oracle parity), then rank within each query — the one
-    genuine window-function use in the workload (SURVEY.md §2.5).
-
-    Arrow fast path: one (batch x dim) @ (dim x n_queries) BLAS matmul per
-    Arrow batch with a batch-local top-k (argpartition), then the global
-    window re-ranks only n_batches*n_queries*k survivors instead of
-    n_items*n_queries scored rows — the 100 TB shape (scores differ from
-    the HOF path only in summation order, ranks are identical).
+    The (small) query set is collected once; each Arrow batch of the
+    (huge) item table keeps its exact top k per query (one BLAS product
+    against all queries, then the fold on the survivors), and a window
+    ranks only those n_batches * n_queries * k survivors — the one
+    genuine window-function use in the workload (SURVEY.md §2.5). Scores
+    are ``dot_product``'s bits; ties break by item key.
     """
-    if use_arrow_fast_path:
-        return _per_query_topk_arrow(
-            items, queries, k, item_key, item_emb, query_key, query_emb
-        )
-    joined = items.crossJoin(F.broadcast(queries))
-    scored = joined.withColumn("score", dot_product(item_emb, query_emb))
-    w = Window.partitionBy(query_key).orderBy(F.desc("score"), F.asc(item_key))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_key, item_key, "score", "rank")
-    )
-
-
-def _per_query_topk_arrow(
-    items: DataFrame,
-    queries: DataFrame,
-    k: int,
-    item_key: str,
-    item_emb: str,
-    query_key: str,
-    query_emb: str,
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    qrows = queries.select(query_key, query_emb).collect()  # small by contract
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in qrows]).T  # (dim, Q)
-
-    out_schema = StructType(
-        [
-            StructField(query_key, LongType()),
-            StructField(item_key, LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def local_topk(batches):
-        for pdf in batches:
-            keys = pdf[item_key].to_numpy()
-            m = np.vstack(pdf[item_emb].to_numpy()).astype(np.float64, copy=False)
-            scores = m @ qmat  # (B, Q)
-            kk = min(k, len(keys))
-            # per-query batch-local top-k
-            idx = np.argpartition(-scores, kk - 1, axis=0)[:kk]  # (kk, Q)
-            recs = {
-                query_key: np.repeat(qids, kk),
-                item_key: keys[idx].T.ravel(),
-                "score": np.take_along_axis(scores, idx, axis=0).T.ravel(),
-            }
-            yield pd.DataFrame(recs)
-
-    survivors = items.select(item_key, item_emb).mapInPandas(local_topk, out_schema)
+    qfield, qids, qmat = collect_queries(queries, query_key, query_emb)
+    survivors = batch_topk(items, qmat, k, item_key, item_emb, qids=(qfield, qids))
     w = Window.partitionBy(query_key).orderBy(F.desc("score"), F.asc(item_key))
     return (
         survivors.withColumn("rank", F.row_number().over(w))

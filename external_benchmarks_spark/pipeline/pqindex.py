@@ -396,8 +396,11 @@ def pq_index_rerank_topk(
     persisted index meets the reference's >90% recall bar
     (README.md:76) that pure ADC ranking cannot on flat-similarity
     data (measured: ADC-only 0.18-0.42 recall@50; candidate recall at
-    R=5k 1.0 — see pq_recall)."""
-    from external_benchmarks_spark.functions.vector import dot_product_literal
+    R=5k 1.0 — see pq_recall). The exact scores come from the exact
+    top-k kernel (operators/topk.filtered_vector_topk): one BLAS pass and
+    a left-to-right fold over the R rows, the same bits as
+    ``dot_product_literal`` without a per-dimension expression tree."""
+    from external_benchmarks_spark.operators.topk import filtered_vector_topk
 
     _require_vectors(index)
     cand = pq_index_topk(
@@ -416,16 +419,9 @@ def pq_index_rerank_topk(
         vecs = vecs.filter(
             F.col("centroid_id").isin(_probe_cells(index, query, nprobe))
         )
-    return (
-        vecs.join(F.broadcast(cand), index.key_col)
-        .select(
-            index.key_col,
-            dot_product_literal(
-                F.col(emb_col).cast("array<double>"), query
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(index.key_col))
-        .limit(k)
+    return filtered_vector_topk(
+        vecs.join(F.broadcast(cand), index.key_col), query, None, k,
+        index.key_col, emb_col,
     )
 
 

@@ -9,12 +9,14 @@ sorted, pruned — `pipeline/index.build_index_layout`), and a serving
 process memory-maps that SAME parquet layout and answers point reads
 without a cluster job. This module is that serving tier: pyarrow reads
 the label-partitioned directories once, keeps per-label (ids, matrix)
-arrays, and answers filtered top-k in one BLAS call.
+arrays, and answers filtered top-k with the Spark plans' own exact
+top-k kernel (`functions/vector.exact_topk`: one BLAS call ranks, a
+left-to-right fold scores the survivors).
 
-Parity contract: scores are computed exactly like the Spark fast path
-(`functions/vector.score_batch_udf`) — float64 matmul over the float32
-embeddings, ties broken by ascending key — so serving results are
-bit-identical to the Spark query's (asserted in tests/test_serving.py).
+Parity contract: the same kernel over the same float32 bytes widened to
+float64, ties broken by ascending key — so serving results are
+bit-identical to the Spark query's and to the DuckDB oracle's
+(asserted in tests/test_serving.py).
 
 Scale shape: one serving node holds the HOT partitions (a label's matrix
 at dim=64 x 1M rows is ~512 MB float64, or half that served as float32);
@@ -27,6 +29,8 @@ from __future__ import annotations
 import os
 
 import numpy as np
+
+from external_benchmarks_spark.functions.vector import exact_topk, fold_dot, spark_order
 
 
 def _dir_signature(d: str) -> tuple:
@@ -60,7 +64,7 @@ def _merge_topk(ids_parts: list, score_parts: list, k: int):
         return np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
     ids = np.concatenate(ids_parts)
     scores = np.concatenate(score_parts)
-    return ids, scores, np.lexsort((ids, -scores))[:k]
+    return ids, scores, spark_order(scores, ids)[:k]
 
 
 class _CellStore:
@@ -142,6 +146,9 @@ class VectorServingIndex(_CellStore):
         self.key_col = key_col
         self.emb_col = emb_col
         self.partition_col = partition_col
+        # row L2 norms per partition, for the kernel's error bound;
+        # computed once per load, not once per read
+        self._norms: dict[int, np.ndarray] = {}
         super().__init__(layout_dir, partition_col)
 
     @property
@@ -153,9 +160,14 @@ class VectorServingIndex(_CellStore):
 
     def _decode(self, label: int, tbl) -> tuple[np.ndarray, np.ndarray]:
         ids = tbl.column(self.key_col).to_numpy()
-        # float64 scoring matrix — same dtype promotion as the Spark
-        # fast path (score_batch_udf does astype(float64) per batch)
-        return np.asarray(ids), _matrix(tbl, self.emb_col).astype(np.float64)
+        # float64 scoring matrix — the Spark kernel's dtype promotion
+        mat = _matrix(tbl, self.emb_col).astype(np.float64)
+        self._norms[label] = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+        return np.asarray(ids), mat
+
+    def _drop(self, label: int) -> None:
+        super()._drop(label)
+        self._norms.pop(label, None)
 
     def refresh(self, labels=None) -> list[int]:
         """Reload only the partitions a delta append / compaction
@@ -175,35 +187,26 @@ class VectorServingIndex(_CellStore):
         in-memory partition (the serving analog of directory pruning);
         ``key_mod = m`` adds the bench templates' ``key % m == 0``
         refinement. Returns [(key, score)] ordered by (-score, key) —
-        the Spark query's exact output order."""
-        q = np.asarray(qvec, dtype=np.float64)
+        the Spark query's exact output order — with the left-to-right
+        fold's score bits, so it equals the Spark query and the DuckDB
+        oracle bit for bit."""
+        q = np.asarray(qvec, dtype=np.float64)[None, :]
         if label is not None:
-            parts = [self.partitions[label]] if label in self.partitions else []
+            labels = [label] if label in self.partitions else []
         else:
-            parts = list(self.partitions.values())
+            labels = list(self.partitions)
         best_ids: list[np.ndarray] = []
         best_scores: list[np.ndarray] = []
-        for ids, mat in parts:
+        for lab in labels:
+            ids, mat = self.partitions[lab]
+            norms = self._norms[lab]
             if key_mod is not None:
                 mask = ids % key_mod == 0
-                ids, mat = ids[mask], mat[mask]
-            if len(ids) == 0:
-                continue
-            scores = mat @ q
-            if len(ids) > k:
-                # partial-select the partition's own top-k before the merge
-                # (per-partition heap, exactly TakeOrderedAndProject's shape).
-                # Ties at the k-th score are resolved by id — the full
-                # (-score, id) order — so the pruned set is exactly what the
-                # Spark query would keep (bit-identical parity contract).
-                idx = np.argpartition(-scores, k - 1)[:k]
-                thresh = scores[idx].min()
-                above = np.nonzero(scores > thresh)[0]
-                at = np.nonzero(scores == thresh)[0]
-                at = at[np.argsort(ids[at])[: k - len(above)]]
-                sel = np.concatenate([above, at])
-                ids, scores = ids[sel], scores[sel]
-            best_ids.append(ids)
+                ids, mat, norms = ids[mask], mat[mask], norms[mask]
+            # the partition's own exact top-k before the merge (per-
+            # partition heap, exactly TakeOrderedAndProject's shape)
+            rows, scores = exact_topk(mat, ids, q, k, norms=norms)[0]
+            best_ids.append(ids[rows])
             best_scores.append(scores)
         ids, scores, order = _merge_topk(best_ids, best_scores, k)
         return [(int(ids[i]), float(scores[i])) for i in order]
@@ -449,11 +452,11 @@ class PQServingIndex(_CellStore):
         build) via a per-cell mmap cache (see _vec_cell) — a query
         touches O(R) pages, never a corpus-resident matrix, so the
         node's resident memory stays m bytes/vector + R-row gathers.
-        Exact scores replay dot_product_literal's float64 op order
-        (per-element product, LEFT-TO-RIGHT sequential sum — cumsum,
-        not pairwise), so every score is bit-identical to the Catalyst
-        expression's. Returns [(key, exact_score)] ordered by
-        (-score, key)."""
+        Exact scores come from ``functions/vector.fold_dot``, the fold
+        the Spark plan's kernel rescores with (per-element product,
+        LEFT-TO-RIGHT sequential sum), so every score is bit-identical
+        to the Spark plan's and to ``dot_product_literal``'s. Returns
+        [(key, exact_score)] ordered by (-score, key)."""
         if not os.path.isdir(self._vec_root):
             raise ValueError(
                 f"no raw-vector sidecar at {self._vec_root}; "
@@ -475,12 +478,7 @@ class PQServingIndex(_CellStore):
             pos, cand = pos[ok], cand[ok]
             if len(pos) == 0:
                 continue
-            rows = np.asarray(mat_mm[pos], dtype=np.float64)
-            # per-element products then SEQUENTIAL left-to-right sum:
-            # cumsum materializes every prefix, forcing the exact
-            # ((t0+t1)+t2)+... float64 order dot_product_literal emits
-            scores = np.cumsum(rows * q[None, :], axis=1)[:, -1]
             all_ids.append(cand)
-            all_scores.append(scores)
+            all_scores.append(fold_dot(np.asarray(mat_mm[pos], dtype=np.float64), q))
         ids, scores, order = _merge_topk(all_ids, all_scores, k)
         return [(int(ids[i]), float(scores[i])) for i in order]

@@ -36,9 +36,26 @@ def test_vector_topk_filter_below_scorer(spark, sf_dir):
     )
     lines = _plan(df).splitlines()
     filter_depth = next(i for i, l in enumerate(lines) if "Filter" in l and "label" in l)
-    arrow_depth = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
+    # the exact top-k kernel (functions/vector.batch_topk) is the scorer
+    arrow_depth = next(i for i, l in enumerate(lines) if "MapInArrow" in l)
     # deeper in the printed tree = earlier in execution
     assert filter_depth > arrow_depth, "metadata filter must precede scoring"
+
+
+def test_per_query_topk_plan_has_no_pair_join(spark, sf_dir):
+    """Batch-of-queries top-k scores each Arrow batch against the
+    collected query set: no item x query join of any kind, one
+    MapInArrow scorer and one window shuffle."""
+    from external_benchmarks_spark.operators.topk import per_query_topk
+
+    emb = Catalog(spark, sf_dir).embeddings
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    plan = _plan(per_query_topk(emb, queries, k=7))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInArrow") == 1
 
 
 def test_join_agg_broadcasts_dims(spark, sf_dir):
@@ -187,12 +204,13 @@ def test_embed_inference_is_arrow_vectorized(spark, sf_dir):
 
 
 def test_lsh_candidate_filter_stays_in_codegen(spark, sf_dir):
-    """sign-LSH probe: the heavy dot products run in ONE Arrow batch hop
-    (bucket bits), while the popcount candidate filter and the top-k stay
-    JVM-side (codegen Filter + TakeOrderedAndProject) — no second Python
-    round-trip."""
+    """sign-LSH probe: the bucket bits are ONE Arrow batch hop, the
+    popcount candidate filter stays JVM-side (codegen Filter) below the
+    exact top-k kernel's one MapInArrow hop, and the merge is
+    TakeOrderedAndProject — no other Python round-trip."""
     plan = _plan(entry_mod.q_lsh_ann_topk(spark, sf_dir))
     assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("MapInArrow") == 1
     assert "TakeOrderedAndProject" in plan
     assert "BatchEvalPython" not in plan
 

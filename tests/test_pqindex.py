@@ -772,3 +772,41 @@ def test_fingerprint_recipe_is_current_after_build_and_append(spark):
             applied=["b1"],
         )
     )
+
+
+def test_filtered_rerank_parity_at_reference_width(spark, tmp_path):
+    """At the reference's 2,688 dims the Spark rerank plan (the exact
+    top-k kernel over the joined candidates) runs on the session's
+    default codegen settings and equals the serving tier bit for bit —
+    probed and full-scan."""
+    from external_benchmarks_spark.pipeline.pqindex import (
+        pq_index_filtered_rerank,
+    )
+    from external_benchmarks_spark.serving import PQServingIndex
+
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    rng = np.random.default_rng(5)
+    n, d = 300, 2688
+    mat = rng.standard_normal((n, d)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, i % 5, mat[i].tolist()) for i in range(n)],
+        "vec_id bigint, label int, embedding array<float>",
+    )
+    index = build_pq_index(
+        spark, df, str(tmp_path / "pq2688"),
+        n_codes=N_CODES, m_subspaces=M, n_centroids=4,
+        store_vectors=True, payload_cols=("label",),
+    )
+    srv = PQServingIndex(index.root)
+    q = [float(v) for v in mat[7]]
+    for nprobe in (2, None):
+        want = [
+            (r.vec_id, r.score)
+            for r in pq_index_filtered_rerank(
+                spark, index, q, F.col("label").isin(1, 2),
+                k=10, rerank=40, nprobe=nprobe,
+            ).collect()
+        ]
+        got = srv.topk_rerank(q, k=10, rerank=40, nprobe=nprobe, where={"label": [1, 2]})
+        assert len(want) == 10
+        assert got == want, nprobe

@@ -69,28 +69,54 @@ def test_quantize_vector_roundtrip():
                for v, x in zip(q, [1.0, -2.0, 0.5, 4.0]))
 
 
+def _catalyst_quantized_topk(df, query, k):
+    """Reference: Catalyst ``quantize_embeddings`` plus a BIGINT fold of
+    the quantized products, ranked by (-score_q, key)."""
+    from pyspark.sql import functions as F
+
+    from external_benchmarks_spark.operators.quantize import (
+        quantize_embeddings,
+        quantize_vector,
+    )
+
+    qq, qscale = quantize_vector(query)
+    score_q = F.aggregate(
+        F.zip_with("qvec", F.lit(qq), lambda a, b: a.cast("bigint") * b),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    return [
+        tuple(r)
+        for r in quantize_embeddings(df, "embedding", "vec_id")
+        .select(
+            "vec_id",
+            score_q.alias("score_q"),
+            (score_q.cast("double") * F.col("scale") * F.lit(qscale)).alias(
+                "approx_score"
+            ),
+        )
+        .orderBy(F.desc("score_q"), F.asc("vec_id"))
+        .limit(k)
+        .collect()
+    ]
+
+
 def test_quantized_topk_fast_path_bit_identical(spark, sf_dir):
-    """Arrow int64-matmul scoring must equal the HOF form row-for-row:
-    integer sums are order-exact and quantization boundaries re-derive
-    Spark's HALF_UP."""
+    """Arrow int64-matmul scoring must equal the Catalyst quantizer and
+    BIGINT fold row-for-row, score bits included: integer sums are
+    order-exact and quantization boundaries re-derive Spark's HALF_UP."""
     import __spark_entry__ as entry_mod
     from external_benchmarks_spark.catalog import Catalog
     from external_benchmarks_spark.operators.quantize import quantized_dot_topk
 
     e = Catalog(spark, sf_dir).embeddings
-    slow = [tuple(r) for r in quantized_dot_topk(e, entry_mod.QVEC, k=50).collect()]
-    fast = [
-        tuple(r)
-        for r in quantized_dot_topk(
-            e, entry_mod.QVEC, k=50, use_arrow_fast_path=True
-        ).collect()
-    ]
-    assert slow == fast
+    got = [tuple(r) for r in quantized_dot_topk(e, entry_mod.QVEC, k=50).collect()]
+    assert got == _catalyst_quantized_topk(e, entry_mod.QVEC, 50)
 
 
 def test_quantization_half_up_boundary():
     """A vector engineered so x/scale lands exactly on .5 must round away
-    from zero on both paths (Spark round == BigDecimal HALF_UP)."""
+    from zero as Spark's round does (BigDecimal HALF_UP)."""
     import pandas as pd
 
     from external_benchmarks_spark.operators.quantize import quantized_dot_topk
@@ -104,10 +130,24 @@ def test_quantization_half_up_boundary():
         schema="vec_id bigint, embedding array<double>",
     )
     qv = [1.0, 1.0, 1.0, 1.0]
-    slow = quantized_dot_topk(df, qv, k=1).collect()[0]
-    fast = quantized_dot_topk(df, qv, k=1, use_arrow_fast_path=True).collect()[0]
+    got = quantized_dot_topk(df, qv, k=1).collect()[0]
     # HALF_UP: 2.5 -> 3, -2.5 -> -3, 0.5 -> 1 ... query quantizes too
-    assert tuple(slow) == tuple(fast)
+    assert [tuple(got)] == _catalyst_quantized_topk(df, qv, 1)
+
+
+def test_quantized_topk_keeps_key_type(spark):
+    """A string key comes back as a string, ranked like the bigint form."""
+    from external_benchmarks_spark.operators.quantize import quantized_dot_topk
+
+    rows = [(i, [float((i * 7) % 5 - 2), float(i % 3), 1.0]) for i in range(12)]
+    by_int = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    by_str = spark.createDataFrame(
+        [(f"k{i:02d}", e) for i, e in rows], "vec_id string, embedding array<double>"
+    )
+    q = [1.0, -1.0, 0.5]
+    ints = [(f"k{r.vec_id:02d}", r.score_q) for r in quantized_dot_topk(by_int, q, k=5).collect()]
+    strs = [(r.vec_id, r.score_q) for r in quantized_dot_topk(by_str, q, k=5).collect()]
+    assert strs == ints
 
 
 def test_pq_encode_shape_and_determinism(spark, sf_dir):
@@ -278,7 +318,7 @@ def test_pq_rerank_meets_recall_target(spark, sf_dir):
     exact = [
         r.vec_id
         for r in filtered_vector_topk(
-            e, qvec=em.QVEC, predicate=None, k=k, use_arrow_fast_path=False
+            e, qvec=em.QVEC, predicate=None, k=k
         ).collect()
     ]
     cb = pq_codebooks(e, n_codes=64, m_subspaces=16)

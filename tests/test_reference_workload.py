@@ -48,7 +48,7 @@ def test_reference_query_shape_on_products(spark):
     p = make_products_fixture(spark, n=10_000, seed=42).cache()
     for pred in (_templates()["sel_10pct"], _templates()["sel_1pct"], None):
         out = filtered_vector_topk(
-            p, QVEC8, pred, k=100, key_col="parent_asin", use_arrow_fast_path=True
+            p, QVEC8, pred, k=100, key_col="parent_asin"
         ).collect()
         assert 0 < len(out) <= 100
         scores = [r.score for r in out]

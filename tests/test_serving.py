@@ -35,26 +35,34 @@ TEMPLATES = [  # (label filter, key_mod) — the four reference templates
 
 
 def test_serving_matches_spark_query_exactly(spark, sf_dir, layout):
-    """Same parquet, same float64 math, same (-score, key) order — the
-    serving read must be bit-identical to the Spark query."""
+    """Same parquet, same kernel, same (-score, key) order — the serving
+    read must be bit-identical to the Spark query and to the Catalyst
+    ``dot_product_literal`` fold the oracle replays."""
+    from external_benchmarks_spark.functions.vector import dot_product_literal
+
     idx = VectorServingIndex(layout)
+    emb = Catalog(spark, sf_dir).embeddings
     for label, mod in TEMPLATES:
         pred = F.col("label") == label
         if mod is not None:
             pred = pred & (F.col("vec_id") % mod == 0)
         want = [
             (r.vec_id, r.score)
-            for r in filtered_vector_topk(
-                Catalog(spark, sf_dir).embeddings,
-                entry_mod.QVEC,
-                pred,
-                k=100,
-                use_arrow_fast_path=True,
-            ).collect()
+            for r in filtered_vector_topk(emb, entry_mod.QVEC, pred, k=100).collect()
+        ]
+        fold = [
+            (r.vec_id, r.score)
+            for r in emb.filter(pred)
+            .select("vec_id", dot_product_literal("embedding", entry_mod.QVEC).alias("score"))
+            .orderBy(F.desc("score"), F.asc("vec_id"))
+            .limit(100)
+            .collect()
         ]
         got = idx.topk(entry_mod.QVEC, k=100, label=label, key_mod=mod)
-        assert [g[0] for g in got] == [w[0] for w in want]
-        assert all(g[1] == w[1] for g, w in zip(got, want)), "scores must be exact"
+        assert [g[0] for g in got] == [w[0] for w in want] == [f[0] for f in fold]
+        assert all(g[1] == w[1] == f[1] for g, w, f in zip(got, want, fold)), (
+            "scores must be exact"
+        )
 
 
 def test_serving_all_partitions(spark, sf_dir, layout):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from external_benchmarks_spark.catalog import Catalog
+from external_benchmarks_spark.functions.vector import dot_product, dot_product_literal
 from external_benchmarks_spark.operators.similarity import (
     bruteforce_topk,
     lsh_bucketed_topk,
@@ -65,9 +66,9 @@ def test_ann_recall_at_reference_dimensionality(spark, sf_dir):
     not only at the testdata's 64 dims. Corpus: the documents table
     embedded at dim 2688 by the hashed n-gram encoder (the same
     sandbox stand-in the embed pipeline uses); recall@100 vs exact
-    brute force. The Arrow scorer is mandatory here — the per-dim
-    unrolled oracle scorer overflows the JVM analyzer stack at this
-    width (lsh_bucketed_topk docstring)."""
+    brute force. Every scorer here is the exact top-k kernel, which
+    runs at this width (a per-dimension unrolled Catalyst expression
+    overflows the JVM analyzer stack)."""
     from external_benchmarks_spark.operators.similarity import (
         ivf_assign,
         ivf_fit,
@@ -97,9 +98,7 @@ def test_ann_recall_at_reference_dimensionality(spark, sf_dir):
         ]
         exact = {
             r.vec_id
-            for r in bruteforce_topk(
-                emb, qvec, k=100, use_arrow_fast_path=True
-            ).collect()
+            for r in bruteforce_topk(emb, qvec, k=100).collect()
         }
         assert len(exact) == 100
 
@@ -108,10 +107,7 @@ def test_ann_recall_at_reference_dimensionality(spark, sf_dir):
         assigned = ivf_assign(emb, centroids)
         ivf = {
             r.vec_id
-            for r in ivf_topk(
-                assigned, centroids, qvec, k=100, nprobe=12,
-                use_arrow_fast_path=True,
-            ).collect()
+            for r in ivf_topk(assigned, centroids, qvec, k=100, nprobe=12).collect()
         }
         ivf_recall = len(exact & ivf) / len(exact)
         assert ivf_recall >= 0.9, f"IVF recall {ivf_recall} < 0.9 at dim {dim}"
@@ -119,8 +115,7 @@ def test_ann_recall_at_reference_dimensionality(spark, sf_dir):
         lsh = {
             r.vec_id
             for r in lsh_bucketed_topk(
-                emb, qvec, k=100, n_planes=8, min_matching_bits=2,
-                use_arrow_fast_path=True,
+                emb, qvec, k=100, n_planes=8, min_matching_bits=2
             ).collect()
         }
         lsh_recall = len(exact & lsh) / len(exact)
@@ -149,6 +144,7 @@ def test_per_query_ivf_recall(spark, sf_dir):
     from external_benchmarks_spark.operators.similarity import (
         ivf_assign,
         ivf_fit,
+        ivf_probe_cells,
         per_query_ivf_topk,
     )
 
@@ -168,14 +164,20 @@ def test_per_query_ivf_recall(spark, sf_dir):
     avg = sum(row.recall for row in r) / len(r)
     assert len(r) == 8
     assert avg >= 0.9, f"avg recall {avg} < 0.9"
-    # Arrow masked-matmul path must RANK identically to the exact path
-    fast = per_query_ivf_topk(
-        assigned, centroids, queries, k=10, nprobe=12, metric="dot",
-        use_arrow_fast_path=True,
+    # the masked kernel equals the Catalyst fold over each query's
+    # probed cells, ids and score bits
+    probes = spark.createDataFrame(
+        [
+            (int(r.query_id), c)
+            for r in queries.collect()
+            for c in ivf_probe_cells(centroids, r.qvec, 12)
+        ],
+        "query_id bigint, centroid_id int",
     )
-    e = {(r.query_id, r.rank): r.vec_id for r in approx.collect()}
-    f = {(r.query_id, r.rank): r.vec_id for r in fast.collect()}
-    assert e == f
+    want = _catalyst_per_query(
+        assigned.join(probes, "centroid_id").join(queries, "query_id"), 10, dot_product
+    )
+    assert _ranked(approx) == want
 
 
 def test_recall_at_k_operator(spark, sf_dir):
@@ -190,30 +192,56 @@ def test_recall_at_k_operator(spark, sf_dir):
     assert all(abs(row.recall - 1.0) < 1e-12 for row in r)
 
 
+def _catalyst_per_query(pairs, k, scorer):
+    """Reference per-query top-k from the Catalyst column functions: every
+    (item, query) pair scored by ``scorer``, ranked by (-score, key)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
+    rows = (
+        pairs.withColumn("score", scorer("embedding", "qvec"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .collect()
+    )
+    return {(r.query_id, r["rank"]): (r.vec_id, r.score.hex()) for r in rows}
+
+
+def _ranked(df):
+    return {(r.query_id, r["rank"]): (r.vec_id, r.score.hex()) for r in df.collect()}
+
+
 def test_per_query_topk_fast_path_matches_hof(spark, sf_dir):
-    """Arrow batch-local top-k must produce identical rankings to the
-    exact HOF path (scores may differ in last-ulp summation order)."""
+    """The batch kernel's per-query top-k equals the Catalyst
+    ``dot_product`` fold over every pair: same ids, same score bits."""
     emb = Catalog(spark, sf_dir).embeddings
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    exact = per_query_topk(emb, queries, k=7, item_key="vec_id")
-    fast = per_query_topk(emb, queries, k=7, item_key="vec_id", use_arrow_fast_path=True)
-    e = {(r.query_id, r.rank): r.vec_id for r in exact.collect()}
-    f = {(r.query_id, r.rank): r.vec_id for r in fast.collect()}
-    assert e == f
+    got = _ranked(per_query_topk(emb, queries, k=7, item_key="vec_id"))
+    assert got == _catalyst_per_query(emb.crossJoin(queries), 7, dot_product)
 
 
 def test_filtered_topk_fast_path_matches_hof(spark, sf_dir):
-    """Arrow/numpy fast path and Catalyst HOF path must rank identically."""
+    """The batch kernel's top-k equals ``dot_product_literal`` ranked by
+    (-score, key): same ids, same score bits."""
     from external_benchmarks_spark.operators.topk import filtered_vector_topk
 
     emb = Catalog(spark, sf_dir).embeddings
-    fast = filtered_vector_topk(emb, entry_mod.QVEC, None, k=20, use_arrow_fast_path=True)
-    slow = filtered_vector_topk(emb, entry_mod.QVEC, None, k=20, use_arrow_fast_path=False)
-    f_ids = [r.vec_id for r in fast.collect()]
-    s_ids = [r.vec_id for r in slow.collect()]
-    assert f_ids == s_ids
+    got = [
+        (r.vec_id, r.score.hex())
+        for r in filtered_vector_topk(emb, entry_mod.QVEC, None, k=20).collect()
+    ]
+    want = [
+        (r.vec_id, r.score.hex())
+        for r in emb.select(
+            "vec_id", dot_product_literal("embedding", entry_mod.QVEC).alias("score")
+        )
+        .orderBy(F.desc("score"), F.asc("vec_id"))
+        .limit(20)
+        .collect()
+    ]
+    assert got == want
 
 
 def test_ivf_sampled_fit_still_recalls(spark, sf_dir):
@@ -394,18 +422,75 @@ def test_mmr_k_zero_and_string_keys(spark):
     assert [r["doc_key"] for r in sorted(got, key=lambda r: r["mmr_rank"])] == ["a", "b"]
 
 
+def _mmr_fold_reference(df, qvec, k, m, lam):
+    """MMR written out as a literal Python fold: cosine relevance with
+    ``cosine_similarity_literal``'s op order and query norm, the top m by
+    (-rel, key), then the greedy over left-to-right pair folds on 1e-6
+    fixed-point integers."""
+    import math
+
+    import numpy as np
+
+    def fold(u, v):
+        acc = 0.0
+        for x, y in zip(u, v):
+            acc += x * y
+        return acc
+
+    def fp(x):
+        y = x * 1_000_000.0
+        f = math.floor(abs(y))
+        r = f + 1 if abs(y) - f >= 0.5 else f
+        return int(math.copysign(r, y)) if y != 0.0 else 0
+
+    qn = float(np.sqrt(np.dot(qvec, qvec)))
+    scored = []
+    for r in df.select("vec_id", "embedding").collect():
+        e = [float(x) for x in r.embedding]
+        scored.append((r.vec_id, e, fold(e, qvec) / (math.sqrt(fold(e, e)) * qn)))
+    rows = sorted(scored, key=lambda t: (-t[2], t[0]))[:m]
+    ids = [t[0] for t in rows]
+    rels = [t[2] for t in rows]
+    ens = []
+    for _, e, _ in rows:
+        n = math.sqrt(fold(e, e))
+        ens.append([x / n for x in e] if n else e)
+    out, chosen, rest = [(ids[0], fp(rels[0]))], [0], set(range(1, len(rows)))
+    while len(out) < k and rest:
+        best = None
+        for i in rest:
+            s = fp(lam * rels[i] - (1 - lam) * max(fold(ens[i], ens[j]) for j in chosen))
+            if best is None or s > best[1] or (s == best[1] and ids[i] < ids[best[0]]):
+                best = (i, s)
+        out.append((ids[best[0]], best[1]))
+        chosen.append(best[0])
+        rest.discard(best[0])
+    return [(rank, vid, s / 1_000_000.0) for rank, (vid, s) in enumerate(out, 1)]
+
+
 def test_mmr_fast_path_matches_fold_selection(spark, sf_dir):
-    """The numpy fast path must pick the same documents in the same
-    order as the oracle-parity fold form."""
+    """The kernel-fed numpy greedy picks the same documents, in the same
+    order and with the same scores, as the literal fold form — at the
+    testdata's 64 dims and at 2,688."""
+    import random
+
     from external_benchmarks_spark.operators.similarity import mmr_topk
 
     import __spark_entry__ as em
 
     emb = Catalog(spark, sf_dir).embeddings
-    a = mmr_topk(emb, em.QVEC, k=10, m=50).collect()
-    b = mmr_topk(emb, em.QVEC, k=10, m=50, use_arrow_fast_path=True).collect()
-    key = lambda rows: [(r["mmr_rank"], r["vec_id"]) for r in rows]
-    assert key(a) == key(b)
+    rnd = random.Random(11)
+    wide = spark.createDataFrame(
+        [(i, [rnd.uniform(-1, 1) for _ in range(2688)]) for i in range(60)],
+        "vec_id bigint, embedding array<float>",
+    )
+    qwide = [rnd.uniform(-1, 1) for _ in range(2688)]
+    for df, q in ((emb, em.QVEC), (wide, qwide)):
+        got = [
+            (r["mmr_rank"], r["vec_id"], r["mmr_score"])
+            for r in mmr_topk(df, q, k=10, m=50).collect()
+        ]
+        assert got == _mmr_fold_reference(df, q, 10, 50, 0.7)
 
 
 def test_score_fuse_and_rrf_many_semantics(spark):

@@ -179,15 +179,17 @@ def _upsert_table(spark, sf):
         shutil.rmtree(root, ignore_errors=True)
         t.init(Catalog(spark, sf).embeddings)
     else:
-        # Reruns accumulate version dirs AND file fragments (each MERGE
-        # adds a file per touched bucket); compact() folds every bucket
-        # back to one file and vacuums — all outside the timed region.
+        # Reruns accumulate delta versions (each MERGE adds a delta
+        # directory of the touched buckets, which every read resolves);
+        # compact() folds every bucket back to one file and vacuums —
+        # all outside the timed region. A table written before
+        # merge-on-read has a bucket -> version manifest; it loads too.
         t.compact()
     # Warm the MERGE path (first MERGE in a session pays Arrow/exchange
     # warm-up): the SLA analog is the reference's SUSTAINED 2 s write p95
     # at 20 QPS, so the timed entry measures a steady-state batch. The
     # warm-up re-upserts 100 rows with their original values — content
-    # no-op, one extra version dir (vacuumed on reruns).
+    # no-op, one extra delta (folded in on reruns).
     t.upsert(Catalog(spark, sf).embeddings.limit(100).withColumn("op_ts", F.lit(0)))
     _UPSERT_TABLES[sf] = t
     return t

@@ -3,41 +3,52 @@
 2 s p95 writes with concurrent reads).
 
 Spark shape: updates arrive as a stream (rate/file/kafka source),
-``foreachBatch`` applies a keyed MERGE into the base table, and changed
-text re-embeds inside the batch via the same pandas UDF as the batch
-pipeline. Without a Delta dependency in this container, the MERGE is
-implemented with **bucket-level versioning**: rows are hash-bucketed by
-key, each micro-batch writes NEW version directories for only the
-touched buckets (read old version ∖ keys ∪ new rows → write v+1), and a
-tiny manifest file maps bucket → current version, swapped atomically
-(write-temp + rename). Readers resolve the manifest once and see a
-consistent snapshot — never a half-rewritten directory — and the writer
-never materializes data in memory (old and new versions are different
-directories, so no checkpoint barrier is needed). On a Delta/Iceberg
-deployment ``upsert_batch`` collapses to a single ``MERGE INTO``; the
-API and semantics here are identical, single-writer — ENFORCED by an
-exclusive writer lease (``_lock``, O_CREAT|O_EXCL with a TTL for
-crashed writers): a concurrent writer raises ConcurrentWriteError
-loudly rather than interleaving manifest swaps.
+``foreachBatch`` applies a keyed MERGE into the table, and changed text
+re-embeds inside the batch via the same pandas UDF as the batch
+pipeline. Without a Delta dependency the MERGE is **merge-on-read**
+(the Delta Lake shape, Armbrust et al., VLDB 2020): rows are
+hash-bucketed by key, a commit writes ONLY its deduplicated batch as a
+new version directory of the buckets it touches, and a tiny manifest
+mapping bucket → [base, delta, …] versions is swapped atomically
+(write-temp + rename). Bytes written scale with the batch, not the table.
+
+A snapshot read scans every listed version and keeps a row iff its key
+IS NULL or its ``v`` is the highest among that key's rows (``_resolve``).
+Version directories are immutable and only the manifest swap publishes
+them, so readers see a consistent snapshot. ``compact()`` folds the
+deltas back to one version per bucket, off the write path: it bounds
+read cost, and it is the retention point, because a delta supersedes
+nothing and ``vacuum()`` only frees what a compaction replaced. On a
+Delta/Iceberg deployment ``upsert_batch`` collapses to a single
+``MERGE INTO``; the API and semantics here are identical, single-writer
+— ENFORCED by an exclusive writer lease (``_lock``, O_CREAT|O_EXCL with
+a TTL for crashed writers): a concurrent writer raises
+ConcurrentWriteError loudly rather than interleaving manifest swaps.
 
 Layout:  <root>/v=<j>/bucket=<i>/*.parquet  +  <root>/_manifest.json
+         +  <root>/_commits/<k>.json (the manifest of each commit)
 """
 
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
+import logging
 import os
 import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 16
 MANIFEST = "_manifest.json"
 LOCKFILE = "_lock"
+
+log = logging.getLogger(__name__)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -50,18 +61,36 @@ def _bucket(col, n: int):
     return F.pmod(F.hash(col), F.lit(n))
 
 
-def _load_manifest(path: str) -> dict[str, int]:
+def _load_manifest(path: str) -> dict[str, list[int]]:
+    """bucket -> [base version, delta versions ascending]. Manifests
+    written before merge-on-read map bucket -> one version."""
     with open(path) as f:
-        return {k: int(v) for k, v in json.load(f).items()}
+        return {
+            b: [int(x) for x in (v if isinstance(v, list) else [v])]
+            for b, v in json.load(f).items()
+        }
+
+
+def _write_json(path: str, obj) -> None:
+    """Write-temp + rename: a crash never leaves ``path`` truncated."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+
+
+def _next_version(manifest: dict[str, list[int]]) -> int:
+    return max((v for vs in manifest.values() for v in vs), default=-1) + 1
 
 
 class UpsertTable:
-    """Hash-bucketed, bucket-versioned parquet table with keyed MERGE.
-
-    The bucket count bounds rewrite amplification: a micro-batch touching
-    b buckets rewrites b/n of the table into fresh version directories
-    (file-level rewrite, like Delta without the transaction log's history).
-    """
+    """Hash-bucketed, merge-on-read parquet table with keyed MERGE: a
+    commit writes its batch, reads resolve base ∪ deltas, and
+    ``compact()`` bounds read cost (module docstring)."""
 
     def __init__(
         self,
@@ -76,8 +105,9 @@ class UpsertTable:
         self.key_col = key_col
         self.n_buckets = n_buckets
         self.lease_ttl_s = lease_ttl_s
-        # Lazily-learned schema of the bucket files; lets steady-state
-        # MERGEs read base buckets without a footer-inference job.
+        # Lazily-learned schema of the version files (with their bucket
+        # and v directory columns); lets steady-state commits and reads
+        # skip the footer-inference job.
         self._base_schema = None
         self._lease_token: str | None = None
 
@@ -146,25 +176,20 @@ class UpsertTable:
     def _manifest_path(self) -> str:
         return os.path.join(self.root, MANIFEST)
 
-    def _read_manifest(self) -> dict[str, int]:
+    def _read_manifest(self) -> dict[str, list[int]]:
         return _load_manifest(self._manifest_path())
 
-    def _write_manifest(self, m: dict[str, int]) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path())  # atomic swap
+    def _write_manifest(self, m: dict[str, list[int]]) -> None:
+        _write_json(self._manifest_path(), m)  # atomic swap
         # Commit log for time travel: each write also snapshots the
         # manifest under _commits/<k>.json (Delta-transaction-log analog;
         # a JSON map per commit, never rewritten).
         cdir = os.path.join(self.root, "_commits")
         os.makedirs(cdir, exist_ok=True)
-        existing = [int(e.split(".")[0]) for e in os.listdir(cdir)]
-        k = max(existing, default=-1) + 1  # monotonic even after vacuum pruning
-        with open(os.path.join(cdir, f"{k}.json"), "w") as f:
-            json.dump(m, f)
+        k = max(self.history(), default=-1) + 1  # monotonic even after vacuum
+        _write_json(os.path.join(cdir, f"{k}.json"), m)
 
-    def _commit_manifest(self, commit: int) -> dict[str, int]:
+    def _commit_manifest(self, commit: int) -> dict[str, list[int]]:
         path = os.path.join(self.root, "_commits", f"{commit}.json")
         if not os.path.exists(path):
             raise ValueError(
@@ -177,99 +202,109 @@ class UpsertTable:
         cdir = os.path.join(self.root, "_commits")
         if not os.path.isdir(cdir):
             return []
-        return sorted(int(e.split(".")[0]) for e in os.listdir(cdir))
-
-    def _bucket_paths(self, manifest: dict[str, int], buckets=None) -> list[str]:
-        items = manifest.items() if buckets is None else (
-            (b, manifest[b]) for b in (str(x) for x in buckets) if b in manifest
+        return sorted(
+            int(e[: -len(".json")]) for e in os.listdir(cdir) if e.endswith(".json")
         )
+
+    def _bucket_paths(self, manifest: dict[str, list[int]]) -> list[str]:
         return [
-            os.path.join(self.root, f"v={v}", f"bucket={b}") for b, v in items
+            os.path.join(self.root, f"v={v}", f"bucket={b}")
+            for b, vs in manifest.items()
+            for v in vs
         ]
 
-    def _read_buckets(self, paths: list[str], cached_schema: bool) -> DataFrame:
-        """Bucket directories as one frame (with their ``bucket`` and
-        ``v`` directory columns). ``cached_schema`` uses the schema this
-        instance recorded at its last write, which skips the footer-
-        inference job; files missing evolved columns read as null under
-        it. Otherwise mergeSchema: buckets written before a schema
-        evolution lack the new columns and merging footers fills them
-        with nulls (footer-only cost, bounded by bucket count)."""
+    def _resolve(self, manifest: dict[str, list[int]], cached_schema: bool) -> DataFrame:
+        """The snapshot ``manifest`` names, with its ``bucket`` and ``v``
+        directory columns: a row is kept iff its key IS NULL or its ``v``
+        is its key's highest. ``cached_schema`` reads with the schema this
+        instance learned (no footer-inference job; files lacking evolved
+        columns read them as null); otherwise mergeSchema fills the
+        columns older versions lack with nulls (footer-only cost)."""
+        paths = self._bucket_paths(manifest)
+        if not paths:
+            raise ValueError(f"empty table at {self.root}")
         if cached_schema and self._base_schema is not None:
             reader = self.spark.read.schema(self._base_schema)
         else:
             reader = self.spark.read.option("mergeSchema", "true")
-        return reader.option("basePath", self.root).parquet(*paths)
+        scan = reader.option("basePath", self.root).parquet(*paths)
+        if all(len(vs) == 1 for vs in manifest.values()):
+            return scan
+        from pyspark.sql.window import Window
 
-    def _write_version(self, df: DataFrame, version: int) -> None:
-        """Write ``df`` (carrying its ``bucket`` column) as version
-        directory ``v=<version>``. The pre-write repartition keeps every
-        version at ONE file per bucket. Skipping it looks cheaper per
-        MERGE but compounds: the batch partition writes a file into
-        EVERY touched bucket, base files map 1:1 into output files, so
-        file count grows by n_buckets per MERGE until scans fragment
-        across 32 partitions (measured: 95-file versions and 2x slower
-        MERGEs). Against a compacted base the shuffle is one tiny
-        AQE-coalesced stage."""
-        (
-            df.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self.root, f"v={version}"))
+        key = F.col(self.key_col)
+        latest = F.max("v").over(Window.partitionBy(key))
+        return (
+            scan.withColumn("_latest", latest)
+            .filter(key.isNull() | (F.col("v") == F.col("_latest")))
+            .drop("_latest")
         )
+
+    def _write_version(
+        self, df: DataFrame, version: int, manifest: dict, shuffle: bool = True
+    ) -> dict:
+        """Write ``df`` (carrying its ``bucket`` column) as version
+        directory ``v=<version>``, list that version last for every bucket
+        it wrote and swap ``manifest`` in; returns the commit's log record.
+        ``shuffle`` repartitions by bucket first, which keeps a version at
+        ONE file per bucket: without it every input partition writes a
+        file into every bucket it holds and scans fragment (measured:
+        95-file versions and 2x slower commits). A driver-sized batch
+        comes as one partition instead: one file per bucket, one job."""
+        vdir = os.path.join(self.root, f"v={version}")
+        if shuffle:
+            df = df.repartition(F.col("bucket"))
+        df.write.mode("overwrite").partitionBy("bucket").parquet(vdir)
+        files = glob.glob(os.path.join(glob.escape(vdir), "bucket=*", "*.parquet"))
+        buckets = sorted(
+            {os.path.basename(os.path.dirname(p)).split("=", 1)[1] for p in files},
+            key=int,
+        )
+        for b in buckets:
+            manifest.setdefault(b, []).append(version)
+        self._write_manifest(manifest)
+        return {
+            "version": version,
+            "rows": sum(pq.read_metadata(p).num_rows for p in files),
+            "buckets": buckets,
+            "bytes": sum(map(os.path.getsize, files)),
+            "deltas_pending": {
+                b: len(vs) - 1 for b, vs in manifest.items() if len(vs) > 1
+            },
+        }
 
     # -- table API ---------------------------------------------------------
     def init(self, df: DataFrame) -> None:
         with self._writer_lease("init"):
-            self._init_impl(df)
-
-    def _init_impl(self, df: DataFrame) -> None:
-        self._write_version(
-            df.withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets)),
-            0,
-        )
-        present = [
-            e.split("=", 1)[1]
-            for e in os.listdir(os.path.join(self.root, "v=0"))
-            if e.startswith("bucket=")
-        ]
-        self._write_manifest({b: 0 for b in present})
+            self._write_version(
+                df.withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets)),
+                0,
+                {},
+            )
 
     def read(self, at_commit: int | None = None) -> DataFrame:
         """Snapshot read: resolve the manifest once; the returned frame is
         pinned to those version directories. ``at_commit`` time-travels to
-        an earlier commit (valid until vacuum() drops its versions)."""
+        an earlier commit (valid until a compaction's vacuum drops its
+        versions)."""
         manifest = (
             self._read_manifest()
             if at_commit is None
             else self._commit_manifest(at_commit)
         )
-        paths = self._bucket_paths(manifest)
-        if not paths:
-            raise ValueError(f"empty table at {self.root}")
-        return self._read_buckets(paths, at_commit is None).drop("v", "bucket")
-
-    @staticmethod
-    def _with_v(schema):
-        """Copy of `schema` with the version-dir partition column appended
-        (fresh StructType — StructType.add would mutate the DataFrame's
-        cached schema in place)."""
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        return StructType(list(schema.fields) + [StructField("v", IntegerType())])
+        return self._resolve(manifest, at_commit is None).drop("v", "bucket")
 
     # Micro-batches up to this size are deduped driver-side in ONE job;
-    # larger batches take the distributed window + broadcast-anti-join
-    # path. 10k rows of keyed updates is far above the reference's
-    # 100-row batches and still trivially driver-sized.
+    # larger batches take the distributed window path. 10k rows of keyed
+    # updates is far above the reference's 100-row batches and still
+    # trivially driver-sized.
     SMALL_BATCH_MAX = 10_000
 
     def _small_batch(self, updates: DataFrame):
         """Try the one-job micro-batch path: pull `limit(MAX+1)` rows with
         their bucket (and dedup-order hash when op_ts is absent) attached,
-        so ONE collect serves dedup, the touched-bucket probe, and the
-        delete-key set. Returns (upd_df, touched, key_vals) or None when
-        the batch exceeds the threshold."""
+        so ONE collect serves dedup and the bucket column. Returns
+        (upd_df, rows) or None when the batch exceeds the threshold."""
         has_ts = "op_ts" in updates.columns
         probe = updates.withColumn(
             "bucket", _bucket(F.col(self.key_col), self.n_buckets)
@@ -320,19 +355,16 @@ class UpsertTable:
             upd = self.spark.createDataFrame(
                 self.spark.sparkContext.parallelize(data, 1), schema=schema
             )
-        touched = sorted({r["bucket"] for r in best.values()})
-        key_vals = [k for k in best if k is not None]
-        return upd, touched, key_vals
+        return upd, len(data)
 
     def upsert(self, updates: DataFrame, evolve_schema: bool = False) -> None:
         self.upsert_prepared(self.prepare(updates, evolve_schema))
 
     def prepare(self, updates: DataFrame, evolve_schema: bool = False) -> dict:
         """Run the batch-side work of a MERGE — evaluating ``updates``
-        (any embedding/scoring UDFs in its lineage), driver-side dedup,
-        the touched-bucket probe, the delete-key set — WITHOUT the
-        writer lease and without touching the table. The returned
-        payload feeds :meth:`upsert_prepared`.
+        (any embedding/scoring UDFs in its lineage) and the driver-side
+        dedup — WITHOUT the writer lease and without touching the table.
+        The returned payload feeds :meth:`upsert_prepared`.
 
         This is the double-buffered-writer seam: at a paced write tier
         (reference README.md:69-70) re-embedding is per-update work
@@ -357,27 +389,27 @@ class UpsertTable:
     def _upsert_impl(
         self, updates: DataFrame, evolve_schema: bool, small
     ) -> None:
-        """MERGE semantics: delete matching keys, insert all update rows.
-        Last-writer-wins within a batch by highest ``op_ts`` if present.
+        """MERGE semantics: each batch row replaces every older row of its
+        key; last-writer-wins within a batch by highest ``op_ts`` if
+        present. NULL-keyed rows are inserted and replace nothing.
 
-        ``evolve_schema=True`` is the Delta mergeSchema analog: columns
-        new in `updates` are added (null for untouched rows of rewritten
-        buckets and for rows in buckets this batch doesn't touch — parquet
-        schema merging fills them on read); columns missing from
-        `updates` read as null for the new rows.
+        The commit writes the deduplicated batch as a new delta version and
+        swaps the manifest; it reads no base bucket. The batch is projected
+        onto the table's columns with a ``cast`` to each column's type, so
+        under ANSI mode (Spark's default) a value the column cannot hold
+        fails the commit instead of widening some files only.
+        ``evolve_schema=True`` is the Delta mergeSchema analog: new columns
+        are kept (older rows read them as null), missing ones read as null
+        for the batch's rows, and the next read merges footers.
 
-        Write-latency shape (the reference's 2 s p95 target): a micro-batch
-        MERGE is two Spark jobs — one bounded collect of the batch, one
-        rewrite of the touched buckets. The batch dedup, bucket probe, and
-        delete-key set all come out of the single collect; the base-bucket
-        schema is cached on the instance after the first MERGE so later
-        MERGEs skip parquet footer inference (a per-job driver cost that
-        dominated the 100-row-batch latency). ``small`` is
-        :meth:`_small_batch`'s result for ``updates`` (None: too large
-        for the driver-side path)."""
+        Write-latency shape (the reference's 2 s p95 target): a driver-
+        sized batch (``small``, :meth:`_small_batch`'s result; None when
+        too large) is one bounded collect in prepare() and ONE write job
+        here."""
         if small is not None:
-            upd, touched, key_vals = small
-            inline_keys = True
+            upd, rows = small
+            if not rows:
+                return
         else:
             # One row per key via a single window pass — one shuffle on the
             # key. Without op_ts there is no user-defined order; break ties
@@ -396,76 +428,45 @@ class UpsertTable:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
                 .withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets))
-                # Materialize ONCE: the bucket probe and the write below
-                # would otherwise recompute the scan + window shuffle.
-                .localCheckpoint()
             )
-            touched = sorted(
-                r["bucket"] for r in upd.select("bucket").distinct().collect()
-            )
-            key_vals = []
-            inline_keys = False
-        if not touched:
-            return
         manifest = self._read_manifest()
-        new_version = max(manifest.values(), default=-1) + 1
-        base_paths = self._bucket_paths(manifest, touched)
-        merged = upd
-        if base_paths:
-            base = self._read_buckets(base_paths, not evolve_schema).drop("v")
-            if inline_keys:
-                # NULL-keyed base rows survive (an anti-join would never
-                # match them); NULL update keys delete nothing.
-                if not key_vals:
-                    survivors = base
-                else:
-                    survivors = base.filter(
-                        F.col(self.key_col).isNull()
-                        | ~F.col(self.key_col).isin(key_vals)
-                    )
-            else:
-                keys = upd.select(self.key_col).distinct()
-                survivors = base.join(F.broadcast(keys), self.key_col, "left_anti")
-            if evolve_schema:
-                merged = survivors.unionByName(upd, allowMissingColumns=True)
-            else:
-                merged = survivors.unionByName(upd.select(*survivors.columns))
-        # Old versions are read, the NEW version directory is written: no
-        # in-place overwrite, no memory barrier, readers keep their snapshot.
-        self._write_version(merged, new_version)
-        for b in touched:
-            manifest[str(b)] = new_version
-        self._write_manifest(manifest)
-        # Cache the merged-bucket schema (incl. the bucket partition column
-        # and the v dir column Spark discovers) for the next MERGE's base
-        # read; evolution invalidates any stale cache naturally because the
-        # new schema is recorded here after the write.
-        self._base_schema = self._with_v(merged.schema)
+        if manifest:
+            if self._base_schema is None:
+                self._base_schema = self._resolve(manifest, cached_schema=False).schema
+            types = {f.name: f.dataType for f in self._base_schema if f.name != "v"}
+            cols = upd.columns if evolve_schema else list(types)
+            upd = upd.select(*[F.col(c).cast(types[c]) if c in types else c for c in cols])
+        rec = self._write_version(
+            upd.coalesce(1) if small else upd, _next_version(manifest), manifest,
+            shuffle=not small,
+        )
+        if evolve_schema:
+            self._base_schema = None
+        log.info("upsert commit %s", rec, extra={"commit": rec})
 
     def compact(self) -> None:
-        """Rewrite every bucket at one fresh version (small files from
-        many micro-batches merge back to one file per bucket), then drop
-        the stale versions. The Delta OPTIMIZE analog; single-writer
-        (enforced by the writer lease)."""
+        """Fold every bucket's deltas into one fresh version (one file
+        per bucket), then drop the superseded versions. The Delta
+        OPTIMIZE analog and the retention point: commits that read the
+        dropped versions become unreadable. Single-writer (enforced by
+        the writer lease)."""
         with self._writer_lease("compact"):
             self._compact_impl()
 
     def _compact_impl(self) -> None:
         manifest = self._read_manifest()
-        new_version = max(manifest.values(), default=-1) + 1
-        current = self._read_buckets(
-            self._bucket_paths(manifest), cached_schema=False
-        ).drop("v")
-        self._write_version(current, new_version)
-        self._write_manifest({b: new_version for b in manifest})
-        self._base_schema = self._with_v(current.schema)
+        current = self._resolve(manifest, cached_schema=False)
+        rec = self._write_version(current.drop("v"), _next_version(manifest), {})
+        self._base_schema = current.schema
+        log.info("compact commit %s", rec, extra={"commit": rec})
         self.vacuum()
 
     def vacuum(self) -> None:
         """Drop version directories no longer referenced by the manifest
         (lease-guarded; call when no readers hold older snapshots).
         Commits whose versions are dropped become unreadable — their log
-        entries are removed too (Delta VACUUM retention analog)."""
+        entries are removed too (Delta VACUUM retention analog). Deltas
+        supersede nothing, so only a compaction leaves anything to drop."""
         with self._writer_lease("vacuum"):
             self._vacuum_impl()
 
@@ -483,13 +484,10 @@ class UpsertTable:
             if not any(e.startswith("bucket=") for e in os.listdir(vdir)):
                 shutil.rmtree(vdir, ignore_errors=True)
         # prune commit-log entries that reference vacuumed bucket versions
-        cdir = os.path.join(self.root, "_commits")
-        if os.path.isdir(cdir):
-            for entry in os.listdir(cdir):
-                path = os.path.join(cdir, entry)
-                m = _load_manifest(path)
-                if not set(self._bucket_paths(m)) <= live and m != current:
-                    os.remove(path)
+        for k in self.history():
+            m = self._commit_manifest(k)
+            if not set(self._bucket_paths(m)) <= live and m != current:
+                os.remove(os.path.join(self.root, "_commits", f"{k}.json"))
 
 
 def upsert_batch(table: UpsertTable, batch_df: DataFrame, batch_id: int) -> None:

@@ -3,11 +3,13 @@ direct micro-batches and through a real Structured Streaming query."""
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from external_benchmarks_spark.pipeline.embedding import embed_fields
 from external_benchmarks_spark.streaming.upsert import UpsertTable, run_upsert_stream
@@ -19,6 +21,14 @@ def _base(spark, n=100):
         F.concat_ws(" ", F.lit("title"), F.col("id")).alias("title"),
         (F.col("id") * 1.0).alias("price"),
     )
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(rows, "id long, title string, price double")
+
+
+def _title(df, key):
+    return df.filter(F.col("id") == key).collect()[0].title
 
 
 def test_upsert_merge_semantics(spark):
@@ -96,28 +106,26 @@ def test_streaming_foreachbatch(spark):
 
 
 def test_upsert_compact_merges_versions(spark):
-    """compact(): one version for every bucket, data unchanged, old
-    version dirs vacuumed."""
-    import os as _os
-
+    """compact(): one version for every bucket, the same rows (NULL keys
+    and duplicate base keys included), old version dirs vacuumed."""
     with tempfile.TemporaryDirectory() as d:
-        t = UpsertTable(spark, _os.path.join(d, "t"), key_col="id", n_buckets=4)
-        t.init(_base(spark, 50))
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=4)
+        t.init(_base(spark, 50).unionByName(_rows(spark, [(None, "n", 0.0), (7, "dup", 0.0)])))
         for i in range(3):  # a few micro-batches -> several versions
-            upd = spark.createDataFrame(
-                [(i * 10 + j, f"u{i}-{j}", 1.0) for j in range(5)],
-                ["id", "title", "price"],
-            )
-            t.upsert(upd)
-        before = sorted((r.id, r.title) for r in t.read().collect())
+            t.upsert(_rows(spark, [(i * 10 + j, f"u{i}-{j}", 1.0) for j in range(5)]
+                           + [(None, f"n{i}", 1.0)]))
+        before = sorted(map(tuple, t.read().collect()), key=repr)
         t.compact()
-        after = sorted((r.id, r.title) for r in t.read().collect())
-        assert after == before
-        versions = [e for e in _os.listdir(_os.path.join(d, "t")) if e.startswith("v=")]
+        after = sorted(map(tuple, t.read().collect()), key=repr)
+        assert after == before and len(after) == 55
+        versions = [e for e in os.listdir(os.path.join(d, "t")) if e.startswith("v=")]
         assert len(versions) == 1
 
 
 def test_time_travel_and_vacuum_pruning(spark):
+    """A delta supersedes nothing, so vacuum() after it keeps every
+    commit readable; compact() is the retention point: after it the
+    older commits are unreadable and the current snapshot is intact."""
     with tempfile.TemporaryDirectory() as d:
         t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=4)
         t.init(_base(spark))
@@ -130,21 +138,191 @@ def test_time_travel_and_vacuum_pruning(spark):
         c1 = t.history()[-1]
         assert c1 > c0
         # latest sees the update; commit 0 still sees the original
-        assert t.read().filter(F.col("id") == 0).collect()[0].title == "v2 title"
-        old = t.read(at_commit=c0).filter(F.col("id") == 0).collect()[0]
-        assert old.title == "title 0"
+        assert _title(t.read(), 0) == "v2 title"
+        assert _title(t.read(at_commit=c0), 0) == "title 0"
         assert t.read(at_commit=c0).count() == 100
-        # vacuum drops the superseded bucket version -> commit 0 unreadable
         t.vacuum()
-        assert c0 not in t.history()
-        assert c1 in t.history()
-        try:
-            t.read(at_commit=c0)
-            raise AssertionError("expected vacuumed commit to be unreadable")
-        except ValueError:
-            pass
+        assert t.history() == [c0, c1]
+        assert _title(t.read(at_commit=c0), 0) == "title 0"
+        assert _title(t.read(at_commit=c1), 0) == "v2 title"
+        t.compact()
+        for c in (c0, c1):
+            assert c not in t.history()
+            with pytest.raises(ValueError, match="not found"):
+                t.read(at_commit=c)
         # current snapshot unaffected
         assert t.read().count() == 100
+        assert _title(t.read(), 0) == "v2 title"
+
+
+def test_null_keys_accumulate_across_deltas(spark):
+    """NULL-keyed rows always survive and delete nothing: one per delta
+    adds up on top of the base's."""
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=2)
+        t.init(_base(spark, 5).unionByName(_rows(spark, [(None, "base", 0.0)])))
+        t.upsert(_rows(spark, [(None, "d1", 1.0), (1, "u1", 1.0)]))
+        t.upsert(_rows(spark, [(None, "d2", 2.0)]))
+        out = t.read()
+        nulls = sorted(r.title for r in out.filter(F.col("id").isNull()).collect())
+        assert nulls == ["base", "d1", "d2"]
+        assert _title(out, 1) == "u1" and out.count() == 8
+
+
+def test_duplicate_base_keys_kept_until_touched(spark):
+    """An untouched base with duplicate keys reads as written, even when a
+    delta lands in its bucket; a delta that carries the key replaces
+    every base row of it."""
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=1)
+        t.init(_rows(spark, [(3, "a", 0.0), (3, "b", 0.0), (5, "c", 0.0), (5, "d", 0.0)]))
+        t.upsert(_rows(spark, [(5, "new", 1.0), (9, "ins", 1.0)]))
+        rows = sorted((r.id, r.title) for r in t.read().collect())
+        assert rows == [(3, "a"), (3, "b"), (5, "new"), (9, "ins")]
+
+
+def test_read_at_commit_between_deltas(spark):
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=2)
+        t.init(_base(spark, 4))
+        t.upsert(_rows(spark, [(0, "a", 1.0)]))
+        c1 = t.history()[-1]
+        t.upsert(_rows(spark, [(0, "b", 2.0), (1, "b", 2.0)]))
+
+        def titles(df):
+            return sorted((r.id, r.title) for r in df.collect())
+
+        assert titles(t.read(at_commit=c1)) == [
+            (0, "a"), (1, "title 1"), (2, "title 2"), (3, "title 3")
+        ]
+        assert titles(t.read()) == [(0, "b"), (1, "b"), (2, "title 2"), (3, "title 3")]
+
+
+def test_legacy_int_manifest_loads(spark):
+    """A table written before merge-on-read maps bucket -> one version in
+    its manifest and commit log; it reads, takes upserts and compacts."""
+    import json
+
+    with tempfile.TemporaryDirectory() as d:
+        root = os.path.join(d, "t")
+        UpsertTable(spark, root, key_col="id", n_buckets=4).init(_base(spark, 20))
+        with open(os.path.join(root, "_manifest.json")) as f:
+            legacy = {b: vs[0] for b, vs in json.load(f).items()}
+        for path in ("_manifest.json", "_commits/0.json"):
+            with open(os.path.join(root, path), "w") as f:
+                json.dump(legacy, f)
+        t = UpsertTable(spark, root, key_col="id", n_buckets=4)
+        assert t.read().count() == 20 and t.read(at_commit=0).count() == 20
+        t.upsert(_rows(spark, [(2, "new", 1.0)]))
+        assert _title(t.read(), 2) == "new" and t.read().count() == 20
+        t.compact()
+        assert _title(t.read(), 2) == "new" and t.read().count() == 20
+
+
+def test_upsert_cast_overflow_raises(spark):
+    """A non-evolving batch is cast to the table's column types: a value
+    that fits is stored at the column's type, one that overflows fails
+    the commit loudly and publishes nothing."""
+    from pyspark.sql.types import IntegerType
+
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=2)
+        t.init(_base(spark, 4).withColumn("qty", F.col("id").cast("int")))
+        t.upsert(spark.createDataFrame([(1, "t", 1.0, 7)], "id long, title string, price double, qty long"))
+        assert t.read().schema["qty"].dataType == IntegerType()
+        commits = t.history()
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            t.upsert(spark.createDataFrame(
+                [(2, "t", 1.0, 2**40)], "id long, title string, price double, qty long"
+            ))
+        assert t.history() == commits
+        assert sorted(r.qty for r in t.read().collect()) == [0, 2, 3, 7]
+
+
+def test_commit_writes_only_its_batch(spark, caplog):
+    """Write amplification, host-immune: the newest version directory
+    holds only the buckets the batch touched, and its bytes scale with
+    the batch, not the table. The commit's log record says the same."""
+    from external_benchmarks_spark.streaming.upsert import _bucket
+
+    def du(vdir):  # the version's data files
+        return sum(
+            os.path.getsize(os.path.join(p, f))
+            for p, _, fs in os.walk(vdir) for f in fs if f.endswith(".parquet")
+        )
+
+    with tempfile.TemporaryDirectory() as d:
+        root = os.path.join(d, "t")
+        t = UpsertTable(spark, root, key_col="id", n_buckets=8)
+        t.init(spark.range(4000).select(
+            "id", F.sha2(F.col("id").cast("string"), 256).alias("title"),
+            (F.col("id") * 1.0).alias("price"),
+        ))
+        batch = _rows(spark, [(i * 500, "new", 0.0) for i in range(8)])
+        touched = sorted(
+            {str(r.b) for r in batch.select(_bucket(F.col("id"), 8).alias("b")).collect()},
+            key=int,
+        )
+        with caplog.at_level(logging.INFO, logger="external_benchmarks_spark.streaming.upsert"):
+            t.upsert(batch)
+        rec = caplog.records[-1].commit
+        newest = os.path.join(root, f"v={rec['version']}")
+        assert sorted(e for e in os.listdir(newest) if e.startswith("bucket=")) == [
+            f"bucket={b}" for b in sorted(touched)
+        ]
+        assert rec["rows"] == 8 and rec["buckets"] == touched
+        assert rec["deltas_pending"] == {b: 1 for b in touched}
+        assert rec["bytes"] == du(newest)
+        assert rec["bytes"] * 10 < du(os.path.join(root, "v=0"))
+
+
+def test_window_path_matches_driver_path(spark):
+    """A batch above SMALL_BATCH_MAX dedups with a window and writes with a
+    bucket shuffle; it leaves the same table as the driver-side path."""
+    batch = spark.createDataFrame(
+        [(1, "old", 1.0, 1), (1, "new", 2.0, 2), (None, "n", 0.0, 1), (20, "ins", 3.0, 1)],
+        "id long, title string, price double, op_ts long",
+    )
+    with tempfile.TemporaryDirectory() as d:
+        tables = []
+        for name, cap in (("driver", UpsertTable.SMALL_BATCH_MAX), ("window", 2)):
+            t = UpsertTable(spark, os.path.join(d, name), key_col="id", n_buckets=4)
+            t.SMALL_BATCH_MAX = cap
+            t.init(_base(spark, 10))
+            t.upsert(batch)
+            tables.append(sorted(map(tuple, t.read().collect()), key=repr))
+        assert tables[0] == tables[1] and len(tables[0]) == 12
+        assert (1, "new", 2.0) in tables[0]
+
+
+def test_commit_log_write_is_atomic(spark, monkeypatch):
+    """A crash while writing a commit-log entry leaves no truncated
+    ``_commits/<k>.json`` behind: history() and vacuum() still parse
+    every entry."""
+    import json
+
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=2)
+        t.init(_base(spark, 4))
+        k = t.history()[-1] + 1
+        real_dump, calls = json.dump, []
+
+        def torn_dump(obj, f):  # the second dump of a commit is its log entry
+            calls.append(obj)
+            if len(calls) == 2:
+                f.write('{"0": [')
+                raise OSError("disk full")
+            real_dump(obj, f)
+
+        monkeypatch.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            t.upsert(_rows(spark, [(0, "x", 1.0)]))
+        monkeypatch.undo()
+        cdir = os.path.join(d, "t", "_commits")
+        assert f"{k}.json" not in os.listdir(cdir)
+        assert sorted(os.listdir(cdir)) == ["0.json"]
+        t.vacuum()
+        assert t.history() == [0]
 
 
 def test_upsert_schema_evolution(spark):

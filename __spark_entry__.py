@@ -1095,14 +1095,11 @@ def q_neardup_components(spark, sf):
         connected_components_auto,
     )
 
-    # Arrow fast path: this consumer drops the cosine column, so the BLAS
-    # Gram-matmul scoring (boundary-exact vs the HOF fold) yields the
-    # identical edge set the oracle replays.
+    # The same edges and cosine bits as embedding_neardup (BLAS ranks
+    # each block's pairs, the exact fold decides), which the oracle
+    # replays.
     edges = embedding_neardup_pairs(
-        Catalog(spark, sf).embeddings,
-        block_col="label",
-        threshold=0.2,
-        use_arrow_fast_path=True,
+        Catalog(spark, sf).embeddings, block_col="label", threshold=0.2
     )
     return component_sizes(connected_components_auto(edges))
 
@@ -1122,9 +1119,7 @@ def q_neardup_keep_best(spark, sf):
     from pyspark.sql.window import Window
 
     e = Catalog(spark, sf).embeddings
-    edges = embedding_neardup_pairs(
-        e, block_col="label", threshold=0.2, use_arrow_fast_path=True
-    )
+    edges = embedding_neardup_pairs(e, block_col="label", threshold=0.2)
     comps = connected_components_auto(edges)
     norms = e.select(
         "vec_id",
@@ -1164,14 +1159,9 @@ def q_semdedup(spark, sf):
 
     e = Catalog(spark, sf).embeddings
     centroids = sampled_centroids(e, n_centroids=IVF_N_CENTROIDS)
-    # Fast path is edge-set-identical (boundary pairs re-checked with the
-    # exact fold), so the SQL replay still hash-matches.
-    return semdedup(
-        ivf_assign(e, centroids),
-        centroids,
-        threshold=0.2,
-        use_arrow_fast_path=True,
-    )
+    # Pairs and fixed-point centroid cosines carry the fold's bits, so
+    # the SQL replay hash-matches.
+    return semdedup(ivf_assign(e, centroids), centroids, threshold=0.2)
 
 
 def q_cluster_representatives(spark, sf):
@@ -1293,10 +1283,7 @@ def q_neardup_triangles(spark, sf):
     from external_benchmarks_spark.operators.graph import triangle_participation
 
     edges = embedding_neardup_pairs(
-        Catalog(spark, sf).embeddings,
-        block_col="label",
-        threshold=0.2,
-        use_arrow_fast_path=True,
+        Catalog(spark, sf).embeddings, block_col="label", threshold=0.2
     )
     return triangle_participation(edges)
 
@@ -1311,10 +1298,7 @@ def q_doc_pagerank(spark, sf):
     from external_benchmarks_spark.operators.graph import pagerank
 
     edges = embedding_neardup_pairs(
-        Catalog(spark, sf).embeddings,
-        block_col="label",
-        threshold=0.2,
-        use_arrow_fast_path=True,
+        Catalog(spark, sf).embeddings, block_col="label", threshold=0.2
     )
     return pagerank(edges, n_iter=5).select(
         "node", F.round("rank", 6).alias("rank")
@@ -1342,8 +1326,8 @@ def q_quantize_embeddings(spark, sf):
 
 def q_quant_dot_topk(spark, sf):
     # Integer matmul per Arrow batch is exact in any order, and
-    # quantization boundary values re-derive Spark's HALF_UP exactly —
-    # bit-identical to the SQL replay.
+    # quantization rounds as Spark's HALF_UP round does (round_half_up)
+    # — bit-identical to the SQL replay.
     from external_benchmarks_spark.operators.quantize import quantized_dot_topk
 
     return quantized_dot_topk(Catalog(spark, sf).embeddings, QVEC, k=100)

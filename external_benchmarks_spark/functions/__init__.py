@@ -1,10 +1,10 @@
 """Scalar function library: vector, text, and hashing primitives.
 
 Each function is exposed as a Catalyst Column expression (JVM-side,
-whole-stage-codegen friendly). Vector top-k additionally has one exact
-Arrow-batch kernel in ``vector.py`` for the hot loop (SURVEY.md §7.4:
-per-row SQL aggregate() over 2,688-dim arrays is ~100x slower than a
-batched matmul).
+whole-stage-codegen friendly). Vector scoring additionally has one exact
+numpy kernel in ``vector.py`` for the hot loop, in top-k, threshold and
+fixed-point forms (SURVEY.md §7.4: per-row SQL aggregate() over
+2,688-dim arrays is ~100x slower than a batched matmul).
 """
 
 from external_benchmarks_spark.functions.hashing import md5_hash32, md5_hash64  # noqa: F401

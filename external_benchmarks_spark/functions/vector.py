@@ -7,12 +7,19 @@ Two forms of one arithmetic, per SURVEY.md §7.4:
    the loop, and bit-identical to DuckDB's ``list_dot_product`` because
    they sum left to right. ``dot_product_literal`` unrolls one term per
    dimension, so it only suits narrow vectors (~1k dims at most).
-2. **The exact top-k kernel over Arrow batches** (``exact_topk``, wrapped
-   for Spark by ``batch_topk``): BLAS ranks each batch, and only the rows
-   that can still reach the top k are rescored with the same
-   left-to-right fold (``fold_dot``). It runs at the reference's 2,688
-   dims (reference README.md:52-55,73), returns their score bits
-   and breaks ties by key. The serving tier calls the same kernel.
+2. **One exact kernel over numpy blocks**: BLAS ranks, a Higham error
+   bound (``_fold_error``) picks the scores that could still matter, and
+   only those are rescored with the same left-to-right fold
+   (``fold_dot``). It runs at the reference's 2,688 dims (reference
+   README.md:52-55,73) and returns the Catalyst score bits, in three
+   forms:
+   - top-k: ``exact_topk``, wrapped for Spark by ``batch_topk``; ties
+     break by key, and the serving tier calls the same kernel;
+   - threshold: ``threshold_pairs``, the pairs of one block whose cosine
+     reaches a threshold (near-dup pairs, SemDeDup);
+   - fixed point: ``round_half_up``, Spark's ``round(x, 0)`` on a
+     double, so a bound carried through it bounds the 1e-6 fixed-point
+     scores (MaxSim, SemDeDup's centroid cosine, MMR).
 
 All element arithmetic is done in DOUBLE regardless of storage type
 (embeddings are stored float32 for size, SURVEY.md §7.4).
@@ -115,6 +122,34 @@ def spark_order(scores: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return np.lexsort((keys, -np.where(nan, 0, scores), ~nan))
 
 
+def round_half_up(x: np.ndarray) -> np.ndarray:
+    """Spark's ``round(x, 0)`` on a double, elementwise: ties away from
+    zero on the double's decimal value (``BigDecimal`` HALF_UP). Every
+    tie x.5 is exact in float64, so rounding the exact value decides as
+    the decimal string does; ``x - floor(x)`` is exact, unlike
+    ``floor(x + 0.5)``, which lifts 0.49999999999999994 to 1."""
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x) + 0.0
+
+
+def _fold_error(d: int, scale, approx=None, den=None):
+    """A bound on how far a BLAS score lies from the fold's: for D-term
+    float64 dots whose factors' L2 norms multiply to ``scale``; with
+    ``den``, for the cosine ``approx / den``.
+
+    Any two summation orders of a D-term float64 dot differ by at most
+    2*gamma_D*|a|*|q|, with gamma_D = D*u/(1-D*u) (Higham, *Accuracy and
+    Stability of Numerical Algorithms*, §3.1). The bound takes
+    gamma_{D+8} and doubles the result, which also covers the roundings
+    of the norms, the cosine division and the bound's own arithmetic."""
+    g = (d + 8) * _U / (1 - (d + 8) * _U)
+    err = 2 * g * scale
+    if den is not None:
+        err = (err + 2 * g * np.abs(approx)) / den
+    return 2 * err
+
+
 def exact_topk(
     mat: np.ndarray,
     keys: np.ndarray,
@@ -135,16 +170,11 @@ def exact_topk(
     row out of a query's candidates where it is False.
 
     Four steps: one BLAS product ranks every row; every row whose BLAS
-    score lies within the error bound of the k-th best lower bound
+    score lies within ``_fold_error`` of the k-th best lower bound
     survives; only the survivors are rescored with the fold; the top k
-    of those by (-score, key) are returned. Any two summation orders of
-    a D-term float64 dot differ by at most 2*gamma_D*|a|*|q|, with
-    gamma_D = D*u/(1-D*u) (Higham, *Accuracy and Stability of Numerical
-    Algorithms*, §3.1). The bound used here takes gamma_{D+8} and
-    doubles the result, which also covers the roundings of the norms,
-    the cosine division and the bound's own arithmetic. A row outside
-    the survivors is strictly below k rows in exact arithmetic, so the
-    result equals a fold over every row sorted by (-score, key).
+    of those by (-score, key) are returned. A row outside the survivors
+    is strictly below k rows in exact arithmetic, so the result equals a
+    fold over every row sorted by (-score, key).
     Returns one (row indices, scores) pair per query."""
     n, d = mat.shape
     if k <= 0:
@@ -152,14 +182,14 @@ def exact_topk(
     if norms is None:
         norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
     approx = mat @ queries.T
-    g = (d + 8) * _U / (1 - (d + 8) * _U)
-    err = 2 * g * np.outer(norms, np.sqrt(np.einsum("ij,ij->i", queries, queries)))
-    if qnorms is not None:
+    scale = np.outer(norms, np.sqrt(np.einsum("ij,ij->i", queries, queries)))
+    if qnorms is None:
+        err = _fold_error(d, scale)
+    else:
         den = np.outer(norms, qnorms)
         with np.errstate(divide="ignore", invalid="ignore"):
-            err = (err + 2 * g * np.abs(approx)) / den
+            err = _fold_error(d, scale, approx, den)
             approx = approx / den
-    err = 2 * err
     out = []
     for j, q in enumerate(queries):
         rows = np.arange(n) if mask is None else np.flatnonzero(mask[:, j])
@@ -179,6 +209,39 @@ def exact_topk(
     return out
 
 
+def threshold_pairs(
+    mat: np.ndarray, threshold: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The pairs (i, j), i < j, of rows of ``mat`` (n x D, float64, no
+    zero row) whose cosine reaches ``threshold``, with that cosine:
+    ``fold_dot(a, b) / (sqrt(fold_dot(a, a)) * sqrt(fold_dot(b, b)))``,
+    the op order of ``cosine_similarity``, so its bits.
+
+    One BLAS Gram (2,048 rows at a time) ranks the pairs. Every pair
+    whose BLAS cosine plus ``_fold_error`` reaches the threshold is
+    rescored with the fold, and kept iff the fold reaches it. A NaN
+    cosine counts as reaching it, since Spark orders NaN above every
+    number. Returns (i, j, cosine) arrays."""
+    n, d = mat.shape
+    chunk, step = 2048, 4096  # bound the (rows x n) and (pairs x D) temporaries
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    ii, jj = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for s in range(0, n, chunk):
+        approx = mat[s : s + chunk] @ mat[s:].T
+        den = np.outer(norms[s : s + chunk], norms[s:])
+        err = _fold_error(d, den, approx, den)
+        i, j = np.nonzero(~(approx / den + err < threshold))
+        upper = j > i
+        ii.append(i[upper] + s)
+        jj.append(j[upper] + s)
+    i, j = np.concatenate(ii), np.concatenate(jj)
+    fnorms = np.sqrt(fold_dot(mat, mat))
+    dots = [fold_dot(mat[i[s : s + step]], mat[j[s : s + step]]) for s in range(0, len(i), step)]
+    cos = np.concatenate([np.empty(0), *dots]) / (fnorms[i] * fnorms[j])
+    hit = ~(cos < threshold)
+    return i[hit], j[hit], cos[hit]
+
+
 def arrow_rows(col: pa.Array, d: int) -> tuple[np.ndarray, np.ndarray]:
     """A list column of an Arrow batch as an (n x d) float64 matrix, and
     which rows it holds. A null list, a null element or a length other
@@ -188,10 +251,10 @@ def arrow_rows(col: pa.Array, d: int) -> tuple[np.ndarray, np.ndarray]:
         flat = col.flatten()
     else:
         flat = col.filter(pa.array(ok)).flatten()
-    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, d)
     rows = np.flatnonzero(ok)
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(rows), d)
     if flat.null_count:
-        bad = pc.is_null(flat).to_numpy(zero_copy_only=False).reshape(-1, d).any(1)
+        bad = pc.is_null(flat).to_numpy(zero_copy_only=False).reshape(len(rows), d).any(1)
         ok[rows[bad]] = False
         rows, vals = rows[~bad], vals[~bad]
     if len(rows) == len(col):

@@ -22,8 +22,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from external_benchmarks_spark.functions.hashing import (
     MERSENNE_61,
@@ -31,7 +34,11 @@ from external_benchmarks_spark.functions.hashing import (
     minhash_params,
 )
 from external_benchmarks_spark.functions.text import tokens
-from external_benchmarks_spark.functions.vector import dot_product, l2_norm
+from external_benchmarks_spark.functions.vector import (
+    _sort_keys,
+    arrow_rows,
+    threshold_pairs,
+)
 
 
 def exact_dedup_groups(
@@ -367,84 +374,60 @@ def _subblock_key(
     )
 
 
-def _neardup_pairs_arrow(
+def _blocked(
     df: DataFrame,
     block_col: str,
     key_col: str,
     emb_col: str,
-    threshold: float,
-    chunk: int = 2048,
+    max_block_rows: int | None,
+    subblock_bits: int = 2,
 ) -> DataFrame:
-    """Arrow/BLAS pair scoring: one Gram matmul per block instead of a
-    per-pair Catalyst fold. Same edge SET as the HOF form: scores are
-    computed with numpy float64 BLAS (last-ulp differences possible), and
-    any pair within 1e-9 of the threshold is re-scored with the exact
-    left-to-right fold the HOF/oracle uses, so the >= threshold decision
-    is bit-identical. Emitted cosine values for boundary pairs use the
-    fold value; elsewhere the BLAS value (consumers of this path drop the
-    cosine column — oracle queries that hash it keep the HOF form).
-    """
-    import math
-
-    def _fold_cos(u: np.ndarray, v: np.ndarray) -> float:
-        dot = 0.0
-        na = 0.0
-        nb = 0.0
-        for x, y in zip(u.tolist(), v.tolist()):
-            dot += x * y
-        for x in u.tolist():
-            na += x * x
-        for y in v.tolist():
-            nb += y * y
-        denom = math.sqrt(na) * math.sqrt(nb)
-        return dot / denom if denom != 0.0 else float("nan")
-
-    def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"id_a": pd.Series(dtype="int64"), "id_b": pd.Series(dtype="int64"),
-             "cosine": pd.Series(dtype="float64")}
-        )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        order = np.argsort(pdf[key_col].to_numpy(), kind="stable")
-        ids = pdf[key_col].to_numpy()[order].astype(np.int64)
-        m = np.vstack(pdf[emb_col].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((m * m).sum(axis=1))
-        safe = np.where(norms == 0.0, 1.0, norms)
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, n, chunk):
-            e = min(s + chunk, n)
-            cos = (m[s:e] @ m.T) / (safe[s:e, None] * safe[None, :])
-            # zero-norm rows: HOF yields NaN (0/0) -> excluded; force the
-            # same here regardless of threshold sign.
-            cos[norms[s:e] == 0.0, :] = np.nan
-            cos[:, norms == 0.0] = np.nan
-            ri, cj = np.nonzero(cos >= threshold - 1e-9)
-            gi = ri + s
-            keep = cj > gi  # id_a < id_b (rows sorted by id)
-            for i, j in zip(gi[keep].tolist(), cj[keep].tolist()):
-                c = float(cos[i - s, j])
-                if abs(c - threshold) <= 1e-9:
-                    c = _fold_cos(m[i], m[j])
-                    if not (c >= threshold):
-                        continue
-                out_a.append(ids[i])
-                out_b.append(ids[j])
-                out_c.append(c)
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {"id_a": np.array(out_a, dtype=np.int64),
-             "id_b": np.array(out_b, dtype=np.int64),
-             "cosine": np.array(out_c, dtype=np.float64)}
-        )
-
-    return (
-        df.select(F.col(key_col), F.col("_blk"), F.col(emb_col))
-        .groupBy("_blk")
-        .applyInPandas(score_block, "id_a bigint, id_b bigint, cosine double")
+    """``df`` with its pair-mining block key in ``_blk``: ``block_col``
+    itself, or its ``_subblock_key`` refinement under a cap."""
+    if max_block_rows is None:
+        return df.withColumn("_blk", F.col(block_col))
+    return _subblock_key(
+        df, block_col, emb_col, max_block_rows, key_col, n_bits=subblock_bits
     )
+
+
+def _block_pairs(
+    tbl: pa.Table, key_col: str, emb_col: str, threshold: float, ansi: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One block's near-dup pairs as (i, j, cosine): row indices of
+    ``tbl`` with key(i) < key(j), and the Catalyst pair join's cosine
+    bits (functions/vector.threshold_pairs).
+
+    Rows pair only with rows of their own vector length, as ``zip_with``
+    pads the shorter one with nulls; a null key, a null vector or a null
+    element pairs with nothing. A zero-norm row divides by zero against
+    every valid partner: with ``ansi`` that raises DIVIDE_BY_ZERO, as
+    the Catalyst division does, and otherwise the row pairs with
+    nothing."""
+    keys = tbl.column(key_col).combine_chunks()
+    emb = tbl.column(emb_col).combine_chunks()
+    rows = np.flatnonzero(keys.is_valid().to_numpy(zero_copy_only=False))
+    sk = _sort_keys(keys.take(rows))
+    order = np.argsort(sk, kind="stable")
+    rows, sk = rows[order], sk[order]
+    lens = pc.fill_null(pc.list_value_length(emb.take(rows)), -1).to_numpy()
+    out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for d in np.unique(lens[lens >= 0]):
+        grp = np.flatnonzero(lens == d)
+        mat, ok = arrow_rows(emb.take(rows[grp]), d)
+        grp, mat = grp[ok], mat[ok]
+        zero = np.einsum("ij,ij->i", mat, mat) == 0.0
+        if ansi and zero.any() and len(np.unique(sk[grp])) > 1:
+            raise ArithmeticError(
+                f"[DIVIDE_BY_ZERO] Division by zero: a zero-norm {emb_col} "
+                "row has no cosine"
+            )
+        grp, mat = grp[~zero], mat[~zero]
+        i, j, cos = threshold_pairs(mat, threshold)
+        i, j = grp[i], grp[j]
+        distinct = sk[i] != sk[j]
+        out.append((rows[i[distinct]], rows[j[distinct]], cos[distinct]))
+    return tuple(np.concatenate(parts) for parts in zip(*out))
 
 
 def embedding_neardup_pairs(
@@ -453,25 +436,24 @@ def embedding_neardup_pairs(
     key_col: str = "vec_id",
     emb_col: str = "embedding",
     threshold: float = 0.95,
-    use_arrow_fast_path: bool = False,
     max_block_rows: int | None = None,
     subblock_bits: int = 2,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a blocking key.
+    """Embedding-cosine near-duplicate pairs within a blocking key:
+    (id_a, id_b, cosine) with id_a < id_b and cosine >= ``threshold``.
 
     Exact within-block verification; at 100 TB the block key comes from an
     LSH/IVF assignment (similarity.py) rather than a metadata column.
 
-    Two physical forms, one edge set:
-
-    - default: Catalyst HOF fold per pair — bit-identical to DuckDB's
-      ``list_dot_product`` chain, the oracle-parity form. (An unrolled
-      element_at dot was measured SLOWER than the HOF fold at dim=64.)
-    - ``use_arrow_fast_path``: one BLAS Gram matmul per block via
-      applyInPandas, with an exact-fold re-check for threshold-boundary
-      pairs — the 100 TB scoring shape (the same BLAS-then-fold idea
-      as functions/vector.exact_topk). Use for consumers that drop the
-      cosine column (components, pagerank, triangles, semdedup).
+    One hash shuffle on the block key into one grouped Arrow call per
+    block (``_block_pairs``): a BLAS Gram ranks the block's pairs and the
+    exact left-to-right fold decides every pair that could reach the
+    threshold, so the edges and cosine bits are those of the Catalyst
+    ``dot_product / (l2_norm * l2_norm)`` pair join (and of DuckDB's
+    ``list_dot_product`` chain). Rows the fold scores null (null or
+    wrong-length vectors, null elements) pair with nothing; a zero-norm
+    row raises DIVIDE_BY_ZERO under ``spark.sql.ansi.enabled``. ``id_a``
+    and ``id_b`` keep the key column's type.
 
     ``max_block_rows`` caps pair fan-out for degenerate giant blocks by
     sub-blocking them with a secondary sign-LSH band (_subblock_key) —
@@ -481,35 +463,28 @@ def embedding_neardup_pairs(
     split across sub-blocks. Defaults are picked from the measured
     sweep in tools/neardup_knobs.py (SCALE.md round-8 table).
     """
-    if max_block_rows is not None:
-        blocked = _subblock_key(
-            df, block_col, emb_col, max_block_rows, key_col,
-            n_bits=subblock_bits,
+    key = df.schema[key_col]
+    schema = StructType(
+        [
+            StructField("id_a", key.dataType),
+            StructField("id_b", key.dataType),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+
+    def score(tbl: pa.Table) -> pa.Table:
+        i, j, cos = _block_pairs(tbl, key_col, emb_col, threshold, ansi)
+        keys = tbl.column(key_col)
+        return pa.Table.from_arrays(
+            [keys.take(i), keys.take(j), pa.array(cos)], names=schema.names
         )
-    else:
-        blocked = df.withColumn("_blk", F.col(block_col))
-    if use_arrow_fast_path:
-        return _neardup_pairs_arrow(blocked, block_col, key_col, emb_col, threshold)
-    # Norms are precomputed per ROW (n traversals), not per PAIR (n^2/block
-    # traversals as the naive cosine_similarity(emb_a, emb_b) would do) —
-    # the per-pair work is then a single dot-product fold. Values are
-    # bit-identical either way (same IEEE ops), so oracle parity holds.
-    a = blocked.select(
-        F.col(key_col).alias("id_a"),
-        F.col("_blk"),
-        F.col(emb_col).alias("emb_a"),
-        l2_norm(emb_col).alias("_norm_a"),
-    )
-    b = blocked.select(
-        F.col(key_col).alias("id_b"),
-        F.col("_blk"),
-        F.col(emb_col).alias("emb_b"),
-        l2_norm(emb_col).alias("_norm_b"),
-    )
-    pairs = a.join(b, "_blk").filter(F.col("id_a") < F.col("id_b"))
-    cos = dot_product("emb_a", "emb_b") / (F.col("_norm_a") * F.col("_norm_b"))
-    return pairs.select("id_a", "id_b", cos.alias("cosine")).filter(
-        F.col("cosine") >= threshold
+
+    return (
+        _blocked(df, block_col, key_col, emb_col, max_block_rows, subblock_bits)
+        .select(key_col, "_blk", emb_col)
+        .groupBy("_blk")
+        .applyInArrow(score, schema)
     )
 
 

@@ -22,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from external_benchmarks_spark.functions.vector import _to_double
+from external_benchmarks_spark.functions.vector import _to_double, round_half_up
 
 
 def quantize_vector(vals: Sequence[float]) -> tuple[list[int], float]:
@@ -442,12 +442,9 @@ def quantized_dot_topk(
     Each Arrow batch is quantized and scored with one int64 matmul —
     bit-identical to ``quantize_embeddings`` followed by a BIGINT fold,
     by construction: integer products/sums are exact in any order, the
-    scale chain uses the same IEEE ops, and quantization values within
-    1e-9 of a .5 rounding boundary are re-derived with Spark's exact
-    BigDecimal-HALF_UP semantics (the only place float order could leak).
+    scale chain uses the same IEEE ops, and quantization rounds with
+    ``round_half_up``, Spark's ``round(x, 0)`` on a double.
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
     import numpy as np
     import pandas as pd
 
@@ -460,15 +457,7 @@ def quantized_dot_topk(
             amax = np.abs(m).max(axis=1)
             scale = np.where(amax > 0.0, amax / 127.0, 1.0)
             v = m / scale[:, None]
-            q = np.where(v >= 0.0, np.floor(v + 0.5), np.ceil(v - 0.5))
-            near = np.abs(np.abs(v) % 1.0 - 0.5) <= 1e-9
-            for i, j in zip(*np.nonzero(near)):
-                q[i, j] = float(
-                    Decimal(repr(float(v[i, j]))).quantize(
-                        Decimal(1), rounding=ROUND_HALF_UP
-                    )
-                )
-            sq = q.astype(np.int64) @ qarr
+            sq = round_half_up(v).astype(np.int64) @ qarr
             ap = (sq.astype(np.float64) * scale) * qscale
             yield pd.DataFrame(
                 {

@@ -28,17 +28,24 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from external_benchmarks_spark.functions.vector import (
+    _fold_error,
+    _sort_keys,
+    arrow_rows,
     batch_topk,
     collect_queries,
     dot_product,
     fold_dot,
     l2_norm,
     literal_qnorm,
+    round_half_up,
+    spark_order,
 )
 
 
@@ -461,7 +468,6 @@ def semdedup(
     key_col: str = "vec_id",
     emb_col: str = "embedding",
     cluster_col: str = "centroid_id",
-    use_arrow_fast_path: bool = False,
     max_block_rows: int | None = None,
 ) -> DataFrame:
     """Semantic deduplication (Abbas et al. 2023, "SemDeDup"): within each
@@ -470,160 +476,46 @@ def semdedup(
     published keep-low-centroid-similarity rule, made deterministic by
     tie-breaking on the key. Returns the surviving (key, cluster_id).
 
-    Shape: the pairwise check is BLOCKED by cluster (operators/dedup.
-    embedding_neardup_pairs — never an all-pairs join); the keep rule is
-    one symmetric join against the per-row centroid-cosine table and a
-    left-anti join back. All joins keyed; oracle replays the identical
+    Shape: one grouped Arrow call per cluster block, then one left-anti
+    join. Inside it, the block's pairs are ``embedding_neardup_pairs``'s
+    (dedup._block_pairs: BLAS ranks, the fold decides, never an
+    all-pairs join), each row's centroid cosine is
+    ``centroid_cosine_fp``'s 1e-6 fixed point (the fold over n rows, not
+    n^2 pairs, and 0 for a zero-norm row), and each pair drops its
+    endpoint with the larger (cos_fp, key). The oracle replays the same
     arithmetic (deterministic sampled centroids + fixed-point cosines).
+    ``max_block_rows`` sub-blocks giant clusters as
+    ``embedding_neardup_pairs`` does.
     """
-    from external_benchmarks_spark.operators.dedup import embedding_neardup_pairs
-
-    if use_arrow_fast_path:
-        return _semdedup_arrow(
-            assigned, centroids, threshold, key_col, emb_col, cluster_col,
-            max_block_rows,
-        )
-    percos = centroid_cosine_fp(
-        assigned, centroids, key_col=key_col, emb_col=emb_col, cluster_col=cluster_col
-    )
-    pairs = embedding_neardup_pairs(
-        assigned,
-        block_col=cluster_col,
-        key_col=key_col,
-        emb_col=emb_col,
-        threshold=threshold,
-        use_arrow_fast_path=use_arrow_fast_path,
-        max_block_rows=max_block_rows,
-    ).select("id_a", "id_b")
-    sym = pairs.union(pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
-    pa = percos.select(
-        F.col(key_col).alias("id_a"), F.col("cos_fp").alias("_fp_a")
-    )
-    pb = percos.select(
-        F.col(key_col).alias("id_b"), F.col("cos_fp").alias("_fp_b")
-    )
-    # drop a row iff some tau-neighbor sits strictly closer to "keep":
-    # smaller (cos_fp, key) — i.e. the neighborhood's minimum survives.
-    dropped = (
-        sym.join(pa, "id_a")
-        .join(pb, "id_b")
-        .filter(
-            (F.col("_fp_b") < F.col("_fp_a"))
-            | ((F.col("_fp_b") == F.col("_fp_a")) & (F.col("id_b") < F.col("id_a")))
-        )
-        .select(F.col("id_a").alias(key_col))
-        .distinct()
-    )
-    return percos.join(dropped, key_col, "left_anti").select(key_col, "cluster_id")
-
-
-def _semdedup_arrow(
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    threshold: float,
-    key_col: str,
-    emb_col: str,
-    cluster_col: str,
-    max_block_rows: int | None,
-) -> DataFrame:
-    """SemDeDup fast path: the whole per-cluster computation — pairwise
-    Gram matmul, per-row centroid cosine, and the keep-farthest rule — in
-    ONE applyInPandas over the cluster blocks, followed by a single
-    anti-join. Eliminates the three percos scans and two pair joins of
-    the declarative form (the oracle-parity HOF form keeps that shape).
-
-    Bit-parity with the HOF form is preserved at every decision boundary:
-    - pair threshold: BLAS cosines within 1e-9 of the threshold are
-      re-scored with the exact left-to-right fold;
-    - fixed-point centroid cosine: values within 1e-6 of a .5 rounding
-      boundary are re-derived with the fold and rounded exactly as
-      Spark's ``round`` does (BigDecimal.valueOf HALF_UP ==
-      ``Decimal(repr(v))`` HALF_UP).
-    Outside those bands the float64 arithmetics agree by a >1e-9 margin.
-    """
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from external_benchmarks_spark.operators.dedup import _subblock_key
+    from external_benchmarks_spark.operators.dedup import _block_pairs, _blocked
 
     cmat = np.asarray(centroids, dtype=np.float64)
+    key = assigned.schema[key_col]
+    ansi = assigned.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
 
-    def _fold_dot(u: np.ndarray, v: np.ndarray) -> float:
-        acc = 0.0
-        for x, y in zip(u.tolist(), v.tolist()):
-            acc += x * y
-        return acc
+    def drop_block(tbl: pa.Table) -> pa.Table:
+        i, j, _ = _block_pairs(tbl, key_col, emb_col, threshold, ansi)
+        c = cmat[tbl.column(cluster_col)[0].as_py()]
+        m, ok = arrow_rows(tbl.column(emb_col).combine_chunks(), len(c))
+        norm = np.sqrt(fold_dot(m, m))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(norm > 0.0, fold_dot(m, c) / norm, 0.0)
+        fp = round_half_up(cos * 1_000_000)
+        both = ok[i] & ok[j]  # a wrong-length row has no cos_fp
+        i, j = i[both], j[both]
+        # the endpoint with the larger (cos_fp, key) drops; key(i) < key(j)
+        loser = np.unique(np.where(fp[j] < fp[i], i, j))
+        return pa.Table.from_arrays([tbl.column(key_col).take(loser)], names=[key_col])
 
-    def _fold_norm(u: np.ndarray) -> float:
-        acc = 0.0
-        for x in u.tolist():
-            acc += x * x
-        return math.sqrt(acc)
-
-    def _spark_round_fp(v: float) -> int:
-        return int(Decimal(repr(v)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
-
-    def drop_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({"_drop_id": pd.Series(dtype="int64")})
-        if n < 2:
-            return empty
-        order = np.argsort(pdf[key_col].to_numpy(), kind="stable")
-        ids = pdf[key_col].to_numpy()[order].astype(np.int64)
-        cid = int(pdf[cluster_col].iloc[0])
-        m = np.vstack(pdf[emb_col].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt((m * m).sum(axis=1))
-        safe = np.where(norms == 0.0, 1.0, norms)
-        # per-row centroid cosine -> 1e-6 fixed point (HOF: dot/row_norm,
-        # 0.0 for zero-norm rows; centroids arrive unit-normalized)
-        v = np.where(norms == 0.0, 0.0, (m @ cmat[cid]) / safe) * 1_000_000.0
-        fp = np.where(v >= 0.0, np.floor(v + 0.5), np.ceil(v - 0.5)).astype(np.int64)
-        near = np.abs(np.abs(v) % 1.0 - 0.5) <= 1e-6
-        for i in np.nonzero(near)[0].tolist():
-            nf = _fold_norm(m[i])
-            cosf = _fold_dot(m[i], cmat[cid]) / nf if nf > 0.0 else 0.0
-            fp[i] = _spark_round_fp(cosf * 1_000_000.0)
-        # pairwise cosines; drop the (fp, id)-larger endpoint of each pair
-        cos = (m @ m.T) / (safe[:, None] * safe[None, :])
-        cos[norms == 0.0, :] = np.nan
-        cos[:, norms == 0.0] = np.nan
-        ri, cj = np.nonzero(cos >= threshold - 1e-9)
-        dropped: set[int] = set()
-        for i, j in zip(ri.tolist(), cj.tolist()):
-            if j <= i:
-                continue
-            c = float(cos[i, j])
-            if abs(c - threshold) <= 1e-9:
-                na, nb = _fold_norm(m[i]), _fold_norm(m[j])
-                denom = na * nb
-                c = _fold_dot(m[i], m[j]) / denom if denom != 0.0 else float("nan")
-                if not (c >= threshold):
-                    continue
-            # drop the neighborhood's (fp, id)-maximum endpoint
-            loser = j if (fp[j], ids[j]) > (fp[i], ids[i]) else i
-            dropped.add(int(ids[loser]))
-        if not dropped:
-            return empty
-        return pd.DataFrame({"_drop_id": np.array(sorted(dropped), dtype=np.int64)})
-
-    if max_block_rows is not None:
-        blocked = _subblock_key(assigned, cluster_col, emb_col, max_block_rows, key_col)
-    else:
-        blocked = assigned.withColumn("_blk", F.col(cluster_col))
     dropped = (
-        blocked.select(F.col(key_col), F.col("_blk"), F.col(cluster_col), F.col(emb_col))
+        _blocked(assigned, cluster_col, key_col, emb_col, max_block_rows)
+        .select(key_col, "_blk", cluster_col, emb_col)
         .groupBy("_blk")
-        .applyInPandas(drop_block, "_drop_id bigint")
-        .select(F.col("_drop_id").alias(key_col))
-        .distinct()
+        .applyInArrow(drop_block, StructType([key]))
     )
-    return (
-        assigned.select(
-            F.col(key_col), F.col(cluster_col).cast("bigint").alias("cluster_id")
-        )
-        .join(dropped, key_col, "left_anti")
-        .select(key_col, "cluster_id")
-    )
+    return assigned.select(
+        F.col(key_col), F.col(cluster_col).cast("bigint").alias("cluster_id")
+    ).join(dropped, key_col, "left_anti")
 
 
 def cluster_representatives(
@@ -660,7 +552,6 @@ def maxsim_topk(
     n_chunks: int = 8,
     key_col: str = "vec_id",
     emb_col: str = "embedding",
-    use_arrow_fast_path: bool = False,
 ) -> DataFrame:
     """ColBERT-style late-interaction MaxSim retrieval (Khattab &
     Zaharia, SIGIR 2020): a document is a BAG of token vectors and
@@ -675,25 +566,24 @@ def maxsim_topk(
     the packed form keeps MaxSim a map-only scan feeding a
     TakeOrderedAndProject top-k).
 
-    Two tiers like bruteforce_topk: the default pure-Catalyst form
-    (slice -> zip_with product -> aggregate fold per chunk dot,
-    greatest() across chunks per query token, per-token 1e-6
-    fixed-point rounding summed as BIGINT — partition-order-independent
-    and replayable by a SQL oracle) and an Arrow fast path
-    (``use_arrow_fast_path``) that scores each batch with ONE einsum
-    over the (batch, chunks, width) tensor — the production form at the
-    reference's 2,688-dim width, where a per-row HOF fold is 10-100x
-    slower. Same ranking; last-ulp score differences possible
-    (rank-parity-tested in tests/test_similarity.py).
+    The score is the Catalyst form's (slice -> left-to-right fold per
+    chunk dot, greatest() across chunks per query token, per-token 1e-6
+    fixed-point rounding summed as BIGINT), bit for bit, at any width.
+    One ``mapInArrow`` scores each batch with one einsum over the
+    (rows, chunks, tokens) tensor; ``_fold_error`` carried through the
+    max and ``round_half_up`` bounds each row's total, and only rows
+    whose upper total reaches the k-th lower total are rescored with
+    the fold. Each batch emits its exact top k by (score, key). A chunk
+    holding a null element is skipped, as greatest() skips its null
+    dot; a row with no valid chunk scores null and ranks last.
     """
     width = len(query_tokens[0])
     for qt in query_tokens:
         if len(qt) != width:
             raise ValueError("query tokens must share one width")
-    # Both tiers fail loudly on a width mismatch instead of silently
-    # scoring partial chunks: slicing past the array end would null-pad
-    # (Catalyst) or mis-reshape (Arrow). assert_true is a per-row
-    # comparison, negligible next to the dot products.
+    # Fail loudly on a width mismatch instead of silently scoring partial
+    # chunks: assert_true is a per-row comparison, negligible next to the
+    # dot products.
     need = n_chunks * width
     df = df.filter(
         F.assert_true(
@@ -701,54 +591,59 @@ def maxsim_topk(
             F.lit(f"maxsim_topk: embedding length != n_chunks*width={need}"),
         ).isNull()
     )
-    if use_arrow_fast_path:
-        from pyspark.sql.types import DoubleType
+    q = np.asarray(query_tokens, dtype=np.float64)  # (tokens, width)
+    qn = np.sqrt(np.einsum("tw,tw->t", q, q))
+    fields = [df.schema[key_col], StructField("maxsim", DoubleType())]
 
-        q = np.asarray(query_tokens, dtype=np.float64)  # (tokens, width)
+    def fixed(tm: np.ndarray) -> np.ndarray:
+        return round_half_up(tm * 1_000_000.0)  # per query token
 
-        @F.pandas_udf(DoubleType())
-        def _maxsim(emb: pd.Series) -> pd.Series:
-            m = np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
-            b = m.reshape(len(m), n_chunks, -1)  # (batch, chunks, width)
-            sims = np.einsum("bcw,tw->bct", b, q)
-            return pd.Series(sims.max(axis=1).sum(axis=1))
+    def total(fp: np.ndarray) -> np.ndarray:
+        return fp.astype(np.int64).sum(axis=1)  # BIGINT: exact past 2**53
 
-        return (
-            df.select(
-                F.col(key_col), _maxsim(F.col(emb_col)).alias("maxsim")
+    def run(batches):
+        for b in batches:
+            flat = b.column(emb_col).flatten()
+            m = pc.fill_null(flat, 0).to_numpy(zero_copy_only=False)
+            m = m.astype(np.float64).reshape(len(b), n_chunks, width)
+            null = pc.is_null(flat).to_numpy(zero_copy_only=False)
+            null = null.reshape(len(b), n_chunks, width).any(axis=2)[:, :, None]
+            sims = np.einsum("ncw,tw->nct", m, q)
+            cn = np.sqrt(np.einsum("ncw,ncw->nc", m, m))
+            err = _fold_error(width, cn[:, :, None] * qn)
+            lo = fixed(np.where(null, -np.inf, sims - err).max(axis=1))
+            hi = fixed(np.where(null, -np.inf, sims + err).max(axis=1))
+            valid = ~null.all(axis=(1, 2))
+            sure = np.isfinite(lo).all(axis=1) & np.isfinite(hi).all(axis=1)
+            rows = np.flatnonzero(valid)
+            if sure.sum() > k > 0:
+                kth = np.partition(total(lo[sure]), -k)[-k]
+                hi_total = total(np.where(sure[:, None], hi, 0))
+                rows = rows[~sure[rows] | (hi_total[rows] >= kth)]
+            sub = m[rows].reshape(-1, width)
+            tm = np.stack([fold_dot(sub, t).reshape(len(rows), n_chunks) for t in q], 2)
+            tm = np.where(null[rows], -np.inf, tm).max(axis=1)
+            scores = total(fixed(tm)) / 1_000_000.0
+            keys = _sort_keys(b.column(key_col))
+            best = spark_order(scores, keys[rows])[:k]
+            nulls = np.flatnonzero(~valid)
+            nulls = nulls[np.argsort(keys[nulls], kind="stable")][: k - len(best)]
+            take = np.concatenate([rows[best], nulls])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(key_col).take(pa.array(take)),
+                    pa.array(np.r_[scores[best], np.zeros(len(nulls))], mask=~valid[take]),
+                ],
+                names=[f.name for f in fields],
             )
-            .orderBy(F.desc("maxsim"), F.asc(key_col))
-            .limit(k)
-        )
-    e = F.col(emb_col).cast("array<double>")
-    token_maxes = []
-    for qt in query_tokens:
-        qlit = F.lit([float(x) for x in qt])  # one py4j call, not dim
-        chunk_dots = [
-            F.aggregate(
-                F.zip_with(
-                    F.slice(e, ci * width + 1, width), qlit, lambda a, b: a * b
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for ci in range(n_chunks)
-        ]
-        token_maxes.append(
-            F.greatest(*chunk_dots) if len(chunk_dots) > 1 else chunk_dots[0]
-        )
-    total_fp = None
-    for tm in token_maxes:
-        fp = F.round(tm * 1_000_000.0, 0).cast("bigint")
-        total_fp = fp if total_fp is None else total_fp + fp
+
     return (
-        df.select(
-            F.col(key_col),
-            (total_fp.cast("double") / 1_000_000.0).alias("maxsim"),
-        )
+        df.select(key_col, emb_col)
+        .mapInArrow(run, StructType(fields))
         .orderBy(F.desc("maxsim"), F.asc(key_col))
         .limit(k)
     )
+
 
 def mmr_topk(
     df: DataFrame,
@@ -778,11 +673,10 @@ def mmr_topk(
     (left-to-right fold = DuckDB list_dot_product); the pair
     similarities use the same numpy fold (functions/vector.fold_dot)
     over fold-normalized rows, and every greedy comparison happens on
-    half-away-from-zero 1e-6 fixed-point integers, so the selection
-    replays DuckDB's recursive-CTE greedy bit-for-bit at any width.
+    1e-6 fixed-point integers rounded as Spark rounds (``round_half_up``),
+    so the selection replays DuckDB's recursive-CTE greedy bit-for-bit
+    at any width.
     """
-    import math
-
     rows = (
         batch_topk(
             df, [qvec], m, key_col, emb_col, qnorms=[literal_qnorm(qvec)],
@@ -794,11 +688,7 @@ def mmr_topk(
     )  # m rows by contract
 
     def fp(x: float) -> int:
-        # half away from zero on the exact double, no +0.5 drift
-        y = x * 1_000_000.0
-        f = math.floor(abs(y))
-        r = f + 1 if abs(y) - f >= 0.5 else f
-        return int(math.copysign(r, y)) if y != 0.0 else 0
+        return int(round_half_up(x * 1_000_000.0))
 
     ids = [r[0] for r in rows]
     rels = [float(r["score"]) for r in rows]
@@ -828,8 +718,6 @@ def mmr_topk(
             out_rows.append((len(out_rows) + 1, ids[best_i], best_fp))
             msim = np.maximum(msim, fold_dot(ens, ens[best_i]))
             remaining.discard(best_i)
-
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     schema = StructType(
         [

@@ -434,8 +434,11 @@ class UpsertTable:
             if self._base_schema is None:
                 self._base_schema = self._resolve(manifest, cached_schema=False).schema
             types = {f.name: f.dataType for f in self._base_schema if f.name != "v"}
-            cols = upd.columns if evolve_schema else list(types)
-            upd = upd.select(*[F.col(c).cast(types[c]) if c in types else c for c in cols])
+            # A batch already in the table's (name, type) order needs no
+            # projection; skipping it saves its py4j round trips.
+            if [(f.name, f.dataType) for f in upd.schema] != list(types.items()):
+                cols = upd.columns if evolve_schema else list(types)
+                upd = upd.select(*[F.col(c).cast(types[c]) if c in types else c for c in cols])
         rec = self._write_version(
             upd.coalesce(1) if small else upd, _next_version(manifest), manifest,
             shuffle=not small,

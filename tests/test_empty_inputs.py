@@ -118,12 +118,6 @@ def test_retrieval_ops_on_empty_inputs(spark):
 
     empty_emb = Catalog(spark, SF_DIR).embeddings.limit(0)
     assert maxsim_topk(empty_emb, em.MAXSIM_QTOKENS, k=5).count() == 0
-    assert (
-        maxsim_topk(
-            empty_emb, em.MAXSIM_QTOKENS, k=5, use_arrow_fast_path=True
-        ).count()
-        == 0
-    )
     out = mmr_topk(empty_emb, em.QVEC, k=5, m=10)
     assert out.count() == 0
     assert out.columns == ["mmr_rank", "vec_id", "mmr_score"]

@@ -329,15 +329,12 @@ def test_sampled_centroids_no_global_sort(spark, sf_dir):
 
 
 def test_neardup_arrow_fast_path_single_shuffle(spark, sf_dir):
-    """The Arrow pair scorer is one hash-shuffle on the block key into
-    applyInPandas — no extra Exchange, no join, no sort."""
+    """The pair scorer is one hash-shuffle on the block key into one
+    grouped Arrow call — no extra Exchange, no join, no sort."""
     from external_benchmarks_spark.operators.dedup import embedding_neardup_pairs
 
     df = embedding_neardup_pairs(
-        Catalog(spark, sf_dir).embeddings,
-        block_col="label",
-        threshold=0.2,
-        use_arrow_fast_path=True,
+        Catalog(spark, sf_dir).embeddings, block_col="label", threshold=0.2
     )
     plan = _plan(df)
     assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan

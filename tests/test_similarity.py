@@ -354,22 +354,46 @@ def test_mmr_diversifies_vs_pure_relevance(spark, sf_dir):
     assert div_ids != rel  # lam=0 ignores relevance after the seed
 
 
+def _catalyst_maxsim(df, query_tokens, k, n_chunks=8):
+    """Reference: the Catalyst MaxSim (slice -> zip_with fold per chunk,
+    greatest() across chunks, per-token 1e-6 fixed point summed as
+    BIGINT), ranked by (maxsim desc, key)."""
+    width = len(query_tokens[0])
+    e = F.col("embedding").cast("array<double>")
+    total = None
+    for qt in query_tokens:
+        qlit = F.lit([float(x) for x in qt])
+        dots = [
+            F.aggregate(
+                F.zip_with(F.slice(e, ci * width + 1, width), qlit, lambda a, b: a * b),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            for ci in range(n_chunks)
+        ]
+        tm = F.greatest(*dots) if len(dots) > 1 else dots[0]
+        fp = F.round(tm * 1_000_000.0, 0).cast("bigint")
+        total = fp if total is None else total + fp
+    return [
+        (r[0], r[1])
+        for r in df.select("vec_id", (total.cast("double") / 1_000_000.0).alias("maxsim"))
+        .orderBy(F.desc("maxsim"), F.asc("vec_id"))
+        .limit(k)
+        .collect()
+    ]
+
+
 def test_maxsim_arrow_fast_path_matches_hof(spark, sf_dir):
-    """The einsum fast path must produce the same ranking (and scores to
-    1e-6) as the oracle-parity Catalyst form, including at a
-    reference-like width (2,688 dims = 8 chunks x 336)."""
+    """The one einsum-and-fold path must give the Catalyst form's ids
+    and score bits, also at a reference-like width (2,688 dims = 8
+    chunks x 336)."""
     from external_benchmarks_spark.operators.similarity import maxsim_topk
 
     import __spark_entry__ as em
 
     emb = Catalog(spark, sf_dir).embeddings
-    hof = maxsim_topk(emb, em.MAXSIM_QTOKENS, k=20).collect()
-    fast = maxsim_topk(
-        emb, em.MAXSIM_QTOKENS, k=20, use_arrow_fast_path=True
-    ).collect()
-    assert [r["vec_id"] for r in hof] == [r["vec_id"] for r in fast]
-    for a, b in zip(hof, fast):
-        assert abs(a["maxsim"] - b["maxsim"]) < 1e-5
+    got = [tuple(r) for r in maxsim_topk(emb, em.MAXSIM_QTOKENS, k=20).collect()]
+    assert got == _catalyst_maxsim(emb, em.MAXSIM_QTOKENS, 20)
 
     # wide synthetic check: 2,688 dims, 8 chunks of 336
     import random
@@ -380,15 +404,44 @@ def test_maxsim_arrow_fast_path_matches_hof(spark, sf_dir):
         "vec_id bigint, embedding array<double>",
     )
     qtok = [[rnd.uniform(-1, 1) for _ in range(336)] for _ in range(4)]
-    h = maxsim_topk(wide, qtok, k=10, n_chunks=8).collect()
-    f = maxsim_topk(
-        wide, qtok, k=10, n_chunks=8, use_arrow_fast_path=True
-    ).collect()
-    assert [r["vec_id"] for r in h] == [r["vec_id"] for r in f]
+    got = [tuple(r) for r in maxsim_topk(wide, qtok, k=10, n_chunks=8).collect()]
+    assert got == _catalyst_maxsim(wide, qtok, 10)
+
+    # large cancelling terms: any other summation order moves the 1e-6
+    # fixed point by many units, so only the fold's bits match
+    big = spark.createDataFrame(
+        [(i, [rnd.uniform(-1, 1) * 10 ** rnd.randint(0, 5) for _ in range(256)]) for i in range(60)],
+        "vec_id bigint, embedding array<double>",
+    )
+    qtok = [[rnd.uniform(-1, 1) * 10 ** rnd.randint(0, 5) for _ in range(32)] for _ in range(4)]
+    got = [tuple(r) for r in maxsim_topk(big, qtok, k=10, n_chunks=8).collect()]
+    assert got == _catalyst_maxsim(big, qtok, 10)
+
+
+def test_maxsim_null_element_chunk(spark):
+    """A chunk holding a null element is skipped, as greatest() skips its
+    null dot; a row with no valid chunk scores null and ranks last."""
+    from external_benchmarks_spark.operators.similarity import maxsim_topk
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.5, 0.5]),
+            (2, [None, 0.0, 0.9, 0.1]),  # only chunk 2 counts
+            (3, [0.9, None, 0.2, 0.2]),  # only chunk 2 counts
+            (4, [None, 1.0, 1.0, None]),  # no valid chunk
+            (5, [0.2, 0.2, 0.3, 0.1]),
+        ],
+        "vec_id bigint, embedding array<double>",
+    )
+    q = [[1.0, 0.25]]
+    got = [tuple(r) for r in maxsim_topk(df, q, k=5, n_chunks=2).collect()]
+    assert got == _catalyst_maxsim(df, q, 5, n_chunks=2)
+    assert got[-1] == (4, None)
+    assert dict(got)[2] == 0.925
 
 
 def test_maxsim_rejects_width_mismatch_and_handles_one_chunk(spark):
-    """Both tiers must fail loudly when n_chunks*width != embedding
+    """MaxSim must fail loudly when n_chunks*width != embedding
     length (no silent partial-chunk scoring), and n_chunks=1 must work
     (single-token documents)."""
     import pytest
@@ -402,8 +455,6 @@ def test_maxsim_rejects_width_mismatch_and_handles_one_chunk(spark):
     bad_q = [[1.0] * 16]  # 8 chunks x 16 = 128 != 64
     with pytest.raises(Exception):
         maxsim_topk(df, bad_q, k=1, n_chunks=8).collect()
-    with pytest.raises(Exception):
-        maxsim_topk(df, bad_q, k=1, n_chunks=8, use_arrow_fast_path=True).collect()
     # one chunk of full width == plain dot product
     one = maxsim_topk(df, [[1.0] * 64], k=1, n_chunks=1).collect()
     assert one[0]["maxsim"] == float(sum(range(64)))

@@ -208,3 +208,29 @@ def test_filtered_topk_string_keys_and_extra_cols(spark):
     assert [(r.doc, r.n, r.score) for r in got.collect()] == [
         ("B", 3, 3.0), ("a", 1, 3.0), ("aa", 5, 3.0), ("ab", 2, 3.0)
     ]
+
+
+def test_round_half_up_is_spark_round():
+    """``round_half_up`` equals ``BigDecimal(repr(v))`` HALF_UP, Spark's
+    ``round(v, 0)`` on a double: random values, every x.5 in [-50, 50)
+    and its two float neighbours, and the values where ``floor(v + 0.5)``
+    goes wrong."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from external_benchmarks_spark.functions.vector import round_half_up
+
+    rng = np.random.default_rng(0)
+    halves = np.arange(-50, 50) + 0.5
+    vals = np.concatenate(
+        [
+            rng.normal(0, 1e3, 200_000),
+            halves,
+            np.nextafter(halves, np.inf),
+            np.nextafter(halves, -np.inf),
+            [0.49999999999999994, -0.49999999999999994, 2.0**52 + 1, -(2.0**53), 0.0, -0.0],
+        ]
+    )
+    got = round_half_up(vals)
+    want = [Decimal(repr(float(v))).quantize(Decimal(1), rounding=ROUND_HALF_UP) for v in vals]
+    assert all(Decimal(float(g)) == w for g, w in zip(got, want))
+    assert not np.signbit(got[-1])  # -0.0 rounds to 0, as BigDecimal has no -0

@@ -44,7 +44,6 @@ def _pairs(spark, sf_dir, cap=None, bits=2):
         Catalog(spark, sf_dir).embeddings,
         block_col="label",
         threshold=THRESHOLD,
-        use_arrow_fast_path=True,
         max_block_rows=cap,
         subblock_bits=bits,
     )

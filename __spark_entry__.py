@@ -3905,7 +3905,7 @@ def q_details_prune(spark, sf):
 
 
 def q_group_embedding_stats(spark, sf):
-    # applyInPandas grouped numpy kernel (per-category geometry). The
+    # applyInArrow grouped numpy kernel (per-category geometry). The
     # kernel sorts each group by vec_id (run-deterministic fold order) and
     # the contract rounds to 6 decimals, absorbing numpy-vs-SQL last-ulp
     # summation differences — full hash match vs a DuckDB re-derivation

@@ -21,6 +21,19 @@ Two forms of one arithmetic, per SURVEY.md §7.4:
      double, so a bound carried through it bounds the 1e-6 fixed-point
      scores (MaxSim, SemDeDup's centroid cosine, MMR).
 
+Vectors reach numpy one way: ``arrow_rows`` reads a list column of an
+Arrow batch into a float64 matrix and marks the rows it holds (a null
+vector, a null element or a wrong length is left out, as the fold
+scores it null). Four wrappers use it:
+- ``batch_topk``: the ``mapInArrow`` top-k adapter;
+- ``vector_udf``: a scalar ``arrow_udf`` that gives NULL for a row
+  ``arrow_rows`` leaves out (LSH bucket, IVF cell);
+- ``collect_queries``: a bounded query table on the driver, every row a
+  whole vector or ``ValueError``;
+- ``hash_sample``: the engine-portable ``ORDER BY md5(key), key LIMIT n``
+  sample (IVF centroids, PQ codebooks, projection samples) on the
+  driver, read as ``collect_queries`` reads.
+
 All element arithmetic is done in DOUBLE regardless of storage type
 (embeddings are stored float32 for size, SURVEY.md §7.4).
 """
@@ -270,18 +283,58 @@ def _sort_keys(col: pa.Array) -> np.ndarray:
     return np.unique(keys, return_inverse=True)[1] if keys.dtype == object else keys
 
 
+def _whole_rows(col: pa.Array, name: str) -> np.ndarray:
+    """A list column that must hold only whole vectors, all as long as
+    its first non-null one, as an (n x d) float64 matrix."""
+    lens = pc.list_value_length(col).drop_null()
+    d = lens[0].as_py() if len(lens) else 0
+    mat, ok = arrow_rows(col, d)
+    if not ok.all():
+        raise ValueError(f"every {name} must be a non-null vector of {d} numbers")
+    return mat
+
+
 def collect_queries(
     queries: DataFrame, query_key: str, query_emb: str
 ) -> tuple[StructField, pa.Array, np.ndarray]:
     """A query table, bounded by contract, on the driver: its key field,
     its keys and its (Q x D) float64 vectors."""
     tbl = queries.select(query_key, query_emb).toArrow()
-    emb = tbl.column(1).combine_chunks()
-    d = pc.list_value_length(emb)[0].as_py() if len(emb) else 0
-    mat, ok = arrow_rows(emb, d) if len(emb) else (np.empty((0, 0)), [])
-    if not all(ok):
-        raise ValueError(f"every {query_emb} must be a non-null vector of {d} numbers")
+    mat = _whole_rows(tbl.column(1).combine_chunks(), query_emb)
     return queries.schema[query_key], tbl.column(0).combine_chunks(), mat
+
+
+def hash_sample(
+    df: DataFrame, n: int, key_col: str, emb_col: str, salt: str = ""
+) -> tuple[list, np.ndarray]:
+    """The ``n`` rows that sort first by ``md5(key || salt)``, then key:
+    a seeded-hash uniform sample any SQL engine reproduces exactly
+    (``ORDER BY md5(CAST(key AS VARCHAR) || salt), key LIMIT n``), as
+    (keys, (n x D) float64 matrix). One TakeOrderedAndProject job:
+    per-partition top-n heaps and one driver merge, no global sort.
+    A sampled row that is not a whole vector raises ``ValueError``."""
+    key = F.col(key_col)
+    top = df.orderBy(F.md5(F.concat(key.cast("string"), F.lit(salt))), key).limit(n)
+    _, keys, mat = collect_queries(top, key_col, emb_col)
+    return keys.to_pylist(), mat
+
+
+def vector_udf(fn, d: int, dtype: str):
+    """A scalar Arrow UDF of one vector column: ``fn`` maps an (n x d)
+    float64 matrix of a batch's rows to n values of Spark type
+    ``dtype``. A row ``arrow_rows`` leaves out gives NULL, as a SQL
+    scalar function of NULL does."""
+
+    def run(col: pa.Array) -> pa.Array:
+        mat, ok = arrow_rows(col, d)
+        if ok.all():
+            return pa.array(fn(mat))
+        part = fn(mat[ok])
+        vals = np.zeros(len(col), part.dtype)
+        vals[ok] = part
+        return pa.array(vals, mask=~ok)
+
+    return F.arrow_udf(run, dtype)
 
 
 def batch_topk(

@@ -21,7 +21,6 @@ integer outputs hash-match the DuckDB oracle exactly.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -312,11 +311,14 @@ def _subblock_key(
 
     1. **Sign-LSH band** (similarity-preserving): blocks whose row count
        exceeds ``max_block_rows`` get their key suffixed with an
-       ``n_bits``-bit hyperplane-sign band (seeded planes, dim inferred
-       from the data), splitting the block into up to 2^n_bits
-       sub-blocks. Near-duplicates land in the same sub-block with
-       probability (1 - theta/pi)^n_bits — high for cosine near 1 — so
-       this level rarely costs real pairs.
+       ``n_bits``-bit hyperplane-sign band (seeded planes drawn for each
+       vector length, as ``_block_pairs`` pairs rows only within one
+       length), splitting the block into up to 2^n_bits sub-blocks.
+       Near-duplicates land in the same sub-block with probability
+       (1 - theta/pi)^n_bits — high for cosine near 1 — so this level
+       rarely costs real pairs. A null vector or a null element has no
+       band (NULL): its key stays the block's own, and it pairs with
+       nothing anyway.
     2. **Hash-salt fallback** (hard bound): a sub-block STILL over the
        cap after banding — the adversarial case of a giant block of
        near-identical vectors, which no similarity-preserving split can
@@ -330,17 +332,21 @@ def _subblock_key(
     memory/fan-out bound, the same trade MinHash-LSH banding makes.
 
     Shape: two groupBy(count)+join rounds on the (sub-)block key — the
-    second reuses the first's partitioning — plus one Arrow-batched
-    matmul for the band. Opt-in via ``max_block_rows``.
+    second reuses the first's partitioning — plus one ``arrow_udf``
+    matmul per vector length of a batch for the band (rows read by
+    ``functions/vector.arrow_rows``). Opt-in via ``max_block_rows``.
     """
-    from pyspark.sql.types import LongType
 
-    @F.pandas_udf(LongType())
-    def band(emb: pd.Series) -> pd.Series:
-        m = np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
-        planes = np.random.RandomState(seed).randn(m.shape[1], n_bits)
-        bits = (m @ planes) > 0
-        return pd.Series((bits @ (1 << np.arange(n_bits))).astype(np.int64))
+    @F.arrow_udf("bigint")
+    def band(emb: pa.Array) -> pa.Array:
+        lens = pc.fill_null(pc.list_value_length(emb), -1).to_numpy()
+        out, ok = np.zeros(len(emb), np.int64), np.zeros(len(emb), bool)
+        for d in np.unique(lens[lens >= 0]):
+            m, valid = arrow_rows(emb, d)
+            bits = (m @ np.random.RandomState(seed).randn(d, n_bits)) > 0
+            out = np.where(valid, bits @ (1 << np.arange(n_bits)), out)
+            ok |= valid
+        return pa.array(out, mask=~ok)
 
     sizes = df.groupBy(block_col).agg(F.count(F.lit(1)).alias("_blk_n"))
     banded = (

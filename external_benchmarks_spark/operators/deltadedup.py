@@ -515,12 +515,14 @@ def _read_centroids(path: str):
     """The (n_cells x dim) centroid matrix, DRIVER-SIDE from the single
     published parquet file (see _write_centroids), ordered by cell id —
     the n_cells-row twin of store_cell_count's footer read; no Spark
-    job."""
-    import numpy as np
+    job. Read through functions/vector.arrow_rows: a row that is not a
+    whole vector raises ValueError."""
     import pyarrow.parquet as pq
 
+    from external_benchmarks_spark.functions.vector import _whole_rows
+
     tbl = pq.read_table(_single_centroid_file(path)).sort_by("_cid")
-    return np.vstack(tbl.column("_cv").to_numpy(zero_copy_only=False))
+    return _whole_rows(tbl.column("_cv").combine_chunks(), "_cv")
 
 
 def _assign_cells_vectorized(
@@ -558,19 +560,17 @@ def _assign_cells_vectorized(
     doesn't produce cross-engine near-ties — and it is continuously
     re-validated by the full oracle mirror every test run; exact ties
     (duplicate vectors) are safe by the shared first-max/asc-cid
-    tiebreak."""
+    tiebreak. A ``functions/vector.vector_udf``: a null vector, a null
+    element or a length other than the centroids' dim gets a NULL cell,
+    so it joins no cell."""
     import numpy as np
+
+    from external_benchmarks_spark.functions.vector import vector_udf
 
     cmat = np.ascontiguousarray(
         np.asarray(cent, dtype=np.float64).T
     )  # (dim, k)
-
-    @F.pandas_udf("bigint")
-    def assign(emb):
-        import pandas as pd
-
-        m = np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
-        return pd.Series(np.argmax(m @ cmat, axis=1).astype(np.int64))
+    assign = vector_udf(lambda m: np.argmax(m @ cmat, axis=1), cmat.shape[0], "bigint")
 
     return df.select(
         F.col(key_col),

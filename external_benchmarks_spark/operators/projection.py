@@ -8,10 +8,11 @@ Spark mapping (SURVEY.md §2.8):
   partitions — works at any scale).
 - t-SNE is inherently driver-side: like the reference (which t-SNEs a
   bounded sample with sklearn), ``tsne_project`` samples ≤ ``max_rows``
-  rows in Spark, then runs an exact numpy implementation of the
-  published algorithm (van der Maaten & Hinton, JMLR 2008: binary-search
-  perplexity calibration, early exaggeration, momentum gradient descent)
-  — no sklearn dependency. O(n²) by design; the sample bound is the
+  rows in Spark (functions/vector.hash_sample, salted by ``seed``), then
+  runs an exact numpy implementation of the published algorithm (van
+  der Maaten & Hinton, JMLR 2008: binary-search perplexity calibration,
+  early exaggeration, momentum gradient descent) — no sklearn
+  dependency. O(n²) by design; the sample bound is the
   scale contract.
 - UMAP proper needs umap-learn/numba; its slot is covered by
   ``spectral_project`` — Laplacian eigenmaps over the kNN graph of a
@@ -27,6 +28,8 @@ from pyspark.ml.feature import PCA
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from external_benchmarks_spark.functions.vector import hash_sample
 
 
 def pca_project(
@@ -56,22 +59,6 @@ def explained_variance(df: DataFrame, k: int = 2, emb_col: str = "embedding") ->
     vecs = df.select(array_to_vector(F.col(emb_col).cast("array<double>")).alias("_v"))
     model = PCA(k=k, inputCol="_v", outputCol="_pc").fit(vecs)
     return [float(x) for x in model.explainedVariance]
-
-
-def _sample_matrix(
-    df: DataFrame, max_rows: int, key_col: str, emb_col: str, seed: int
-) -> tuple[list, np.ndarray]:
-    """Deterministic bounded sample: hash-ordered (engine-portable, no
-    RNG), collected as (keys, float64 matrix). The ONLY driver
-    materialization in this module, capped at max_rows."""
-    rows = (
-        df.select(F.col(key_col).alias("k"), F.col(emb_col).cast("array<double>").alias("e"))
-        .orderBy(F.md5(F.concat(F.col(key_col).cast("string"), F.lit(str(seed)))), F.col(key_col))
-        .limit(max_rows)
-        .collect()
-    )
-    keys = [r["k"] for r in rows]
-    return keys, np.vstack([np.asarray(r["e"], dtype=np.float64) for r in rows])
 
 
 def _tsne_numpy(
@@ -151,7 +138,7 @@ def tsne_project(
     the result redistribution; the O(n²) core runs on ≤ max_rows points
     driver-side, exactly like the reference."""
     spark = df.sparkSession
-    keys, x = _sample_matrix(df, max_rows, key_col, emb_col, seed)
+    keys, x = hash_sample(df, max_rows, key_col, emb_col, salt=str(seed))
     y = _tsne_numpy(x, n_components, perplexity, n_iter, seed)
     out = [(k, [float(v) for v in row]) for k, row in zip(keys, y)]
     return spark.createDataFrame(out, [key_col, "tsne"])
@@ -171,7 +158,7 @@ def spectral_project(
     initializes from exactly this spectral embedding; the umap-learn
     refinement can be swapped in where installed)."""
     spark = df.sparkSession
-    keys, x = _sample_matrix(df, max_rows, key_col, emb_col, seed)
+    keys, x = hash_sample(df, max_rows, key_col, emb_col, salt=str(seed))
     n = x.shape[0]
     k = min(n_neighbors, n - 1)
     sum_x = (x * x).sum(axis=1)
@@ -216,7 +203,7 @@ def umap_project(
             "Laplacian-eigenmaps initialization UMAP itself starts from)"
         ) from e
     spark = df.sparkSession
-    keys, x = _sample_matrix(df, max_rows, key_col, emb_col, seed)
+    keys, x = hash_sample(df, max_rows, key_col, emb_col, salt=str(seed))
     reducer = umap.UMAP(
         n_components=n_components,
         n_neighbors=min(n_neighbors, max(2, x.shape[0] - 1)),

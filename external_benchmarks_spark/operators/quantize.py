@@ -19,10 +19,26 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from external_benchmarks_spark.functions.vector import _to_double, round_half_up
+from external_benchmarks_spark.functions.vector import (
+    _to_double,
+    arrow_rows,
+    hash_sample,
+    round_half_up,
+    spark_order,
+)
 
 
 def quantize_vector(vals: Sequence[float]) -> tuple[list[int], float]:
@@ -96,26 +112,29 @@ def pq_codebooks(
     codebook with ``ORDER BY md5(CAST(key AS VARCHAR)), key LIMIT n``.
     Trades recall vs k-means-trained codebooks; use this when the index
     must be independently auditable. Returns float64 [m, n_codes, dsub];
-    only n_codes rows reach the driver (TakeOrderedAndProject, no sort).
+    only n_codes rows reach the driver (functions/vector.hash_sample:
+    TakeOrderedAndProject, no sort).
     """
-    import numpy as np
+    return _codebooks(hash_sample(df, n_codes, key_col, emb_col)[1], m_subspaces)
 
-    rows = (
-        df.select(
-            F.col(key_col).alias("k"),
-            F.col(emb_col).cast("array<double>").alias("e"),
-        )
-        .orderBy(F.md5(F.col(key_col).cast("string")), F.col(key_col))
-        .limit(n_codes)
-        .collect()
-    )
-    mat = np.asarray([r["e"] for r in rows], dtype=np.float64)
+
+def _codebooks(mat: np.ndarray, m_subspaces: int) -> np.ndarray:
+    """[m, n_codes, dsub] codebooks whose code c in subspace j is row c's
+    j-th slice of ``mat`` (n_codes x dim)."""
     dim = mat.shape[1]
     if dim % m_subspaces:
         raise ValueError(f"dim {dim} not divisible by {m_subspaces} subspaces")
-    dsub = dim // m_subspaces
-    # [m, n_codes, dsub]: subspace j's code c is sample-row c's j-th slice
-    return mat.reshape(len(rows), m_subspaces, dsub).transpose(1, 0, 2).copy()
+    return mat.reshape(len(mat), m_subspaces, dim // m_subspaces).transpose(1, 0, 2).copy()
+
+
+def _integral_key(df: DataFrame, key_col: str) -> None:
+    """The PQ codes layout keys rows by a bigint, as the serving tier
+    reads them: refuse any other key type before a job runs."""
+    if not isinstance(df.schema[key_col].dataType, IntegralType):
+        raise ValueError(
+            f"{key_col} must be an integral column, not "
+            f"{df.schema[key_col].dataType.simpleString()}: PQ codes are keyed by bigint"
+        )
 
 
 def pq_encode(
@@ -133,33 +152,38 @@ def pq_encode(
     Distances accumulate as per-term FLOOR((x-c)^2 * 1e6) BIGINTs, so
     the argmin (first-minimum on ties, numpy and SQL alike) is exact
     integer arithmetic any engine replays bit-for-bit — the same
-    fixed-point device as the rest of the vector family. Arrow-batched
-    mapInPandas; one [batch, n_codes, dsub] broadcasted numpy op per
-    subspace, no Python-per-row work.
+    fixed-point device as the rest of the vector family. One
+    ``mapInArrow``: each batch's vectors come through
+    ``functions/vector.arrow_rows``, then one [batch, n_codes, dsub]
+    broadcasted numpy op per subspace, no Python-per-row work.
+
+    ``key_col`` must be integral (``ValueError`` otherwise): the codes
+    are keyed by bigint. A null vector, a null element or a length
+    other than m * dsub raises ``ValueError`` naming ``emb_col``, since
+    an index has no code for a row with no vector.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegralType
-
+    _integral_key(df, key_col)
     cb = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, dsub = cb.shape
-    extras = list(extra_cols)
-    # Integer extras (centroid_id, integer payload codes) land as
-    # bigint; any other extra passes through with its own Spark type.
-    extra_types = {
-        c: "bigint"
-        if isinstance(df.schema[c].dataType, IntegralType)
-        else df.schema[c].dataType.simpleString()
-        for c in extras
-    }
+    # The key and integer extras (centroid_id, integer payload codes)
+    # land as bigint; any other extra passes through with its own type.
+    out_cols = [key_col, *extra_cols]
+    bigint = {c for c in out_cols if isinstance(df.schema[c].dataType, IntegralType)}
+    fields = [
+        StructField(c, LongType() if c in bigint else df.schema[c].dataType)
+        for c in out_cols
+    ]
+    fields.insert(1, StructField("pq_codes", ArrayType(IntegerType())))
 
     def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:  # empty partitions yield empty batches
-                continue
-            mat = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
+        for b in batches:
+            mat, ok = arrow_rows(b.column(emb_col), m * dsub)
+            if not ok.all():
+                raise ValueError(
+                    f"pq_encode: every {emb_col} must be a non-null vector "
+                    f"of {m * dsub} numbers"
+                )
+            codes = np.empty((len(mat), m), dtype=np.int32)
             for j in range(m):
                 sub = mat[:, j * dsub : (j + 1) * dsub]
                 diff = sub[:, None, :] - cb[j][None, :, :]
@@ -169,17 +193,15 @@ def pq_encode(
                     .sum(axis=2)
                 )
                 codes[:, j] = d.argmin(axis=1)
-            out = {key_col: pdf[key_col].to_numpy(), "pq_codes": list(codes)}
-            for c in extras:  # e.g. centroid_id for the IVF-PQ compose
-                out[c] = pdf[c].to_numpy()
-                if extra_types[c] == "bigint":
-                    out[c] = out[c].astype("int64", copy=False)
-            yield pd.DataFrame(out)
+            arrays = [
+                b.column(c).cast(pa.int64()) if c in bigint else b.column(c)
+                for c in out_cols
+            ]
+            offsets = np.arange(0, m * len(mat) + 1, m, dtype=np.int32)
+            arrays.insert(1, pa.ListArray.from_arrays(offsets, codes.ravel()))
+            yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in fields])
 
-    extra_schema = "".join(f", {c} {t}" for c, t in extra_types.items())
-    return df.select(key_col, emb_col, *extras).mapInPandas(
-        encode, f"{key_col} bigint, pq_codes array<int>{extra_schema}"
-    )
+    return df.select(key_col, emb_col, *extra_cols).mapInArrow(encode, StructType(fields))
 
 
 def pq_lut(codebooks, q: Sequence[float]):
@@ -189,8 +211,6 @@ def pq_lut(codebooks, q: Sequence[float]):
     is per TERM, so the integer sum is order-independent and any engine
     (the Spark plans' literal arrays, the serving tier, the DuckDB
     oracle) replays it exactly."""
-    import numpy as np
-
     cb = np.asarray(codebooks, dtype=np.float64)
     m, _, dsub = cb.shape
     qsub = np.asarray(q, dtype=np.float64).reshape(m, 1, dsub)
@@ -270,12 +290,16 @@ def pq_adc_topk_batch(
     ``query_rows`` passes pre-collected (query_key, query_emb) rows so
     a caller that already collected the bounded request batch (e.g. to
     resolve probes) doesn't pay a second driver job.
-    """
-    import numpy as np
-    import pandas as pd
 
+    One ``mapInArrow``: codes come through ``functions/vector.arrow_rows``
+    and each query's rows are ordered by ``spark_order``, as the serving
+    tier orders them; a null code row or one with a null element scores
+    null and ranks last, as in ``pq_adc_topk``, and so does a row of
+    another length. ``key_col`` must be integral.
+    """
     from pyspark.sql.window import Window
 
+    _integral_key(codes_df, key_col)
     if allowed_cells is not None and cell_col is None:
         raise ValueError(
             "allowed_cells requires cell_col (the codes' cell column); "
@@ -301,47 +325,37 @@ def pq_adc_topk_batch(
         }
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.vstack(pdf["pq_codes"].to_numpy()).astype(np.int64)
-            keys = pdf[key_col].to_numpy()
-            cells = (
-                pdf[cell_col].to_numpy().astype(np.int64)
-                if allowed is not None
-                else None
-            )
-            n = len(keys)
-            scores = np.zeros((len(qids), n), dtype=np.int64)
+        for b in batches:
+            codes, ok = arrow_rows(b.column("pq_codes"), m)
+            codes = codes.astype(np.int64)
+            keys = b.column(key_col).to_numpy(zero_copy_only=False)
+            scores = np.zeros((len(qids), len(keys)), dtype=np.int64)
             for j in range(m):
                 scores += lut[:, j, :][:, codes[:, j]]
-            out_q, out_k, out_s = [], [], []
-            for qi in range(len(qids)):
+            cand = np.ones(len(keys), bool)
+            if allowed is not None:
+                cells = b.column(cell_col).to_numpy(zero_copy_only=False)
+            idx, qpos = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+            for qi, qid in enumerate(qids):
                 if allowed is not None:
-                    sub = np.nonzero(
-                        np.isin(cells, allowed.get(int(qids[qi]), ()))
-                    )[0]
-                    if len(sub) == 0:
-                        continue
-                    skeys, sscores = keys[sub], scores[qi][sub]
-                else:
-                    skeys, sscores = keys, scores[qi]
-                order = np.lexsort((skeys, -sscores))[:k]
-                out_q.append(np.full(len(order), qids[qi], dtype=np.int64))
-                out_k.append(skeys[order])
-                out_s.append(sscores[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    query_key: np.concatenate(out_q),
-                    key_col: np.concatenate(out_k),
-                    "pq_score": np.concatenate(out_s),
-                }
+                    cand = np.isin(cells, allowed.get(int(qid), ()))
+                rows, nulls = np.flatnonzero(cand & ok), np.flatnonzero(cand & ~ok)
+                rows = rows[spark_order(scores[qi, rows], keys[rows])[:k]]
+                nulls = nulls[np.argsort(keys[nulls], kind="stable")][: max(k - len(rows), 0)]
+                idx += [rows, nulls]
+                qpos.append(np.full(len(rows) + len(nulls), qi))
+            idx, qpos = np.concatenate(idx), np.concatenate(qpos)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[qpos]),
+                    b.column(key_col).take(pa.array(idx)).cast(pa.int64()),
+                    pa.array(scores[qpos, idx], mask=~ok[idx]),
+                ],
+                names=[query_key, key_col, "pq_score"],
             )
 
     in_cols = [key_col, "pq_codes"] + ([cell_col] if allowed is not None else [])
-    survivors = codes_df.select(*in_cols).mapInPandas(
+    survivors = codes_df.select(*in_cols).mapInArrow(
         score, f"{query_key} bigint, {key_col} bigint, pq_score bigint"
     )
     w = Window.partitionBy(query_key).orderBy(
@@ -435,40 +449,37 @@ def quantized_dot_topk(
     """Top-k by int8-quantized dot product against a quantized query.
 
     score_q = sum(q_i * qq_i) in BIGINT (exact); approx_score rescales it
-    back to the float domain. Plans as scan -> mapInPandas ->
+    back to the float domain. Plans as scan -> mapInArrow ->
     TakeOrderedAndProject: per-partition top-k heaps, one driver merge —
     no global sort, no shuffle of the table.
 
-    Each Arrow batch is quantized and scored with one int64 matmul —
-    bit-identical to ``quantize_embeddings`` followed by a BIGINT fold,
-    by construction: integer products/sums are exact in any order, the
-    scale chain uses the same IEEE ops, and quantization rounds with
-    ``round_half_up``, Spark's ``round(x, 0)`` on a double.
+    Each Arrow batch (read by ``functions/vector.arrow_rows``) is
+    quantized and scored with one int64 matmul — bit-identical to
+    ``quantize_embeddings`` followed by a BIGINT fold, by construction:
+    integer products/sums are exact in any order, the scale chain uses
+    the same IEEE ops, and quantization rounds with ``round_half_up``,
+    Spark's ``round(x, 0)`` on a double. A null vector, a null element
+    or a length other than the query's scores null in both columns and
+    ranks last, as that fold does.
     """
-    import numpy as np
-    import pandas as pd
-
     qq, qscale = quantize_vector(query)
     qarr = np.asarray(qq, dtype=np.int64)
 
     def score_batches(batches):
-        for pdf in batches:
-            m = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
+        for b in batches:
+            m, ok = arrow_rows(b.column(emb_col), len(qarr))
             amax = np.abs(m).max(axis=1)
             scale = np.where(amax > 0.0, amax / 127.0, 1.0)
             v = m / scale[:, None]
             sq = round_half_up(v).astype(np.int64) @ qarr
             ap = (sq.astype(np.float64) * scale) * qscale
-            yield pd.DataFrame(
-                {
-                    key_col: pdf[key_col].to_numpy(),
-                    "score_q": sq,
-                    "approx_score": ap,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(key_col), pa.array(sq, mask=~ok), pa.array(ap, mask=~ok)],
+                names=[key_col, "score_q", "approx_score"],
             )
 
     key_type = df.schema[key_col].dataType.simpleString()
-    scored = df.select(key_col, emb_col).mapInPandas(
+    scored = df.select(key_col, emb_col).mapInArrow(
         score_batches,
         f"{key_col} {key_type}, score_q bigint, approx_score double",
     )

@@ -42,10 +42,12 @@ from external_benchmarks_spark.functions.vector import (
     collect_queries,
     dot_product,
     fold_dot,
+    hash_sample,
     l2_norm,
     literal_qnorm,
     round_half_up,
     spark_order,
+    vector_udf,
 )
 
 
@@ -80,21 +82,16 @@ def hyperplanes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
 def lsh_bucket_udf(planes: np.ndarray):
     """Sign-bit bucket id of an embedding column: bit i = dot(emb, plane_i) > 0.
 
-    Arrow-batched numpy: one (batch x dim) @ (dim x planes) matmul per
-    batch. A pure-Catalyst unrolled form was tried and rejected — at
-    64 dims x 8 planes the generated Java method exceeds janino limits and
-    falls back to interpreted eval (slower than the Arrow hop).
+    A ``vector_udf``: one (batch x dim) @ (dim x planes) matmul per Arrow
+    batch; a null vector, a null element or a length other than the
+    planes' dim gets a NULL bucket, so no probe selects it. A
+    pure-Catalyst unrolled form was tried and rejected — at 64 dims x 8
+    planes the generated Java method exceeds janino limits and falls
+    back to interpreted eval (slower than the Arrow hop).
     """
     mat = np.ascontiguousarray(planes.T, dtype=np.float64)  # (dim, n_planes)
     weights = (1 << np.arange(planes.shape[0])).astype(np.int64)
-
-    @F.pandas_udf(LongType())
-    def bucket(emb: pd.Series) -> pd.Series:
-        m = np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
-        bits = (m @ mat) > 0  # (batch, n_planes)
-        return pd.Series(bits @ weights)
-
-    return bucket
+    return vector_udf(lambda m: ((m @ mat) > 0) @ weights, planes.shape[1], "bigint")
 
 
 def lsh_bucketed_topk(
@@ -193,21 +190,15 @@ def sampled_centroids(
     merge of n×partitions rows, NOT a global sort-shuffle (plan-asserted
     in tests/test_plans.py). The md5 evaluation is one codegen'd pass
     over the scan; at 100 TB this is a map-only job whose driver traffic
-    is n rows per partition."""
-    rows = (
-        df.select(
-            F.col(key_col).alias("k"),
-            F.col(emb_col).cast("array<double>").alias("e"),
-        )
-        .orderBy(F.md5(F.col(key_col).cast("string")), F.col(key_col))
-        .limit(n_centroids)
-        .collect()
-    )
-    mat = np.vstack([np.asarray(r["e"], dtype=np.float64) for r in rows])
-    if normalize:
-        n = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(n == 0.0, 1.0, n)
-    return mat
+    is n rows per partition (functions/vector.hash_sample)."""
+    mat = hash_sample(df, n_centroids, key_col, emb_col)[1]
+    return _unit_rows(mat) if normalize else mat
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Each row over its L2 norm; a zero row stays zero."""
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(n == 0.0, 1.0, n)
 
 
 def ivf_assign_udf(centroids: np.ndarray, metric: str = "cosine"):
@@ -216,22 +207,20 @@ def ivf_assign_udf(centroids: np.ndarray, metric: str = "cosine"):
     argmin ||x - c||^2 == argmin (||c||^2 - 2 x.c): one (batch x dim) @
     (dim x k) product plus a precomputed norm row; no per-row Python.
     For cosine, rows are unit-normalized first (centroids already come
-    from the spherical fit).
+    from the spherical fit). A ``vector_udf``: a null vector, a null
+    element or a length other than the centroids' dim has no cell (NULL).
     """
     cmat = np.ascontiguousarray(centroids.T, dtype=np.float64)  # (dim, k)
     cnorm2 = (centroids * centroids).sum(axis=1)  # (k,)
     spherical = metric == "cosine"
 
-    @F.pandas_udf(LongType())
-    def assign(emb: pd.Series) -> pd.Series:
-        m = np.vstack(emb.to_numpy()).astype(np.float64, copy=False)
+    def assign(m: np.ndarray) -> np.ndarray:
         if spherical:
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            m = m / np.where(n == 0.0, 1.0, n)
+            m = _unit_rows(m)
         d = cnorm2 - 2.0 * (m @ cmat)  # (batch, k), up to the x-norm constant
-        return pd.Series(np.argmin(d, axis=1).astype(np.int64))
+        return np.argmin(d, axis=1).astype(np.int64)
 
-    return assign
+    return vector_udf(assign, centroids.shape[1], "bigint")
 
 
 def ivf_assign(

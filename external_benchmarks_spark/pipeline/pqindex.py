@@ -15,7 +15,8 @@ every other persisted artifact in the engine (signature store, vector
 store, sorted export, inverted index):
 
 - **build**: hash-sampled centroids (similarity.sampled_centroids) and
-  codebooks (quantize.pq_codebooks) — both deterministic, so any SQL
+  codebooks (quantize.pq_codebooks), both cut from prefixes of ONE
+  functions/vector.hash_sample job — both deterministic, so any SQL
   engine replays the whole index from the source table — encode the
   corpus once (Arrow-batched, quantize.pq_encode), and the codes land
   partitioned by IVF cell via pipeline/index.build_index_layout with a
@@ -191,14 +192,9 @@ def build_pq_index(
     cells); it is opt-in because pure-ADC serving doesn't need it, and
     at 100 TB the rerank tier pays that pass once per rebuild — the
     same amortization argument as the codes layout itself."""
-    from external_benchmarks_spark.operators.quantize import (
-        pq_codebooks,
-        pq_encode,
-    )
-    from external_benchmarks_spark.operators.similarity import (
-        ivf_assign,
-        sampled_centroids,
-    )
+    from external_benchmarks_spark.functions.vector import hash_sample
+    from external_benchmarks_spark.operators.quantize import _codebooks, pq_encode
+    from external_benchmarks_spark.operators.similarity import _unit_rows, ivf_assign
     from external_benchmarks_spark.pipeline.index import build_index_layout
 
     os.makedirs(root, exist_ok=True)
@@ -208,13 +204,11 @@ def build_pq_index(
     ledger = os.path.join(root, "_applied_appends.json")
     if os.path.exists(ledger):
         os.remove(ledger)
-    centroids = sampled_centroids(
-        df, n_centroids=n_centroids, key_col=key_col, emb_col=emb_col
-    )
-    cb = pq_codebooks(
-        df, n_codes=n_codes, m_subspaces=m_subspaces,
-        key_col=key_col, emb_col=emb_col,
-    )
+    # sampled_centroids and pq_codebooks read the same hash order, so
+    # both are prefixes of one sample of the larger size
+    sample = hash_sample(df, max(n_centroids, n_codes), key_col, emb_col)[1]
+    centroids = _unit_rows(sample[:n_centroids])
+    cb = _codebooks(sample[:n_codes], m_subspaces)
     assigned = ivf_assign(df, centroids, emb_col=emb_col, metric=metric)
     codes = pq_encode(
         assigned,

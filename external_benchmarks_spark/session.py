@@ -44,7 +44,8 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for all pandas interop (vector fast paths, mapInPandas).
+        # Arrow for toPandas / createDataFrame(pandas); vector readers take
+        # Arrow batches directly (functions/vector.arrow_rows).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # AQE: post-shuffle coalesce + skew-join splitting.

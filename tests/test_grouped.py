@@ -1,4 +1,4 @@
-"""applyInPandas grouped stats agree with the pure-SQL paths to 1e-9."""
+"""applyInArrow grouped stats agree with the pure-SQL paths to 1e-9."""
 
 from __future__ import annotations
 

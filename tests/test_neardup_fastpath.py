@@ -151,6 +151,28 @@ def test_neardup_null_and_wrong_length_rows(spark):
     assert set(got) == {(1, 2), (1, 7), (2, 7), (5, 6)}
 
 
+@pytest.mark.parametrize("parts", [1, 8])
+def test_capped_neardup_null_and_wrong_length_rows(spark, parts):
+    """Under a cap the sub-block band reads rows through arrow_rows: a
+    null vector or a null element gets no band and pairs with nothing,
+    the wrong-length rows are banded with planes of their own length;
+    the pairs equal the Catalyst pair join on the same sub-blocks
+    whichever rows share an Arrow batch."""
+    df = _odd_rows(spark).repartition(parts)
+    got = _scored(
+        embedding_neardup_pairs(df, block_col="label", threshold=0.5, max_block_rows=2)
+    )
+    assert got == _scored(_catalyst_pairs(df, "label", 0.5, max_block_rows=2))
+    assert got and set(got) <= {(1, 2), (1, 7), (2, 7), (5, 6)}
+    bands = {
+        r.vec_id: r._blk
+        for r in _subblock_key(df, "label", "embedding", 2, n_bits=2).collect()
+    }
+    assert bands[3].startswith("0") and "#" not in bands[3]
+    assert bands[4].startswith("0") and "#" not in bands[4]
+    assert all("#" in bands[k] for k in (1, 2, 5, 6, 7, 8))
+
+
 def test_neardup_string_keys(spark):
     df = _odd_rows(spark, "string")
     out = embedding_neardup_pairs(df, block_col="label", threshold=0.5)

@@ -810,3 +810,29 @@ def test_filtered_rerank_parity_at_reference_width(spark, tmp_path):
         got = srv.topk_rerank(q, k=10, rerank=40, nprobe=nprobe, where={"label": [1, 2]})
         assert len(want) == 10
         assert got == want, nprobe
+
+
+def test_build_samples_once(spark, tmp_path):
+    """The centroids and the codebooks are prefixes of one hash sample:
+    a build with the raw-vector sidecar runs five jobs, one sample read
+    (functions/vector.hash_sample) and two per layout write, and its
+    quantizers equal the two separately sampled ones."""
+    emb = _emb(spark)  # its file listing is not part of the build
+    sc = spark.sparkContext
+    sc.setJobGroup("pq-build-jobs", "pq-build-jobs")
+    try:
+        index = build_pq_index(
+            spark, emb, str(tmp_path / "pq"),
+            n_codes=N_CODES, m_subspaces=M, n_centroids=N_CENT, store_vectors=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup("pq-build-jobs"))
+    names = [jsc.statusStore().job(j).name() for j in jobs]
+    assert len(jobs) == 5, names
+    assert sum("functions/vector.py" in n for n in names) == 1, names
+    assert np.array_equal(index.centroids, sampled_centroids(emb, n_centroids=N_CENT))
+    assert np.array_equal(index.codebooks, pq_codebooks(emb, n_codes=N_CODES, m_subspaces=M))

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from external_benchmarks_spark.catalog import Catalog
@@ -148,6 +150,76 @@ def test_quantized_topk_keeps_key_type(spark):
     ints = [(f"k{r.vec_id:02d}", r.score_q) for r in quantized_dot_topk(by_int, q, k=5).collect()]
     strs = [(r.vec_id, r.score_q) for r in quantized_dot_topk(by_str, q, k=5).collect()]
     assert strs == ints
+
+
+def _rows_with_no_vector(spark):
+    """Ordinary rows around a null vector (3), a null element (5) and a
+    wrong-length row (6)."""
+    return spark.createDataFrame(
+        [
+            (1, [0.5, -1.0, 2.0]),
+            (2, [1.0, 2.0, 3.0]),
+            (3, None),
+            (4, [3.0, 1.0, -1.0]),
+            (5, [1.0, None, 2.0]),
+            (6, [1.0, 2.0]),
+            (7, [-0.5, 0.25, 4.0]),
+        ],
+        "vec_id bigint, embedding array<float>",
+    )
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_quantized_topk_rows_with_no_vector_rank_last(spark, parts):
+    """A row with no vector scores null in both columns and ranks last,
+    as the Catalyst quantizer + BIGINT fold scores it, whichever rows
+    share an Arrow batch."""
+    df = _rows_with_no_vector(spark).repartition(parts)
+    got = [tuple(r) for r in quantized_dot_topk(df, [1.0, 0.5, -2.0], k=7).collect()]
+    assert got == _catalyst_quantized_topk(df, [1.0, 0.5, -2.0], 7)
+    assert [r[0] for r in got[-3:]] == [3, 5, 6]
+    assert all(r[1] is None and r[2] is None for r in got[-3:])
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_pq_batch_null_code_rows_rank_last(spark, parts):
+    """A null code row or a code row with a null element scores null
+    and ranks last in the batch form, as in the Catalyst pq_adc_topk."""
+    from external_benchmarks_spark.operators.quantize import (
+        pq_adc_topk,
+        pq_adc_topk_batch,
+    )
+
+    cb = np.arange(24, dtype=np.float64).reshape(3, 4, 2) / 10.0
+    codes = spark.createDataFrame(
+        [(1, [0, 1, 2]), (2, [3, 3, 0]), (3, None), (4, [1, None, 2]), (5, [2, 0, 1])],
+        "vec_id bigint, pq_codes array<int>",
+    ).repartition(parts)
+    q = [0.5, -1.0, 2.0, 0.25, 1.0, -0.5]
+    queries = spark.createDataFrame([(9, q)], "query_id bigint, qvec array<double>")
+    got = [
+        (r.vec_id, r.pq_score)
+        for r in pq_adc_topk_batch(codes, cb, queries, k=5).orderBy("rank").collect()
+    ]
+    assert got == [tuple(r)[:2] for r in pq_adc_topk(codes, cb, q, k=5).collect()]
+    assert got[-2:] == [(3, None), (4, None)]
+
+
+def test_pq_string_key_raises_at_driver(spark):
+    """PQ codes are keyed by bigint (the serving tier reads ids as
+    ints): a string key is refused before any job runs."""
+    from external_benchmarks_spark.operators.quantize import (
+        pq_adc_topk_batch,
+        pq_encode,
+    )
+
+    df = spark.createDataFrame([("a", [1.0, 2.0])], "vec_id string, embedding array<double>")
+    codes = spark.createDataFrame([("a", [0])], "vec_id string, pq_codes array<int>")
+    cb = np.zeros((1, 2, 2))
+    with pytest.raises(ValueError, match="vec_id must be an integral column, not string"):
+        pq_encode(df, cb)
+    with pytest.raises(ValueError, match="vec_id must be an integral column, not string"):
+        pq_adc_topk_batch(codes, cb, None, k=1)
 
 
 def test_pq_encode_shape_and_determinism(spark, sf_dir):

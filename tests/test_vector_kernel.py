@@ -8,7 +8,9 @@ column functions the oracles replay."""
 
 from __future__ import annotations
 
+import ast
 import math
+import os
 import random
 
 import numpy as np
@@ -234,3 +236,159 @@ def test_round_half_up_is_spark_round():
     want = [Decimal(repr(float(v))).quantize(Decimal(1), rounding=ROUND_HALF_UP) for v in vals]
     assert all(Decimal(float(g)) == w for g, w in zip(got, want))
     assert not np.signbit(got[-1])  # -0.0 rounds to 0, as BigDecimal has no -0
+
+
+# ---------------------------------------------------------------------------
+# The row contract of every reader built on arrow_rows: rows 3 (null
+# vector), 5 (null element) and 6 (wrong length) of ``_odd_rows`` have
+# no vector. Each case runs with all rows in one Arrow batch and spread
+# over eight partitions, and must give the same rows both ways.
+# ---------------------------------------------------------------------------
+
+NO_VECTOR = {3, 5, 6}
+
+
+def _whole_rows(df):
+    return {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+            for r in df.collect() if r.vec_id not in NO_VECTOR}
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_cell_and_bucket_readers_give_null_for_rows_with_no_vector(spark, parts):
+    """``ivf_assign``, the LSH bucket and the delta-dedup cell assignment
+    give NULL for a row with no vector and the numpy formula's value
+    for every other row."""
+    from external_benchmarks_spark.operators.deltadedup import _assign_cells_vectorized
+    from external_benchmarks_spark.operators.similarity import (
+        hyperplanes,
+        ivf_assign,
+        lsh_bucket_udf,
+    )
+
+    df = _odd_rows(spark).repartition(parts)
+    cents = np.array([[1.0, 0.0, 0.0], [0.0, 0.6, 0.8], [0.0, 0.0, -1.0]])
+    planes = hyperplanes(3, 8, 42)
+    out = ivf_assign(df, cents).select(
+        "vec_id", "centroid_id", lsh_bucket_udf(planes)(F.col("embedding")).alias("bucket")
+    )
+    got = {r.vec_id: (r.centroid_id, r.bucket) for r in out.collect()}
+    cells = {r.vec_id: r.cell for r in _assign_cells_vectorized(df, cents).collect()}
+    want, want_cells = dict.fromkeys(NO_VECTOR, (None, None)), dict.fromkeys(NO_VECTOR)
+    for key, v in _whole_rows(df).items():
+        unit = v / (np.linalg.norm(v) or 1.0)
+        cell = int(np.argmin((cents * cents).sum(1) - 2.0 * (cents @ unit)))
+        bits = (planes @ v) > 0
+        want[key] = (cell, int(bits @ (1 << np.arange(8))))
+        want_cells[key] = int(np.argmax(cents @ v))
+    assert got == want
+    assert cells == want_cells
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_group_stats_leave_out_rows_with_no_vector(spark, parts):
+    """Rows with no vector are skipped by every statistic, as SQL
+    aggregates skip NULL; a group with none left has NULL statistics."""
+    from external_benchmarks_spark.operators.grouped import group_embedding_stats
+
+    df = _odd_rows(spark).withColumn("label", (F.col("vec_id") == 3).cast("int"))
+    got = sorted(tuple(r) for r in group_embedding_stats(df.repartition(parts)).collect())
+    whole = _whole_rows(df)
+    mat = np.vstack([whole[k] for k in sorted(whole)])
+    centroid = mat.mean(axis=0)
+    assert got == [
+        (0, len(mat), float(np.linalg.norm(centroid)),
+         float(np.linalg.norm(mat, axis=1).mean()),
+         float(np.linalg.norm(mat - centroid, axis=1).mean())),
+        (1, 0, None, None, None),
+    ]
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+def test_pq_encode_and_hash_sample_refuse_rows_with_no_vector(spark, parts):
+    """An index has no code for a row with no vector: ``pq_encode`` (with
+    1-dim subspaces, where a null row could pass for code 0) and
+    ``hash_sample`` raise ValueError naming the column."""
+    from external_benchmarks_spark.functions.vector import hash_sample
+    from external_benchmarks_spark.operators.quantize import pq_encode
+
+    df = _odd_rows(spark).repartition(parts)
+    cb = np.arange(12, dtype=np.float64).reshape(3, 4, 1)
+    with pytest.raises(Exception, match="ValueError: pq_encode: every embedding must be "
+                       "a non-null vector of 3 numbers"):
+        pq_encode(df, cb).collect()
+    with pytest.raises(ValueError, match="every embedding must be a non-null vector"):
+        hash_sample(df, 7, "vec_id", "embedding")
+    whole = df.filter(~F.col("vec_id").isin(*NO_VECTOR))
+    codes = {r.vec_id: r.pq_codes for r in pq_encode(whole, cb).collect()}
+    keys, mat = hash_sample(whole, 7, "vec_id", "embedding")
+    assert sorted(codes) == sorted(keys) == [1, 2, 4, 7]
+    rows = _whole_rows(df)
+    assert all((mat[i] == rows[k]).all() for i, k in enumerate(keys))
+
+
+def _guarded_calls(path):
+    """(line, what) for each pandas conversion of a vector column: an
+    ``np.vstack`` whose argument calls ``.to_numpy(``, or a
+    ``mapInPandas`` / ``pandas_udf`` / ``applyInPandas`` call."""
+    tree = ast.parse(open(path).read(), path)
+    hits = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        if name in PANDAS_CALLS:
+            hits.append((node.lineno, name))
+        elif name == "vstack" and any(
+            isinstance(sub, ast.Call)
+            and isinstance(sub.func, ast.Attribute)
+            and sub.func.attr == "to_numpy"
+            for arg in node.args
+            for sub in ast.walk(arg)
+        ):
+            hits.append((node.lineno, "np.vstack(... .to_numpy() ...)"))
+    return sorted(hits)
+
+
+PANDAS_CALLS = {"mapInPandas", "pandas_udf", "applyInPandas"}
+VECTOR_MODULES = [
+    "operators/quantize.py", "operators/similarity.py", "operators/dedup.py",
+    "operators/deltadedup.py", "operators/grouped.py", "operators/projection.py",
+]
+
+
+def test_vector_modules_read_vectors_only_through_arrow_rows():
+    """The vector operators read a vector column only through
+    functions/vector.arrow_rows and its wrappers: no pandas conversion
+    of the column is left in them."""
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "external_benchmarks_spark")
+    found = {
+        m: hits for m in VECTOR_MODULES
+        if (hits := _guarded_calls(os.path.join(root, m)))
+    }
+    assert found == {}
+
+
+def test_guard_sees_each_pandas_form():
+    src = (
+        "m = np.vstack(emb.to_numpy()).astype(float)\n"
+        "m = np.vstack(list(pdf[c].to_numpy()))\n"
+        "df.mapInPandas(f, s)\n"
+        "F.pandas_udf('long')\n"
+        "@pandas_udf('long')\ndef g(x): return x\n"
+        "df.groupBy('a').applyInPandas(f, s)\n"
+        "ok = np.vstack([a, b])\n"
+        "df.mapInArrow(f, s)\n"
+    )
+    import tempfile
+
+    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as fh:
+        fh.write(src)
+    try:
+        assert [what for _, what in _guarded_calls(fh.name)] == [
+            "np.vstack(... .to_numpy() ...)", "np.vstack(... .to_numpy() ...)",
+            "mapInPandas", "pandas_udf", "pandas_udf", "applyInPandas",
+        ]
+    finally:
+        os.remove(fh.name)

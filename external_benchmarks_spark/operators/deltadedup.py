@@ -589,7 +589,9 @@ def _assign_cells(
 ) -> DataFrame:
     """argmax over cells of dot(raw embedding, unit centroid), cell-id
     tiebreak — pure Catalyst (broadcast cross join + per-key window), the
-    exact form the DuckDB oracle replays row for row. ``keep_cols`` ride
+    exact form the DuckDB oracle replays row for row. A row whose every
+    dot is NULL (a null vector, a null element or another length) gets a
+    NULL cell, as in :func:`_assign_cells_vectorized`. ``keep_cols`` ride
     along (the refresh path keeps the previous cell id)."""
     from pyspark.sql.window import Window
 
@@ -605,7 +607,7 @@ def _assign_cells(
         .select(
             F.col(key_col),
             F.col(emb_col),
-            F.col("_cid").alias("cell"),
+            F.when(F.col("_d").isNotNull(), F.col("_cid")).alias("cell"),
             *[F.col(c) for c in keep_cols],
         )
     )

@@ -27,7 +27,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -417,23 +416,16 @@ def centroid_cosine_fp(
     Centroids ride as a broadcast side table equi-joined on cluster_id;
     the op chain (HOF dot + sqrt) is bit-identical in DuckDB."""
     spark = assigned.sparkSession
-    cent_rows = [
-        (int(i), [float(v) for v in row])
-        for i, row in enumerate(np.asarray(centroids, dtype=np.float64))
-    ]
-    # Arrow path: a pandas-backed createDataFrame plans as a JVM-local
-    # LocalTableScan, so evaluating the broadcast side touches no Python
-    # workers (a plain createDataFrame parallelizes pickled slices — each
-    # pays a Python-worker round-trip; see streaming/upsert.py:202).
-    try:
-        cent_df = spark.createDataFrame(
-            pd.DataFrame(cent_rows, columns=["cluster_id", "_centroid"]),
-            schema="cluster_id bigint, _centroid array<double>",
-        )
-    except Exception:
-        cent_df = spark.createDataFrame(
-            cent_rows, schema="cluster_id bigint, _centroid array<double>"
-        )
+    cent = np.asarray(centroids, dtype=np.float64)
+    # An Arrow table plans as a JVM-local LocalTableScan, so evaluating
+    # the broadcast side touches no Python worker.
+    cent_df = spark.createDataFrame(
+        pa.table({
+            "cluster_id": pa.array(range(len(cent)), pa.int64()),
+            "_centroid": pa.array(cent.tolist(), pa.list_(pa.float64())),
+        }),
+        schema="cluster_id bigint, _centroid array<double>",
+    )
     e = F.col(emb_col).cast("array<double>")
     cv = F.col("_centroid")
     norm = l2_norm(e)

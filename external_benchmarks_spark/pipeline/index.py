@@ -178,20 +178,15 @@ def compact_layout_partitions(
     import shutil
     from urllib.parse import unquote
 
+    from external_benchmarks_spark.pipeline.layout import (
+        recover_partition_swaps,
+        swap_partition_dir,
+    )
+
     staging = os.path.join(layout_path, "_compact_staging")
     shutil.rmtree(staging, ignore_errors=True)
     prefix = f"{partition_col}="
-    for d in list(os.listdir(layout_path)):
-        # Crash recovery: a trash dir with no live partition means the
-        # crash hit between the two renames — restore it; otherwise the
-        # new files landed and the trash is safe to drop.
-        if d.startswith(".compacting."):
-            live = os.path.join(layout_path, d[len(".compacting."):])
-            trash = os.path.join(layout_path, d)
-            if os.path.exists(live):
-                shutil.rmtree(trash)
-            else:
-                os.rename(trash, live)
+    recover_partition_swaps(layout_path)
 
     dirty_dirs: list[str] = []
     for d in sorted(os.listdir(layout_path)):
@@ -229,11 +224,7 @@ def compact_layout_partitions(
             "live layout left untouched"
         )
     for d in dirty_dirs:
-        live = os.path.join(layout_path, d)
-        trash = os.path.join(layout_path, f".compacting.{d}")
-        os.rename(live, trash)
-        os.rename(os.path.join(staging, d), live)
-        shutil.rmtree(trash)
+        swap_partition_dir(layout_path, d, os.path.join(staging, d))
     shutil.rmtree(staging, ignore_errors=True)
     return [unquote(d[len(prefix):]) for d in dirty_dirs]
 

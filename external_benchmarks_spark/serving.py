@@ -16,7 +16,11 @@ left-to-right fold scores the survivors).
 Parity contract: the same kernel over the same float32 bytes widened to
 float64, ties broken by ascending key — so serving results are
 bit-identical to the Spark query's and to the DuckDB oracle's
-(asserted in tests/test_serving.py).
+(asserted in tests/test_serving.py). Every cell's vectors and PQ codes
+are read by the one reader the Spark plans' kernels use
+(`functions/vector._whole_rows`): a cell holding a null, null-element,
+empty or wrong-length vector is refused with a ``ValueError`` naming
+the column, never loaded with its rows shifted.
 
 Scale shape: one serving node holds the HOT partitions (a label's matrix
 at dim=64 x 1M rows is ~512 MB float64, or half that served as float32);
@@ -30,7 +34,12 @@ import os
 
 import numpy as np
 
-from external_benchmarks_spark.functions.vector import exact_topk, fold_dot, spark_order
+from external_benchmarks_spark.functions.vector import (
+    _whole_rows,
+    exact_topk,
+    fold_dot,
+    spark_order,
+)
 
 
 def _dir_signature(d: str) -> tuple:
@@ -44,16 +53,6 @@ def _dir_signature(d: str) -> tuple:
             if not f.startswith(("_", "."))
         )
     )
-
-
-def _matrix(tbl, col: str) -> np.ndarray:
-    """A fixed-length list column as a (rows x dim) array of its own
-    element dtype."""
-    values = tbl.column(col).combine_chunks().values.to_numpy(
-        zero_copy_only=False
-    )
-    n = len(tbl)
-    return values.reshape(n, len(values) // max(n, 1))
 
 
 def _merge_topk(ids_parts: list, score_parts: list, k: int):
@@ -161,7 +160,7 @@ class VectorServingIndex(_CellStore):
     def _decode(self, label: int, tbl) -> tuple[np.ndarray, np.ndarray]:
         ids = tbl.column(self.key_col).to_numpy()
         # float64 scoring matrix — the Spark kernel's dtype promotion
-        mat = _matrix(tbl, self.emb_col).astype(np.float64)
+        mat = _whole_rows(tbl.column(self.emb_col).combine_chunks(), self.emb_col)
         self._norms[label] = np.sqrt(np.einsum("ij,ij->i", mat, mat))
         return np.asarray(ids), mat
 
@@ -263,7 +262,8 @@ class PQServingIndex(_CellStore):
                 for c in self.index.payload_cols
             }
         ids = tbl.column(self.index.key_col).to_numpy()
-        return np.asarray(ids), _matrix(tbl, "pq_codes").astype(np.int64)
+        codes = _whole_rows(tbl.column("pq_codes").combine_chunks(), "pq_codes")
+        return np.asarray(ids), codes.astype(np.int64)
 
     def _drop(self, cell: int) -> None:
         super()._drop(cell)
@@ -410,7 +410,8 @@ class PQServingIndex(_CellStore):
 
             tbl = pq.read_table(d, columns=[self.index.key_col, "embedding"])
             ids = tbl.column(self.index.key_col).to_numpy()
-            mat = _matrix(tbl, "embedding")
+            mat = _whole_rows(tbl.column("embedding").combine_chunks(), "embedding")
+            mat = mat.astype(np.float32)  # exact: the sidecar stores float32
             order = np.argsort(ids, kind="stable")
             for path, arr in ((ids_p, ids[order]), (mat_p, mat[order])):
                 tmp = path + ".tmp.npy"

@@ -18,7 +18,7 @@ incrementally (checkpointed offsets — restart-safe, each file
 processed exactly once); per batch the work is one map-side pass plus
 the partitioned append. At 100 TB the landing bucket IS the stream;
 compaction of small appended files is the existing layout job
-(pipeline/layout.compact_layout_partitions).
+(pipeline/index.compact_layout_partitions).
 """
 
 from __future__ import annotations

@@ -11,6 +11,10 @@ hash-bucketed by key, a commit writes ONLY its deduplicated batch as a
 new version directory of the buckets it touches, and a tiny manifest
 mapping bucket → [base, delta, …] versions is swapped atomically
 (write-temp + rename). Bytes written scale with the batch, not the table.
+A driver-sized batch stays one Arrow table from the read through the
+dedup to the commit's JVM-local scan (``prepare``); a larger one dedups
+with a window. Both keep each key's winner by the one rule of
+``_winner_order``.
 
 A snapshot read scans every listed version and keeps a row iff its key
 IS NULL or its ``v`` is the highest among that key's rows (``_resolve``).
@@ -40,6 +44,8 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,6 +91,15 @@ def _write_json(path: str, obj) -> None:
 
 def _next_version(manifest: dict[str, list[int]]) -> int:
     return max((v for vs in manifest.values() for v in vs), default=-1) + 1
+
+
+def _winner_order(columns: list[str]) -> list[tuple[str, str]]:
+    """Last-writer-wins within a batch, as (column, order) sort keys: a
+    key's first row wins. The highest ``op_ts`` first, a NULL ``op_ts``
+    below every value; ties, and batches without ``op_ts``, go to the
+    lowest whole-row hash ``_h``, so every run picks the same row."""
+    ts = [("op_ts", "descending")] if "op_ts" in columns else []
+    return [*ts, ("_h", "ascending")]
 
 
 class UpsertTable:
@@ -294,68 +309,25 @@ class UpsertTable:
         )
         return self._resolve(manifest, at_commit is None).drop("v", "bucket")
 
-    # Micro-batches up to this size are deduped driver-side in ONE job;
-    # larger batches take the distributed window path. 10k rows of keyed
+    # Micro-batches up to this size are read and deduplicated on the
+    # driver in ONE job; larger batches take the distributed window form,
+    # the only form for a batch the driver cannot hold. 10k rows of keyed
     # updates is far above the reference's 100-row batches and still
     # trivially driver-sized.
     SMALL_BATCH_MAX = 10_000
 
-    def _small_batch(self, updates: DataFrame):
-        """Try the one-job micro-batch path: pull `limit(MAX+1)` rows with
-        their bucket (and dedup-order hash when op_ts is absent) attached,
-        so ONE collect serves dedup and the bucket column. Returns
-        (upd_df, rows) or None when the batch exceeds the threshold."""
-        has_ts = "op_ts" in updates.columns
-        probe = updates.withColumn(
+    def _probe(self, updates: DataFrame) -> DataFrame:
+        """``updates`` with its ``bucket`` and its whole-row hash ``_h``,
+        the winner rule's tie-break (:func:`_winner_order`). xxhash64
+        refuses MAP values, so a column holding one is hashed as its JSON
+        text."""
+        row = [
+            F.to_json(f.name) if "map<" in f.dataType.simpleString() else F.col(f.name)
+            for f in updates.schema
+        ]
+        return updates.withColumn(
             "bucket", _bucket(F.col(self.key_col), self.n_buckets)
-        )
-        if not has_ts:
-            probe = probe.withColumn(
-                "_h", F.xxhash64(*[F.col(c) for c in updates.columns])
-            )
-        rows = probe.limit(self.SMALL_BATCH_MAX + 1).collect()
-        if len(rows) > self.SMALL_BATCH_MAX:
-            return None
-        # Last-writer-wins per key: highest op_ts, else lowest whole-row
-        # hash — the same winner the distributed window path picks.
-        best: dict = {}
-
-        def ts_key(r):
-            v = r["op_ts"]
-            # NULL op_ts sorts below every real value (the window's
-            # `desc()` puts nulls last), without assuming numeric op_ts.
-            return (v is not None, v)
-
-        for r in rows:
-            k = r[self.key_col]
-            if k not in best:
-                best[k] = r
-            elif has_ts:
-                if ts_key(r) > ts_key(best[k]):
-                    best[k] = r
-            elif r["_h"] < best[k]["_h"]:
-                best[k] = r
-        cols = [*updates.columns, "bucket"]
-        schema = probe.select(*cols).schema
-        data = [tuple(r[c] for c in cols) for r in best.values()]
-        # Arrow path: a pandas-backed createDataFrame plans as a JVM-local
-        # LocalTableScan — the write job then touches NO Python workers for
-        # the batch side. (A plain createDataFrame parallelizes into
-        # defaultParallelism pickled slices, each paying a Python-worker
-        # round-trip when evaluated — measured 6 s vs 0.2 s on a loaded
-        # session for a 100-row batch.)
-        try:
-            import pandas as pd
-
-            upd = self.spark.createDataFrame(
-                pd.DataFrame(data, columns=cols), schema=schema
-            )
-        except Exception:
-            # Exotic types that Arrow can't convert: single-slice RDD path.
-            upd = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize(data, 1), schema=schema
-            )
-        return upd, len(data)
+        ).withColumn("_h", F.xxhash64(*row))
 
     def upsert(self, updates: DataFrame, evolve_schema: bool = False) -> None:
         self.upsert_prepared(self.prepare(updates, evolve_schema))
@@ -366,6 +338,15 @@ class UpsertTable:
         dedup — WITHOUT the writer lease and without touching the table.
         The returned payload feeds :meth:`upsert_prepared`.
 
+        One job reads at most ``SMALL_BATCH_MAX + 1`` rows of the batch,
+        with their ``bucket`` and ``_h``, as one Arrow table. If the
+        batch fits, one stable sort by :func:`_winner_order` and the
+        first row per key (NULL keys form one group) leave its winners,
+        handed to the commit as a JVM-local scan
+        (``createDataFrame`` of the table): the write job runs no Python
+        worker for the batch. A larger batch is left to the commit's
+        window form.
+
         This is the double-buffered-writer seam: at a paced write tier
         (reference README.md:69-70) re-embedding is per-update work
         done as updates ARRIVE during the interval, so a pipelined
@@ -373,11 +354,19 @@ class UpsertTable:
         only the commit belongs in the batch critical path. prepare()
         reads nothing from the table, so preparing ahead cannot
         observe — or race — the concurrent MERGE."""
-        return {
-            "small": self._small_batch(updates),
-            "updates": updates,
-            "evolve": evolve_schema,
-        }
+        probe = self._probe(updates)
+        tbl = probe.limit(self.SMALL_BATCH_MAX + 1).toArrow()
+        small = None
+        if len(tbl) <= self.SMALL_BATCH_MAX:
+            order = pc.sort_indices(
+                tbl, sort_keys=_winner_order(updates.columns), null_placement="at_end"
+            )
+            tbl = tbl.take(order).append_column("_i", pa.array(range(len(tbl)), pa.int64()))
+            first = tbl.group_by(self.key_col, use_threads=False).aggregate([("_i", "min")])
+            tbl = tbl.take(first["_i_min"]).drop_columns(["_h", "_i"])
+            upd = self.spark.createDataFrame(tbl, schema=probe.drop("_h").schema)
+            small = (upd, len(tbl))
+        return {"small": small, "updates": updates, "evolve": evolve_schema}
 
     def upsert_prepared(self, prepared: dict) -> None:
         """Commit a :meth:`prepare`d batch under the writer lease."""
@@ -403,31 +392,27 @@ class UpsertTable:
         for the batch's rows, and the next read merges footers.
 
         Write-latency shape (the reference's 2 s p95 target): a driver-
-        sized batch (``small``, :meth:`_small_batch`'s result; None when
-        too large) is one bounded collect in prepare() and ONE write job
-        here."""
+        sized batch (``small``, the deduplicated batch :meth:`prepare`
+        read as one Arrow table; None when too large) is one bounded job
+        in prepare() and ONE write job here. A larger batch dedups by the
+        same :func:`_winner_order` in one window pass, one shuffle on the
+        key."""
         if small is not None:
             upd, rows = small
             if not rows:
                 return
         else:
-            # One row per key via a single window pass — one shuffle on the
-            # key. Without op_ts there is no user-defined order; break ties
-            # by a stable hash of the whole row so reruns pick the SAME
-            # winner (F.lit(1) would leave it to partition arrival order).
             from pyspark.sql.window import Window
 
-            order = (
-                [F.col("op_ts").desc()]
-                if "op_ts" in updates.columns
-                else [F.xxhash64(*[F.col(c) for c in updates.columns]).asc()]
-            )
-            w = Window.partitionBy(self.key_col).orderBy(*order)
+            w = Window.partitionBy(self.key_col).orderBy(*[
+                F.col(c).desc_nulls_last() if how == "descending" else F.col(c).asc()
+                for c, how in _winner_order(updates.columns)
+            ])
             upd = (
-                updates.withColumn("_rn", F.row_number().over(w))
+                self._probe(updates)
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
-                .drop("_rn")
-                .withColumn("bucket", _bucket(F.col(self.key_col), self.n_buckets))
+                .drop("_rn", "_h")
             )
         manifest = self._read_manifest()
         if manifest:

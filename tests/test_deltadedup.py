@@ -291,7 +291,23 @@ def test_vectorized_assignment_equals_catalyst(spark, sf_dir):
     dup = emb.filter(F.col("vec_id") < 50).withColumn(
         "vec_id", F.col("vec_id") + F.lit(10_000_000)
     )
-    both = emb.unionByName(dup)
+    # a null vector and a [1.0, null, ...] vector: every dot is null, so
+    # both forms must give a NULL cell
+    one_null = F.transform(
+        "embedding",
+        lambda x, i: F.when(i == 0, F.lit(1.0)).when(i == 1, F.lit(None)).otherwise(x),
+    )
+    holes = (
+        emb.filter(F.col("vec_id") < 2)
+        .withColumn("vec_id", F.col("vec_id") + F.lit(20_000_000))
+        .withColumn(
+            "embedding",
+            F.when(F.col("vec_id") == 20_000_000, F.lit(None))
+            .otherwise(one_null)
+            .cast(emb.schema["embedding"].dataType),
+        )
+    )
+    both = emb.unionByName(dup).unionByName(holes)
     cent = sampled_centroids(emb, 24, normalize=True)
     import tempfile
 
@@ -308,6 +324,7 @@ def test_vectorized_assignment_equals_catalyst(spark, sf_dir):
         for r in _assign_cells_vectorized(both, np.asarray(cent)).collect()
     }
     assert got == want
+    assert want[20_000_000] is None and want[20_000_001] is None
     # and the planted duplicates landed with their originals
     for r in range(50):
         if r in want and (r + 10_000_000) in want:

@@ -119,6 +119,30 @@ def test_serving_tie_break_at_k_boundary(tmp_path):
     assert got == sorted(ids)[:10]
 
 
+def test_cell_with_a_partial_vector_is_refused(tmp_path):
+    """A cell is loaded whole or not at all: a null vector, or an empty
+    one beside longer ones, is refused with the column's name instead of
+    failing in a reshape or shifting every later row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for i, vecs in enumerate([
+        [[1.0, 2.0], None, [3.0, 4.0]],
+        [[1.0, 2.0], [], [3.0, 4.0], [5.0, 6.0, 7.0, 8.0]],
+    ]):
+        out = tmp_path / f"layout{i}" / "label=0"
+        out.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            }),
+            out / "part.parquet",
+        )
+        with pytest.raises(ValueError, match="embedding"):
+            VectorServingIndex(str(out.parent))
+
+
 def test_serving_incremental_refresh_only_dirty_cells(spark, sf_dir, tmp_path):
     """After a delta append to ONE partition, refresh() must reload only
     that partition (signature-diff), and answers must match a fresh

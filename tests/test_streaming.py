@@ -276,23 +276,91 @@ def test_commit_writes_only_its_batch(spark, caplog):
         assert rec["bytes"] * 10 < du(os.path.join(root, "v=0"))
 
 
-def test_window_path_matches_driver_path(spark):
-    """A batch above SMALL_BATCH_MAX dedups with a window and writes with a
-    bucket shuffle; it leaves the same table as the driver-side path."""
-    batch = spark.createDataFrame(
+WINDOW_CASES = {
+    # (batch schema, key, base rows, batch rows, expected table); base
+    # None is _base(spark, 10). Ties go to the lowest whole-row xxhash64:
+    # tie-a, n2, z, the second NULL-key row, v and {"k": 2} hash lowest.
+    "op_ts": (
+        "id long, title string, price double, op_ts long", "id", None,
         [(1, "old", 1.0, 1), (1, "new", 2.0, 2), (None, "n", 0.0, 1), (20, "ins", 3.0, 1)],
-        "id long, title string, price double, op_ts long",
+        [(i, f"title {i}", float(i)) for i in range(10) if i != 1]
+        + [(1, "new", 2.0), (None, "n", 0.0), (20, "ins", 3.0)],
+    ),
+    "op_ts_null_and_tie": (
+        "id long, title string, price double, op_ts long", "id",
+        [(1, "b1", 0.0), (2, "b2", 0.0), (3, "b3", 0.0), (4, "b4", 0.0)],
+        [(1, "null-ts", 9.0, None), (1, "real", 1.0, 5), (2, "tie-b", 2.0, 7),
+         (2, "tie-a", 1.0, 7), (3, "n1", 1.0, None), (3, "n2", 2.0, None)],
+        [(1, "real", 1.0), (2, "tie-a", 1.0), (3, "n2", 2.0), (4, "b4", 0.0)],
+    ),
+    "no_op_ts": (
+        "id long, title string, price double", "id",
+        [(1, "b1", 0.0), (2, "b2", 0.0)],
+        [(1, "x", 1.0), (1, "y", 2.0), (1, "z", 3.0), (5, "ins", 5.0)],
+        [(1, "z", 3.0), (2, "b2", 0.0), (5, "ins", 5.0)],
+    ),
+    "string_keys": (
+        "sku string, title string, price double", "sku",
+        [("a", "ta", 1.0), ("b", "tb", 2.0), (None, "nb", 0.0)],
+        [("a", "ta2", 1.5), (None, "n1", 0.0), (None, "n2", 1.0), ("c", "tc", 3.0)],
+        [("a", "ta2", 1.5), ("b", "tb", 2.0), ("c", "tc", 3.0), (None, "n2", 1.0),
+         (None, "nb", 0.0)],
+    ),
+    "array_float": (
+        "id long, title string, emb array<float>", "id",
+        [(1, "t1", [0.0, 0.0]), (2, "t2", [1.0, 1.0])],
+        [(1, "u", [0.5, 0.25]), (1, "v", [0.75, 1.5]), (3, "w", [2.0, 3.0])],
+        [(1, "v", [0.75, 1.5]), (2, "t2", [1.0, 1.0]), (3, "w", [2.0, 3.0])],
+    ),
+    "map_columns": (  # xxhash64 refuses maps: _h hashes their JSON text
+        "id long, tags map<string,int>, nested array<map<string,int>>, op_ts long", "id",
+        [(1, {"a": 1}, []), (2, None, [{"b": 2}])],
+        [(1, {"k": 1}, [{"a": 1}], 3), (1, {"k": 2}, [{"a": 2}], 3), (2, None, None, 1)],
+        [(1, {"k": 2}, [{"a": 2}]), (2, None, None)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(WINDOW_CASES))
+def test_window_path_matches_driver_path(spark, case):
+    """A batch above SMALL_BATCH_MAX dedups with a window and writes with a
+    bucket shuffle; it leaves the same table as the driver-side path: each
+    key's row with the highest op_ts (NULL lowest), ties to the lowest
+    whole-row hash, and one row for all NULL keys of the batch."""
+    ddl, key, base, rows, expected = WINDOW_CASES[case]
+    batch = spark.createDataFrame(rows, ddl)
+    # the base rows hold the batch's first three columns
+    base = _base(spark, 10) if base is None else spark.createDataFrame(
+        base, ", ".join(ddl.split(", ")[:3])
     )
     with tempfile.TemporaryDirectory() as d:
         tables = []
         for name, cap in (("driver", UpsertTable.SMALL_BATCH_MAX), ("window", 2)):
-            t = UpsertTable(spark, os.path.join(d, name), key_col="id", n_buckets=4)
+            t = UpsertTable(spark, os.path.join(d, name), key_col=key, n_buckets=4)
             t.SMALL_BATCH_MAX = cap
-            t.init(_base(spark, 10))
+            t.init(base)
             t.upsert(batch)
             tables.append(sorted(map(tuple, t.read().collect()), key=repr))
-        assert tables[0] == tables[1] and len(tables[0]) == 12
-        assert (1, "new", 2.0) in tables[0]
+        assert tables[0] == tables[1] == sorted(expected, key=repr)
+
+
+def test_prepare_runs_one_job(spark):
+    """prepare() of a driver-sized batch is one Spark job: the bounded
+    Arrow read, with the dedup on the driver."""
+    batch = _rows(spark, [(i % 17, f"t{i}", float(i)) for i in range(20)])
+    with tempfile.TemporaryDirectory() as d:
+        t = UpsertTable(spark, os.path.join(d, "t"), key_col="id", n_buckets=4)
+        sc = spark.sparkContext
+        sc.setJobGroup("upsert-prepare-jobs", "upsert-prepare-jobs")
+        try:
+            prepared = t.prepare(batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("upsert-prepare-jobs")) == 1
+        assert prepared["small"][1] == 17
 
 
 def test_commit_log_write_is_atomic(spark, monkeypatch):

@@ -327,17 +327,28 @@ def test_pq_encode_and_hash_sample_refuse_rows_with_no_vector(spark, parts):
 
 
 def _guarded_calls(path):
-    """(line, what) for each pandas conversion of a vector column: an
-    ``np.vstack`` whose argument calls ``.to_numpy(``, or a
-    ``mapInPandas`` / ``pandas_udf`` / ``applyInPandas`` call."""
+    """(line, what) for each pandas conversion of a vector column or
+    row-wise build of a batch: an ``np.vstack`` whose argument calls
+    ``.to_numpy(``, a ``mapInPandas`` / ``pandas_udf`` /
+    ``applyInPandas`` / ``DataFrame`` / ``parallelize`` call, or a
+    ``.values`` read off ``.combine_chunks()`` (a list column's flat
+    values, blind to its offsets and nulls)."""
     tree = ast.parse(open(path).read(), path)
     hits = []
     for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "values"
+            and isinstance(node.value, ast.Call)
+            and isinstance(node.value.func, ast.Attribute)
+            and node.value.func.attr == "combine_chunks"
+        ):
+            hits.append((node.lineno, ".combine_chunks().values"))
         if not isinstance(node, ast.Call):
             continue
         f = node.func
         name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        if name in PANDAS_CALLS:
+        if name in GUARDED_CALLS:
             hits.append((node.lineno, name))
         elif name == "vstack" and any(
             isinstance(sub, ast.Call)
@@ -350,17 +361,19 @@ def _guarded_calls(path):
     return sorted(hits)
 
 
-PANDAS_CALLS = {"mapInPandas", "pandas_udf", "applyInPandas"}
+GUARDED_CALLS = {"mapInPandas", "pandas_udf", "applyInPandas", "DataFrame", "parallelize"}
 VECTOR_MODULES = [
     "operators/quantize.py", "operators/similarity.py", "operators/dedup.py",
     "operators/deltadedup.py", "operators/grouped.py", "operators/projection.py",
+    "serving.py", "streaming/upsert.py",
 ]
 
 
 def test_vector_modules_read_vectors_only_through_arrow_rows():
-    """The vector operators read a vector column only through
-    functions/vector.arrow_rows and its wrappers: no pandas conversion
-    of the column is left in them."""
+    """The vector operators and the serving tier read a vector column
+    only through functions/vector.arrow_rows and its wrappers, and the
+    upsert batch stays one Arrow table: no pandas conversion or row-wise
+    batch build is left in them."""
     root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "external_benchmarks_spark")
     found = {
@@ -380,6 +393,10 @@ def test_guard_sees_each_pandas_form():
         "df.groupBy('a').applyInPandas(f, s)\n"
         "ok = np.vstack([a, b])\n"
         "df.mapInArrow(f, s)\n"
+        "pdf = pd.DataFrame(rows, columns=cols)\n"
+        "rdd = spark.sparkContext.parallelize(rows, 1)\n"
+        "v = tbl.column(c).combine_chunks().values.to_numpy()\n"
+        "ok = spark.createDataFrame(tbl, schema=s)\n"
     )
     import tempfile
 
@@ -389,6 +406,7 @@ def test_guard_sees_each_pandas_form():
         assert [what for _, what in _guarded_calls(fh.name)] == [
             "np.vstack(... .to_numpy() ...)", "np.vstack(... .to_numpy() ...)",
             "mapInPandas", "pandas_udf", "pandas_udf", "applyInPandas",
+            "DataFrame", "parallelize", ".combine_chunks().values",
         ]
     finally:
         os.remove(fh.name)

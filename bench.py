@@ -893,7 +893,7 @@ def serving_write_tier(
     tier the r10 verdict flagged as never measured. Deployment shape:
     updates micro-batch at ``interval_s`` (write_qps * interval_s
     single-object updates per batch), each batch RE-EMBEDS its text
-    through the same pandas-UDF encoder as the index build and MERGEs
+    through the same Arrow-UDF encoder as the index build and MERGEs
     into the bucketed upsert table. Per-update latency under paced
     batching is bounded by interval + batch wall time (an update
     arriving right after a batch cut waits one interval, then rides the
@@ -1052,7 +1052,7 @@ def serving_write_tier(
 
 def embed_core_scaling(spark, sf, dim: int = 2688):
     """Per-core scaling of the embed leg (r11 verdict item #7): the
-    pandas-UDF encoder is embarrassingly parallel, so the reference's
+    Arrow-UDF encoder is embarrassingly parallel, so the reference's
     <2 h / 10M index-build budget — met with ~zero headroom on one box
     at dim 2688 — scales ~1/cores across executors. Measured as docs/s
     with the input repartitioned to 1 / 8 / 32 partitions on local[32]

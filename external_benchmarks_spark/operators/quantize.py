@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from external_benchmarks_spark.functions.vector import (
+    _fold_error,
     _to_double,
     arrow_rows,
     hash_sample,
@@ -149,13 +150,13 @@ def pq_encode(
     the standard IVF-PQ residual-free form (Jegou, Douze & Schmid,
     "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
 
-    Distances accumulate as per-term FLOOR((x-c)^2 * 1e6) BIGINTs, so
-    the argmin (first-minimum on ties, numpy and SQL alike) is exact
+    Distances are per-term FLOOR((x-c)^2 * 1e6) BIGINT sums, so the
+    argmin (first minimum on ties, numpy and SQL alike) is exact
     integer arithmetic any engine replays bit-for-bit — the same
-    fixed-point device as the rest of the vector family. One
+    fixed-point device as the rest of the vector family. BLAS ranks the
+    codes and those integers decide (:func:`pq_assign`). One
     ``mapInArrow``: each batch's vectors come through
-    ``functions/vector.arrow_rows``, then one [batch, n_codes, dsub]
-    broadcasted numpy op per subspace, no Python-per-row work.
+    ``functions/vector.arrow_rows``, no Python-per-row work.
 
     ``key_col`` must be integral (``ValueError`` otherwise): the codes
     are keyed by bigint. A null vector, a null element or a length
@@ -164,7 +165,7 @@ def pq_encode(
     """
     _integral_key(df, key_col)
     cb = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = cb.shape
+    m, _, dsub = cb.shape
     # The key and integer extras (centroid_id, integer payload codes)
     # land as bigint; any other extra passes through with its own type.
     out_cols = [key_col, *extra_cols]
@@ -183,16 +184,7 @@ def pq_encode(
                     f"pq_encode: every {emb_col} must be a non-null vector "
                     f"of {m * dsub} numbers"
                 )
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                diff = sub[:, None, :] - cb[j][None, :, :]
-                d = (
-                    np.floor((diff * diff) * 1e6)
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
-                codes[:, j] = d.argmin(axis=1)
+            codes = pq_assign(mat, cb)
             arrays = [
                 b.column(c).cast(pa.int64()) if c in bigint else b.column(c)
                 for c in out_cols
@@ -202,6 +194,45 @@ def pq_encode(
             yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in fields])
 
     return df.select(key_col, emb_col, *extra_cols).mapInArrow(encode, StructType(fields))
+
+
+def pq_assign(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """The PQ codes of the rows of ``mat`` (n x m*dsub, float64) against
+    codebooks ``cb`` [m, n_codes, dsub]: int32 [n, m], in subspace j the
+    code c with the least S(c) = sum_i FLOOR((x_i - c_i)^2 * 1e6) as
+    int64, the first such code on ties.
+
+    BLAS ranks and the integers decide, as in ``exact_topk``. One
+    product per subspace gives A(c) = 1e6 * (|x|^2 - 2 x.c + |c|^2), and
+    S(c) lies in (A(c) - dsub - E, A(c) + E], with E the ``_fold_error``
+    bound of a dsub-term dot at scale 1e6 * (|x| + |c|)^2. Only a code
+    whose lower end lies below every code's upper end can win: a row
+    with one such code takes it, the other rows take the least S over
+    theirs. A row whose bounds are not finite, or reach 2^62 where an
+    integer could leave int64, sums S over every code. So the codes are
+    those of the integer argmin over every code, bit for bit."""
+    n = len(mat)
+    m, _, dsub = cb.shape
+    codes = np.empty((n, m), dtype=np.int32)
+    blocks = mat.reshape(n, m, dsub)
+    with np.errstate(all="ignore"):
+        xx = np.einsum("nmd,nmd->nm", blocks, blocks)
+        cc = np.einsum("jcd,jcd->jc", cb, cb)
+        for j in range(m):
+            sub = blocks[:, j]
+            approx = 1e6 * (xx[:, j, None] - 2 * (sub @ cb[j].T) + cc[j])
+            err = _fold_error(dsub, 1e6 * (np.sqrt(xx[:, j, None]) + np.sqrt(cc[j])) ** 2)
+            cand = approx - dsub - err < (approx + err).min(axis=1, keepdims=True)
+            cand[~(np.abs(approx) + err < 2.0**62).all(axis=1)] = True
+            codes[:, j] = cand.argmax(axis=1)
+            rows, cs = np.nonzero(cand & (cand.sum(axis=1) > 1)[:, None])
+            if len(rows):
+                diff = sub[rows] - cb[j][cs]
+                d = np.floor((diff * diff) * 1e6).astype(np.int64).sum(axis=1)
+                order = np.lexsort((cs, d, rows))
+                first = order[np.r_[True, rows[order][1:] != rows[order][:-1]]]
+                codes[rows[first], j] = cs[first]
+    return codes
 
 
 def pq_lut(codebooks, q: Sequence[float]):

@@ -2,9 +2,11 @@
 production (README.md:52-55: BAAI/bge-small-en-v1.5, 384 dims per field,
 7 fields concatenated to 2,688).
 
-Spark shape: an Arrow-batched pandas UDF so the encoder runs once per
-executor and scores whole batches; the ``mapInPandas`` variant keeps it
-cached across batches within a task.
+Spark shape: one scalar Arrow UDF (``embed_text_udf``). It takes the
+text columns of a batch and returns one ``list<float>`` column, the
+concat of their per-column embeddings, so the encoder scores whole
+batches and the concat happens in the same Python call, with no
+pandas conversion and no JVM ``concat`` of per-field vectors.
 
 Encoder tiers (selected at runtime):
 
@@ -15,8 +17,8 @@ Encoder tiers (selected at runtime):
    or set via ``$EBS_ENCODER_CKPT`` at UDF-definition time: the real
    model-inference path — weights load ONCE per executor process from
    the public safetensors format and score whole Arrow batches — run as
-   pure numpy, so it executes un-skipped in this container
-   (tests/test_pipeline.py drives it through the same pandas_udf).
+   pure numpy, so it runs wherever numpy does
+   (tests/test_pipeline.py drives it through the same Arrow UDF).
 3. ``hashed_ngram_encode`` — a REAL, dependency-free text embedding via
    the feature-hashing trick (char n-gram counts signed-hashed into
    ``dim`` buckets, L2-normalized; the HashingVectorizer construction
@@ -30,9 +32,10 @@ Encoder tiers (selected at runtime):
 from __future__ import annotations
 
 import zlib
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
@@ -56,11 +59,11 @@ try:  # pragma: no cover - model not present in this container
 
     _MODEL: SentenceTransformer | None = None
 
-    def _model_encode(texts: pd.Series, dim: int) -> np.ndarray:
+    def _model_encode(texts: Sequence[str | None], dim: int) -> np.ndarray:
         global _MODEL
         if _MODEL is None:
             _MODEL = SentenceTransformer("BAAI/bge-small-en-v1.5")
-        out = _MODEL.encode(list(texts.fillna("")), normalize_embeddings=True)
+        out = _MODEL.encode([t or "" for t in texts], normalize_embeddings=True)
         return np.asarray(out, dtype=np.float32)
 
     HAVE_MODEL = True
@@ -105,7 +108,7 @@ def _crc32_trigram_windows(data: "bytes | np.ndarray") -> "np.ndarray":
 
 
 def hashed_ngram_encode(
-    texts: "pd.Series | list[str]", dim: int, n: int = NGRAM
+    texts: Sequence[str | None], dim: int, n: int = NGRAM
 ) -> np.ndarray:
     """Feature-hashed char n-gram embedding: each n-gram crc32-hashes to a
     bucket in [0, dim) with a ±1 sign bit; counts accumulate and the
@@ -196,11 +199,12 @@ def _checkpoint_encoder(ckpt_dir: str):
 
 
 def encode_batch(
-    texts: "pd.Series", dim: int, ckpt_dir: str | None = None
+    texts: Sequence[str | None], dim: int, ckpt_dir: str | None = None
 ) -> np.ndarray:
     """One encoder call per Arrow batch: the transformer when available,
     else a local safetensors checkpoint of matching width, else the
-    hashed n-gram embedding. Unit-norm float32 every tier."""
+    hashed n-gram embedding. Unit-norm float32 every tier; a None text
+    embeds as the empty one."""
     if HAVE_MODEL and dim == DEFAULT_DIM:  # pragma: no cover
         return _model_encode(texts, dim)
     if ckpt_dir:
@@ -213,12 +217,15 @@ def encode_batch(
                 f"but dim={dim} was requested; pass a matching checkpoint "
                 "or drop ckpt_dir/$EBS_ENCODER_CKPT for the hashed tier"
             )
-        return enc.encode(list(pd.Series(texts).fillna("")))
+        return enc.encode([t or "" for t in texts])
     return hashed_ngram_encode(texts, dim)
 
 
 def embed_text_udf(dim: int = DEFAULT_DIM, ckpt_dir: str | None = None):
-    """Scalar pandas_udf: string column -> unit-norm float vector.
+    """Scalar Arrow UDF: string columns -> one float vector, the concat
+    of each column's unit-norm ``dim``-float embedding (one column: its
+    embedding). Each batch is one ``encode_batch`` call per column and
+    one ``list<float>`` built over their ``np.hstack``.
 
     Arrow batches keep the Python boundary amortized; at 2,688 total dims
     and 10k-row batches this moves ~100 MB/batch, matching the executor
@@ -233,12 +240,12 @@ def embed_text_udf(dim: int = DEFAULT_DIM, ckpt_dir: str | None = None):
 
     ckpt_dir = ckpt_dir or os.environ.get("EBS_ENCODER_CKPT")
 
-    @F.pandas_udf(ArrayType(FloatType()))
-    def embed(texts: pd.Series) -> pd.Series:
-        mat = encode_batch(texts, dim, ckpt_dir)
-        return pd.Series(list(mat))
+    def embed(*texts: pa.Array) -> pa.Array:
+        mat = np.hstack([encode_batch(t.to_pylist(), dim, ckpt_dir) for t in texts])
+        offsets = np.arange(len(mat) + 1) * mat.shape[1]
+        return pa.ListArray.from_arrays(offsets, mat.ravel())
 
-    return embed
+    return F.arrow_udf(embed, ArrayType(FloatType()))
 
 
 def embed_fields(
@@ -251,14 +258,7 @@ def embed_fields(
     field embeds to ``dim`` floats; the product embedding is their concat
     (so each non-empty field-block is unit-norm => total L2 =
     sqrt(n_nonempty_fields), the invariant the reference reports at
-    benchmark_10k/README.md:70)."""
-    embed = embed_text_udf(dim, ckpt_dir=ckpt_dir)
-    # ONE select appending the concat of the per-field UDF columns —
-    # the previous per-field withColumn chain (+ concat + drop) cost a
-    # full projection round-trip per field on the driver (guide §4;
-    # part of the measured 1.2 s/call py4j wait of the ingest leg).
-    # Same plan: Catalyst collapsed the chain to this projection.
-    vec_cols = [
-        embed(F.coalesce(F.col(f), F.lit(""))) for f in fields if f in df.columns
-    ]
-    return df.select("*", F.concat(*vec_cols).alias("embedding"))
+    benchmark_10k/README.md:70). One ``select`` appends one UDF column
+    over every field of ``fields`` that ``df`` has, in that order."""
+    texts = [F.coalesce(F.col(f), F.lit("")) for f in fields if f in df.columns]
+    return df.select("*", embed_text_udf(dim, ckpt_dir=ckpt_dir)(*texts).alias("embedding"))

@@ -22,8 +22,14 @@ Raw Amazon-meta conventions handled (public dataset layout): list-typed
 ``price`` arrives as a string (``"12.99"``, ``"$12.99"``, ``None``,
 ``""``) and parses to DOUBLE with unparseable values -> NULL (tracked);
 ``details`` re-serializes to a JSON string. Spark decompresses ``.gz``
-by extension, and one gz member = one partition — for archives beyond
-a few GB, re-stage through a splittable codec or split files upstream.
+by extension, and a gz file is not splittable, so it reads as one
+partition. A read with fewer partitions than the session's default
+parallelism (one gz file, a few small files) is repartitioned to it
+before the cache, so the parse, derive and embed work runs on every
+core; a directory of at least that many files keeps its partitions and
+adds no shuffle. The gz decompression itself stays one task per file:
+for archives beyond a few GB, re-stage through a splittable codec or
+split files upstream.
 """
 
 from __future__ import annotations
@@ -163,7 +169,11 @@ def ingest_products(
     )
 
     staged = stage_dataset(url, stage_dir)
-    raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA).cache()
+    raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA)
+    cores = spark.sparkContext.defaultParallelism
+    if raw.rdd.getNumPartitions() < cores:
+        raw = raw.repartition(cores)
+    raw = raw.cache()
     n_corrupt, n_unparsed_price = quarantine_counts(raw)
     good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
     products = product_table(good, source_dataset, dim, ckpt_dir)

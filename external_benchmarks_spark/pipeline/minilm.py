@@ -12,9 +12,9 @@ format (8-byte little-endian header length, JSON header mapping tensor
 name -> {dtype, shape, data_offsets}, then one raw byte buffer —
 https://github.com/huggingface/safetensors), run as vectorized numpy.
 ``pipeline/embedding.encode_batch`` selects it whenever a checkpoint
-directory is supplied, through the SAME Arrow pandas_udf machinery as
-the other encoder tiers, so the executor-side load-once/encode-batches
-path is exercised end-to-end in CI (tests/test_pipeline.py).
+directory is supplied, through the SAME Arrow UDF as the other encoder
+tiers, so the executor-side load-once/encode-batches path is exercised
+end-to-end in CI (tests/test_pipeline.py).
 
 Architecture (standard pre-LN transformer encoder):
 token-embedding + learned positions, then n_layers x

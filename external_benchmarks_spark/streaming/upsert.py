@@ -4,7 +4,7 @@
 
 Spark shape: updates arrive as a stream (rate/file/kafka source),
 ``foreachBatch`` applies a keyed MERGE into the table, and changed text
-re-embeds inside the batch via the same pandas UDF as the batch
+re-embeds inside the batch via the same Arrow UDF as the batch
 pipeline. Without a Delta dependency the MERGE is **merge-on-read**
 (the Delta Lake shape, Armbrust et al., VLDB 2020): rows are
 hash-bucketed by key, a commit writes ONLY its deduplicated batch as a
@@ -96,8 +96,9 @@ def _next_version(manifest: dict[str, list[int]]) -> int:
 def _winner_order(columns: list[str]) -> list[tuple[str, str]]:
     """Last-writer-wins within a batch, as (column, order) sort keys: a
     key's first row wins. The highest ``op_ts`` first, a NULL ``op_ts``
-    below every value; ties, and batches without ``op_ts``, go to the
-    lowest whole-row hash ``_h``, so every run picks the same row."""
+    below every value and a NaN one above every number, as Spark orders
+    them; ties, and batches without ``op_ts``, go to the lowest
+    whole-row hash ``_h``, so every run picks the same row."""
     ts = [("op_ts", "descending")] if "op_ts" in columns else []
     return [*ts, ("_h", "ascending")]
 
@@ -358,13 +359,17 @@ class UpsertTable:
         tbl = probe.limit(self.SMALL_BATCH_MAX + 1).toArrow()
         small = None
         if len(tbl) <= self.SMALL_BATCH_MAX:
-            order = pc.sort_indices(
-                tbl, sort_keys=_winner_order(updates.columns), null_placement="at_end"
-            )
+            keys = _winner_order(updates.columns)
+            if "op_ts" in updates.columns and pa.types.is_floating(tbl["op_ts"].type):
+                # Spark orders NaN above every number, Arrow's sort below
+                tbl = tbl.append_column("_nan", pc.is_nan(tbl["op_ts"]))
+                keys.insert(0, ("_nan", "descending"))
+            order = pc.sort_indices(tbl, sort_keys=keys, null_placement="at_end")
             tbl = tbl.take(order).append_column("_i", pa.array(range(len(tbl)), pa.int64()))
             first = tbl.group_by(self.key_col, use_threads=False).aggregate([("_i", "min")])
-            tbl = tbl.take(first["_i_min"]).drop_columns(["_h", "_i"])
-            upd = self.spark.createDataFrame(tbl, schema=probe.drop("_h").schema)
+            schema = probe.drop("_h").schema
+            tbl = tbl.take(first["_i_min"]).select(schema.names)
+            upd = self.spark.createDataFrame(tbl, schema=schema)
             small = (upd, len(tbl))
         return {"small": small, "updates": updates, "evolve": evolve_schema}
 

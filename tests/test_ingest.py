@@ -116,3 +116,74 @@ def test_ingest_without_count_omits_n_records(spark, tmp_path):
         assert report["n_unparsed_price"] == 1  # i=1 -> "N/A"
     finally:
         products.unpersist()
+
+
+def _job_stage_tasks(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    task count of every stage of the group's jobs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+    return out, [st.getStageInfo(s).numTasks for s in stages if st.getStageInfo(s)]
+
+
+def test_one_file_ingest_spreads_over_every_core(spark, tmp_path):
+    """A gz file reads as one partition; ingest repartitions it to the
+    session's default parallelism, so the embed work runs in that many
+    tasks. The product table is the one the one-partition read gives."""
+    from external_benchmarks_spark.pipeline.ingest import (
+        RAW_META_SCHEMA,
+        ingest_products,
+        product_table,
+    )
+    from external_benchmarks_spark.sources.registry import read_jsonl_permissive
+
+    src = str(tmp_path / "raw.jsonl.gz")
+    _write_fixture_gz(src, n=40)
+    (products, _), tasks = _job_stage_tasks(
+        spark, "ingest-one-file",
+        lambda: ingest_products(spark, src, str(tmp_path / "stage"), "Books", dim=8),
+    )
+    try:
+        cores = spark.sparkContext.defaultParallelism
+        assert max(tasks) >= cores
+        raw = read_jsonl_permissive(spark, src, RAW_META_SCHEMA)
+        assert raw.rdd.getNumPartitions() == 1
+        one_part = product_table(
+            raw.filter(F.col("_corrupt").isNull()).drop("_corrupt"), "Books", 8
+        )
+        got = products.orderBy("parent_asin").toArrow()
+        assert got.num_rows == 41
+        assert got.equals(one_part.orderBy("parent_asin").toArrow())
+    finally:
+        products.unpersist()
+
+
+def test_multi_file_ingest_adds_no_shuffle(spark, tmp_path):
+    """A directory that reads as at least default-parallelism partitions
+    keeps them: no repartition exchange in the product table's plan."""
+    from external_benchmarks_spark.pipeline.ingest import RAW_META_SCHEMA, ingest_products
+    from external_benchmarks_spark.sources.registry import read_jsonl_permissive
+
+    cores = spark.sparkContext.defaultParallelism
+    d = tmp_path / "many"
+    d.mkdir()
+    # equal-sized files, one per core: Spark packs none of them together
+    for i in range(cores):
+        _write_fixture_gz(str(d / f"part{i}.jsonl.gz"), n=4)
+    assert read_jsonl_permissive(spark, str(d), RAW_META_SCHEMA).rdd.getNumPartitions() == cores
+    products, report = ingest_products(spark, str(d), str(tmp_path / "stage"), "Books", dim=8)
+    try:
+        plan = products._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" in plan and "Exchange" not in plan
+        assert products.rdd.getNumPartitions() == cores
+        assert report["n_records"] == 5 * cores
+    finally:
+        products.unpersist()

@@ -222,9 +222,23 @@ def test_pq_string_key_raises_at_driver(spark):
         pq_adc_topk_batch(codes, cb, None, k=1)
 
 
+def _pq_brute(mat, cb):
+    """The brute-force integer kernel pq_encode used to run, kept as the
+    oracle: every code's sum of FLOOR((x-c)^2 * 1e6) as int64 over a
+    [rows, n_codes, dsub] temporary, first minimum on ties."""
+    m, _, dsub = cb.shape
+    codes = np.empty((len(mat), m), dtype=np.int32)
+    with np.errstate(all="ignore"):
+        for j in range(m):
+            diff = mat[:, None, j * dsub : (j + 1) * dsub] - cb[j][None, :, :]
+            codes[:, j] = np.floor((diff * diff) * 1e6).astype(np.int64).sum(axis=2).argmin(axis=1)
+    return codes
+
+
 def test_pq_encode_shape_and_determinism(spark, sf_dir):
     """PQ codes: one code per subspace in [0, n_codes); identical across
-    runs (hash-sampled codebooks, exact integer argmin)."""
+    runs (hash-sampled codebooks, exact integer argmin) and equal to the
+    brute-force integer kernel's."""
     from external_benchmarks_spark.operators.quantize import (
         pq_codebooks,
         pq_encode,
@@ -238,6 +252,84 @@ def test_pq_encode_shape_and_determinism(spark, sf_dir):
     assert all(len(v) == 8 and all(0 <= c < 16 for c in v) for v in codes.values())
     again = {r.vec_id: list(r.pq_codes) for r in pq_encode(e, cb).collect()}
     assert codes == again
+    vecs = dict(e.select("vec_id", "embedding").collect())
+    keys = sorted(codes)
+    brute = _pq_brute(np.array([vecs[k] for k in keys], dtype=np.float64), cb)
+    assert [codes[k] for k in keys] == brute.tolist()
+
+
+def _pq_cases():
+    """(codebooks, rows) per input class; all but the last use 2
+    subspaces of 4 dims and 6 codes. Codebook values are multiples of
+    1/4, so a midpoint of two codewords is an exact tie."""
+    from external_benchmarks_spark.operators.quantize import _codebooks
+
+    rng = np.random.default_rng(11)
+    cb = np.round(rng.standard_normal((2, 6, 4)) * 4) / 4
+    cb[:, 4] = cb[:, 1]  # duplicate codewords: code 1 must win
+    words = [np.concatenate([cb[0, c], cb[1, (c + 2) % 6]]) for c in range(6)]
+    mids = [
+        np.concatenate([(cb[0, a] + cb[0, b]) / 2, (cb[1, a] + cb[1, b]) / 2])
+        for a in range(6) for b in range(a + 1, 6)
+    ]
+    bad = []
+    for v in (np.nan, np.inf, -np.inf):
+        for at in (0, 5):
+            r = rng.standard_normal(8)
+            r[at] = v
+            bad.append(r)
+    nan_cb = cb.copy()
+    nan_cb[0, 3, 2] = np.nan
+    wide = rng.standard_normal((600, 2688)).astype(np.float32).astype(np.float64)
+    wide /= np.linalg.norm(wide.reshape(600, 7, 384), axis=2).repeat(384, axis=1)
+    return {
+        "codewords": (cb, np.array(words)),
+        "midpoints": (cb, np.array(mids)),
+        "zero_rows": (cb, np.zeros((3, 8))),
+        # 1e5 stays inside int64 (the BLAS bounds decide); 3e7 overflows
+        # a term, 1e150 a square and 1e200 the norm
+        "large": (cb, np.array([np.full(8, v) * s for v in (1e5, 3e7, 1e150, 1e200)
+                               for s in (1, -1)])),
+        "nan_inf": (cb, np.array(bad)),
+        "random": (cb, rng.standard_normal((400, 8))),
+        "nan_codeword": (nan_cb, rng.standard_normal((20, 8))),
+        # far from the origin and close together: |x|^2 - 2x.c + |c|^2
+        # cancels to a few integers' error, which the bound must cover
+        "offset": (1e5 + cb * 4e-3, 1e5 + rng.standard_normal((400, 8)) * 1e-3),
+        # the reference's 2,688 dims in 8 subspaces of 336, unit-norm
+        # 384-dim field blocks, codewords sampled from the rows
+        "reference_width": (_codebooks(wide[:16], 8), wide),
+    }
+
+
+@pytest.mark.parametrize("case", list(_pq_cases()))
+def test_pq_assign_matches_brute_force(case):
+    """BLAS ranks and the exact integers decide: the codes equal the
+    brute-force integer argmin over every code, bit for bit."""
+    from external_benchmarks_spark.operators.quantize import pq_assign
+
+    cb, rows = _pq_cases()[case]
+    assert pq_assign(rows, cb).tolist() == _pq_brute(rows, cb).tolist()
+
+
+def test_pq_assign_tie_goes_to_lowest_code():
+    """Equidistant codes (an exact midpoint, a duplicate codeword) go to
+    the lowest code, as the integer argmin's first minimum does."""
+    from external_benchmarks_spark.operators.quantize import pq_assign
+
+    cb = np.array([[[0.0, 9.0], [1.0, 0.0], [-1.0, 0.0], [1.0, 0.0]]])
+    rows = np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 9.0]])
+    assert pq_assign(rows, cb).ravel().tolist() == [1, 1, 0]
+
+
+def test_pq_assign_floor_decides():
+    """The floors decide, not the real distance: four terms of 0.99
+    (sum 3.96) floor to 0 and beat one term of 1.5 that floors to 1."""
+    from external_benchmarks_spark.operators.quantize import pq_assign
+
+    a, b = np.full(4, np.sqrt(0.99e-6)), np.array([np.sqrt(1.5e-6), 0.0, 0.0, 0.0])
+    for cb, want in (([a, b], 0), ([b, a], 1)):
+        assert pq_assign(np.zeros((1, 4)), np.array([cb])).tolist() == [[want]]
 
 
 def test_pq_adc_topk_recall_and_plan(spark, sf_dir):

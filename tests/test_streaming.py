@@ -293,6 +293,14 @@ WINDOW_CASES = {
          (2, "tie-a", 1.0, 7), (3, "n1", 1.0, None), (3, "n2", 2.0, None)],
         [(1, "real", 1.0), (2, "tie-a", 1.0), (3, "n2", 2.0), (4, "b4", 0.0)],
     ),
+    "op_ts_nan": (  # Spark orders NaN above every number, +inf included
+        "id long, title string, price double, op_ts double", "id",
+        [(1, "b1", 0.0), (2, "b2", 0.0), (3, "b3", 0.0), (4, "b4", 0.0)],
+        [(1, "num", 1.0, 2.0), (1, "nan", 2.0, float("nan")), (2, "null", 0.0, None),
+         (2, "nan2", 1.0, float("nan")), (3, "inf", 1.0, float("inf")),
+         (3, "nan3", 2.0, float("nan")), (4, "x", 1.0, 1.5), (4, "y", 2.0, None)],
+        [(1, "nan", 2.0), (2, "nan2", 1.0), (3, "nan3", 2.0), (4, "x", 1.0)],
+    ),
     "no_op_ts": (
         "id long, title string, price double", "id",
         [(1, "b1", 0.0), (2, "b2", 0.0)],

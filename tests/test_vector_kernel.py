@@ -330,9 +330,9 @@ def _guarded_calls(path):
     """(line, what) for each pandas conversion of a vector column or
     row-wise build of a batch: an ``np.vstack`` whose argument calls
     ``.to_numpy(``, a ``mapInPandas`` / ``pandas_udf`` /
-    ``applyInPandas`` / ``DataFrame`` / ``parallelize`` call, or a
-    ``.values`` read off ``.combine_chunks()`` (a list column's flat
-    values, blind to its offsets and nulls)."""
+    ``applyInPandas`` / ``DataFrame`` / ``Series`` / ``parallelize``
+    call, or a ``.values`` read off ``.combine_chunks()`` (a list
+    column's flat values, blind to its offsets and nulls)."""
     tree = ast.parse(open(path).read(), path)
     hits = []
     for node in ast.walk(tree):
@@ -361,19 +361,22 @@ def _guarded_calls(path):
     return sorted(hits)
 
 
-GUARDED_CALLS = {"mapInPandas", "pandas_udf", "applyInPandas", "DataFrame", "parallelize"}
+GUARDED_CALLS = {
+    "mapInPandas", "pandas_udf", "applyInPandas", "DataFrame", "Series", "parallelize",
+}
 VECTOR_MODULES = [
     "operators/quantize.py", "operators/similarity.py", "operators/dedup.py",
     "operators/deltadedup.py", "operators/grouped.py", "operators/projection.py",
-    "serving.py", "streaming/upsert.py",
+    "serving.py", "streaming/upsert.py", "pipeline/embedding.py",
 ]
 
 
 def test_vector_modules_read_vectors_only_through_arrow_rows():
     """The vector operators and the serving tier read a vector column
-    only through functions/vector.arrow_rows and its wrappers, and the
-    upsert batch stays one Arrow table: no pandas conversion or row-wise
-    batch build is left in them."""
+    only through functions/vector.arrow_rows and its wrappers, the
+    upsert batch stays one Arrow table, and the encoder UDF takes and
+    returns Arrow arrays: no pandas conversion or row-wise batch build
+    is left in them."""
     root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "external_benchmarks_spark")
     found = {
@@ -394,6 +397,7 @@ def test_guard_sees_each_pandas_form():
         "ok = np.vstack([a, b])\n"
         "df.mapInArrow(f, s)\n"
         "pdf = pd.DataFrame(rows, columns=cols)\n"
+        "return pd.Series(list(mat))\n"
         "rdd = spark.sparkContext.parallelize(rows, 1)\n"
         "v = tbl.column(c).combine_chunks().values.to_numpy()\n"
         "ok = spark.createDataFrame(tbl, schema=s)\n"
@@ -406,7 +410,7 @@ def test_guard_sees_each_pandas_form():
         assert [what for _, what in _guarded_calls(fh.name)] == [
             "np.vstack(... .to_numpy() ...)", "np.vstack(... .to_numpy() ...)",
             "mapInPandas", "pandas_udf", "pandas_udf", "applyInPandas",
-            "DataFrame", "parallelize", ".combine_chunks().values",
+            "DataFrame", "Series", "parallelize", ".combine_chunks().values",
         ]
     finally:
         os.remove(fh.name)

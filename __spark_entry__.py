@@ -4181,16 +4181,10 @@ def q_ingest_report(spark, sf):
         os.path.join(work, "stage"),
         "tpch_part",
         dim=8,
-        count_records=False,
     )
-    # r16: the whole analysis side is TWO jobs over the product cache —
-    # report pass 1 (which materializes the persist, counts every row
-    # as `total_records` == the former separate n_records count, and
-    # carries the three price-cents aggregates via extra_aggs) and
-    # report pass 2. The former shape paid two more jobs for the same
-    # numbers: ingest's count(), then a dedicated price aggregate
-    # (guide §1.2: same scan, same expressions, fewer scheduler
-    # round-trips). This caller owns the frame and unpersists it.
+    # The analysis side is the report's two passes over the product
+    # cache; pass 1 carries the price-cents aggregates via extra_aggs.
+    # This caller owns the frame and unpersists it.
     cents_sql = "CAST(ROUND(price * 100) AS BIGINT)"
     try:
         rep2 = dataset_report(
@@ -4208,7 +4202,7 @@ def q_ingest_report(spark, sf):
         products.unpersist()
     pc = rep2["extra"]
     rows: list = [
-        ("counters", "n_records", rep2["total_records"], None),
+        ("counters", "n_records", rep["n_records"], None),
         ("counters", "n_corrupt", rep["n_corrupt"], None),
         ("counters", "n_unparsed_price", rep["n_unparsed_price"], None),
     ]

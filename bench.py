@@ -601,46 +601,27 @@ def maintenance_soak_leg(spark, sf, n_cycles: int = 6) -> dict:
 def ingest_stage_timings(spark, sf) -> dict:
     """One instrumented replay of the ingest_report arc — the per-stage
     cost table the round-8 verdict asked for (finding #2). Reuses the
-    leg's fixture/stage dirs and calls the same ingest functions as
-    pipeline/ingest.ingest_products, so the numbers describe what the
-    leg pays: stage (wget-analog, no-op on signature match), permissive
-    parse + the one fused quarantine-count aggregate, the normalize->
-    derive->embed materialization into the persisted product table (the
-    dominant term — batch-vectorized in
+    leg's fixture/stage dirs, so the numbers describe what the leg pays:
+    stage (wget-analog, no-op on signature match), ``ingest_products``
+    (one action: permissive parse, the observed quarantine counters and
+    the normalize->derive->embed materialization into the persisted
+    product table — the dominant term, batch-vectorized in
     pipeline/embedding.hashed_ngram_encode), the fused 2-job stats
     report, and the price-cents aggregate, both over that table."""
-    from external_benchmarks_spark.pipeline.ingest import (
-        RAW_META_SCHEMA,
-        product_table,
-        quarantine_counts,
-    )
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
     from external_benchmarks_spark.pipeline.report import dataset_report
-    from external_benchmarks_spark.sources.registry import (
-        read_jsonl_permissive,
-        stage_dataset,
-    )
+    from external_benchmarks_spark.sources.registry import stage_dataset
 
     tag = os.path.basename(sf.rstrip("/"))
-    work = os.path.join(tempfile.gettempdir(), f"ebs_ingest_report_{tag}")
-    raw_file = entry_mod._ingest_report_fixture(spark, sf)
-    t: dict[str, float] = {}
-    staged, t["stage"] = timed(
-        lambda: stage_dataset("file://" + raw_file, os.path.join(work, "stage"))
+    stage_dir = os.path.join(
+        tempfile.gettempdir(), f"ebs_ingest_report_{tag}", "stage"
     )
-
-    def parse():
-        raw = read_jsonl_permissive(spark, staged, RAW_META_SCHEMA).cache()
-        quarantine_counts(raw)
-        return raw
-
-    def materialize():
-        good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-        products = product_table(good, "tpch_part", dim=8).persist()
-        products.count()
-        return products
-
-    raw, t["parse_counts"] = timed(parse)
-    products, t["normalize_embed_count"] = timed(materialize)
+    url = "file://" + entry_mod._ingest_report_fixture(spark, sf)
+    t: dict[str, float] = {}
+    _, t["stage"] = timed(lambda: stage_dataset(url, stage_dir))
+    (products, _), t["ingest"] = timed(
+        lambda: ingest_products(spark, url, stage_dir, "tpch_part", dim=8)
+    )
     _, t["report"] = timed(
         lambda: dataset_report(
             products,
@@ -656,7 +637,6 @@ def ingest_stage_timings(spark, sf) -> dict:
 
     _, t["price_agg"] = timed(price_agg)
     products.unpersist()
-    raw.unpersist()
     return {k: round(v, 3) for k, v in t.items()}
 
 

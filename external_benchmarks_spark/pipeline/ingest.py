@@ -24,17 +24,22 @@ Raw Amazon-meta conventions handled (public dataset layout): list-typed
 ``details`` re-serializes to a JSON string. Spark decompresses ``.gz``
 by extension, and a gz file is not splittable, so it reads as one
 partition. A read with fewer partitions than the session's default
-parallelism (one gz file, a few small files) is repartitioned to it
-before the cache, so the parse, derive and embed work runs on every
-core; a directory of at least that many files keeps its partitions and
-adds no shuffle. The gz decompression itself stays one task per file:
-for archives beyond a few GB, re-stage through a splittable codec or
-split files upstream.
+parallelism (one gz file, a few small files) is repartitioned to it,
+so the parse, derive and embed work runs on every core; a directory of
+at least that many files keeps its partitions and adds no shuffle. The
+gz decompression itself stays one task per file: for archives beyond a
+few GB, re-stage through a splittable codec or split files upstream.
+
+One Spark action per ingest: the record, quarantine and unparsed-price
+counters are an ``Observation`` on the permissive read that the product
+table is built from, so the one action that writes the table computes
+them too (the parquet write, or the ``noop`` write that materializes
+the persisted frame the caller then owns).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -102,21 +107,6 @@ def normalize_raw_products(raw: DataFrame, source_dataset: str) -> DataFrame:
     )
 
 
-def quarantine_counts(raw: DataFrame) -> tuple[int, int]:
-    """(n_corrupt, n_unparsed_price) of a permissive-parsed raw frame.
-
-    Both counters come from ONE aggregate (the predicates are disjoint
-    by construction: unparsed prices are only counted among non-corrupt
-    lines), not two separate count() jobs (r15; guide §1.2)."""
-    row = raw.selectExpr(
-        "sum(CAST(`_corrupt` IS NOT NULL AS BIGINT)) AS c",
-        "sum(CAST((`_corrupt` IS NULL AND `price` IS NOT NULL"
-        f" AND trim(`price`) != '' AND {PRICE_SQL} IS NULL) AS BIGINT))"
-        " AS u",
-    ).collect()[0]
-    return int(row["c"] or 0), int(row["u"] or 0)
-
-
 def product_table(
     good: DataFrame, source_dataset: str, dim: int, ckpt_dir: str | None = None
 ) -> DataFrame:
@@ -146,21 +136,19 @@ def ingest_products(
     out_path: str | None = None,
     dim: int = 16,
     ckpt_dir: str | None = None,
-    count_records: bool = True,
 ) -> tuple[DataFrame, dict]:
-    """The full arc. Returns (products_df, report) where report carries
-    ``staged_path``, ``n_records`` (only when ``count_records``),
-    ``n_corrupt`` (quarantined raw lines), and ``n_unparsed_price``. When ``out_path`` is given the
-    validated table also writes as parquet partitioned by
-    ``main_category`` (the query-optimized layout of SURVEY.md §7.5).
+    """The full arc, in one Spark action. Returns (products_df, report)
+    where report carries ``staged_path``, ``n_records`` (product rows),
+    ``n_corrupt`` (quarantined raw lines) and ``n_unparsed_price``.
 
-    Ownership contract (r15 ADVICE): when ``out_path`` is None the
-    returned frame is ``persist()``-ed (materialized by the n_records
-    count so follow-up stats reuse it) and the CALLER owns the
-    unpersist — call ``products.unpersist()`` when done, as
-    ``q_ingest_report`` does, or the cached 17-column embedded corpus
-    lives for the session. With ``out_path`` the parquet table is the
-    materialization and nothing is cached.
+    With ``out_path`` the validated table writes as parquet partitioned
+    by ``main_category`` (the query-optimized layout of SURVEY.md §7.5)
+    and the returned frame reads it back; nothing is cached. Without
+    it, the returned frame is ``persist()``-ed and already materialized,
+    and the CALLER owns the unpersist: call ``products.unpersist()``
+    when done, as ``q_ingest_report`` does, or the cached 17-column
+    embedded corpus lives for the session. If the action fails, the
+    persist is dropped before the error propagates.
     """
     from external_benchmarks_spark.schemas import PRODUCT_SCHEMA
     from external_benchmarks_spark.sources.registry import (
@@ -173,40 +161,45 @@ def ingest_products(
     cores = spark.sparkContext.defaultParallelism
     if raw.rdd.getNumPartitions() < cores:
         raw = raw.repartition(cores)
-    raw = raw.cache()
-    n_corrupt, n_unparsed_price = quarantine_counts(raw)
+    # The counters observe the read the product table parses every
+    # column of (see read_jsonl_permissive's caveat). Unparsed prices
+    # are counted among non-corrupt lines only.
+    obs = Observation()
+    raw = raw.observe(
+        obs,
+        F.expr("count(1) AS n"),
+        F.expr("sum(CAST(`_corrupt` IS NOT NULL AS BIGINT)) AS corrupt"),
+        F.expr(
+            "sum(CAST((`_corrupt` IS NULL AND `price` IS NOT NULL"
+            f" AND trim(`price`) != '' AND {PRICE_SQL} IS NULL) AS BIGINT))"
+            " AS unparsed"
+        ),
+    )
     good = raw.filter(F.col("_corrupt").isNull()).drop("_corrupt")
     products = product_table(good, source_dataset, dim, ckpt_dir)
-    if out_path is not None:
-        (
+    if out_path is None:
+        products = products.persist()
+        writer = products.write.format("noop")
+    else:
+        writer = (
             products.repartition("main_category")
-            .write.mode("overwrite")
-            .partitionBy("main_category")
-            .parquet(out_path)
+            .write.partitionBy("main_category")
+            .format("parquet")
         )
+    try:
+        writer.mode("overwrite").save(out_path)
+    except BaseException:
+        products.unpersist()
+        raise
+    counts = obs.get
+    if out_path is not None:
         products = spark.read.parquet(out_path).select(
             [f.name for f in PRODUCT_SCHEMA.fields]
         )
-    else:
-        # The n_records count below is the first action over the
-        # normalize->derive->embed pipeline; persisting first makes it
-        # MATERIALIZE the product table instead of throwing the work
-        # away, so a caller's follow-up stats (the ingest_report arc
-        # runs three) read the cache rather than re-running the
-        # pipeline per action (r15; guide §5). Callers that are done
-        # with the frame should unpersist it; the out_path branch needs
-        # nothing — the parquet written table IS its materialization.
-        products = products.persist()
-    # count_records=False skips the count JOB for callers whose next
-    # action already counts every row (q_ingest_report's stats pass 1
-    # returns the identical count(1) as `total_records`): the persist
-    # then materializes under THAT action instead — one scheduler job
-    # fewer, same cache, same numbers (guide §1.2). The report then has
-    # no ``n_records`` key, so a reader that expects it fails loudly.
-    report = {"staged_path": staged}
-    if count_records:
-        report["n_records"] = products.count()
-    report["n_corrupt"] = n_corrupt
-    report["n_unparsed_price"] = n_unparsed_price
-    raw.unpersist()
-    return products, report
+    n_corrupt = int(counts["corrupt"] or 0)
+    return products, {
+        "staged_path": staged,
+        "n_records": int(counts["n"]) - n_corrupt,
+        "n_corrupt": n_corrupt,
+        "n_unparsed_price": int(counts["unparsed"] or 0),
+    }

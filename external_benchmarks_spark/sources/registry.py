@@ -105,9 +105,14 @@ def read_jsonl_permissive(
     (count them with `_corrupt IS NOT NULL`). Schema is required — the
     corrupt-record column must be declared in it.
 
-    Caveat (Spark semantics): a query that references ONLY `_corrupt`
+    Caveats (Spark semantics): a query that references ONLY `_corrupt`
     raises; cache the frame or select at least one data column alongside
-    it before filtering on corrupt-ness.
+    it before filtering on corrupt-ness. And a line is corrupt only in
+    the columns a plan parses: a pruned read skips a type-mismatched
+    value in an unread column and calls the line good. Counters of
+    corrupt lines must come from the plan that parses every column (the
+    one that builds the table), not from a separate aggregate over the
+    read.
     """
     from pyspark.sql.types import StringType, StructField
 

@@ -31,7 +31,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from external_benchmarks_spark.pipeline.ingest import (
     RAW_META_SCHEMA,
-    normalize_raw_products,
+    product_table,
 )
 
 
@@ -53,10 +53,6 @@ def ingest_stream(
     import tempfile
     import uuid
 
-    from external_benchmarks_spark.pipeline.dataset import add_derived_columns
-    from external_benchmarks_spark.pipeline.embedding import embed_fields
-    from external_benchmarks_spark.schemas import PRODUCT_SCHEMA, validate_schema
-
     full = StructType(
         list(RAW_META_SCHEMA.fields) + [StructField("_corrupt", StringType())]
     )
@@ -77,18 +73,7 @@ def ingest_stream(
                 os.path.join(table_dir, "_quarantine")
             )
         good = batch_df.filter(F.col("_corrupt").isNull()).drop("_corrupt")
-        products = add_derived_columns(
-            normalize_raw_products(good, source_dataset)
-        )
-        products = embed_fields(
-            products,
-            fields=("title", "description", "features", "combined_text",
-                    "main_category", "categories", "store"),
-            dim=dim,
-            ckpt_dir=ckpt_dir,
-        )
-        products = products.select([f.name for f in PRODUCT_SCHEMA.fields])
-        validate_schema(products)
+        products = product_table(good, source_dataset, dim, ckpt_dir)
         products.write.mode("append").parquet(
             os.path.join(table_dir, "products")
         )

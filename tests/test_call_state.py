@@ -69,3 +69,20 @@ def test_operator_leaves_no_cache_entry(spark, build):
     before = _cache_entries(spark)
     assert build(spark).collect()
     assert _cache_entries(spark) == before
+
+
+def test_failed_ingest_leaves_no_cache_entry(spark, tmp_path):
+    """An ingest whose action raises (here: the checkpoint encoder finds
+    no checkpoint) drops its persisted product table before the error
+    propagates."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = tmp_path / "raw.jsonl"
+    src.write_text('{"parent_asin": "A1", "title": "lamp"}\n{broken\n')
+    before = _cache_entries(spark)
+    with pytest.raises(Exception, match="config.json"):
+        ingest_products(
+            spark, str(src), str(tmp_path / "stage"), "Books", dim=8,
+            ckpt_dir=str(tmp_path / "missing"),
+        )
+    assert _cache_entries(spark) == before

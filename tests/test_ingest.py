@@ -99,28 +99,10 @@ def test_ingest_restage_is_noop(spark, tmp_path):
     assert p1 == p2 and os.path.getmtime(p2) == m1
 
 
-def test_ingest_without_count_omits_n_records(spark, tmp_path):
-    """count_records=False leaves n_records out of the report, so a
-    reader that expects it fails with KeyError instead of reading None."""
-    from external_benchmarks_spark.pipeline.ingest import ingest_products
-
-    src = str(tmp_path / "raw.jsonl.gz")
-    _write_fixture_gz(src, n=6)
-    products, report = ingest_products(
-        spark, "file://" + src, str(tmp_path / "stage"), "Books", dim=8,
-        count_records=False,
-    )
-    try:
-        assert "n_records" not in report
-        assert report["n_corrupt"] == 1
-        assert report["n_unparsed_price"] == 1  # i=1 -> "N/A"
-    finally:
-        products.unpersist()
-
-
 def _job_stage_tasks(spark, group, fn):
-    """Run ``fn`` under job group ``group``; return its result and the
-    task count of every stage of the group's jobs."""
+    """Run ``fn`` under job group ``group``; return its result, the
+    number of the group's jobs and the task count of each of their
+    stages."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -130,8 +112,84 @@ def _job_stage_tasks(spark, group, fn):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
-    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
-    return out, [st.getStageInfo(s).numTasks for s in stages if st.getStageInfo(s)]
+    jobs = st.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    return out, len(jobs), [st.getStageInfo(s).numTasks for s in stages if st.getStageInfo(s)]
+
+
+def _cache_loaded(spark, df) -> bool:
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and (
+        cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
+def test_one_file_ingest_is_one_action(spark, tmp_path):
+    """One ingest is one action: the observed counters ride the write
+    that materializes the persisted product table (the read's
+    shuffle-map job, the job that fills the cache and the write over
+    it), and the returned frame is already loaded in the cache."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = str(tmp_path / "raw.jsonl.gz")
+    n = _write_fixture_gz(src, n=6)
+    (products, report), n_jobs, _ = _job_stage_tasks(
+        spark, "ingest-one-action",
+        lambda: ingest_products(spark, src, str(tmp_path / "stage"), "Books", dim=8),
+    )
+    try:
+        assert n_jobs <= 4
+        assert _cache_loaded(spark, products)
+        assert report["n_records"] == products.count() == n + 1
+        assert report["n_corrupt"] == 1
+        assert report["n_unparsed_price"] == 1  # i=1 -> "N/A"
+    finally:
+        products.unpersist()
+
+
+def test_type_mismatch_in_non_price_field_is_quarantined(spark, tmp_path):
+    """A line whose ``average_rating`` is not a number is corrupt under
+    the full parse the product table reads, so ``n_corrupt`` counts it
+    and the table drops it. A read pruned to ``_corrupt`` and ``price``
+    would call the line good: the counters must come from the plan that
+    parses every column."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = str(tmp_path / "raw.jsonl.gz")
+    n = _write_fixture_gz(src, n=6)
+    with gzip.open(src, "at", encoding="utf-8") as fh:
+        fh.write('{"parent_asin": "BADRATING", "average_rating": "abc", "price": "1.00"}\n')
+    products, report = ingest_products(spark, src, str(tmp_path / "stage"), "Books", dim=8)
+    try:
+        asins = {r.parent_asin for r in products.select("parent_asin").collect()}
+        assert "BADRATING" not in asins and len(asins) == n + 1
+        assert report["n_corrupt"] == 2
+        assert report["n_records"] == n + 1
+    finally:
+        products.unpersist()
+
+
+def test_reingest_while_first_result_is_cached(spark, tmp_path):
+    """A second ingest of the same file, while the first one's product
+    table is still cached, runs its own action and reports the same
+    counters and rows."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = str(tmp_path / "raw.jsonl.gz")
+    _write_fixture_gz(src, n=6)
+    stage = str(tmp_path / "stage")
+    first, rep1 = ingest_products(spark, src, stage, "Books", dim=8)
+    try:
+        second, rep2 = ingest_products(spark, src, stage, "Books", dim=8)
+        try:
+            assert rep2 == rep1
+            assert _cache_loaded(spark, second)
+            got = second.orderBy("parent_asin").toArrow()
+            assert got.equals(first.orderBy("parent_asin").toArrow())
+        finally:
+            second.unpersist()
+    finally:
+        first.unpersist()
 
 
 def test_one_file_ingest_spreads_over_every_core(spark, tmp_path):
@@ -147,7 +205,7 @@ def test_one_file_ingest_spreads_over_every_core(spark, tmp_path):
 
     src = str(tmp_path / "raw.jsonl.gz")
     _write_fixture_gz(src, n=40)
-    (products, _), tasks = _job_stage_tasks(
+    (products, _), _, tasks = _job_stage_tasks(
         spark, "ingest-one-file",
         lambda: ingest_products(spark, src, str(tmp_path / "stage"), "Books", dim=8),
     )
